@@ -24,8 +24,8 @@ from pyspark.sql import DataFrame, functions as F
 # path. Same budget rationale as graph_algos.BROADCAST_RANKS_MAX: a
 # few-million-row (string, long) build stays inside the guide §3.1
 # few-hundred-MB broadcast budget. The count is an approx_count_distinct
-# observation (±~2% HLL error — a cap decision, not a result), riding
-# the pairs checkpoint job for free.
+# observation (HLL at the default rsd of ~5% — a cap decision, not a
+# result), riding the pairs checkpoint job for free.
 BROADCAST_ITEMS_MAX = 4_000_000
 
 

@@ -4,9 +4,9 @@ Deterministic vectorized replacement for the reference's per-block LLM NER
 (/root/reference/src/langgraph_agents/ner_agent.py:97-394): a closed,
 lang-keyed regex rule table finds the 9 entity types, validates positions
 by construction (we extract *from* the text, ner_agent.py:358-371's repair
-loop is unnecessary), normalizes types against the closed enum
-(ner_agent.py:350-356), and flags pronoun-like references
-(ner_agent.py:277-312).
+loop is unnecessary), emits only closed-enum types by construction (so the
+alias projection of ner_agent.py:350-356, type_norm.py, is left to external
+mention sources), and flags pronoun-like references (ner_agent.py:277-312).
 
 Semantics of the pronoun analog (documented contract):
 - tokens in schema.PRONOUNS are NOISE: never emitted at all;
@@ -56,6 +56,29 @@ VER_REQUIRES_RE = re.compile(r"requires\s+version\s*>=\s*v?(\d+(?:\.\d+)+)", re.
 VER_DUNDER_RE = re.compile(r"__version__\s*=\s*[\"'](\d+(?:\.\d+)+)[\"']")
 VER_WORD_RE = re.compile(r"\bversion\s+v?(\d+(?:\.\d+)+)\b", re.IGNORECASE)
 
+
+# The patterns above are the spec; the hot path scans with forms derived
+# from them that find exactly the same matches in linear time. Rules
+# (the possessive `*+` needs Python >= 3.11):
+# - a first-character lookahead guard, compiled inside the pattern's own
+#   flags so it case-folds exactly as the pattern's first literal does
+#   (never a str.lower() prefilter: its folding differs from IGNORECASE).
+#   It lets the scan reject a start position with one class test instead
+#   of a lookbehind plus a 30-way alternation;
+# - a run is made possessive only where the token after it can never
+#   match a character the run would give back (whitespace before a
+#   non-space token, [\w.] before whitespace or "("), so backtracking into
+#   it could never produce a match.
+# Equivalence is pinned in tests/test_mentions.py, old against new.
+def _guarded(pat: re.Pattern, first: str) -> re.Pattern:
+    """`pat` behind a lookahead for the class its matches start with."""
+    return re.compile(f"(?={first})" + pat.pattern, pat.flags)
+
+
+LICENSE_ML = _guarded(LICENSE_RE, "[{}]".format(
+    "".join(sorted({re.escape(t[0]) for t in _license_terms}))))
+DATE_ML = _guarded(DATE_RE, r"\d")
+
 # Whole-content MULTILINE twins of the metadata patterns above. The hot
 # path scans each block ONCE per pattern (C-level) instead of once per
 # line per pattern — profiling showed the per-line loop at ~5 regex
@@ -63,7 +86,8 @@ VER_WORD_RE = re.compile(r"\bversion\s+v?(\d+(?:\.\d+)+)\b", re.IGNORECASE)
 # extraction stage. Every `\s` is narrowed to horizontal whitespace
 # ([^\S\n]) so a match can never absorb a newline and couple two lines —
 # semantics stay exactly line-local, asserted equal to the per-line
-# originals in tests/test_mentions.py.
+# originals in tests/test_mentions.py. VER_WORD_ML is guarded and CALL_ML
+# possessive by the rules above.
 _HS = r"[^\S\n]"
 COPYRIGHT_ML = re.compile(
     r"Copyright" + _HS + r"*(?:\(c\)|©)?" + _HS + r"*(\d{4})"
@@ -76,8 +100,8 @@ VER_REQUIRES_ML = re.compile(
     + r"*v?(\d+(?:\.\d+)+)", re.IGNORECASE)
 VER_DUNDER_ML = re.compile(
     r"__version__" + _HS + r"*=" + _HS + r"*[\"'](\d+(?:\.\d+)+)[\"']")
-VER_WORD_ML = re.compile(
-    r"\bversion" + _HS + r"+v?(\d+(?:\.\d+)+)\b", re.IGNORECASE)
+VER_WORD_ML = _guarded(re.compile(
+    r"\bversion" + _HS + r"+v?(\d+(?:\.\d+)+)\b", re.IGNORECASE), "v")
 GO_IMPORT_ML = re.compile(r"^" + _HS + r"*\"([\w/.-]+)\",?" + _HS + r"*$",
                           re.MULTILINE)
 CLASS_ML = re.compile(
@@ -93,7 +117,7 @@ DEF_ML = re.compile(
 METHOD_ML = re.compile(
     r"^" + _HS + r"+def" + _HS + r"+([A-Za-z_]\w*)" + _HS + r"*\(",
     re.MULTILINE)
-CALL_ML = re.compile(r"([A-Za-z_][\w.]*)" + _HS + r"*\(")
+CALL_ML = re.compile(r"([A-Za-z_][\w.]*+)" + _HS + r"*+\(")
 
 MODULE_PATTERNS: dict[str, list[re.Pattern]] = {
     "python": [
@@ -151,7 +175,7 @@ def detect_mentions(block_type: str, lang: str, content: str) -> list[dict]:
         return out
 
     # --- licenses / authors / dates / versions: scanned in any block ----
-    for m in LICENSE_RE.finditer(content):
+    for m in LICENSE_ML.finditer(content):
         line = content[content.rfind("\n", 0, m.start()) + 1:]
         line = line[: line.find("\n")] if "\n" in line else line
         out.append(_mention("License", m.group(0), m.start(), m.end(), 0.9,
@@ -177,7 +201,7 @@ def detect_mentions(block_type: str, lang: str, content: str) -> list[dict]:
     for am in AT_AUTHOR_ML.finditer(content):
         out.append(_mention("Author", am.group(1), am.start(1), am.end(1),
                             0.9, evidence=_line(am.start()).strip()[:200]))
-    for dm in DATE_RE.finditer(content):
+    for dm in DATE_ML.finditer(content):
         line = _line(dm.start())
         low = line.lower()
         ctx = "modified" if ("last modified" in low or "updated" in low) else None
@@ -209,7 +233,7 @@ def detect_mentions(block_type: str, lang: str, content: str) -> list[dict]:
             continue
         ver_lines[ls] = None  # line handled either way (emit or suppress)
         line = _line(vm.start())
-        if not LICENSE_RE.search(line):
+        if not LICENSE_ML.search(line):
             out.append(_mention("Version", vm.group(1), vm.start(1),
                                 vm.end(1), 0.9, ctx="has",
                                 evidence=line.strip()[:200]))
@@ -348,39 +372,7 @@ def mentions_from_files(ingested: DataFrame) -> DataFrame:
                                     b["content"], rows)
             yield pd.DataFrame(rows, columns=_M_COLS)
 
-    from .type_norm import normalize_entity_types
-
-    # F7: entity-type alias projection + closed-enum filter
-    # (entities.py:128-143, ner_agent.py:350-356) — identity on this
-    # extractor's canonical output, active for external mention sources
-    return normalize_entity_types(ingested.mapInPandas(run, schema=MENTIONS_SCHEMA))
-
-
-def mentions_from_blocks(blocks: DataFrame, ingested: DataFrame) -> DataFrame:
-    """st2 over a materialized blocks table (checkpoint-resume path).
-    Structural File/Repo mentions come from the ingest table."""
-
-    def run_blocks(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for r in pdf.itertuples(index=False):
-                _rows_for_block(r, r.block_type, r.block_id, r.content, rows)
-            yield pd.DataFrame(rows, columns=_M_COLS)
-
-    def run_docs(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for r in pdf.itertuples(index=False):
-                _structural_rows(r, rows)
-            yield pd.DataFrame(rows, columns=_M_COLS)
-
-    from .type_norm import normalize_entity_types
-
-    return normalize_entity_types(
-        blocks.mapInPandas(run_blocks, schema=MENTIONS_SCHEMA).unionByName(
-            ingested.mapInPandas(run_docs, schema=MENTIONS_SCHEMA)
-        )
-    )
+    return ingested.mapInPandas(run, schema=MENTIONS_SCHEMA)
 
 
 def filter_pronouns(mentions: DataFrame) -> DataFrame:

@@ -50,12 +50,28 @@ def clean_text(content: str) -> str:
 # at one C-level call per line instead of len(table). None of the table
 # patterns contain capturing groups, so each alternative's own group is
 # sequential and m.lastindex IS the matched table index; per-pattern
-# IGNORECASE is scoped inline with (?i:...). Equivalence is pinned in
-# tests/test_segment.py.
+# IGNORECASE is scoped inline with (?i:...).
+#
+# The LICENSE and COMMENT alternatives open with `^\s*(?:prefix)?\s*`,
+# which splits a line's leading whitespace between the two runs in O(n^2)
+# ways before failing on an indented code line. Both runs are compiled
+# possessive (`\s*+`, Python >= 3.11): the token after each run (a comment
+# prefix, a keyword or \S) never matches whitespace, so giving whitespace
+# back could never produce a match. SECTION_PATTERNS stays the spec;
+# equivalence is pinned in tests/test_segment.py.
+_POSSESSIVE_WS = {"LICENSE", "COMMENT"}
+
+
+def _hot_pattern(btype: str, pat: re.Pattern) -> str:
+    src = pat.pattern
+    if btype in _POSSESSIVE_WS:
+        src = src.replace(r"\s*", r"\s*+")
+    return "((?i:{}))".format(src) if (pat.flags & re.IGNORECASE) \
+        else "((?:{}))".format(src)
+
+
 _COMBINED_SECTION_RE = re.compile("|".join(
-    "((?i:{}))".format(pat.pattern) if (pat.flags & re.IGNORECASE)
-    else "((?:{}))".format(pat.pattern)
-    for _t, pat in SECTION_PATTERNS))
+    _hot_pattern(t, pat) for t, pat in SECTION_PATTERNS))
 _SECTION_TYPES = [t for t, _p in SECTION_PATTERNS]
 
 

@@ -8,11 +8,14 @@ alias maps before anything downstream sees them:
   (alias -> canonical), then the closed-enum filter rejects anything still
   unknown (ner_agent.py:350-356).
 
-This engine's own extractors emit canonical types by construction, so on
-the built-in pipeline these projections are identity maps — but they are
-WIRED (segment/mentions apply them), so externally-ingested block or
-mention tables with raw spellings normalize exactly like the reference.
-Pure Catalyst: a literal MAP lookup + closed-enum CASE, no Python.
+This engine's own extractors emit canonical types by construction, so
+the pipeline's mention extraction returns its rows unprojected
+(tests/test_type_norm.py guards that they are canonical); only the
+standalone blocks table (`segment`) still applies the block projection.
+The projections serve externally-ingested block or mention tables with
+raw spellings, which normalize exactly like the reference, and the
+`kg_type_normalization` query. Pure Catalyst: a literal MAP lookup +
+closed-enum CASE, no Python.
 """
 
 from __future__ import annotations

@@ -1,6 +1,35 @@
 """st2 unit tests: detector rules, pronoun/reference filtering."""
 
+import re
+
+import pytest
+
+from legal_knowledge_graph_spark.operators import mentions as mn
 from legal_knowledge_graph_spark.operators.mentions import detect_mentions
+
+# Inputs where a guarded or possessive rewrite of a pattern would first
+# differ from its spec form: long blank runs, identifiers glued to
+# digits, dots and blanks before "(", license terms glued to "-" or \w,
+# dates touching digits or "-", and the case folds of the IGNORECASE
+# patterns (dotted/dotless i, Kelvin sign, long s).
+ADVERSARIAL = [
+    "1abc( .foo( a.b  ( a.b\t\t( ab.( x.y.z   (1)\nfoo\n(bar)\n",
+    "call" + " " * 400 + "x" + "\t" * 300 + "(\n" + "a" * 2000 + "\n",
+    "a.b.c" * 300 + "\n" + "." * 500 + "(\n",
+    "ſelf.run() Kelvin() İnit() ıdent() é.ü(x) _x(y) __z__ (w)\n",
+    "-MIT MIT- xMIT MITx _MIT MIT_ 2MIT MIT2 (MIT) MIT, mit-license\n",
+    "Apache-2.0-only Apache-2.0. GPLv3x gpl-3.0-or-later- BSD-3-Clause\n",
+    "the mit license; THE MIT LICENSE! Modified BSD License/ASL 2.0\n",
+    "ıSC License İSC Licence ISC Iſc iſc BſD-3-Clause GPL-3.0 MPL 2.0\n",
+    "Apache License, Version 2.0 and version 3.1 \u212aelvin\n",
+    "2024-01-15 12024-01-15 2024-01-151 -2024-01-15 2024-01-15- "
+    "x2024-01-15 2024-01-15x 2024-1-15 \u0662\u0660\u0662\u0664-"
+    "\u0660\u0661-\u0661\u0665\n",
+    "Last modified 2023-01-02\n2023-01-03-2023-01-04 2023-01-05\n",
+    "Version 1.2 VERSION v2.0.1 version  1 xversion 1.0 versions 1.0\n"
+    "version\n1.0 version 1.2.x \u1d5bersion 1.0 version 4.5_6\n",
+    " " * 300 + "def f(): g()\n" + "\t" * 300 + "# Copyright 2020 X\n",
+]
 
 
 def _by_type(ms, t):
@@ -106,19 +135,26 @@ def test_vectorized_scan_matches_per_line_spec():
     precedence is per-line (requires > __version__ > word-form, license
     lines suppress word-form), and the code walk replays the cls/encl
     state machine. This reference implementation IS the spec the
-    vectorized path is pinned to."""
-    import re
-
+    vectorized path is pinned to; it scans with the spec patterns, the
+    kernel with their guarded and possessive hot-path forms."""
+    from legal_knowledge_graph_spark.corpus import generate_corpus
     from legal_knowledge_graph_spark.operators.mentions import (
         AT_AUTHOR_RE, CALL_KEYWORDS, CALL_RE, CLASS_RE, COPYRIGHT_RE,
         DATE_RE, DEF_RE, LICENSE_RE, METHOD_RE, VER_DUNDER_RE,
         VER_REQUIRES_RE, VER_WORD_RE, _lines, _mention,
     )
+    from legal_knowledge_graph_spark.operators.segment import segment_text
     from legal_knowledge_graph_spark.schema import PRONOUNS
 
     def spec(block_type, content):
         out = []
         for line, off in _lines(content):
+            # no license term spans a newline, and the lookarounds treat
+            # a line boundary like a string boundary: per-line == whole
+            for lm in LICENSE_RE.finditer(line):
+                out.append(_mention("License", lm.group(0), off + lm.start(),
+                                    off + lm.end(), 0.9,
+                                    evidence=line.strip()[:200]))
             cm = COPYRIGHT_RE.search(line)
             if cm:
                 out.append(_mention("Date", cm.group(1), off + cm.start(1),
@@ -232,15 +268,77 @@ def test_vectorized_scan_matches_per_line_spec():
         "Copyright (c) 2022-2023, Acme Corp   \n",
         "class E:\n  def m1(s): m2()\n  def m2(s): m1()\n",
         "",
-    ]
+    ] + ADVERSARIAL
+    # blocks of large (content_scale 32) corpus files
+    fixtures += [b["content"] for r in generate_corpus(3, 3, 32)[0]
+                 for b in segment_text("d", r[4])]
     # metadata patterns are scanned in every block type; Module patterns
     # differ by lang and are already covered by dedicated tests — pin the
     # python path here
     for content in fixtures:
         for bt in ("FUNCTION", "COMMENT"):
             got = [m for m in detect_mentions(bt, "python", content)
-                   if m["attributes"].get("role") != "import"
-                   and m["entity_type"] != "License"]  # already whole-content
+                   if m["attributes"].get("role") != "import"]
             want = spec(bt, content)
             assert sorted(map(key, got)) == sorted(map(key, want)), (
                 bt, content)
+
+
+def _twin(pat):
+    """The whole-content twin of a per-line spec pattern, built as the
+    twins are: every `\\s` narrowed to horizontal whitespace."""
+    return re.compile(pat.pattern.replace(r"\s", mn._HS), pat.flags)
+
+
+# (spec form, hot-path form) of every pattern the hot path rewrites
+SPEC_PAIRS = {
+    "LICENSE": (mn.LICENSE_RE, mn.LICENSE_ML),
+    "DATE": (mn.DATE_RE, mn.DATE_ML),
+    "VER_WORD": (_twin(mn.VER_WORD_RE), mn.VER_WORD_ML),
+    "CALL": (_twin(mn.CALL_RE), mn.CALL_ML),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SPEC_PAIRS))
+def test_hot_patterns_match_spec_forms(name):
+    """Every match (span and groups) of a hot-path pattern equals its spec
+    form's, on large corpus files and on the adversarial fixtures."""
+    from legal_knowledge_graph_spark.corpus import generate_corpus
+
+    spec, hot = SPEC_PAIRS[name]
+    texts = [r[4] for r in generate_corpus(4, 7, 32)[0]] + ADVERSARIAL
+
+    def found(pat):
+        return [(m.span(), m.groups()) for t in texts for m in pat.finditer(t)]
+
+    want = found(spec)
+    assert want, name  # the inputs exercise the pattern
+    assert found(hot) == want
+
+
+def _all_chars() -> str:
+    return "".join(map(chr, (*range(0xD800), *range(0xE000, 0x110000))))
+
+
+def test_license_guard_accepts_every_case_fold():
+    """Each license term, with its first character replaced by every code
+    point IGNORECASE folds onto it (e.g. dotless i, Kelvin sign), is found
+    by the guarded pattern exactly as by the spec."""
+    chars = _all_chars()
+    probes = []
+    for term in mn._license_terms:
+        folds = re.findall(re.escape(term[0]), chars, re.IGNORECASE)
+        assert term[0] in folds
+        probes += [f"{c}{term[1:]} and ({c}{term[1:]})" for c in folds]
+    assert any(not p[0].isascii() for p in probes)  # folds exist
+    for p in probes:
+        want = [m.span() for m in mn.LICENSE_RE.finditer(p)]
+        assert [m.span() for m in mn.LICENSE_ML.finditer(p)] == want, p
+        assert want, p
+
+
+def test_possessive_runs_never_give_back_a_match():
+    """The premise of CALL_ML's possessive runs: no code point is both an
+    identifier character and a horizontal blank or "(", so giving one back
+    could never let the rest of the pattern match."""
+    assert not re.findall(r"(?=[\w.])[^\S\n]|(?=[\w.])\(", _all_chars())

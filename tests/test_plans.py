@@ -169,3 +169,20 @@ def test_zorder_key_closed_form_and_layout(spark):
     plan = repartition_zorder(big, ["x", "y"], 8)._jdf \
         .queryExecution().executedPlan().toString()
     assert "rangepartitioning" in plan.lower()
+
+
+def test_mention_extraction_plan_tops_at_map_in_pandas(spark):
+    """The extractor emits only canonical entity types, so its output is
+    returned as the mapInPandas produced it: no type projection or
+    closed-enum filter above the UDF, in the optimized and the physical
+    plan."""
+    from legal_knowledge_graph_spark.corpus import corpus_df
+    from legal_knowledge_graph_spark.operators.ingest import ingest
+    from legal_knowledge_graph_spark.operators.mentions import (
+        mentions_from_files,
+    )
+
+    qe = mentions_from_files(ingest(corpus_df(spark, 4, seed=1)))._jdf \
+        .queryExecution()
+    assert qe.optimizedPlan().nodeName() == "MapInPandas"
+    assert qe.sparkPlan().nodeName() == "MapInPandas"

@@ -78,9 +78,11 @@ def test_block_ids_deterministic():
 
 
 def test_combined_section_pattern_equals_table_scan():
-    """The single-alternation line classifier must agree with a sequential
-    first-match-wins scan of SECTION_PATTERNS on every corpus line plus
-    adversarial fixtures (the spec the combined regex is pinned to)."""
+    """The single-alternation line classifier, with its possessive
+    leading-whitespace runs, must agree with a sequential first-match-wins
+    scan of SECTION_PATTERNS on every corpus line, the lines of large
+    (content_scale 32) files, and adversarial fixtures (the spec the
+    combined regex is pinned to)."""
     from legal_knowledge_graph_spark.corpus import generate_corpus
     from legal_knowledge_graph_spark.operators.segment import _line_type
     from legal_knowledge_graph_spark.schema import SECTION_PATTERNS
@@ -92,6 +94,7 @@ def test_combined_section_pattern_equals_table_scan():
         return None
 
     files, _gt, _gn = generate_corpus(120, seed=42)
+    files += generate_corpus(4, seed=3, content_scale=32)[0]
     lines = []
     for _repo, _path, _sha, _lang, content in files:
         lines.extend((content or "").split("\n"))
@@ -103,5 +106,17 @@ def test_combined_section_pattern_equals_table_scan():
         'it("works")', "describe(", "using System;", "#include <x>",
         "=====", '"""doc', "def test_x():", "func TestY(", "type T struct{",
     ]
+    # long blank runs (ASCII and Unicode) before text that is, or only
+    # almost is, a comment prefix or a license keyword
+    for ws in (" " * 500, "\t" * 300, " \t" * 150, "\u3000\xa0\u2003" * 100):
+        lines += [ws + tail for tail in (
+            "x = 1", "return f(x)", "#", "# ", "#  x", "##", "//", "/*", "*",
+            "--", "-", "/", "# Copyright 2020", "* license: MIT",
+            "--  MIT and more License", "//" + ws + "Copyright", "/*" + ws,
+            "# " + ws + "SPDX-License-Identifier: MIT", "", "copyrigh",
+        )]
+    # IGNORECASE folds: dotted/dotless i, Kelvin sign, long s
+    lines += ["Lİcense:", "Lıcense:", "LICENſE:", "\u212a", "# İ", "SPDX-Lıcense",
+              "  ſpdx-license-identifier", "mıt x license", "copyrıght 1"]
     for ln in lines:
         assert _line_type(ln) == spec(ln), repr(ln)

@@ -47,8 +47,10 @@ def test_entity_alias_matrix_and_closed_enum(spark):
 
 
 def test_wired_into_pipeline_is_identity_on_canonical_output(spark):
-    """The built-in extractors emit canonical types; the wired projections
-    must not change them (and must keep every mention)."""
+    """Guards that the built-in extractors emit only canonical types:
+    mention extraction returns its rows without the entity-type projection
+    (tests/test_plans.py pins that plan shape), so a non-canonical type
+    from it would reach canonicalization unfiltered."""
     from legal_knowledge_graph_spark.corpus import corpus_df
     from legal_knowledge_graph_spark.operators.ingest import ingest
     from legal_knowledge_graph_spark.operators.mentions import mentions_from_files
