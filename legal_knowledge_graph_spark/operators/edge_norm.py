@@ -1,12 +1,9 @@
-"""st5 — relation normalization: predicate aliasing, endpoint resolution,
-schema validation, need_coref flagging, (s,p,o) dedup.
+"""st5 — relation normalization: endpoint resolution, schema validation,
+need_coref flagging, (s,p,o) dedup.
 
 Distributed restatement of
 /root/reference/src/langgraph_agents/relation_norm_agent.py:87-388:
 
-- predicate alias map + containment fuzzy fallback (:209-253) — broadcast
-  exact join, then broadcast theta-join on containment for the misses
-  (deterministic first-match = shortest alias, then lexicographic).
 - endpoint resolution (J3, :136-156): join triples -> form_map on
   (entity_type, text) for subject and object.
 - schema validation (F9, :255-298): broadcast signature table; mismatch
@@ -15,6 +12,14 @@ Distributed restatement of
 - need_coref (F10, :300-326): endpoint missing from the entity map.
 - dedup (A3 again, :328-360) on resolved (subject_id, predicate,
   object_id), order-free.
+
+Predicate aliasing (:209-253) is not part of `normalize_edges`: the rule
+table in st4 emits only the 15 canonical `RELATION_TYPES` predicates, on
+which the alias map is the identity. `normalize_predicates` keeps the
+alias-map contract — broadcast exact join, then broadcast theta-join on
+containment for the misses (deterministic first-match = shortest alias,
+then lexicographic) — for triples from outside the rule table; apply it
+before `normalize_edges`.
 
 edge_id is content-derived sha2 so identical graphs rebuild identical ids
 at any parallelism (SURVEY §1.3).
@@ -43,7 +48,8 @@ def predicate_tables(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
 def normalize_predicates(triples: DataFrame, spark: SparkSession) -> DataFrame:
     """Alias map -> canonical predicate; containment fuzzy fallback for
     misses (relation_norm_agent.py:238-253). Unknown predicates pass
-    through unchanged (':251-253')."""
+    through unchanged (':251-253'). For triples from outside st4's rule
+    table: on `emit_triples` output it is the identity."""
     alias_df, _ = predicate_tables(spark)
     known = set(RELATION_TYPES)
 
@@ -124,8 +130,9 @@ def normalize_edges(
     map is orders of magnitude smaller. When form_map fits the broadcast
     threshold both resolution joins run map-side and the fat side is never
     re-partitioned — the only full-width triple shuffle left in this stage
-    is the final edge-id dedup."""
-    t = normalize_predicates(triples, spark)
+    is the final edge-id dedup.
+
+    Predicates are taken as they are (see the module docstring)."""
     _, sig_df = predicate_tables(spark)
 
     fm_s = form_map.select(
@@ -143,7 +150,7 @@ def normalize_edges(
     if _forms_small(form_map, n_forms):
         fm_s, fm_o = F.broadcast(fm_s), F.broadcast(fm_o)
     e = (
-        t.join(fm_s, ["subject_type", "subject"], "left")
+        triples.join(fm_s, ["subject_type", "subject"], "left")
         .join(fm_o, ["object_type", "object"], "left")
         .join(F.broadcast(sig_df), "predicate", "left")
     )

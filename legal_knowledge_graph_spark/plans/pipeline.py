@@ -17,8 +17,6 @@ whose fingerprint chain is unchanged.
 
 from __future__ import annotations
 
-import os
-import tempfile
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,56 +49,27 @@ class KGPipeline:
         use_lsh: bool | str = "auto",
         bucket_by_repo: int | None = None,
         run_id: str = "r0",
-        stage_format: str | None = None,
     ):
         self.spark = spark
         self.store = StageStore(checkpoint_root) if checkpoint_root else None
         self.use_lsh = use_lsh
         self.bucket_by_repo = bucket_by_repo
         self.run_id = run_id
-        # in-memory-mode materialization for multi-consumer stage outputs:
-        # 'checkpoint' = localCheckpoint (row-serialized blocks, lz4 via
-        # spark.rdd.compress); 'parquet' = columnar scratch round-trip —
-        # the A/B lever for the single-box 8->32 bandwidth term
-        # (VERDICT r3 #8). Env override so bench_scaling children switch
-        # without code edits.
-        self.stage_format = stage_format or os.environ.get(
-            "SPARK_GRAFT_STAGE_FORMAT", "checkpoint")
-        self._scratch: str | None = None
-        self._run_seq = 0
-
-    def _materialize(self, name: str, df: DataFrame) -> DataFrame:
-        if self.stage_format == "parquet":
-            if self._scratch is None:
-                import atexit
-                import shutil
-
-                self._scratch = tempfile.mkdtemp(prefix="lkg_stage_")
-                # scratch outlives run() (returned DataFrames read it
-                # lazily) but not the process (ADVICE r4)
-                atexit.register(shutil.rmtree, self._scratch,
-                                ignore_errors=True)
-            # per-run subdir: a second run() must not overwrite stage
-            # paths that DataFrames from the first run still read
-            path = os.path.join(self._scratch, f"run{self._run_seq}", name)
-            df.write.mode("overwrite").parquet(path)
-            return self.spark.read.parquet(path)
-        return df.localCheckpoint()
 
     def _stage(self, name: str, fp: str, build, reused: bool = False) -> DataFrame:
         """Checkpointed mode: parquet stage table + manifest skip. In-memory
         mode: stage outputs consumed by >1 downstream branch are
-        materialized (see _materialize) so the extraction UDFs run once,
-        not once per branch (reused=True)."""
+        materialized with localCheckpoint (row-serialized blocks, lz4 via
+        spark.rdd.compress) so their plans run once, not once per branch
+        (reused=True)."""
         if self.store is None:
             df = build()
-            return self._materialize(name, df) if reused else df
+            return df.localCheckpoint() if reused else df
         if self.store.is_complete(name, fp):
             return self.store.read(self.spark, name)
         return self.store.write(name, build(), fp)
 
     def run(self, files: DataFrame) -> PipelineResult:
-        self._run_seq += 1
         fp0 = fingerprint(self.run_id, "ingest", self.bucket_by_repo)
         ingested = self._stage(
             "st0_ingest", fp0, lambda: ingest(files, self.bucket_by_repo))
@@ -123,16 +92,10 @@ class KGPipeline:
                 nodes = self.store.write("st3_nodes", nodes, fp3)
                 form_map = self.store.write("st3_form_map", form_map, fp3)
             else:
-                nodes = self._materialize("st3_nodes", nodes)  # coref + caller
+                nodes = nodes.localCheckpoint()  # coref + caller
 
         fp4 = fingerprint(fp2, "triples")
-        # reused=True: normalize_edges' hits/misses predicate split consumes
-        # the triple table twice — without a materialization the whole
-        # emit+dedup subtree (including its widest shuffle) executes once
-        # per branch (measured in the formatted plan as two distinct
-        # Exchanges over identical inputs)
-        triples = self._stage("st4_triples", fp4, lambda: emit_triples(mentions),
-                              reused=True)
+        triples = self._stage("st4_triples", fp4, lambda: emit_triples(mentions))
 
         fp5 = fingerprint(fp3, fp4, "edges")
         edges_raw = self._stage(

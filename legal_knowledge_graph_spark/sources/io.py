@@ -25,7 +25,7 @@ import json
 import os
 from typing import Iterable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 def fingerprint(*parts: object) -> str:
@@ -56,8 +56,6 @@ class StageStore:
 
     def write(self, stage: str, df: DataFrame, fp: str,
               partition_by: list[str] | None = None) -> DataFrame:
-        from pyspark.sql import Observation, functions as F
-
         path = os.path.join(self.root, stage)
         # manifest row count rides the write job itself via observe() — the
         # former out.count() re-scanned every stage table once more, doubling
@@ -128,7 +126,9 @@ def upsert_parquet(spark: SparkSession, path: str, updates: DataFrame,
     the reference's MERGE — client.py:80-84 'SET n = $properties'
     overwrite). Each upsert writes a new immutable snapshot directory and
     advances a `_current` pointer — previously returned DataFrame handles
-    stay valid, mirroring Iceberg snapshot isolation."""
+    stay valid, mirroring Iceberg snapshot isolation. The returned handle
+    carries the snapshot's row count as `_kg_rows`, observed on the write
+    job (no count job)."""
     updates = updates.dropDuplicates(key_cols)
     cur = _current_version(path)
     if cur is not None:
@@ -140,13 +140,17 @@ def upsert_parquet(spark: SparkSession, path: str, updates: DataFrame,
         merged = updates
         nxt = 0
     out_dir = _version_dir(path, nxt)
-    merged.write.mode("overwrite").parquet(out_dir)
+    obs = Observation()
+    merged.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite").parquet(out_dir)
     os.makedirs(path, exist_ok=True)
     tmp = os.path.join(path, "_current.tmp")
     with open(tmp, "w") as f:
         f.write(str(nxt))
     os.replace(tmp, os.path.join(path, "_current"))
-    return spark.read.parquet(out_dir)
+    out = spark.read.parquet(out_dir)
+    out._kg_rows = obs.get["rows"]
+    return out
 
 
 def read_graph_table(spark: SparkSession, path: str) -> DataFrame:

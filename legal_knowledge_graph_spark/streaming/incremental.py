@@ -10,12 +10,16 @@ Two levels (SURVEY §2.8):
   exactly-once ledger contents even across a mid-stream crash — then
   (2) recomputes the stateful suffix (st3 canonicalize -> st4 triples ->
   st5 edge-norm -> st6 coref) over the ACCUMULATED ledger and (3) REPLACES
-  the versioned graph snapshot (sources.io.snapshot_graph). The graph is a
-  deterministic function of the ledger, so after draining, the store equals
-  the single-shot batch run no matter where the stream was killed/resumed —
-  recompute-flavored incremental view maintenance: correct under
-  cross-batch canonical-representative changes that a merge-only upsert
-  would strand."""
+  the versioned graph snapshot (sources.io.snapshot_graph). As in the
+  batch pipeline, st5 is materialized (localCheckpoint) before coref, so
+  each refresh runs st4 and st5 once: coref's checkpoints and the snapshot
+  write read the materialized edges instead of re-running their lineage.
+  The refresh manifest's ledger row count rides the upsert's write job.
+  The graph is a deterministic function of the ledger, so after draining,
+  the store equals the single-shot batch run no matter where the stream
+  was killed/resumed — recompute-flavored incremental view maintenance:
+  correct under cross-batch canonical-representative changes that a
+  merge-only upsert would strand."""
 
 from __future__ import annotations
 
@@ -97,18 +101,18 @@ def run_full_incremental(
                 return json.load(f).get("ledger_rows")
         return None
 
-    def refresh(ledger: DataFrame, ledger_rows: int | None = None) -> int:
+    def refresh(ledger: DataFrame, ledger_rows: int) -> int:
         nodes, form_map = canonicalize(ledger, spark, use_lsh)
         nodes = nodes.localCheckpoint()
         triples = emit_triples(ledger)
-        edges = resolve_coref(
-            normalize_edges(triples, form_map, spark), nodes, spark)
-        snapshot_graph(spark, graph_root, nodes, edges)
+        # st5 feeds coref's checkpoints, its dup-key semi-join and the
+        # snapshot write: materialize it so st4+st5 run once, not per action
+        edges = normalize_edges(triples, form_map, spark).localCheckpoint()
+        snapshot_graph(spark, graph_root, nodes,
+                       resolve_coref(edges, nodes, spark))
         # record the ledger count AT this refresh (ADVICE r4): the resume
         # baseline must measure growth from the last graph the store
         # actually reflects, not from whatever the ledger holds now
-        if ledger_rows is None:
-            ledger_rows = ledger.count()
         os.makedirs(graph_root, exist_ok=True)
         tmp = refresh_manifest + ".tmp"
         with open(tmp, "w") as f:
@@ -132,20 +136,21 @@ def run_full_incremental(
         current = 0
     last = _last_refresh_rows()
     baseline = last if last is not None else 0
+    # ledger_rows: the current ledger's row count, from the count above
+    # and then from each upsert's observed write (no count job)
     state = {"since": 0, "rows_at_refresh": baseline,
-             "dirty": current > baseline}
+             "dirty": current > baseline, "ledger_rows": current}
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         delta = mentions_from_files(ingest(batch_df))
         ledger = upsert_parquet(spark, ledger_dir, delta, ["mention_id"])
+        rows = state["ledger_rows"] = ledger._kg_rows
         if on_batch is not None:
             on_batch(batch_id)
         state["since"] += 1
         state["dirty"] = True
         due = state["since"] >= refresh_every
-        rows = None
         if not due and refresh_growth is not None:
-            rows = ledger.count()
             if state["rows_at_refresh"] > 0:
                 due = rows >= state["rows_at_refresh"] * (1.0 + refresh_growth)
             else:
@@ -172,5 +177,5 @@ def run_full_incremental(
     if state["dirty"]:
         # final drain: the last batches landed in the ledger without a
         # refresh — fold them into one closing snapshot
-        refresh(read_graph_table(spark, ledger_dir))
+        refresh(read_graph_table(spark, ledger_dir), state["ledger_rows"])
     return q

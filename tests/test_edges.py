@@ -127,3 +127,51 @@ def test_normalize_edges_threaded_count_is_jobfree(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup("edgeplan2")) == []
     assert edges.count() == 1
+
+
+def _rule_mentions(spark):
+    """One mention per st4 rule; together they fire all 15 rules."""
+    rows = [
+        ("File", "r/f.py", {}),
+        ("Module", "numpy", {"role": "import"}),
+        ("Function", "parse", {"role": "def"}),
+        ("Function", "run", {"role": "method", "cls": "Job"}),
+        ("Class", "Job", {"role": "def"}),
+        ("Class", "Base", {"role": "base", "cls": "Job"}),
+        ("Function", "helper", {"role": "call", "encl": "parse"}),
+        ("License", "MIT License", {}),
+        ("Author", "Ada Lovelace", {}),
+        ("Date", "2020-01-01", {"ctx": "copyright"}),
+        ("Date", "2021-02-03", {"ctx": "modified"}),
+        ("Version", "1.2.3", {"ctx": "has"}),
+        ("Version", ">=3.8", {"ctx": "requires"}),
+    ]
+    m = [("dk", "r", "f.py", "sha", f"b{i}", "OTHER", f"m{i}", t, x, 0,
+          len(x), 0.9, False, None, a) for i, (t, x, a) in enumerate(rows)]
+    return spark.createDataFrame(m, MENTIONS_SCHEMA)
+
+
+def test_emitted_predicates_are_canonical(spark):
+    """normalize_edges takes predicates as they are: every predicate the
+    st4 rule table emits, on the golden corpus and on one hand-built
+    mention per rule, is a RELATION_TYPES key, so the alias map
+    (normalize_predicates) is the identity on st4 output, row for row."""
+    from legal_knowledge_graph_spark.corpus import corpus_df
+    from legal_knowledge_graph_spark.operators.ingest import ingest
+    from legal_knowledge_graph_spark.operators.mentions import (
+        mentions_from_files,
+    )
+    from legal_knowledge_graph_spark.operators.triples import emit_triples
+    from legal_knowledge_graph_spark.schema import RELATION_TYPES
+
+    by_rule = emit_triples(_rule_mentions(spark))
+    assert {r.predicate for r in by_rule.collect()} == set(RELATION_TYPES)
+    golden = emit_triples(
+        mentions_from_files(ingest(corpus_df(spark, 120, seed=42))))
+    for t in (by_rule, golden):
+        got = t.collect()
+        assert got and {r.predicate for r in got} <= set(RELATION_TYPES)
+        rows = sorted(tuple(r) for r in got)
+        aliased = normalize_predicates(t, spark)
+        assert aliased.columns == t.columns
+        assert sorted(tuple(r) for r in aliased.collect()) == rows

@@ -819,3 +819,49 @@ def test_association_rules_broadcast_guard(spark, monkeypatch):
 
     assert sorted(map(tuple, small.collect())) == \
         sorted(map(tuple, big.collect()))
+
+
+def test_refresh_feeds_coref_materialized_edges(spark, tmp_path, monkeypatch):
+    """The refresh materializes st5 before coref: the edges resolve_coref
+    receives are a checkpoint scan (LogicalRDD), so coref's actions and
+    the snapshot write never re-run the triple emission (Generate) or the
+    triple and edge dedups (Aggregate) beneath it."""
+    from legal_knowledge_graph_spark.operators import coref
+    from legal_knowledge_graph_spark.streaming import run_full_incremental
+
+    seen = []
+    real = coref.resolve_coref
+
+    def spy(edges, nodes, spark_, *args, **kwargs):
+        seen.append(edges._jdf.queryExecution().analyzed())
+        return real(edges, nodes, spark_, *args, **kwargs)
+
+    monkeypatch.setattr(coref, "resolve_coref", spy)
+    landing = str(tmp_path / "landing")
+    corpus_df(spark, 12, seed=3).coalesce(1).write.parquet(landing)
+    run_full_incremental(spark, landing, str(tmp_path / "ledger"),
+                         str(tmp_path / "graph"), str(tmp_path / "ckpt"),
+                         use_lsh=False)
+    assert len(seen) == 1
+    plan = seen[0]
+    assert plan.nodeName() == "LogicalRDD"
+    tree = plan.treeString()
+    assert "Generate" not in tree and "Aggregate" not in tree, tree
+
+
+def test_upsert_handle_carries_observed_row_count(spark, tmp_path):
+    """upsert_parquet hands the snapshot's row count on the returned
+    handle (`_kg_rows`, observed on the write job), which the refresh
+    manifest records instead of running a count job: it equals the
+    snapshot's count on a first write, on a merge, and on an empty one."""
+    from legal_knowledge_graph_spark.sources.io import upsert_parquet
+
+    path = str(tmp_path / "t")
+    a = spark.createDataFrame([(i, "a") for i in range(5)], "k int, v string")
+    b = spark.createDataFrame([(i, "b") for i in range(3, 8)],
+                              "k int, v string")
+    for upd, want in ((a, 5), (b, 8), (b.limit(0), 8)):
+        out = upsert_parquet(spark, path, upd, ["k"])
+        assert out._kg_rows == out.count() == want
+    empty = upsert_parquet(spark, str(tmp_path / "e"), a.limit(0), ["k"])
+    assert empty._kg_rows == empty.count() == 0
