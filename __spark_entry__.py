@@ -50,12 +50,16 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _corpus_size(sf_dir: str) -> int:
-    return _CORPUS_FILES.get(os.path.basename(sf_dir.rstrip("/")), 240)
+    sf_name = os.path.basename(sf_dir.rstrip("/"))
+    if sf_name not in _CORPUS_FILES:
+        raise ValueError(f"no corpus size for {sf_name!r}; known sfs: "
+                         f"{', '.join(_CORPUS_FILES)}")
+    return _CORPUS_FILES[sf_name]
 
 
 def entry(spark: SparkSession) -> DataFrame:
     files = corpus_df(spark, _CORPUS_FILES["sf0.001"], seed=42)
-    res = run_pipeline(spark, files, use_lsh="auto")
+    res = run_pipeline(spark, files)
     return res.edges.select(
         "edge_id", "subject_canonical", "predicate", "object_canonical",
         "confidence", "need_coref", "validation_passed",
@@ -217,14 +221,12 @@ def kg_term_cooccurrence(spark, sf_dir):
 # Spark operator, mirroring how the reference's emitted triples are its
 # graded artifact (relation_agent.py:327-337).
 def kg_pipeline_nodes(spark, sf_dir):
-    res = run_pipeline(spark, corpus_df(spark, _corpus_size(sf_dir), seed=42),
-                       use_lsh="auto")
+    res = run_pipeline(spark, corpus_df(spark, _corpus_size(sf_dir), seed=42))
     return res.nodes.select("entity_type", "canonical_name").distinct()
 
 
 def kg_pipeline_edges(spark, sf_dir):
-    res = run_pipeline(spark, corpus_df(spark, _corpus_size(sf_dir), seed=42),
-                       use_lsh="auto")
+    res = run_pipeline(spark, corpus_df(spark, _corpus_size(sf_dir), seed=42))
     return res.edges.where(~F.col("need_coref")).select(
         "subject_canonical", "predicate", "object_canonical").distinct()
 
@@ -236,8 +238,7 @@ def kg_pipeline_pr(spark, sf_dir):
     oracle is the constant (1.0, 1.0) because kg_pipeline_edges hash-equals
     the golden set (CORRECTNESS r2); any extraction regression moves the
     Spark side off 1.0 and fails this row."""
-    res = run_pipeline(spark, corpus_df(spark, _corpus_size(sf_dir), seed=42),
-                       use_lsh="auto")
+    res = run_pipeline(spark, corpus_df(spark, _corpus_size(sf_dir), seed=42))
     cols = ["subject_canonical", "predicate", "object_canonical"]
     got = res.edges.where(~F.col("need_coref")).select(*cols).distinct()
     sf_name = os.path.basename(sf_dir.rstrip("/"))

@@ -126,8 +126,7 @@ def main() -> None:
     files = corpus_df_distributed(
         spark, n_files, seed=42, partitions=max(int(cpus) * 2, 16))
     t0 = time.time()
-    res = run_pipeline(spark, files, use_lsh="auto",
-                       bucket_by_repo=max(int(cpus), 16))
+    res = run_pipeline(spark, files, bucket_by_repo=max(int(cpus), 16))
     n_triples = res.edges.count()
     force(res.nodes)
     kg_secs = round(time.time() - t0, 3)

@@ -26,7 +26,9 @@ import hashlib
 import random
 from dataclasses import dataclass, field
 
-from .functions.tokenize import pair_score, SIMILARITY_THRESHOLD
+from .functions.tokenize import (
+    SIMILARITY_THRESHOLD, TOKEN_DF_CAP, pair_score, token_set,
+)
 from .schema import SIMILARITY_TYPES, dictionary_rows
 
 # ---------------------------------------------------------------------------
@@ -368,14 +370,16 @@ def _dict_lookup() -> dict[tuple[str, str], str]:
 def canonicalize_spellings(
     spellings_by_type: dict[str, set[str]],
 ) -> dict[tuple[str, str], str]:
-    """Spec-level canonicalizer: union-find over pair_score >= 0.6 within
-    each similarity type, representative = lexicographically-least dict
-    canonical in the cluster, else longest text (ties -> lexicographically
-    greatest). Node identity is then (type, canonical) — clusters that
-    share a dict canonical unify by name even if pairwise unmerged
-    (mirrors reference representative selection, normalizer.py:257-277).
-
-    The distributed st3 stage implements the same spec with LSH + CC.
+    """Spec-level canonicalizer: st3's merge contract (stated in
+    operators/canonicalize.py) in plain Python. Within each similarity
+    type, candidates come from an inverted index over tokens of df <=
+    TOKEN_DF_CAP, candidates with pair_score >= 0.6 merge, union-find
+    closes the merges, and the representative is the lexicographically-
+    least dict canonical in the cluster, else the longest text (ties ->
+    lexicographically greatest). Node identity is then (type, canonical) —
+    clusters that share a dict canonical unify by name even if pairwise
+    unmerged (mirrors reference representative selection,
+    normalizer.py:257-277).
     """
     dic = _dict_lookup()
     out: dict[tuple[str, str], str] = {}
@@ -394,12 +398,19 @@ def canonicalize_spellings(
                 x = parent[x]
             return x
 
-        for i in range(len(items)):
-            for j in range(i + 1, len(items)):
-                s = pair_score(items[i], items[j], canon[items[i]], canon[items[j]])
-                if s >= SIMILARITY_THRESHOLD:
+        postings: dict[str, list[int]] = {}
+        for i, s in enumerate(items):
+            for tok in token_set(s):
+                postings.setdefault(tok, []).append(i)
+        for ids in postings.values():
+            if len(ids) > TOKEN_DF_CAP:
+                continue
+            for k, i in enumerate(ids):
+                for j in ids[k + 1:]:
                     ri, rj = find(i), find(j)
-                    if ri != rj:
+                    if ri != rj and pair_score(
+                        items[i], items[j], canon[items[i]], canon[items[j]]
+                    ) >= SIMILARITY_THRESHOLD:
                         parent[max(ri, rj)] = min(ri, rj)
         clusters: dict[int, list[str]] = {}
         for k in range(len(items)):

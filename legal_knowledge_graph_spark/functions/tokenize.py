@@ -12,6 +12,9 @@ The similarity *spec* (used both here and in golden generation):
               = 0.95 if both dict-matched to the same canonical
               = jaccard(token_set(a), token_set(b)) otherwise
   merge iff score >= 0.6
+Only pairs sharing a token whose per-type document frequency over
+distinct forms is <= TOKEN_DF_CAP are scored at all (block purging; the
+merge contract is stated in full in operators/canonicalize.py).
 (reference: /root/reference/src/normalization/normalizer.py:144,168-199 —
 containment 0.9, same-canonical 0.95, else keyword jaccard; raw-substring
 containment is deliberately strengthened to token-boundary containment,
@@ -29,6 +32,9 @@ _CAMEL_RE = re.compile(r"[A-Z]+(?=[A-Z][a-z])|[A-Z]?[a-z]+|[A-Z]+")
 SIMILARITY_THRESHOLD = 0.6
 CONTAINMENT_SCORE = 0.9
 SAME_CANONICAL_SCORE = 0.95
+# block purging: a token carried by more distinct forms of one type than
+# this is too common to make two forms candidates on its own
+TOKEN_DF_CAP = 1000
 
 
 def split_tokens(text: str) -> list[str]:

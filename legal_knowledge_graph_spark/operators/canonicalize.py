@@ -4,17 +4,29 @@ Distributed re-expression of the reference's normalizer
 (/root/reference/src/normalization/normalizer.py:38-310):
 
   dictionary pre-match (J1)  -> broadcast hash join on lowered text
-  similarity clustering (A1) -> candidate pairs (MinHashLSH over token
-                                sets, or deterministic token-blocking) ->
-                                JVM-side verify (containment 0.9 /
-                                same-dict-canonical 0.95 / token Jaccard,
-                                threshold 0.6; normalizer.py:144,168-199)
+  similarity clustering (A1) -> purged token blocking -> JVM-side verify
                                 -> connected components (large-star /
                                 small-star)
-  representative selection   -> least dict canonical in cluster, else
-                                longest text (normalizer.py:257-277)
   cluster -> node (A2)       -> groupBy aggregates + the reference
                                 confidence formula (normalizer.py:279-305)
+
+Merge contract, per similarity type over DISTINCT surface forms (the
+golden generator, corpus.canonicalize_spellings, implements the same four
+rules in plain Python):
+
+1. Candidates: pairs of distinct forms of the same type that share at
+   least one token whose document frequency (the number of distinct forms
+   of that type carrying it) is <= TOKEN_DF_CAP. Block purging is a rule
+   of the contract: a token above the cap makes no pair a candidate.
+2. Merge: a candidate pair with functions.tokenize.pair_score >= 0.6
+   (containment 0.9 / same dict canonical 0.95 / token Jaccard;
+   normalizer.py:144,168-199). A same-canonical pair that shares no
+   unpurged token is not a candidate; it unifies only by name, through
+   entity_id.
+3. Cluster: the transitive closure of the merges.
+4. Representative: the least dict canonical in the cluster, else the
+   longest text, ties going to the lexicographically greatest
+   (normalizer.py:257-277 made order-free).
 
 Scale design:
 - clustering runs over DISTINCT surface forms (entity_type, text), not raw
@@ -32,23 +44,17 @@ Scale design:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import (
+    DataFrame, Observation, SparkSession, functions as F, types as T,
+)
 
-from ..functions.tokenize import split_tokens
+from ..functions.tokenize import TOKEN_DF_CAP, split_tokens
 from ..schema import SIMILARITY_TYPES, dictionary_rows
 from .components import connected_components
 from .mentions import filter_pronouns
 
 ALIAS_CAP = 50
 BLOCK_IDS_CAP = 100
-# tokens occurring in more surface forms than this are excluded from
-# blocking (they cannot alone certify a merge; guards candidate blowup)
-TOKEN_DF_CAP = 1000
-# "auto" candidate generation: below this many distinct similarity forms
-# the deterministic token-blocking join beats MinHashLSH's fixed fit +
-# transform overhead; above it LSH bounds candidate count (the same kind
-# of size-based physical choice Catalyst makes for broadcast vs shuffle)
-AUTO_LSH_THRESHOLD = 100_000
 
 _SEP = "\x1f"
 
@@ -90,8 +96,8 @@ def build_forms(entity_mentions: DataFrame, spark: SparkSession) -> DataFrame:
 
 
 def candidate_pairs_token_blocking(forms_tok: DataFrame) -> DataFrame:
-    """Deterministic blocking: forms sharing any non-ubiquitous token are
-    candidates. One shuffle on (entity_type, token); df-capped."""
+    """Contract rule 1: same-type forms sharing a token of df <=
+    TOKEN_DF_CAP are candidates. One shuffle on (entity_type, token)."""
     tok = forms_tok.select(
         "entity_type", "fid", F.explode("tokens").alias("token"))
     df_ok = (
@@ -112,34 +118,9 @@ def candidate_pairs_token_blocking(forms_tok: DataFrame) -> DataFrame:
     )
 
 
-def candidate_pairs_minhash_lsh(
-    forms_tok: DataFrame, distance_threshold: float = 0.85, num_hash_tables: int = 5
-) -> DataFrame:
-    """MinHashLSH candidate generation (north_star-mandated path; J2 in
-    SURVEY §2.3): token sets -> binary HashingTF -> MinHashLSH ->
-    approxSimilarityJoin at generous Jaccard distance; exact verify
-    happens downstream either way."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    nonempty = forms_tok.where(F.size("tokens") > 0)
-    tf = HashingTF(inputCol="tokens", outputCol="tf", numFeatures=1 << 18, binary=True)
-    feats = tf.transform(nonempty).select("entity_type", "fid", "tf")
-    lsh = MinHashLSH(inputCol="tf", outputCol="mh", numHashTables=num_hash_tables, seed=42)
-    model = lsh.fit(feats)
-    joined = model.approxSimilarityJoin(feats, feats, distance_threshold, distCol="d")
-    return (
-        joined.where(
-            (F.col("datasetA.entity_type") == F.col("datasetB.entity_type"))
-            & (F.col("datasetA.fid") < F.col("datasetB.fid"))
-        )
-        .select(F.col("datasetA.fid").alias("fa"), F.col("datasetB.fid").alias("fb"))
-        .dropDuplicates(["fa", "fb"])
-    )
-
-
 def verify_pairs(pairs: DataFrame, forms_tok: DataFrame) -> DataFrame:
-    """Exact pair scoring, all JVM-side (normalizer.py:168-199 spec with
-    token-boundary containment — see functions/tokenize.py)."""
+    """Contract rule 2: exact pair scoring, all JVM-side (normalizer.py:
+    168-199 spec with token-boundary containment — functions/tokenize.py)."""
     left = forms_tok.select(
         F.col("fid").alias("fa"), F.col("tokens").alias("tok_a"),
         F.col("text").alias("text_a"), F.col("dict_canonical").alias("can_a"))
@@ -163,14 +144,12 @@ def verify_pairs(pairs: DataFrame, forms_tok: DataFrame) -> DataFrame:
 
 
 def canonicalize(
-    mentions: DataFrame, spark: SparkSession, use_lsh: bool | str = "auto"
+    mentions: DataFrame, spark: SparkSession
 ) -> tuple[DataFrame, DataFrame]:
-    """mentions -> (nodes, form_map).
+    """mentions -> (nodes, form_map), under the merge contract above.
 
     form_map(entity_type, text, entity_id, canonical_name) resolves triple
-    endpoints in st5 (J3). ``use_lsh``: True -> MinHashLSH candidates,
-    False -> token blocking, "auto" -> size-based choice (both verified
-    exactly downstream, so the result is identical either way — tested).
+    endpoints in st5 (J3).
     """
     entity_mentions = filter_pronouns(mentions)
     # forms feed the sim branch, the ident branch, and mention_stats —
@@ -181,21 +160,9 @@ def canonicalize(
     sim = forms.where(F.col("entity_type").isin(list(SIMILARITY_TYPES)))
     ident = forms.where(~F.col("entity_type").isin(list(SIMILARITY_TYPES)))
 
-    from pyspark.sql import Observation
-
-    # auto-LSH decision count rides the checkpoint job (no extra scan)
-    obs = Observation()
-    sim_tok = (sim.withColumn("tokens", _tokens_udf("text"))
-               .observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint())
-
-    if use_lsh == "auto":
-        use_lsh = obs.get["n"] >= AUTO_LSH_THRESHOLD
-    cands = (
-        candidate_pairs_minhash_lsh(sim_tok)
-        if use_lsh
-        else candidate_pairs_token_blocking(sim_tok)
-    )
-    merges = verify_pairs(cands, sim_tok)
+    # three consumers: candidates, verify, and the cluster join
+    sim_tok = sim.withColumn("tokens", _tokens_udf("text")).localCheckpoint()
+    merges = verify_pairs(candidate_pairs_token_blocking(sim_tok), sim_tok)
 
     comp = connected_components(
         merges.select(F.col("fa").alias("src"), F.col("fb").alias("dst"))
@@ -207,9 +174,7 @@ def canonicalize(
         F.coalesce(comp["component"], sim_tok["fid"]).alias("component"),
     )
 
-    # representative per component: least dict canonical, else longest text
-    # (ties -> lexicographically greatest) — normalizer.py:257-277 made
-    # order-free.
+    # contract rule 4: the representative per component
     reps = clustered.groupBy("component").agg(
         F.min("dict_canonical").alias("rep_dict"),
         F.max(F.struct(F.length("text").alias("l"), F.col("text"))).alias("rep_long"),

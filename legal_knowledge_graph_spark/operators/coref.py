@@ -39,7 +39,7 @@ MAX_HOPS = 3
 MEMBERSHIP_PREDICATES = ("file_defines_function", "file_defines_class")
 _SEP = "\x1f"
 # Frontier rows above this are too big to broadcast safely (same pattern as
-# canonicalize.AUTO_LSH_THRESHOLD): fall back to shuffle joins. Frontier size
+# edge_norm.BROADCAST_FORMS_MAX): fall back to shuffle joins. Frontier size
 # ~ unresolved edges x bounded neighborhood; 2M rows x ~100B ≈ 200 MB.
 BROADCAST_FRONTIER_MAX = 2_000_000
 

@@ -19,7 +19,7 @@ Scale notes: pair generation is always blocked (shared shingle / LSH
 bucket / simhash band), never a cross join; blocking keys are
 frequency-capped or signature-collapsed so a ubiquitous key cannot
 quadratically explode a partition (the same guard discipline as
-canonicalize.TOKEN_DF_CAP).
+tokenize.TOKEN_DF_CAP).
 """
 
 from __future__ import annotations

@@ -102,12 +102,12 @@ BROADCAST_FORMS_MAX = 2_000_000
 
 def _forms_small(form_map: DataFrame, n_forms: int | None = None) -> bool:
     """Size-conditional broadcast decision for the endpoint-resolution
-    joins (the observed-size discipline of coref.BROADCAST_FRONTIER_MAX /
-    canonicalize.AUTO_LSH_THRESHOLD). The count is threaded in, never
-    re-measured, when the producer already knows it (VERDICT r4 #2):
-    explicit `n_forms` first, else the `_kg_n_forms` attribute canonicalize
-    rides on the form_map's checkpoint observe(), else (form maps built by
-    hand, e.g. tests) one standalone count over the materialized table."""
+    joins (the observed-size discipline of coref.BROADCAST_FRONTIER_MAX).
+    The count is threaded in, never re-measured, when the producer already
+    knows it (VERDICT r4 #2): explicit `n_forms` first, else the
+    `_kg_n_forms` attribute canonicalize rides on the form_map's
+    checkpoint observe(), else (form maps built by hand, e.g. tests) one
+    standalone count over the materialized table."""
     if n_forms is None:
         n_forms = getattr(form_map, "_kg_n_forms", None)
     if n_forms is not None:

@@ -46,13 +46,11 @@ class KGPipeline:
         self,
         spark: SparkSession,
         checkpoint_root: str | None = None,
-        use_lsh: bool | str = "auto",
         bucket_by_repo: int | None = None,
         run_id: str = "r0",
     ):
         self.spark = spark
         self.store = StageStore(checkpoint_root) if checkpoint_root else None
-        self.use_lsh = use_lsh
         self.bucket_by_repo = bucket_by_repo
         self.run_id = run_id
 
@@ -79,14 +77,14 @@ class KGPipeline:
             "st2_mentions", fp2, lambda: mentions_from_files(ingested),
             reused=True)
 
-        fp3 = fingerprint(fp2, "canonicalize", self.use_lsh)
+        fp3 = fingerprint(fp2, "canonicalize")
         if self.store and self.store.is_complete("st3_nodes", fp3) \
                 and self.store.is_complete("st3_form_map", fp3):
             nodes = self.store.read(self.spark, "st3_nodes")
             form_map = self.store.read(self.spark, "st3_form_map")
             n_forms = self.store.rows("st3_form_map")  # manifest, no job
         else:
-            nodes, form_map = canonicalize(mentions, self.spark, self.use_lsh)
+            nodes, form_map = canonicalize(mentions, self.spark)
             n_forms = getattr(form_map, "_kg_n_forms", None)
             if self.store:
                 nodes = self.store.write("st3_nodes", nodes, fp3)
@@ -113,8 +111,6 @@ class KGPipeline:
 
 def run_pipeline(
     spark: SparkSession, files: DataFrame, checkpoint_root: str | None = None,
-    use_lsh: bool | str = "auto", bucket_by_repo: int | None = None,
+    bucket_by_repo: int | None = None,
 ) -> PipelineResult:
-    return KGPipeline(
-        spark, checkpoint_root, use_lsh, bucket_by_repo
-    ).run(files)
+    return KGPipeline(spark, checkpoint_root, bucket_by_repo).run(files)

@@ -23,6 +23,13 @@ from pyspark.sql import SparkSession
 _ARROW_BATCH = "2048"
 
 
+def _default_driver_memory() -> str:
+    """60% of physical RAM, capped at 24g: a local-mode driver heap larger
+    than the host lets the JVM grow until the kernel OOM-kills it."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(phys_mb * 6 // 10, 24 * 1024)}m"
+
+
 def build_session(
     app_name: str = "lkg-spark",
     master: str | None = None,
@@ -64,7 +71,8 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", _ARROW_BATCH)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # compress localCheckpoint / cached RDD blocks (lz4). The pipeline

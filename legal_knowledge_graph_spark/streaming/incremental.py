@@ -65,7 +65,7 @@ def run_incremental(
 def run_full_incremental(
     spark: SparkSession, input_dir: str, ledger_dir: str, graph_root: str,
     checkpoint_dir: str, max_files_per_trigger: int = 64,
-    use_lsh: bool | str = "auto", on_batch=None,
+    on_batch=None,
     refresh_every: int = 1, refresh_growth: float | None = None,
 ):
     """Drain available input through the FULL pipeline, one micro-batch at
@@ -102,7 +102,7 @@ def run_full_incremental(
         return None
 
     def refresh(ledger: DataFrame, ledger_rows: int) -> int:
-        nodes, form_map = canonicalize(ledger, spark, use_lsh)
+        nodes, form_map = canonicalize(ledger, spark)
         nodes = nodes.localCheckpoint()
         triples = emit_triples(ledger)
         # st5 feeds coref's checkpoints, its dup-key semi-join and the

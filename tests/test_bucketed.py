@@ -23,7 +23,7 @@ def _plan(df) -> str:
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    res = run_pipeline(spark, corpus_df(spark, 60, seed=42), use_lsh=False)
+    res = run_pipeline(spark, corpus_df(spark, 60, seed=42))
     edges = res.edges.where(~F.col("need_coref"))
     nodes_t, edges_t = write_bucketed_graph(
         spark, res.nodes, edges, n_buckets=8, prefix="t_kg")

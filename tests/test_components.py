@@ -70,15 +70,17 @@ def test_mega_hub_bounded_memory(spark):
     # 1e5-element array in ONE row. The window-min rework streams the hub's
     # partition through a spill-capable buffer; local mode can't re-cap JVM
     # memory per-test, so we force the spill path explicitly by dropping the
-    # WindowExec in-memory thresholds to a few rows — the test then proves
-    # the operator completes correctly with essentially zero in-memory
-    # buffer, which is what "capped executor memory" exercises at scale.
+    # WindowExec in-memory thresholds to 4096 rows — the hub's partition
+    # then spills ~25 times (not ~1.5k spill files, whose merge opens one
+    # read buffer each) and the test proves the operator completes
+    # correctly with a small in-memory buffer, which is what "capped
+    # executor memory" exercises at scale.
     n = 100_000
     conf = spark.conf
     old_spill = conf.get("spark.sql.windowExec.buffer.spill.threshold", None)
     old_mem = conf.get("spark.sql.windowExec.buffer.in.memory.threshold", None)
-    conf.set("spark.sql.windowExec.buffer.spill.threshold", "64")
-    conf.set("spark.sql.windowExec.buffer.in.memory.threshold", "64")
+    conf.set("spark.sql.windowExec.buffer.spill.threshold", "4096")
+    conf.set("spark.sql.windowExec.buffer.in.memory.threshold", "4096")
     try:
         edges = (
             spark.range(1, n + 1)

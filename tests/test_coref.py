@@ -11,7 +11,7 @@ def test_coref_resolves_short_alias_calls(spark):
     n = 80
     files = corpus_df(spark, n, seed=42)
     _, golden, _ = generate_corpus(n, seed=42)
-    res = run_pipeline(spark, files, use_lsh=False)
+    res = run_pipeline(spark, files)
     calls = {
         (r.subject_canonical, r.object_canonical)
         for r in res.edges.where(
@@ -39,11 +39,11 @@ def test_coref_shuffle_join_path_matches_broadcast(spark, monkeypatch):
 
     n = 80
     files = corpus_df(spark, n, seed=42)
-    res_b = run_pipeline(spark, files, use_lsh=False)
+    res_b = run_pipeline(spark, files)
     eb = sorted(r.edge_id for r in res_b.edges.collect())
 
     monkeypatch.setattr(coref_mod, "BROADCAST_FRONTIER_MAX", 0)
-    res_s = run_pipeline(spark, files, use_lsh=False)
+    res_s = run_pipeline(spark, files)
     es = sorted(r.edge_id for r in res_s.edges.collect())
     assert eb == es
 
@@ -52,7 +52,7 @@ def test_final_edges_are_edge_id_unique(spark):
     """ADVICE r1: a coref rewrite landing on an edge_id already present in
     the resolved set must not duplicate it in the API output."""
     n = 80
-    res = run_pipeline(spark, corpus_df(spark, n, seed=42), use_lsh=False)
+    res = run_pipeline(spark, corpus_df(spark, n, seed=42))
     total = res.edges.count()
     distinct = res.edges.select("edge_id").distinct().count()
     assert total == distinct

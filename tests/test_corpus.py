@@ -2,6 +2,8 @@
 
 import statistics
 
+import pytest
+
 from legal_knowledge_graph_spark.corpus import (
     corpus_df, corpus_df_distributed, generate_corpus, repo_layout, MEGA_REPO,
 )
@@ -45,3 +47,14 @@ def test_goldens_cover_all_predicates():
 
     _, gt, _ = generate_corpus(300, seed=42)
     assert {p for _, p, _ in gt} == set(RELATION_TYPES)
+
+
+def test_corpus_size_per_sf():
+    """The driver's KG queries size their corpus from the sf directory; an
+    sf with no size fails loudly instead of running some other size."""
+    from __spark_entry__ import _corpus_size
+
+    assert [_corpus_size(f"/data/{sf}/") for sf in
+            ("sf0.001", "sf0.01", "sf0.1")] == [60, 240, 1000]
+    with pytest.raises(ValueError, match="sf0.001, sf0.01, sf0.1"):
+        _corpus_size("/data/sf1.0")

@@ -21,8 +21,7 @@ def _triples_df(spark, rows):
 def _form_map(spark, forms):
     m = [("dk", "r", "p", "sha", f"b{i}", "FUNCTION", f"m{i}", t, x, 0, len(x),
           0.9, False, None, {}) for i, (t, x) in enumerate(forms)]
-    _, fm = canonicalize(spark.createDataFrame(m, MENTIONS_SCHEMA), spark,
-                         use_lsh=False)
+    _, fm = canonicalize(spark.createDataFrame(m, MENTIONS_SCHEMA), spark)
     return fm
 
 

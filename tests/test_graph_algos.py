@@ -100,7 +100,7 @@ def test_pagerank_on_kg_edges(spark):
     from legal_knowledge_graph_spark.corpus import corpus_df
     from legal_knowledge_graph_spark.plans import run_pipeline
 
-    res = run_pipeline(spark, corpus_df(spark, 40, seed=42), use_lsh=False)
+    res = run_pipeline(spark, corpus_df(spark, 40, seed=42))
     edges = res.edges.where(~F.col("need_coref"))
     pr = pagerank(edges, src="subject_entity_id", dst="object_entity_id",
                   n_iter=10)

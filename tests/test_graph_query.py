@@ -10,7 +10,7 @@ from legal_knowledge_graph_spark.sources.io import materialize_graph
 
 
 def test_graph_readback(spark, tmp_path):
-    res = run_pipeline(spark, corpus_df(spark, 50, seed=42), use_lsh=False)
+    res = run_pipeline(spark, corpus_df(spark, 50, seed=42))
     nodes, edges = materialize_graph(spark, str(tmp_path), res.nodes, res.edges)
 
     a_file = nodes_of_type(nodes, "File", limit=1).collect()[0]

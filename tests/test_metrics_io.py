@@ -32,7 +32,7 @@ def test_parse_stats_counts_match_blocks(spark):
 
 
 def test_graph_stats_and_quality_report(spark):
-    res = run_pipeline(spark, corpus_df(spark, N, seed=42), use_lsh=False)
+    res = run_pipeline(spark, corpus_df(spark, N, seed=42))
     node_stats, edge_stats = graph_stats(res.nodes, res.edges)
     ns = {r.entity_type: r.n for r in node_stats.collect()}
     es = {r.predicate: r.n for r in edge_stats.collect()}
@@ -55,7 +55,7 @@ def test_graph_stats_and_quality_report(spark):
 
 
 def test_export_json_and_clear_graph(spark, tmp_path):
-    res = run_pipeline(spark, corpus_df(spark, N, seed=42), use_lsh=False)
+    res = run_pipeline(spark, corpus_df(spark, N, seed=42))
     root = str(tmp_path / "graph")
     stored_nodes, stored_edges = materialize_graph(spark, root, res.nodes, res.edges)
 
@@ -103,7 +103,7 @@ def test_export_json_job_counts_and_auto_paths(spark, tmp_path):
     the jobs of that path (2 collects inline, 2 writes distributed — no
     decision counts); the auto probe picks the same paths and the inline
     auto dump is byte-identical to the explicit one."""
-    res = run_pipeline(spark, corpus_df(spark, 20, seed=3), use_lsh=False)
+    res = run_pipeline(spark, corpus_df(spark, 20, seed=3))
     root = str(tmp_path / "g")
     nodes, edges = materialize_graph(spark, root, res.nodes, res.edges)
     sc = spark.sparkContext

@@ -21,7 +21,7 @@ def golden():
 
 @pytest.fixture(scope="module")
 def result(spark):
-    return run_pipeline(spark, corpus_df(spark, N, seed=42), use_lsh=False)
+    return run_pipeline(spark, corpus_df(spark, N, seed=42))
 
 
 def _pr(got, want):
@@ -41,15 +41,6 @@ def test_nodes_pr_gate(result, golden):
     _, gn = golden
     got = {(r.entity_type, r.canonical_name) for r in result.nodes.collect()}
     p, r = _pr(got, gn)
-    assert p >= 0.95 and r >= 0.95, (p, r)
-
-
-def test_lsh_path_matches_goldens(spark, golden):
-    gt, _ = golden
-    res = run_pipeline(spark, corpus_df(spark, N, seed=42), use_lsh=True)
-    got = {(r.subject_canonical, r.predicate, r.object_canonical)
-           for r in res.edges.where(~res.edges.need_coref).collect()}
-    p, r = _pr(got, gt)
     assert p >= 0.95 and r >= 0.95, (p, r)
 
 
@@ -79,8 +70,8 @@ def test_determinism_across_parallelism(spark, result):
     """Same triples and same IDs regardless of partitioning (SURVEY §5.3
     determinism contract — here: 1 vs 16 input partitions)."""
     files = corpus_df(spark, N, seed=42)
-    res1 = run_pipeline(spark, files.repartition(1), use_lsh=False)
-    res16 = run_pipeline(spark, files.repartition(16), use_lsh=False)
+    res1 = run_pipeline(spark, files.repartition(1))
+    res16 = run_pipeline(spark, files.repartition(16))
     e1 = sorted(r.edge_id for r in res1.edges.collect())
     e16 = sorted(r.edge_id for r in res16.edges.collect())
     assert e1 == e16
@@ -92,11 +83,11 @@ def test_determinism_across_parallelism(spark, result):
 def test_checkpoint_resume_equals_single_run(spark, result, tmp_path):
     files = corpus_df(spark, N, seed=42)
     root = str(tmp_path / "ckpt")
-    p1 = KGPipeline(spark, checkpoint_root=root, use_lsh=False)
+    p1 = KGPipeline(spark, checkpoint_root=root)
     r1 = p1.run(files)
     e1 = sorted(r.edge_id for r in r1.edges.collect())
     # resume: all stages fingerprint-complete -> read back, no recompute
-    p2 = KGPipeline(spark, checkpoint_root=root, use_lsh=False)
+    p2 = KGPipeline(spark, checkpoint_root=root)
     r2 = p2.run(files)
     e2 = sorted(r.edge_id for r in r2.edges.collect())
     direct = sorted(r.edge_id for r in result.edges.collect())

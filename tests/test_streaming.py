@@ -65,13 +65,12 @@ def test_full_pipeline_streaming_kill_resume_equals_single_run(spark, tmp_path):
 
     with pytest.raises(Exception):
         run_full_incremental(spark, landing, ledger, graph, ckpt,
-                             max_files_per_trigger=1, use_lsh=False,
-                             on_batch=crash_on_second)
+                             max_files_per_trigger=1, on_batch=crash_on_second)
     # resume: replays the failed batch (idempotent ledger), drains the rest
     run_full_incremental(spark, landing, ledger, graph, ckpt,
-                         max_files_per_trigger=1, use_lsh=False)
+                         max_files_per_trigger=1)
 
-    res = run_pipeline(spark, files, use_lsh=False)
+    res = run_pipeline(spark, files)
     want_nodes = sorted(r.entity_id for r in res.nodes.collect())
     want_edges = sorted(
         r.edge_id for r in res.edges.where(~F.col("need_coref")).collect())
@@ -188,13 +187,12 @@ def test_refresh_policy_bounds_snapshot_count(spark, tmp_path):
     graph = str(tmp_path / "graph")
     ckpt = str(tmp_path / "ckpt")
     run_full_incremental(spark, landing, ledger, graph, ckpt,
-                         max_files_per_trigger=1, use_lsh=False,
-                         refresh_every=3)
+                         max_files_per_trigger=1, refresh_every=3)
 
     versions = [d for d in os.listdir(f"{graph}/graph_nodes")
                 if d.startswith("v")]
     assert len(versions) <= 3
-    res = run_pipeline(spark, files, use_lsh=False)
+    res = run_pipeline(spark, files)
     want_nodes = sorted(r.entity_id for r in res.nodes.collect())
     want_edges = sorted(
         r.edge_id for r in res.edges.where(~F.col("need_coref")).collect())
@@ -224,12 +222,11 @@ def test_refresh_policy_final_drain_flushes_dirty_tail(spark, tmp_path):
     graph = str(tmp_path / "graph")
     ckpt = str(tmp_path / "ckpt")
     run_full_incremental(spark, landing, ledger, graph, ckpt,
-                         max_files_per_trigger=1, use_lsh=False,
-                         refresh_every=100)
+                         max_files_per_trigger=1, refresh_every=100)
     versions = [d for d in os.listdir(f"{graph}/graph_nodes")
                 if d.startswith("v")]
     assert len(versions) == 1
-    res = run_pipeline(spark, files, use_lsh=False)
+    res = run_pipeline(spark, files)
     want_edges = sorted(
         r.edge_id for r in res.edges.where(~F.col("need_coref")).collect())
     got_edges = sorted(
@@ -403,16 +400,16 @@ def test_stranded_ledger_rows_refresh_on_empty_resume(spark, tmp_path):
     ledger = str(tmp_path / "ledger")
     graph = str(tmp_path / "graph")
     ckpt = str(tmp_path / "ckpt")
-    run_full_incremental(spark, landing, ledger, graph, ckpt, use_lsh=False)
+    run_full_incremental(spark, landing, ledger, graph, ckpt)
 
     # simulate the crash-stranded upsert: B's mentions reach the ledger
     # but no refresh runs (and no new batch will ever replay them)
     upsert_parquet(spark, ledger, mentions_from_files(ingest(part_b)),
                    ["mention_id"])
     # resume: drains ZERO new batches, must still flush the stale graph
-    run_full_incremental(spark, landing, ledger, graph, ckpt, use_lsh=False)
+    run_full_incremental(spark, landing, ledger, graph, ckpt)
 
-    res = run_pipeline(spark, files, use_lsh=False)
+    res = run_pipeline(spark, files)
     want_nodes = sorted(r.entity_id for r in res.nodes.collect())
     want_edges = sorted(
         r.edge_id for r in res.edges.where(~F.col("need_coref")).collect())
@@ -840,8 +837,7 @@ def test_refresh_feeds_coref_materialized_edges(spark, tmp_path, monkeypatch):
     landing = str(tmp_path / "landing")
     corpus_df(spark, 12, seed=3).coalesce(1).write.parquet(landing)
     run_full_incremental(spark, landing, str(tmp_path / "ledger"),
-                         str(tmp_path / "graph"), str(tmp_path / "ckpt"),
-                         use_lsh=False)
+                         str(tmp_path / "graph"), str(tmp_path / "ckpt"))
     assert len(seen) == 1
     plan = seen[0]
     assert plan.nodeName() == "LogicalRDD"

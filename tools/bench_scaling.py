@@ -64,8 +64,7 @@ t0 = time.time()
 # 4 tasks per core: the extraction stage (the dominant cost) must
 # have enough partitions to fill every core with load-balance slack —
 # at 16 partitions a local[32] run left half the cores idle
-res = run_pipeline(spark, files, use_lsh="auto",
-                   bucket_by_repo=max(4 * cpus, 16))
+res = run_pipeline(spark, files, bucket_by_repo=max(4 * cpus, 16))
 n_triples = res.edges.count()
 n_nodes = res.nodes.count()
 secs = time.time() - t0

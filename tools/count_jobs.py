@@ -26,7 +26,7 @@ def main() -> None:
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
     t0 = time.time()
-    res = run_pipeline(spark, files, use_lsh="auto")
+    res = run_pipeline(spark, files)
     n_edges = res.edges.count()
     wall = time.time() - t0
     after = set(tracker.getJobIdsForGroup(None))

@@ -25,7 +25,6 @@ def main() -> None:
     ap.add_argument("--checkpoint", help="stage-table root (resume support)")
     ap.add_argument("--buckets", type=int, default=None,
                     help="salted repo repartition count")
-    ap.add_argument("--use-lsh", default="auto", choices=["auto", "true", "false"])
     args = ap.parse_args()
 
     from legal_knowledge_graph_spark.operators.metrics import quality_report
@@ -44,9 +43,8 @@ def main() -> None:
     else:
         ap.error("one of --input / --synthetic required")
 
-    use_lsh = {"auto": "auto", "true": True, "false": False}[args.use_lsh]
     res = run_pipeline(spark, files, checkpoint_root=args.checkpoint,
-                       use_lsh=use_lsh, bucket_by_repo=args.buckets)
+                       bucket_by_repo=args.buckets)
     nodes, edges = materialize_graph(spark, args.output, res.nodes, res.edges)
     print(json.dumps(quality_report(nodes, edges)))
 
