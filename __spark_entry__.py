@@ -166,38 +166,6 @@ def top_customers_per_nation(spark, sf_dir):
     )
 
 
-def events_hourly(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.date_trunc("hour", "ts").alias("hour"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.round(F.sum("value"), 4).alias("sum_value"))
-    )
-
-
-def events_user_top_type(spark, sf_dir):
-    from pyspark.sql.window import Window
-
-    e = _t(spark, sf_dir, "events")
-    cnt = e.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("n").desc(), F.col("event_type").asc())
-    return (
-        cnt.withColumn("rk", F.row_number().over(w)).where(F.col("rk") == 1)
-        .select("user_id", F.col("event_type").alias("top_type"), "n")
-    )
-
-
-def events_json_props(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("int")
-    return (
-        e.select("event_id", k.alias("k"))
-        .groupBy((F.col("k") % 10).alias("k_mod"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("k").alias("sum_k"))
-    )
-
-
 # --- doc-KG (SQL-checkable KG semantics on shared data) --------------------
 def kg_doc_mentions(spark, sf_dir):
     return doc_kg.doc_term_mentions(_t(spark, sf_dir, "documents"), spark)
@@ -487,15 +455,6 @@ def kg_term_components(spark, sf_dir):
         "term", F.coalesce(comp["component"], ids["id"]).alias("cid"))
     labels = labeled.groupBy("cid").agg(F.min("term").alias("component"))
     return labeled.join(labels, "cid").select("term", "component")
-
-
-def events_sessions(spark, sf_dir):
-    """Sessionization (30-min gap) as a batch operator — the same logic the
-    applyInPandasWithState streaming operator maintains incrementally
-    (streaming/sessions.py; stream==batch asserted in tests)."""
-    from legal_knowledge_graph_spark.streaming.sessions import sessionize_batch
-
-    return sessionize_batch(_t(spark, sf_dir, "events"), gap_minutes=30)
 
 
 def kg_term_neighbors(spark, sf_dir):
@@ -894,32 +853,6 @@ def doc_mixture_sample(spark, sf_dir):
     ).select("doc_id", "lang", "source")
 
 
-FUNNEL_STEPS = ["view", "click", "purchase"]
-
-
-def events_funnel(spark, sf_dir):
-    """Ordered funnel conversion (events_analytics.funnel, first-touch
-    semantics): per-step filtered agg chained by user equi-joins, counts
-    as single-row aggregates, first-step total attached as a one-row
-    broadcast."""
-    from legal_knowledge_graph_spark.operators.events_analytics import (
-        funnel,
-    )
-
-    return funnel(_t(spark, sf_dir, "events"), FUNNEL_STEPS)
-
-
-def events_retention(spark, sf_dir):
-    """Weekly retention triangle (events_analytics.retention_cohorts):
-    Monday-truncated cohorts, one (user) agg + one (user, week) distinct,
-    integer-exact."""
-    from legal_knowledge_graph_spark.operators.events_analytics import (
-        retention_cohorts,
-    )
-
-    return retention_cohorts(_t(spark, sf_dir, "events"))
-
-
 def doc_inverted_index(spark, sf_dir):
     """Capped-posting inverted index (text_analysis.inverted_index):
     distinct (word, doc_id) pairs, salted two-phase smallest-20
@@ -931,19 +864,6 @@ def doc_inverted_index(spark, sf_dir):
 
     return inverted_index(_t(spark, sf_dir, "documents"),
                           max_postings=20, min_df=2)
-
-
-def events_kmv_users(spark, sf_dir):
-    """Distinct users per event type via the deterministic KMV sketch
-    (sketches.kmv_distinct, k=64) with the exact count attached — the
-    md5-derived hash makes the estimate engine-portable, so the oracle
-    reproduces it bit-exactly instead of tolerance-banding."""
-    from legal_knowledge_graph_spark.operators.sketches import (
-        kmv_distinct,
-    )
-
-    return kmv_distinct(_t(spark, sf_dir, "events"),
-                        "event_type", "user_id", k=64, seed=0)
 
 
 def lineitem_zorder(spark, sf_dir):
@@ -1023,19 +943,6 @@ def lineitem_corr(spark, sf_dir):
                         ["l_quantity", "l_extendedprice", "l_discount"])
 
 
-def events_type_hour_mi(spark, sf_dir):
-    """Mutual information between event type and hour-of-day
-    (profiling.mutual_information): exact from the |X| x |Y| joint-count
-    table, with the normalized variant."""
-    from legal_knowledge_graph_spark.operators.profiling import (
-        mutual_information,
-    )
-
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type", F.hour("ts").alias("hod"))
-    return mutual_information(ev, "event_type", "hod")
-
-
 DQ_LINEITEM_RULES = [
     {"name": "qty_null", "kind": "null_rate", "col": "l_quantity"},
     {"name": "qty_range", "kind": "range", "col": "l_quantity",
@@ -1068,19 +975,6 @@ def orders_diff(spark, sf_dir):
     )
     return table_diff(old, new, ["o_orderkey"],
                       ["o_orderstatus", "o_totalprice", "o_orderdate"])
-
-
-def events_key_skew(spark, sf_dir):
-    """Shuffle-skew diagnosis of user_id as a join/agg key
-    (profiling.key_skew_profile): max/top-5 key shares, coefficient of
-    variation, normalized key entropy — all order-free; heavy keys via
-    TakeOrderedAndProject, never a global histogram sort."""
-    from legal_knowledge_graph_spark.operators.profiling import (
-        key_skew_profile,
-    )
-
-    return key_skew_profile(_t(spark, sf_dir, "events"),
-                            ["user_id"], top_k=5)
 
 
 def lineitem_quantiles(spark, sf_dir):
@@ -1140,66 +1034,6 @@ def dq_lineitem_fk(spark, sf_dir):
         "l_orderkey", "o_orderkey")
 
 
-def events_ohlc(spark, sf_dir):
-    """Hourly OHLC bars (events_analytics.ohlc_bars): one map-side
-    aggregate; open/close ride min_by/max_by on the (ts, event_id)
-    total order — no window, no sort."""
-    from legal_knowledge_graph_spark.operators.events_analytics import (
-        ohlc_bars,
-    )
-
-    return ohlc_bars(_t(spark, sf_dir, "events"))
-
-
-def events_assoc(spark, sf_dir):
-    """Pairwise association rules over per-user distinct event types
-    (events_analytics.association_rules): support/confidence/lift from
-    the |types|^2 co-occurrence aggregate."""
-    from legal_knowledge_graph_spark.operators.events_analytics import (
-        association_rules,
-    )
-
-    return association_rules(_t(spark, sf_dir, "events"))
-
-
-def events_kmv_rolling(spark, sf_dir):
-    """Trailing-24h distinct users per hour from MERGED per-hour KMV
-    sketches (sketches.kmv_rolling_distinct): the rolling estimate
-    never re-touches raw events — only k-bounded sketch arrays merge in
-    the window. The oracle recomputes each window's k smallest hashes
-    from scratch; the sketch-merge property makes them identical."""
-    from legal_knowledge_graph_spark.operators.sketches import (
-        kmv_rolling_distinct,
-    )
-
-    return kmv_rolling_distinct(_t(spark, sf_dir, "events"),
-                                window_hours=24, k=64, seed=0)
-
-
-def events_markov(spark, sf_dir):
-    """First-order Markov next-event transition matrix
-    (events_analytics.markov_transitions): per-user sequences ordered by
-    (ts, event_id), lead() pairing, conditional probabilities over the
-    tiny |types|^2 aggregate."""
-    from legal_knowledge_graph_spark.operators.events_analytics import (
-        markov_transitions,
-    )
-
-    return markov_transitions(_t(spark, sf_dir, "events"))
-
-
-def events_anomaly(spark, sf_dir):
-    """Hourly volume anomalies (events_analytics.rolling_anomaly):
-    per-type hourly counts scored by z vs the 24 preceding observed
-    hours (self-excluded, 12-row cold-start guard, null z on flat
-    history)."""
-    from legal_knowledge_graph_spark.operators.events_analytics import (
-        rolling_anomaly,
-    )
-
-    return rolling_anomaly(_t(spark, sf_dir, "events"))
-
-
 def doc_ngram_diversity(spark, sf_dir):
     """Per-language n-gram diversity profile (text_analysis.
     ngram_diversity): corpus-level type-token ratio and its 2/3-gram
@@ -1211,19 +1045,6 @@ def doc_ngram_diversity(spark, sf_dir):
     )
 
     return ngram_diversity(_t(spark, sf_dir, "documents"), by="lang")
-
-
-def events_dau(spark, sf_dir):
-    """Daily + rolling 7-day active users (events_analytics.
-    rolling_active_users): dau/wau/n_events per day present. The engine
-    fans each (day, user) pair out to the 7 windows it serves (bounded
-    x7 expansion of the small distinct table); the oracle is
-    deliberately the quadratic BETWEEN theta-join this avoids."""
-    from legal_knowledge_graph_spark.operators.events_analytics import (
-        rolling_active_users,
-    )
-
-    return rolling_active_users(_t(spark, sf_dir, "events"), window_days=7)
 
 
 def doc_chunks(spark, sf_dir):
@@ -1277,102 +1098,6 @@ def doc_weighted_sample(spark, sf_dir):
                             strata_col="lang", seed=42)
     return out.select("doc_id", "lang",
                       F.col("_w").cast("long").alias("n_chars"))
-
-
-def events_funnel_latency(spark, sf_dir):
-    """Conversion-latency percentiles for the view->click->purchase
-    funnel (events_analytics.funnel_latency): per step k>=2, p50/p90/
-    mean whole-second latency from the previous step's first-touch
-    completion; same cohort as events_funnel, one extra one-row
-    aggregate per step."""
-    from legal_knowledge_graph_spark.operators.events_analytics import (
-        funnel_latency,
-    )
-
-    return funnel_latency(_t(spark, sf_dir, "events"), FUNNEL_STEPS)
-
-
-def events_asof(spark, sf_dir):
-    """Backward-inclusive as-of join (temporal.asof_join): every purchase
-    event joined to the user's most recent click at-or-before it, ties on
-    the larger click event_id. The engine runs the sort-merge shape —
-    union + ONE window carry-forward, a single shuffle on user_id and no
-    join node (a hot user costs one task's sort, never a pair blow-up);
-    the oracle is the naive quadratic LEFT JOIN + row_number restatement,
-    which is exactly the plan shape the operator exists to avoid."""
-    from legal_knowledge_graph_spark.operators.temporal import asof_join
-
-    ev = _t(spark, sf_dir, "events")
-    purch = ev.where(F.col("event_type") == "purchase")
-    clicks = ev.where(F.col("event_type") == "click")
-    aj = asof_join(
-        purch.select("user_id", "event_id", "ts", "value"),
-        clicks.select("user_id", "event_id", "ts", "value"),
-        ["user_id"], tie_col="event_id",
-        right_payload=["event_id", "value"])
-    return aj.select(
-        "event_id", "user_id", "ts", "value",
-        F.coalesce(F.col("matched.event_id"), F.lit(-1))
-        .alias("click_event_id"),
-        F.coalesce(F.col("matched.value"), F.lit(0.0)).alias("click_value"),
-        F.coalesce(F.unix_timestamp("ts") - F.unix_timestamp("matched.ts"),
-                   F.lit(-1)).alias("secs_since_click"))
-
-
-def events_error_aftermath(spark, sf_dir):
-    """Interval range join (temporal.point_in_interval_join): per error
-    event, count and value-sum of the same user's events in the 10
-    minutes after it. The engine buckets time so the range join runs as
-    a plain equi-join on (user, bucket) + exact residual filter — no
-    BroadcastNestedLoop; the oracle is the theta-join SQL form."""
-    from legal_knowledge_graph_spark.operators.temporal import (
-        point_in_interval_join,
-    )
-
-    ev = _t(spark, sf_dir, "events")
-    errors = ev.where(F.col("event_type") == "error").select(
-        F.col("event_id").alias("error_event_id"), "user_id",
-        F.col("ts").alias("t0"),
-        (F.col("ts") + F.expr("interval 600 seconds")).alias("t1"))
-    pts = ev.select("user_id", F.col("event_id").alias("p_eid"),
-                    F.col("ts").alias("p_ts"), "value")
-    rj = point_in_interval_join(
-        pts, errors, ["user_id"], point_ts="p_ts",
-        start_col="t0", end_col="t1", bucket_width_s=600)
-    return (
-        rj.where(F.col("p_eid") != F.col("error_event_id"))
-        .groupBy("error_event_id", "user_id")
-        .agg(F.count(F.lit(1)).alias("n_follow"),
-             F.round(F.sum("value"), 4).alias("sum_value"))
-    )
-
-
-def events_overlap(spark, sf_dir):
-    """Interval-overlap join (temporal.interval_overlap_join): per error
-    event, the same user's purchase windows ([ts, ts+30min)) overlapping
-    the error's 10-minute window. Both sides bucket to fixed-width time
-    cells and pairs emit only in their overlap-start bucket (exact, no
-    dedup); the oracle is the quadratic theta-join this avoids."""
-    from legal_knowledge_graph_spark.operators.temporal import (
-        interval_overlap_join,
-    )
-
-    ev = _t(spark, sf_dir, "events")
-    errors = ev.where(F.col("event_type") == "error").select(
-        F.col("event_id").alias("error_id"), "user_id",
-        F.col("ts").alias("e0"),
-        (F.col("ts") + F.expr("interval 600 seconds")).alias("e1"))
-    purch = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"), "user_id",
-        F.col("ts").alias("p0"),
-        (F.col("ts") + F.expr("interval 1800 seconds")).alias("p1"))
-    ov = interval_overlap_join(
-        errors, purch, ["user_id"],
-        left_start="e0", left_end="e1",
-        right_start="p0", right_end="p1", bucket_width_s=900)
-    return ov.groupBy("error_id", "user_id").agg(
-        F.count(F.lit(1)).alias("n_overlap"),
-        F.min("purchase_id").alias("first_purchase_id"))
 
 
 def doc_importance(spark, sf_dir):
@@ -1585,9 +1310,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q6_revenue": q6_revenue,
         "q4_order_priority": q4_order_priority,
         "top_customers_per_nation": top_customers_per_nation,
-        "events_hourly": events_hourly,
-        "events_user_top_type": events_user_top_type,
-        "events_json_props": events_json_props,
         "kg_doc_mentions": kg_doc_mentions,
         "kg_doc_triples": kg_doc_triples,
         "kg_term_nodes": kg_term_nodes,
@@ -1627,7 +1349,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_type_normalization": kg_type_normalization,
         "kg_term_neighbors": kg_term_neighbors,
         "kg_term_components": kg_term_components,
-        "events_sessions": events_sessions,
         "graph_pagerank": graph_pagerank,
         "doc_lm_score": doc_lm_score,
         "doc_pack_sequences": doc_pack_sequences,
@@ -1647,41 +1368,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_length_stats": doc_length_stats,
         "doc_bpe_merges": doc_bpe_merges,
         "graph_bfs": graph_bfs,
-        "events_funnel": events_funnel,
-        "events_retention": events_retention,
-        "events_markov": events_markov,
-        "events_anomaly": events_anomaly,
-        "events_kmv_users": events_kmv_users,
-        "events_kmv_rolling": events_kmv_rolling,
-        "events_ohlc": events_ohlc,
-        "events_assoc": events_assoc,
         "dq_lineitem": dq_lineitem,
         "dq_lineitem_fk": dq_lineitem_fk,
         "lineitem_rollup": lineitem_rollup,
         "orders_diff": orders_diff,
         "lineitem_quantiles": lineitem_quantiles,
-        "events_key_skew": events_key_skew,
         "lineitem_zorder": lineitem_zorder,
         "part_fuzzy_names": part_fuzzy_names,
         "doc_length_bins": doc_length_bins,
         "doc_textrank": doc_textrank,
         "doc_rake": doc_rake,
         "lineitem_corr": lineitem_corr,
-        "events_type_hour_mi": events_type_hour_mi,
         "doc_inverted_index": doc_inverted_index,
-        "events_asof": events_asof,
-        "events_error_aftermath": events_error_aftermath,
         "doc_importance": doc_importance,
         "graph_link_predict": graph_link_predict,
         "doc_ccnet_buckets": doc_ccnet_buckets,
         "graph_ppr": graph_ppr,
-        "events_dau": events_dau,
         "doc_ngram_diversity": doc_ngram_diversity,
         "emb_knn_pq": emb_knn_pq,
-        "events_funnel_latency": events_funnel_latency,
         "doc_weighted_sample": doc_weighted_sample,
         "doc_bpe_tokens": doc_bpe_tokens,
-        "events_overlap": events_overlap,
         "doc_chunks": doc_chunks,
     }
 
@@ -2567,25 +2273,6 @@ WITH tot AS (
 )
 SELECT n_name, c_custkey, round(total_spend, 4) AS total_spend, CAST(rk AS INT) AS rk
 FROM j WHERE rk <= 3""",
-        "events_hourly": """
-SELECT date_trunc('hour', ts) AS hour, event_type,
-       count(*) AS n, round(sum(value), 4) AS sum_value
-FROM events GROUP BY 1, 2""",
-        "events_user_top_type": """
-WITH cnt AS (
-  SELECT user_id, event_type, count(*) AS n
-  FROM events GROUP BY user_id, event_type
-), rk AS (
-  SELECT user_id, event_type, n,
-    row_number() OVER (PARTITION BY user_id ORDER BY n DESC, event_type ASC) AS r
-  FROM cnt
-)
-SELECT user_id, event_type AS top_type, n FROM rk WHERE r = 1""",
-        "events_json_props": """
-SELECT CAST(json_extract_string(props, '$.k') AS INT) % 10 AS k_mod,
-       count(*) AS n,
-       CAST(sum(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS sum_k
-FROM events GROUP BY 1""",
         "kg_doc_mentions": _DOC_MENTIONS_CTE + "\nSELECT * FROM mentions",
         "kg_doc_triples": _DOC_MENTIONS_CTE + """
 SELECT DISTINCT 'doc_' || CAST(doc_id AS VARCHAR) AS subject,
@@ -2917,21 +2604,6 @@ SELECT doc_id, reasons = '' AS kept, reasons, quality_score,
 FROM r""",
         "doc_winnow": _WINNOW_SQL,
         "frames_sampled": _FRAMES_SQL,
-        "events_sessions": """
-WITH m AS (
-  SELECT user_id, ts,
-    CASE WHEN epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts)) > 1800
-         THEN 1 ELSE 0 END AS new_sess
-  FROM events
-), s AS (
-  SELECT user_id, ts,
-         sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts
-                             ROWS UNBOUNDED PRECEDING) AS sess_id
-  FROM m
-)
-SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
-       CAST(count(*) AS INT) AS n_events
-FROM s GROUP BY user_id, sess_id""",
         # connected components re-stated as a recursive-CTE transitive
         # closure: component label = min reachable term (undirected closure)
         "kg_term_components": _DOC_MENTIONS_CTE.replace(
@@ -3033,24 +2705,6 @@ SELECT 'l_quantity', 'l_discount',
 UNION ALL
 SELECT 'l_extendedprice', 'l_discount',
        round(corr(l_extendedprice, l_discount), 6) FROM lineitem""",
-        "events_type_hour_mi": """
-WITH joint AS (
-  SELECT event_type AS x, CAST(hour(ts) AS INT) AS y, count(*) AS nxy
-  FROM events GROUP BY 1, 2
-), t AS (SELECT CAST(sum(nxy) AS DOUBLE) AS n FROM joint),
-mx AS (SELECT x, sum(nxy) AS nx FROM joint GROUP BY x),
-my AS (SELECT y, sum(nxy) AS ny FROM joint GROUP BY y),
-hx AS (SELECT -sum((nx / n) * ln(nx / n)) AS v FROM mx, t),
-hy AS (SELECT -sum((ny / n) * ln(ny / n)) AS v FROM my, t),
-mi AS (
-  SELECT sum((nxy / n) * ln((nxy / n) / ((nx / n) * (ny / n)))) AS v
-  FROM joint JOIN mx USING (x) JOIN my USING (y), t
-)
-SELECT round(mi.v, 6) AS mi,
-       round(mi.v / least(hx.v, hy.v), 6) AS nmi,
-       (SELECT count(*) FROM mx) AS n_x,
-       (SELECT count(*) FROM my) AS n_y
-FROM mi, hx, hy""",
         "part_fuzzy_names": """
 WITH v AS (
   SELECT DISTINCT word FROM (
@@ -3315,41 +2969,6 @@ JOIN deg da ON da.node = n.a
 JOIN deg db ON db.node = n.b
 ORDER BY adamic_adar DESC, common_neighbors DESC, a ASC, b ASC
 LIMIT 100""",
-        "events_funnel": """
-WITH s1 AS MATERIALIZED (
-  SELECT user_id AS u, min(ts) AS t FROM events
-  WHERE event_type = 'view' GROUP BY user_id
-), s2 AS MATERIALIZED (
-  SELECT e.user_id AS u, min(e.ts) AS t
-  FROM events e JOIN s1 ON s1.u = e.user_id
-  WHERE e.event_type = 'click' AND e.ts > s1.t GROUP BY e.user_id
-), s3 AS MATERIALIZED (
-  SELECT e.user_id AS u, min(e.ts) AS t
-  FROM events e JOIN s2 ON s2.u = e.user_id
-  WHERE e.event_type = 'purchase' AND e.ts > s2.t GROUP BY e.user_id
-), c AS MATERIALIZED (
-  SELECT CAST(1 AS INT) AS step_no, 'view' AS step,
-         CAST(count(*) AS BIGINT) AS n_users FROM s1
-  UNION ALL
-  SELECT CAST(2 AS INT), 'click', CAST(count(*) AS BIGINT) FROM s2
-  UNION ALL
-  SELECT CAST(3 AS INT), 'purchase', CAST(count(*) AS BIGINT) FROM s3
-)
-SELECT step_no, step, n_users,
-       round(CAST(n_users AS DOUBLE)
-             / greatest((SELECT n_users FROM c WHERE step_no = 1), 1), 6)
-         AS frac_of_first
-FROM c""",
-        "events_retention": """
-WITH ew AS MATERIALIZED (
-  SELECT DISTINCT user_id AS u, date_trunc('week', ts) AS wk FROM events
-), f AS MATERIALIZED (SELECT u, min(wk) AS cohort FROM ew GROUP BY u)
-SELECT strftime(CAST(f.cohort AS DATE), '%Y-%m-%d') AS cohort_week,
-       CAST(datediff('day', CAST(f.cohort AS DATE), CAST(ew.wk AS DATE)) / 7
-            AS INT) AS week_offset,
-       CAST(count(*) AS BIGINT) AS n_users
-FROM ew JOIN f ON f.u = ew.u
-GROUP BY 1, 2""",
         "graph_kcore": _kcore_oracle(k=3, n_rounds=8),
         "doc_inverted_index": r"""
 WITH toks AS (
@@ -3374,44 +2993,6 @@ WITH toks AS (
 SELECT f.word, f.df, p.postings
 FROM dfreq f JOIN posts p USING (word)
 WHERE f.df >= 2""",
-        "events_kmv_users": """
-WITH pairs AS (
-  SELECT DISTINCT event_type, CAST(user_id AS VARCHAR) AS v FROM events
-), hashes AS (
-  SELECT DISTINCT event_type,
-         ('0x' || substr(md5(v || ':0'), 1, 8))::BIGINT AS h
-  FROM pairs
-), rk AS (
-  SELECT event_type, h,
-         row_number() OVER (PARTITION BY event_type ORDER BY h ASC) AS r
-  FROM hashes
-), sk AS (
-  SELECT event_type, count(*) AS n_in, max(h) AS hk
-  FROM rk WHERE r <= 64 GROUP BY event_type
-), ex AS (
-  SELECT event_type, count(*) AS n_distinct FROM pairs GROUP BY event_type
-)
-SELECT s.event_type,
-       round(CASE WHEN s.n_in < 64 THEN CAST(s.n_in AS DOUBLE)
-                  ELSE 63.0 * 4294967296.0 / s.hk END, 6) AS est_distinct,
-       e.n_distinct
-FROM sk s JOIN ex e USING (event_type)""",
-        "events_key_skew": """
-WITH c AS MATERIALIZED (
-  SELECT user_id, count(*) AS c FROM events GROUP BY user_id
-), tot AS (SELECT CAST(sum(c) AS DOUBLE) AS t, count(*) AS nk FROM c),
-tk AS (
-  SELECT sum(c) AS v FROM (
-    SELECT c FROM c ORDER BY c DESC, user_id ASC LIMIT 5)
-)
-SELECT tot.nk AS n_keys, CAST(tot.t AS BIGINT) AS n_rows,
-       round((SELECT max(c) FROM c) / tot.t, 6) AS max_share,
-       round(tk.v / tot.t, 6) AS topk_share,
-       round((SELECT stddev_samp(c) FROM c) / (SELECT avg(c) FROM c), 6)
-         AS cv,
-       round((SELECT -sum((c / tot.t) * ln(c / tot.t)) FROM c)
-             / ln(tot.nk), 6) AS evenness
-FROM tot, tk""",
         "lineitem_quantiles": """
 SELECT 0.25 AS p, round(quantile_cont(l_extendedprice, 0.25), 6) AS value
 FROM lineitem
@@ -3488,164 +3069,6 @@ SELECT
   round(CAST(sum(CASE WHEN k.o_orderkey IS NULL THEN 1 ELSE 0 END)
              AS DOUBLE) / greatest(count(*), 1), 6) AS orphan_rate
 FROM lineitem l LEFT JOIN keys k ON k.o_orderkey = l.l_orderkey""",
-        "events_ohlc": """
-WITH rk AS (
-  SELECT event_type, date_trunc('hour', ts) AS bar_ts, value,
-         row_number() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-                            ORDER BY ts ASC, event_id ASC) AS ra,
-         row_number() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-                            ORDER BY ts DESC, event_id DESC) AS rd
-  FROM events
-)
-SELECT event_type, bar_ts, count(*) AS n,
-       max(CASE WHEN ra = 1 THEN value END) AS open,
-       max(value) AS high, min(value) AS low,
-       max(CASE WHEN rd = 1 THEN value END) AS close,
-       round(sum(value), 4) AS sum_value
-FROM rk GROUP BY event_type, bar_ts""",
-        "events_assoc": """
-WITH p AS MATERIALIZED (
-  SELECT DISTINCT user_id AS b, event_type AS x FROM events
-), nb AS (SELECT CAST(count(DISTINCT b) AS DOUBLE) AS v FROM p),
-s AS (SELECT x, count(*) AS nx FROM p GROUP BY x),
-co AS (
-  SELECT a.x, b2.x AS y, count(*) AS nxy
-  FROM p a JOIN p b2 ON a.b = b2.b AND a.x <> b2.x
-  GROUP BY a.x, b2.x
-)
-SELECT co.x AS antecedent, co.y AS consequent, nxy,
-       round(nxy / nb.v, 6) AS support,
-       round(CAST(nxy AS DOUBLE) / sx.nx, 6) AS confidence,
-       round((CAST(nxy AS DOUBLE) / sx.nx) / (sy.nx / nb.v), 6) AS lift
-FROM co JOIN s sx ON sx.x = co.x JOIN s sy ON sy.x = co.y, nb""",
-        "events_kmv_rolling": """
-WITH pairs AS (
-  SELECT DISTINCT date_trunc('hour', ts) AS hour,
-         ('0x' || substr(md5(CAST(user_id AS VARCHAR) || ':0'), 1, 8))::BIGINT
-           AS h
-  FROM events
-), hrs AS (
-  SELECT hour, row_number() OVER (ORDER BY hour) AS hr
-  FROM (SELECT DISTINCT hour FROM pairs)
-), dh AS (
-  SELECT DISTINCT a.hour AS hour, p.h
-  FROM hrs a
-  JOIN hrs b ON b.hr BETWEEN a.hr - 23 AND a.hr
-  JOIN pairs p ON p.hour = b.hour
-), rk AS (
-  SELECT hour, h,
-         row_number() OVER (PARTITION BY hour ORDER BY h ASC) AS r
-  FROM dh
-), sk AS (
-  SELECT hour, count(*) AS n_in, max(h) AS hk
-  FROM rk WHERE r <= 64 GROUP BY hour
-)
-SELECT hour,
-       round(CASE WHEN n_in < 64 THEN CAST(n_in AS DOUBLE)
-                  ELSE 63.0 * 4294967296.0 / hk END, 6) AS est_distinct
-FROM sk""",
-        "events_markov": """
-WITH seq AS (
-  SELECT event_type AS from_type,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY ts ASC, event_id ASC) AS to_type
-  FROM events
-), counts AS (
-  SELECT from_type, to_type, count(*) AS n
-  FROM seq WHERE to_type IS NOT NULL
-  GROUP BY from_type, to_type
-)
-SELECT from_type, to_type, n,
-       round(CAST(n AS DOUBLE)
-             / CAST(sum(n) OVER (PARTITION BY from_type) AS DOUBLE), 6)
-         AS prob
-FROM counts""",
-        "events_anomaly": """
-WITH hourly AS (
-  SELECT event_type, date_trunc('hour', ts) AS hour, count(*) AS n
-  FROM events GROUP BY 1, 2
-), scored AS (
-  SELECT event_type, hour, n,
-         count(*) OVER w AS n_prev,
-         avg(n) OVER w AS mean_raw,
-         stddev_samp(n) OVER w AS std_raw
-  FROM hourly
-  WINDOW w AS (PARTITION BY event_type ORDER BY hour
-               ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)
-)
-SELECT event_type, hour, n,
-  round(CASE WHEN n_prev >= 12 THEN mean_raw END, 6) AS mean_prev,
-  round(CASE WHEN n_prev >= 12 THEN std_raw END, 6) AS std_prev,
-  round(CASE WHEN n_prev >= 12 AND std_raw > 0
-             THEN (n - mean_raw) / std_raw END, 6) AS z,
-  coalesce(abs(CASE WHEN n_prev >= 12 AND std_raw > 0
-               THEN (n - mean_raw) / std_raw END) > 3.0, false) AS is_anomaly
-FROM scored""",
-        # quadratic BETWEEN form on purpose — the engine's explode-based
-        # fan-out must agree with the naive trailing-window semantics
-        "events_dau": """
-WITH daily AS MATERIALIZED (
-  SELECT DISTINCT CAST(ts AS DATE) AS day, user_id AS u FROM events
-), stats AS (
-  SELECT CAST(ts AS DATE) AS day, count(*) AS n_events,
-         count(DISTINCT user_id) AS dau
-  FROM events GROUP BY 1
-), wau AS (
-  SELECT s.day, count(DISTINCT d.u) AS wau
-  FROM (SELECT DISTINCT day FROM daily) s
-  JOIN daily d ON d.day BETWEEN s.day - 6 AND s.day
-  GROUP BY s.day
-)
-SELECT strftime(s.day, '%Y-%m-%d') AS day, s.dau, w.wau, s.n_events
-FROM stats s JOIN wau w ON w.day = s.day""",
-        # same first-touch CTE chain as events_funnel, carrying the
-        # previous completion time; integer-second latencies, type-7
-        # quantile_cont = Spark exact percentile, mean = sum/count
-        "events_funnel_latency": """
-WITH s1 AS MATERIALIZED (
-  SELECT user_id AS u, min(ts) AS t FROM events
-  WHERE event_type = 'view' GROUP BY user_id
-), s2 AS MATERIALIZED (
-  SELECT e.user_id AS u, min(e.ts) AS t, min(s1.t) AS prev_t
-  FROM events e JOIN s1 ON s1.u = e.user_id
-  WHERE e.event_type = 'click' AND e.ts > s1.t GROUP BY e.user_id
-), s3 AS MATERIALIZED (
-  SELECT e.user_id AS u, min(e.ts) AS t, min(s2.t) AS prev_t
-  FROM events e JOIN s2 ON s2.u = e.user_id
-  WHERE e.event_type = 'purchase' AND e.ts > s2.t GROUP BY e.user_id
-), l2 AS (SELECT datediff('second', prev_t, t) AS lat FROM s2),
-l3 AS (SELECT datediff('second', prev_t, t) AS lat FROM s3)
-SELECT CAST(2 AS INT) AS step_no, 'click' AS step,
-       CAST(count(*) AS BIGINT) AS n_users,
-       round(quantile_cont(lat, 0.5), 6) AS p50_s,
-       round(quantile_cont(lat, 0.9), 6) AS p90_s,
-       round(CAST(sum(lat) AS DOUBLE) / greatest(count(*), 1), 6) AS mean_s
-FROM l2
-UNION ALL
-SELECT CAST(3 AS INT), 'purchase', CAST(count(*) AS BIGINT),
-       round(quantile_cont(lat, 0.5), 6),
-       round(quantile_cont(lat, 0.9), 6),
-       round(CAST(sum(lat) AS DOUBLE) / greatest(count(*), 1), 6)
-FROM l3""",
-        # deliberately the quadratic BETWEEN/overlap theta-join the
-        # engine's bucket equi-join avoids
-        "events_overlap": """
-WITH errors AS MATERIALIZED (
-  SELECT event_id AS error_id, user_id, ts AS e0,
-         ts + INTERVAL 600 SECOND AS e1
-  FROM events WHERE event_type = 'error'
-), purch AS MATERIALIZED (
-  SELECT event_id AS purchase_id, user_id, ts AS p0,
-         ts + INTERVAL 1800 SECOND AS p1
-  FROM events WHERE event_type = 'purchase'
-)
-SELECT e.error_id, e.user_id,
-       CAST(count(*) AS BIGINT) AS n_overlap,
-       min(p.purchase_id) AS first_purchase_id
-FROM errors e JOIN purch p
-  ON p.user_id = e.user_id
- AND greatest(e.e0, p.p0) < least(e.e1, p.p1)
-GROUP BY e.error_id, e.user_id""",
         # same integer DIV chunk-count arithmetic, same slice bounds
         "doc_chunks": r"""
 WITH base AS (
@@ -3740,34 +3163,6 @@ FROM toks GROUP BY stratum""",
         "doc_bm25": _bm25_oracle(BM25_QUERIES, k1=1.2, b=0.75, topk=10),
         "doc_dup_spans": _DUP_SPANS_SQL,
         "doc_dup_clean": _DUP_CLEAN_SQL,
-        # the oracle is deliberately the quadratic theta-join the engine's
-        # single-shuffle sort-merge shape avoids
-        "events_asof": """
-WITH l AS (SELECT event_id, user_id, ts, value FROM events
-           WHERE event_type = 'purchase'),
-r AS (SELECT event_id, user_id, ts, value FROM events
-      WHERE event_type = 'click'),
-m AS (
-  SELECT l.event_id, l.user_id, l.ts, l.value,
-         r.event_id AS r_eid, r.value AS r_val, r.ts AS r_ts,
-         row_number() OVER (PARTITION BY l.event_id
-                            ORDER BY r.ts DESC, r.event_id DESC) AS rn
-  FROM l LEFT JOIN r ON l.user_id = r.user_id AND r.ts <= l.ts)
-SELECT event_id, user_id, ts, value,
-       coalesce(r_eid, -1) AS click_event_id,
-       coalesce(r_val, 0.0) AS click_value,
-       coalesce(CAST(date_diff('second', r_ts, ts) AS BIGINT), -1)
-         AS secs_since_click
-FROM m WHERE rn = 1""",
-        "events_error_aftermath": """
-WITH e AS (SELECT event_id AS error_event_id, user_id, ts AS t0
-           FROM events WHERE event_type = 'error')
-SELECT e.error_event_id, e.user_id,
-       count(*) AS n_follow, round(sum(p.value), 4) AS sum_value
-FROM e JOIN events p ON e.user_id = p.user_id
- AND p.ts >= e.t0 AND p.ts < e.t0 + INTERVAL 600 SECOND
- AND p.event_id <> e.error_event_id
-GROUP BY 1, 2""",
         "doc_importance": r"""
 WITH words AS (
   SELECT doc_id, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS t,

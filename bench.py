@@ -62,7 +62,7 @@ def main() -> None:
     )
 
     for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
+              "lineitem", "documents", "embeddings"):
         spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")) \
             .limit(256).collect()
     mentions_from_files(ingest(corpus_df_distributed(
@@ -70,8 +70,8 @@ def main() -> None:
 
     names = [
         "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
-        "q4_order_priority", "top_customers_per_nation", "events_hourly",
-        "events_user_top_type", "kg_doc_mentions", "kg_term_cooccurrence",
+        "q4_order_priority", "top_customers_per_nation",
+        "kg_doc_mentions", "kg_term_cooccurrence",
         "doc_token_count", "doc_quality", "doc_lang_id", "doc_pii",
         "doc_boilerplate", "doc_exact_dedup",
         "doc_minhash_dedup", "doc_simhash_dedup", "emb_cosine_topk",
@@ -92,27 +92,22 @@ def main() -> None:
         # ranked retrieval, HITS hubs/authorities
         "doc_dup_spans", "doc_dup_clean", "doc_bm25", "graph_hits",
         "graph_kcore", "graph_bfs", "doc_length_stats", "doc_bpe_merges",
-        "events_funnel", "events_retention",
-        # round-5 fourth-session additions: as-of join, bucketed range
-        # join, DSIR importance weighting
-        "events_asof", "events_error_aftermath", "doc_importance",
+        # round-5 fourth-session addition: DSIR importance weighting
+        "doc_importance",
         # round-5 fifth-session additions: link prediction (CN/Jaccard/
         # Adamic-Adar) with the apex-degree hub cap; CCNet head/middle/
         # tail perplexity terciles
         "graph_link_predict", "doc_ccnet_buckets", "graph_ppr",
-        "events_dau", "doc_ngram_diversity", "emb_knn_pq",
-        "events_funnel_latency", "doc_weighted_sample", "events_overlap",
+        "doc_ngram_diversity", "emb_knn_pq", "doc_weighted_sample",
         "doc_chunks",
-        # round-5 sixth-session additions: weighted shortest paths,
-        # Markov next-event transitions, rolling z-score anomalies
-        "graph_sssp", "events_markov", "events_anomaly",
+        # round-5 sixth-session addition: weighted shortest paths
+        "graph_sssp",
         "doc_inverted_index", "emb_knn_classify", "emb_project",
-        "events_kmv_users", "events_kmv_rolling", "lineitem_zorder",
+        "lineitem_zorder",
         "part_fuzzy_names", "doc_length_bins", "lineitem_corr",
-        "events_type_hour_mi", "doc_textrank", "events_ohlc",
-        "events_assoc", "dq_lineitem", "dq_lineitem_fk",
+        "doc_textrank", "dq_lineitem", "dq_lineitem_fk",
         "lineitem_rollup", "orders_diff", "lineitem_quantiles",
-        "events_key_skew", "doc_rake",
+        "doc_rake",
     ]
     qfns = E.queries()
     timings: dict[str, float] = {}

@@ -37,7 +37,7 @@ def main() -> None:
                           master=f"local[{cpus}]",
                           shuffle_partitions=shuffle)
     for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
+              "lineitem", "documents", "embeddings"):
         spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")) \
             .limit(256).collect()
 

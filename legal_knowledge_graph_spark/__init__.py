@@ -10,8 +10,8 @@ Pipeline stages (see SURVEY.md §7.1):
     st0 ingest    content_sha + deterministic doc keys
     st1 segment   file -> typed blocks            (ref: src/document_parser/parser.py:46-72)
     st2 mentions  block -> entity mentions        (ref: src/langgraph_agents/ner_agent.py:97-394)
-    st3 canon     dictionary + LSH + connected components -> nodes
-                                                  (ref: src/normalization/normalizer.py:38-310)
+    st3 canon     dictionary + purged token blocking + connected
+                  components -> nodes             (ref: src/normalization/normalizer.py:38-310)
     st4 triples   block -> (s, p, o) raw triples  (ref: src/langgraph_agents/relation_agent.py:99-407)
     st5 edgenorm  predicate alias + schema check  (ref: src/langgraph_agents/relation_norm_agent.py:87-298)
     st6 coref     BFS endpoint resolution         (ref: src/langgraph_agents/coref_agent.py:25-396)

@@ -1,7 +1,6 @@
 """Corpus/statistical profiling operators — the "understand your 100 TB
 before training on it" toolkit: equi-depth histograms, pairwise Pearson
-correlation, and categorical mutual information. All exact, all
-deterministic, all one-or-two aggregates over the raw table.
+correlation and exact quantiles. All exact and deterministic.
 
 The reference reports only fixed counters (pipeline/QA summaries,
 /root/reference/src/neo4j/models.py:100-159); distribution-level
@@ -58,51 +57,6 @@ def numeric_corr(df: DataFrame, cols: list) -> DataFrame:
                  F.col(f"{a}__X__{b}").alias("corr"))
         for a, b in pairs]))
     return row.select(stacked.alias("s")).select("s.*")
-
-
-def mutual_information(
-    df: DataFrame, col_x: str, col_y: str,
-) -> DataFrame:
-    """Mutual information (nats) between two categorical columns:
-
-        MI = sum_xy p(x,y) * ln( p(x,y) / (p(x) p(y)) )
-
-    plus the normalized variant MI / min(H(x), H(y)) in [0, 1]. Exact
-    from the joint-count table; deterministic. Output one row
-    (mi, nmi, n_x, n_y).
-
-    Scale shape: ONE map-side-combining (x, y) count aggregate bounds
-    everything downstream by |X| x |Y|; marginals and entropies come
-    from window sums over that tiny table, never the raw rows."""
-    from pyspark.sql.window import Window
-
-    joint = df.groupBy(
-        F.col(col_x).alias("x"), F.col(col_y).alias("y")) \
-        .agg(F.count(F.lit(1)).alias("nxy"))
-    tot = Window.partitionBy()
-    wx = Window.partitionBy("x")
-    wy = Window.partitionBy("y")
-    n = F.sum("nxy").over(tot)
-    pxy = F.col("nxy") / n
-    px = F.sum("nxy").over(wx) / n
-    py = F.sum("nxy").over(wy) / n
-    terms = joint.select(
-        "x", "y", pxy.alias("pxy"), px.alias("px"), py.alias("py"))
-    mi = F.sum(F.col("pxy") * F.log(F.col("pxy")
-                                    / (F.col("px") * F.col("py"))))
-    hx = -F.sum(F.when(F.col("_rx") == 1, F.col("px") * F.log("px")))
-    hy = -F.sum(F.when(F.col("_ry") == 1, F.col("py") * F.log("py")))
-    ranked = terms.withColumn(
-        "_rx", F.row_number().over(
-            Window.partitionBy("x").orderBy("y"))).withColumn(
-        "_ry", F.row_number().over(
-            Window.partitionBy("y").orderBy("x")))
-    out = ranked.agg(
-        F.round(mi, 6).alias("mi"),
-        F.round(mi / F.least(hx, hy), 6).alias("nmi"),
-        F.countDistinct("x").alias("n_x"),
-        F.countDistinct("y").alias("n_y"))
-    return out
 
 
 def exact_quantiles(
@@ -248,45 +202,3 @@ def exact_quantiles(
         x1 = needed[min(k0 + 1, n)]
         rows.append((float(p), round(x0 + frac * (x1 - x0), 6)))
     return df.sparkSession.createDataFrame(rows, "p double, value double")
-
-
-def key_skew_profile(
-    df: DataFrame, key_cols: list, top_k: int = 5,
-) -> DataFrame:
-    """Shuffle-skew diagnosis for a prospective join/agg key: one row
-
-        (n_keys, n_rows, max_share, top{k}_share, cv, evenness)
-
-    where max_share / top-k share = fraction of all rows owned by the
-    heaviest key(s) (the direct predictor of a straggler task),
-    cv = stddev/mean of per-key counts, and evenness = normalized key
-    entropy H/ln(n_keys) in (0, 1] (1 = perfectly uniform). All exact,
-    all order-free — skew metrics that need a GLOBAL sort of the key
-    histogram (gini) are deliberately excluded: at 10^9 keys that sort
-    is itself the skewed job. Top-k heavy keys resolve via
-    TakeOrderedAndProject (per-partition top-k, deterministic
-    (count DESC, key ASC) tiebreak), never a full ordering.
-
-    This is the diagnostic behind the engine's salting/AQE choices
-    (e.g. canonicalize's salted aggregation): run it BEFORE keying a
-    100 TB shuffle on a candidate column."""
-    from pyspark.sql.window import Window
-
-    counts = df.groupBy(
-        *[F.col(c) for c in key_cols]).agg(F.count(F.lit(1)).alias("c")) \
-        .localCheckpoint()
-    topk = counts.orderBy(
-        F.col("c").desc(), *[F.col(c).asc() for c in key_cols]) \
-        .limit(top_k).agg(F.sum("c").alias("tk")).collect()[0].tk
-    topk = int(topk or 0)  # empty input: report n_keys=0, null shares
-    total = F.sum("c").over(Window.partitionBy())
-    withp = counts.select("c", (F.col("c") / total).alias("p"))
-    return withp.agg(
-        F.count(F.lit(1)).alias("n_keys"),
-        F.sum("c").alias("n_rows"),
-        F.round(F.max("c") / F.sum("c"), 6).alias("max_share"),
-        F.round(F.lit(topk) / F.sum("c"), 6).alias("topk_share"),
-        F.round(F.stddev_samp("c") / F.avg("c"), 6).alias("cv"),
-        F.round((-F.sum(F.col("p") * F.log("p")))
-                / F.log(F.count(F.lit(1)).cast("double")), 6)
-        .alias("evenness"))

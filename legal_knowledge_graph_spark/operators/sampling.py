@@ -320,10 +320,10 @@ def salted_smallest_k(
     n_salts: int = 64, salt_seed: int = 0x5EED,
 ) -> DataFrame:
     """Generic two-phase smallest-k per group (the exact_k_per_stratum
-    discipline, shared by kmv_distinct / kmv_rolling_distinct /
-    inverted_index): a local rank within (group, salt) bounds every
-    window task at ~1/n_salts of even the hottest group, then the
-    global rank sees <= n_salts x k survivors per group. Rows must be
+    discipline, used by inverted_index): a local rank within (group,
+    salt) bounds every window task at ~1/n_salts of even the hottest
+    group, then the global rank sees <= n_salts x k survivors per
+    group. Rows must be
     unique on (part_cols, order_col); returns exactly each group's k
     smallest by `order_col` ASC with the helper columns dropped (any
     global-top-k row is within its salt's local top-k, so phase 1 never

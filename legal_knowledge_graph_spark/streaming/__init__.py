@@ -14,9 +14,3 @@ scheduled batch re-run from the checkpointed mention table.
 from .incremental import (  # noqa: F401
     incremental_mentions, run_full_incremental, run_incremental,
 )
-from .windows import run_windowed_events, windowed_event_counts  # noqa: F401
-from .sessions import run_sessionize, sessionize_batch, sessionized  # noqa: F401
-from .dedup_stream import (  # noqa: F401
-    run_streaming_dedup, streaming_exact_dedup,
-)
-from .anomaly import read_anomalies, run_streaming_anomaly  # noqa: F401

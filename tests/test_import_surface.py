@@ -1,0 +1,44 @@
+"""The KG entry points load only KG modules.
+
+Importing the batch pipeline (`plans`) and the incremental driver
+(`streaming`) must not pull in any operator that no KG stage calls.
+"""
+
+import json
+import os
+import subprocess
+import sys
+
+PKG = "legal_knowledge_graph_spark"
+KG_MODULES = {
+    f"{PKG}.{m}" for m in (
+        "operators.ingest", "operators.segment", "operators.mentions",
+        "operators.type_norm", "operators.canonicalize",
+        "operators.components", "operators.triples", "operators.edge_norm",
+        "operators.coref", "sources.io", "streaming.incremental", "schema",
+        "functions.tokenize", "plans.pipeline",
+    )
+}
+KG_PACKAGES = {PKG} | {
+    f"{PKG}.{p}" for p in (
+        "operators", "sources", "streaming", "functions", "plans")
+}
+
+
+def test_kg_import_surface_loads_only_kg_modules():
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import json, sys\n"
+        f"import {PKG}.plans, {PKG}.streaming\n"
+        f"print(json.dumps(sorted(m for m in sys.modules "
+        f"if m == {PKG!r} or m.startswith({PKG + '.'!r}))))\n"
+    )
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, env.get("PYTHONPATH")) if p)
+    out = subprocess.run([sys.executable, "-c", code], cwd=root, env=env,
+                         capture_output=True, text=True, check=True,
+                         timeout=120)
+    loaded = set(json.loads(out.stdout.strip().splitlines()[-1]))
+    assert f"{PKG}.streaming.incremental" in loaded
+    assert loaded - KG_MODULES - KG_PACKAGES == set()

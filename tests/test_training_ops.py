@@ -1,6 +1,7 @@
 """Training-data operators: dedup families, similarity search, text
 analysis, multimodal plumbing — small planted cases with known answers."""
 
+import hashlib
 import math
 
 import numpy as np
@@ -14,6 +15,7 @@ from legal_knowledge_graph_spark.operators.dedup import (
 from legal_knowledge_graph_spark.operators.multimodal import (
     extract_features, sample_frames, synthetic_assets,
 )
+from legal_knowledge_graph_spark.operators.sampling import importance_weights
 from legal_knowledge_graph_spark.operators.similarity import (
     knn_bruteforce, knn_lsh,
 )
@@ -1240,6 +1242,45 @@ def test_weighted_sample_k_matches_reference_and_salts_invariant(spark):
     assert len(g) == 8 and set(g[0].asDict()) == {"doc_id", "lang", "w"}
 
 
+def _h32(word: str, seed: int = 9) -> int:
+    return int(hashlib.md5(f"{word}:{seed}".encode()).hexdigest()[:8], 16)
+
+
+def test_importance_weights_tiny_fixture(spark):
+    """Hand-computed DSIR weights on a 3-doc corpus: target docs score
+    higher than the off-target doc, and the exact value matches the
+    Laplace-smoothed log-ratio computed independently in python."""
+    docs = spark.createDataFrame(
+        [(1, "alpha beta alpha", "en"),
+         (2, "alpha beta", "en"),
+         (3, "gamma gamma delta", "de")],
+        "doc_id long, text string, lang string")
+    B = 64
+    out = {r.doc_id: (r.n_tokens, r.importance)
+           for r in importance_weights(
+               docs, F.col("lang") == "en", n_buckets=B).collect()}
+    # independent python model
+    toks = {1: ["alpha", "beta", "alpha"], 2: ["alpha", "beta"],
+            3: ["gamma", "gamma", "delta"]}
+    target = {1, 2}
+    n_t, n_r = {}, {}
+    for d, ws in toks.items():
+        for w in ws:
+            b = _h32(w) % B
+            n_r[b] = n_r.get(b, 0) + 1
+            if d in target:
+                n_t[b] = n_t.get(b, 0) + 1
+    tt, tr = sum(n_t.values()), sum(n_r.values())
+    def lr(b):
+        return (math.log((n_t.get(b, 0) + 1.0) / (tt + B))
+                - math.log((n_r.get(b, 0) + 1.0) / (tr + B)))
+    for d, ws in toks.items():
+        exp = round(sum(lr(_h32(w) % B) for w in ws) / len(ws), 6)
+        assert out[d] == (len(ws), pytest.approx(exp, abs=1e-6)), d
+    # in-domain docs outrank the off-target doc
+    assert min(out[1][1], out[2][1]) > out[3][1]
+
+
 def test_chunk_documents_closed_form(spark):
     from legal_knowledge_graph_spark.operators.text_analysis import (
         chunk_documents,
@@ -1366,69 +1407,6 @@ def test_project_embeddings_matches_numpy_and_preserves_norms(spark):
     assert np.array_equal(_projection_matrix(16, 4, 3), R)
 
 
-def test_kmv_distinct_small_exact_and_large_close(spark):
-    from legal_knowledge_graph_spark.operators.sketches import kmv_distinct
-
-    # small group (< k distinct): exact fallback, est == true count
-    rows = [("a", i % 10) for i in range(100)]
-    # large group: 5000 distinct values, k=64 sketch
-    rows += [("b", i) for i in range(5000)]
-    df = spark.createDataFrame(rows, "grp string, val long")
-    got = {r.grp: (r.est_distinct, r.n_distinct)
-           for r in kmv_distinct(df, "grp", "val", k=64).collect()}
-    assert got["a"] == (10.0, 10)
-    est_b, true_b = got["b"]
-    assert true_b == 5000
-    assert abs(est_b - 5000) / 5000 < 0.30  # k=64 -> ~1/sqrt(62) rel err
-    # determinism: layout must not change the estimate
-    got2 = {r.grp: r.est_distinct
-            for r in kmv_distinct(df.repartition(13), "grp", "val",
-                                  k=64).collect()}
-    assert got2["b"] == est_b
-    # duplicates never inflate the sketch
-    dup = df.unionByName(df)
-    got3 = {r.grp: (r.est_distinct, r.n_distinct)
-            for r in kmv_distinct(dup, "grp", "val", k=64).collect()}
-    assert got3 == got
-
-
-def test_kmv_rolling_merge_equals_scratch_recompute(spark):
-    from datetime import datetime as dt, timedelta
-
-    from legal_knowledge_graph_spark.operators.sketches import (
-        kmv_distinct, kmv_rolling_distinct,
-    )
-
-    # 30 hours; hour h sees users from a sliding population so windows
-    # genuinely differ; k=16 << distinct per window
-    rows = []
-    for h in range(30):
-        for u in range(h * 40, h * 40 + 120):
-            rows.append((dt(2024, 1, 1) + timedelta(hours=h), u))
-    ev = spark.createDataFrame(rows, "ts timestamp, user_id long")
-    rolled = {r.hour: r.est_distinct
-              for r in kmv_rolling_distinct(
-                  ev, window_hours=6, k=16).collect()}
-    assert len(rolled) == 30
-    # merge property: the rolled estimate for hour h equals a
-    # from-scratch KMV over the union of the trailing 6 observed hours
-    for h in (5, 17, 29):
-        lo = dt(2024, 1, 1) + timedelta(hours=h - 5)
-        hi = dt(2024, 1, 1) + timedelta(hours=h)
-        win = ev.where((F.col("ts") >= lo) & (F.col("ts") <= hi)) \
-            .withColumn("g", F.lit("w"))
-        [r] = kmv_distinct(win, "g", "user_id", k=16, exact=False).collect()
-        assert rolled[hi] == r.est_distinct
-    # accuracy sanity at k=64 on a 320-distinct window
-    rolled64 = {r.hour: r.est_distinct
-                for r in kmv_rolling_distinct(
-                    ev, window_hours=6, k=64).collect()}
-    true_h29 = len({u for (ts, u) in rows
-                    if ts >= dt(2024, 1, 1) + timedelta(hours=24)})
-    est = rolled64[dt(2024, 1, 1) + timedelta(hours=29)]
-    assert abs(est - true_h29) / true_h29 < 0.35
-
-
 def _lev1(a, b):
     # distance <= 1 check (lengths differ by > 1 -> no)
     if a == b:
@@ -1506,27 +1484,6 @@ def test_numeric_corr_matches_numpy(spark):
     assert set(got) == {("x", "y"), ("x", "z"), ("y", "z")}
     assert abs(got[("x", "y")] - np.corrcoef(x, y)[0, 1]) < 1e-6
     assert abs(got[("x", "z")] - np.corrcoef(x, z)[0, 1]) < 1e-6
-
-
-def test_mutual_information_closed_form(spark):
-    import math
-
-    from legal_knowledge_graph_spark.operators.profiling import (
-        mutual_information,
-    )
-
-    # perfectly dependent: MI = H = ln(2), NMI = 1
-    dep = spark.createDataFrame(
-        [("a", 0)] * 50 + [("b", 1)] * 50, "x string, y int")
-    [r] = mutual_information(dep, "x", "y").collect()
-    assert abs(r.mi - math.log(2)) < 1e-6 and abs(r.nmi - 1.0) < 1e-6
-    assert (r.n_x, r.n_y) == (2, 2)
-    # independent uniform: MI = 0
-    ind = spark.createDataFrame(
-        [(a, b) for a in "ab" for b in (0, 1) for _ in range(25)],
-        "x string, y int")
-    [r2] = mutual_information(ind, "x", "y").collect()
-    assert abs(r2.mi) < 1e-9 and abs(r2.nmi) < 1e-9
 
 
 def test_textrank_chunks_matches_numpy_reference(spark):
@@ -1721,33 +1678,6 @@ def test_textrank_long_doc_blocking(spark):
     assert len([r for r in rows if r.doc_id == 1]) == 2
     assert len([r for r in rows if r.doc_id == 2]) == 1
     assert all(r.score > 0 for r in rows)
-
-
-def test_key_skew_profile_closed_form(spark):
-    import math
-
-    from legal_knowledge_graph_spark.operators.profiling import (
-        key_skew_profile,
-    )
-
-    # key "hot" owns 60 of 100 rows; 40 keys own 1 each
-    rows = [("hot",)] * 60 + [(f"k{i}",) for i in range(40)]
-    df = spark.createDataFrame(rows, "k string")
-    [r] = key_skew_profile(df, ["k"], top_k=3).collect()
-    assert (r.n_keys, r.n_rows) == (41, 100)
-    assert r.max_share == 0.6
-    assert r.topk_share == round(62 / 100, 6)   # hot + 2 singletons
-    counts = [60] + [1] * 40
-    mean = sum(counts) / 41
-    var = sum((c - mean) ** 2 for c in counts) / 40  # sample variance
-    assert r.cv == round(math.sqrt(var) / mean, 6)
-    h = -sum((c / 100) * math.log(c / 100) for c in counts)
-    assert r.evenness == round(h / math.log(41), 6)
-    # uniform keys -> evenness 1.0, max_share = 1/n
-    uni = spark.createDataFrame([(f"k{i % 10}",) for i in range(100)],
-                                "k string")
-    [u] = key_skew_profile(uni, ["k"]).collect()
-    assert u.evenness == 1.0 and u.max_share == 0.1 and u.cv == 0.0
 
 
 def test_rake_keyphrases_closed_form(spark):

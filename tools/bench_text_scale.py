@@ -1,4 +1,4 @@
-"""Wall-clock evidence the round-5 text/sketch operators hold 2-3
+"""Wall-clock evidence the round-5 text operators hold 2-3
 orders of magnitude past the driver corpus: a deterministic
 hash-derived document table (default 200k docs x ~60 words from a 40-
 word vocabulary, built on executors — no driver data) through
@@ -7,7 +7,6 @@ word vocabulary, built on executors — no driver data) through
 - inverted_index   (salted two-phase smallest-k postings; the 40-word
                     vocabulary makes EVERY word a stopword-grade hot
                     group — the worst case the salting exists for)
-- kmv_rolling window sketches over a 10M-event stream
 
 Outputs fingerprint (order-insensitive XOR) so two parallelism levels
 prove identical results:
@@ -56,8 +55,6 @@ def _fp(df):
 
 
 def main() -> None:
-    from legal_knowledge_graph_spark.operators.sketches import (
-        kmv_rolling_distinct)
     from legal_knowledge_graph_spark.operators.text_analysis import (
         inverted_index, textrank_chunks)
     from legal_knowledge_graph_spark.session import build_session
@@ -87,20 +84,6 @@ def main() -> None:
     out["inverted_index"] = {"secs": round(time.time() - t0, 3),
                              "rows": rows, "fingerprint": fp}
 
-    ev = (
-        spark.range(10_000_000)
-        .select(F.timestamp_seconds(
-                    F.lit(1_700_000_000)
-                    + F.abs(F.xxhash64("id", F.lit(23))) % (86400 * 30))
-                .alias("ts"),
-                (F.abs(F.xxhash64("id", F.lit(19))) % 1_000_000)
-                .alias("user_id"))
-        .localCheckpoint()
-    )
-    t0 = time.time()
-    rows, fp = _fp(kmv_rolling_distinct(ev, window_hours=24, k=64))
-    out["kmv_rolling_10m"] = {"secs": round(time.time() - t0, 3),
-                              "rows": rows, "fingerprint": fp}
     print(json.dumps(out))
     spark.stop()
 

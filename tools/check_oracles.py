@@ -15,7 +15,7 @@ import duckdb
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+          "lineitem", "documents", "embeddings"]
 
 
 def canon(df_pandas):
@@ -41,7 +41,7 @@ def main():
     from legal_knowledge_graph_spark.session import build_session
     import __spark_entry__ as entrymod
 
-    spark = build_session(master="local[8]", shuffle_partitions=8)
+    spark = build_session(shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

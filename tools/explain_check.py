@@ -229,16 +229,6 @@ def main() -> None:
     check("graph_bfs equi-joins", p,
           must_not=("BroadcastNestedLoopJoin", "CartesianProduct",
                     "BatchEvalPython", "ArrowEvalPython"))
-    # funnel: user-keyed equi-join chain, the only nested loop is the
-    # one-row first-step attach; retention joins user-to-user
-    p = plan_of(E.events_funnel(spark, sf_dir))
-    check("events_funnel equi-joins", p,
-          must_not=("CartesianProduct", "BatchEvalPython",
-                    "ArrowEvalPython"))
-    p = plan_of(E.events_retention(spark, sf_dir))
-    check("events_retention equi-joins", p,
-          must_not=("BroadcastNestedLoopJoin", "CartesianProduct",
-                    "BatchEvalPython", "ArrowEvalPython"))
     # BPE: checkpoint-rooted merge rounds, final table is driver-built
     # (the learned artifact); the per-round pair agg is gated by running
     # one round's plan shape via the operator's own word table
@@ -247,15 +237,6 @@ def main() -> None:
     check("bpe word-table JVM-only", plan_of(wt),
           must_not=("BatchEvalPython", "ArrowEvalPython", "Join"))
 
-    # as-of join: union + window carry — NO join node at all, no python
-    p = plan_of(E.events_asof(spark, sf_dir))
-    check("events_asof joinless window", p,
-          must_not=("Join", "BatchEvalPython", "ArrowEvalPython"))
-    # range join: bucket equi-join + residual — never nested-loop
-    p = plan_of(E.events_error_aftermath(spark, sf_dir))
-    check("events_error_aftermath equi-join", p,
-          must_not=("BroadcastNestedLoopJoin", "CartesianProduct",
-                    "BatchEvalPython", "ArrowEvalPython"))
     # DSIR: bounded bucket table broadcast into the scoring scan
     p = plan_of(E.doc_importance(spark, sf_dir))
     check("doc_importance broadcast scoring", p,
