@@ -1,7 +1,6 @@
 """Training-data operators: dedup families, similarity search, text
 analysis, multimodal plumbing — small planted cases with known answers."""
 
-import hashlib
 import math
 
 import numpy as np
@@ -15,7 +14,6 @@ from legal_knowledge_graph_spark.operators.dedup import (
 from legal_knowledge_graph_spark.operators.multimodal import (
     extract_features, sample_frames, synthetic_assets,
 )
-from legal_knowledge_graph_spark.operators.sampling import importance_weights
 from legal_knowledge_graph_spark.operators.similarity import (
     knn_bruteforce, knn_lsh,
 )
@@ -1240,45 +1238,6 @@ def test_weighted_sample_k_matches_reference_and_salts_invariant(spark):
     # global (stratum-less) mode: exactly k rows, schema preserved
     g = weighted_sample_k(docs, k=8, weight_col="w").collect()
     assert len(g) == 8 and set(g[0].asDict()) == {"doc_id", "lang", "w"}
-
-
-def _h32(word: str, seed: int = 9) -> int:
-    return int(hashlib.md5(f"{word}:{seed}".encode()).hexdigest()[:8], 16)
-
-
-def test_importance_weights_tiny_fixture(spark):
-    """Hand-computed DSIR weights on a 3-doc corpus: target docs score
-    higher than the off-target doc, and the exact value matches the
-    Laplace-smoothed log-ratio computed independently in python."""
-    docs = spark.createDataFrame(
-        [(1, "alpha beta alpha", "en"),
-         (2, "alpha beta", "en"),
-         (3, "gamma gamma delta", "de")],
-        "doc_id long, text string, lang string")
-    B = 64
-    out = {r.doc_id: (r.n_tokens, r.importance)
-           for r in importance_weights(
-               docs, F.col("lang") == "en", n_buckets=B).collect()}
-    # independent python model
-    toks = {1: ["alpha", "beta", "alpha"], 2: ["alpha", "beta"],
-            3: ["gamma", "gamma", "delta"]}
-    target = {1, 2}
-    n_t, n_r = {}, {}
-    for d, ws in toks.items():
-        for w in ws:
-            b = _h32(w) % B
-            n_r[b] = n_r.get(b, 0) + 1
-            if d in target:
-                n_t[b] = n_t.get(b, 0) + 1
-    tt, tr = sum(n_t.values()), sum(n_r.values())
-    def lr(b):
-        return (math.log((n_t.get(b, 0) + 1.0) / (tt + B))
-                - math.log((n_r.get(b, 0) + 1.0) / (tr + B)))
-    for d, ws in toks.items():
-        exp = round(sum(lr(_h32(w) % B) for w in ws) / len(ws), 6)
-        assert out[d] == (len(ws), pytest.approx(exp, abs=1e-6)), d
-    # in-domain docs outrank the off-target doc
-    assert min(out[1][1], out[2][1]) > out[3][1]
 
 
 def test_chunk_documents_closed_form(spark):
