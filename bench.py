@@ -28,7 +28,8 @@ def force(df) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     os.environ["SPARK_GRAFT_CPUS"] = cpus
     sf_name = os.path.basename(sf_dir.rstrip("/"))
     sf = float(sf_name.replace("sf", "")) if sf_name.startswith("sf") else 0.1

@@ -24,7 +24,8 @@ def main() -> None:
     names = sys.argv[1].split(",")
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 1
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     os.environ["SPARK_GRAFT_CPUS"] = cpus
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))

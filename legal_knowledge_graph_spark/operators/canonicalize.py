@@ -208,7 +208,7 @@ def canonicalize(
     # broadcast decision never re-counts the same checkpointed table
     # (VERDICT r4 #2 — one redundant job per pipeline run / per
     # incremental refresh)
-    form_map._kg_n_forms = n_forms
+    form_map._kg_rows = n_forms
 
     fm_join = form_map.select("entity_type", "text", "entity_id", "is_dict")
     if n_forms <= BROADCAST_FORMS_MAX:

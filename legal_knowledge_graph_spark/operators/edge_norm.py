@@ -100,16 +100,14 @@ def normalize_predicates(triples: DataFrame, spark: SparkSession) -> DataFrame:
 BROADCAST_FORMS_MAX = 2_000_000
 
 
-def _forms_small(form_map: DataFrame, n_forms: int | None = None) -> bool:
+def _forms_small(form_map: DataFrame) -> bool:
     """Size-conditional broadcast decision for the endpoint-resolution
     joins (the observed-size discipline of coref.BROADCAST_FRONTIER_MAX).
-    The count is threaded in, never re-measured, when the producer already
-    knows it (VERDICT r4 #2): explicit `n_forms` first, else the
-    `_kg_n_forms` attribute canonicalize rides on the form_map's
-    checkpoint observe(), else (form maps built by hand, e.g. tests) one
-    standalone count over the materialized table."""
-    if n_forms is None:
-        n_forms = getattr(form_map, "_kg_n_forms", None)
+    The count is never re-measured when the producer already knows it
+    (VERDICT r4 #2): canonicalize's checkpoint and the StageStore write or
+    read hand it on the form map as `_kg_rows`; form maps built by hand
+    (tests) pay one standalone count over the materialized table."""
+    n_forms = getattr(form_map, "_kg_rows", None)
     if n_forms is not None:
         return n_forms <= BROADCAST_FORMS_MAX
     try:
@@ -120,7 +118,6 @@ def _forms_small(form_map: DataFrame, n_forms: int | None = None) -> bool:
 
 def normalize_edges(
     triples: DataFrame, form_map: DataFrame, spark: SparkSession,
-    n_forms: int | None = None,
 ) -> DataFrame:
     """triples + form_map -> edges (EDGES_SCHEMA + surface endpoint texts
     retained for coref).
@@ -147,7 +144,7 @@ def normalize_edges(
         F.col("entity_id").alias("object_entity_id"),
         F.col("canonical_name").alias("object_canonical"),
     )
-    if _forms_small(form_map, n_forms):
+    if _forms_small(form_map):
         fm_s, fm_o = F.broadcast(fm_s), F.broadcast(fm_o)
     e = (
         triples.join(fm_s, ["subject_type", "subject"], "left")

@@ -21,12 +21,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.canonicalize import canonicalize
-from ..operators.coref import resolve_coref
-from ..operators.edge_norm import normalize_edges
+from ..operators import canonicalize as st3, triples as st4
+from ..operators import coref as st6, edge_norm as st5
 from ..operators.ingest import ingest
 from ..operators.mentions import mentions_from_files
-from ..operators.triples import emit_triples
 from ..sources.io import StageStore, fingerprint
 
 
@@ -47,12 +45,13 @@ class KGPipeline:
         spark: SparkSession,
         checkpoint_root: str | None = None,
         bucket_by_repo: int | None = None,
-        run_id: str = "r0",
     ):
         self.spark = spark
         self.store = StageStore(checkpoint_root) if checkpoint_root else None
         self.bucket_by_repo = bucket_by_repo
-        self.run_id = run_id
+        # the fingerprint chain depends only on the stage parameters
+        self._fp0 = fingerprint("ingest", bucket_by_repo)
+        self._fp2 = fingerprint(self._fp0, "mentions")
 
     def _stage(self, name: str, fp: str, build, reused: bool = False) -> DataFrame:
         """Checkpointed mode: parquet stage table + manifest skip. In-memory
@@ -68,45 +67,47 @@ class KGPipeline:
         return self.store.write(name, build(), fp)
 
     def run(self, files: DataFrame) -> PipelineResult:
-        fp0 = fingerprint(self.run_id, "ingest", self.bucket_by_repo)
         ingested = self._stage(
-            "st0_ingest", fp0, lambda: ingest(files, self.bucket_by_repo))
-
-        fp2 = fingerprint(fp0, "mentions")
+            "st0_ingest", self._fp0, lambda: ingest(files, self.bucket_by_repo))
         mentions = self._stage(
-            "st2_mentions", fp2, lambda: mentions_from_files(ingested),
+            "st2_mentions", self._fp2, lambda: mentions_from_files(ingested),
             reused=True)
+        return PipelineResult(ingested, mentions, *self.graph(mentions))
 
-        fp3 = fingerprint(fp2, "canonicalize")
+    def graph(self, mentions: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """st3-st6 over a mentions table -> (nodes, triples, edges). The
+        batch run and the streaming refresh both build their graph here.
+        Stage functions are looked up on their modules at call time, so a
+        wrapper installed on a module attribute sees every call."""
+        fp3 = fingerprint(self._fp2, "canonicalize")
         if self.store and self.store.is_complete("st3_nodes", fp3) \
                 and self.store.is_complete("st3_form_map", fp3):
             nodes = self.store.read(self.spark, "st3_nodes")
             form_map = self.store.read(self.spark, "st3_form_map")
-            n_forms = self.store.rows("st3_form_map")  # manifest, no job
         else:
-            nodes, form_map = canonicalize(mentions, self.spark)
-            n_forms = getattr(form_map, "_kg_n_forms", None)
+            nodes, form_map = st3.canonicalize(mentions, self.spark)
             if self.store:
                 nodes = self.store.write("st3_nodes", nodes, fp3)
                 form_map = self.store.write("st3_form_map", form_map, fp3)
             else:
                 nodes = nodes.localCheckpoint()  # coref + caller
 
-        fp4 = fingerprint(fp2, "triples")
-        triples = self._stage("st4_triples", fp4, lambda: emit_triples(mentions))
+        fp4 = fingerprint(self._fp2, "triples")
+        triples = self._stage(
+            "st4_triples", fp4, lambda: st4.emit_triples(mentions))
 
+        # the form map's row count rides on it as `_kg_rows`
         fp5 = fingerprint(fp3, fp4, "edges")
         edges_raw = self._stage(
             "st5_edges", fp5,
-            lambda: normalize_edges(triples, form_map, self.spark, n_forms),
+            lambda: st5.normalize_edges(triples, form_map, self.spark),
             reused=True)
 
         fp6 = fingerprint(fp5, "coref")
         edges = self._stage(
             "st6_edges_final", fp6,
-            lambda: resolve_coref(edges_raw, nodes, self.spark))
-
-        return PipelineResult(ingested, mentions, nodes, triples, edges)
+            lambda: st6.resolve_coref(edges_raw, nodes, self.spark))
+        return nodes, triples, edges
 
 
 def run_pipeline(

@@ -65,8 +65,7 @@ def build_session(
         # operator level with partitioning.repartition_wide (an explicit
         # REPARTITION_BY_NUM exchange AQE never coalesces), not by
         # flipping the global default.
-        .config("spark.sql.adaptive.coalescePartitions.enabled",
-                os.environ.get("SPARK_GRAFT_COALESCE", "true"))
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", _ARROW_BATCH)
@@ -82,17 +81,14 @@ def build_session(
         # level-32 139.7 -> 117.6 s (-16%), level-8 261.1 -> 239.1 s
         # (-8%), same window, identical outputs. zstd was measured WORSE
         # (169 s: codec CPU exceeds the bandwidth saving); keep lz4.
-        .config("spark.rdd.compress",
-                os.environ.get("SPARK_GRAFT_RDD_COMPRESS", "true"))
+        .config("spark.rdd.compress", "true")
         # keep post-shuffle partitions lean: wide string rows at the
         # default 64MB advisory size starve execution memory and spill
         # (measured: 9GB spills per aggregation stage at 32 threads).
         # Start wide and let AQE coalesce down to the advisory size.
-        .config("spark.sql.adaptive.advisoryPartitionSizeInMB",
-                os.environ.get("SPARK_GRAFT_ADVISORY_MB", "16"))
+        .config("spark.sql.adaptive.advisoryPartitionSizeInMB", "16")
         .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-                os.environ.get("SPARK_GRAFT_INIT_PARTS",
-                               str(max(shuffle_partitions * 4, 64))))
+                str(max(shuffle_partitions * 4, 64)))
     )
     # forensics hook: SPARK_GRAFT_EVENTLOG=<dir> records the event log for
     # per-stage wall/CPU analysis (the BENCH/BASELINE.md recipe)

@@ -1,4 +1,4 @@
-"""Incremental (Structured Streaming) extraction equals the batch run."""
+"""Incremental (Structured Streaming) KG construction equals the batch run."""
 
 import os
 
@@ -8,26 +8,30 @@ from pyspark.sql import functions as F
 from legal_knowledge_graph_spark.corpus import corpus_df
 from legal_knowledge_graph_spark.operators.ingest import ingest
 from legal_knowledge_graph_spark.operators.mentions import mentions_from_files
-from legal_knowledge_graph_spark.streaming import run_incremental
+from legal_knowledge_graph_spark.sources.io import read_graph_table
+from legal_knowledge_graph_spark.streaming import run_full_incremental
 
 
 def test_incremental_equals_batch(spark, tmp_path):
+    """The drained mention ledger holds exactly the batch st0-st2 output,
+    and a second drain with the same checkpoint leaves it unchanged."""
     files = corpus_df(spark, 40, seed=42)
     landing = str(tmp_path / "landing")
-    out = str(tmp_path / "mentions")
+    ledger = str(tmp_path / "ledger")
+    graph = str(tmp_path / "graph")
     ckpt = str(tmp_path / "ckpt")
     files.write.mode("overwrite").parquet(landing)
 
-    run_incremental(spark, landing, out, ckpt)
-    streamed = spark.read.parquet(out)
+    run_full_incremental(spark, landing, ledger, graph, ckpt)
+    s = sorted(r.mention_id for r in read_graph_table(spark, ledger).collect())
     batch = mentions_from_files(ingest(files))
-    s = sorted(r.mention_id for r in streamed.collect())
     b = sorted(r.mention_id for r in batch.collect())
     assert s == b
 
     # draining again with the same checkpoint is a no-op (exactly-once)
-    run_incremental(spark, landing, out, ckpt)
-    assert sorted(r.mention_id for r in spark.read.parquet(out).collect()) == s
+    run_full_incremental(spark, landing, ledger, graph, ckpt)
+    assert sorted(
+        r.mention_id for r in read_graph_table(spark, ledger).collect()) == s
 
 
 def test_full_pipeline_streaming_kill_resume_equals_single_run(spark, tmp_path):
@@ -36,8 +40,6 @@ def test_full_pipeline_streaming_kill_resume_equals_single_run(spark, tmp_path):
     post-ledger-upsert) followed by a restart converges to exactly the
     single-shot batch state."""
     from legal_knowledge_graph_spark.plans import run_pipeline
-    from legal_knowledge_graph_spark.sources.io import read_graph_table
-    from legal_knowledge_graph_spark.streaming import run_full_incremental
 
     n = 45
     files = corpus_df(spark, n, seed=42)
@@ -88,8 +90,6 @@ def test_refresh_policy_bounds_snapshot_count(spark, tmp_path):
     2: batches 3 and 6, no trailing dirty batch), while the final store
     still equals the single-shot batch run."""
     from legal_knowledge_graph_spark.plans import run_pipeline
-    from legal_knowledge_graph_spark.sources.io import read_graph_table
-    from legal_knowledge_graph_spark.streaming import run_full_incremental
 
     n = 48
     files = corpus_df(spark, n, seed=7)
@@ -124,8 +124,6 @@ def test_refresh_policy_final_drain_flushes_dirty_tail(spark, tmp_path):
     refresh, so the entire graph must come from the ONE final-drain flush
     (exactly one snapshot version) and still equal the batch run."""
     from legal_knowledge_graph_spark.plans import run_pipeline
-    from legal_knowledge_graph_spark.sources.io import read_graph_table
-    from legal_knowledge_graph_spark.streaming import run_full_incremental
 
     n = 30
     files = corpus_df(spark, n, seed=11)
@@ -189,10 +187,7 @@ def test_stranded_ledger_rows_refresh_on_empty_resume(spark, tmp_path):
     growth baseline seeds from the refresh manifest, not the inflated
     current ledger count."""
     from legal_knowledge_graph_spark.plans import run_pipeline
-    from legal_knowledge_graph_spark.sources.io import (
-        read_graph_table, upsert_parquet,
-    )
-    from legal_knowledge_graph_spark.streaming import run_full_incremental
+    from legal_knowledge_graph_spark.sources.io import upsert_parquet
 
     files = corpus_df(spark, 30, seed=5)
     part_a = files.where((F.crc32(F.concat("repo", "path")) % 2) == 0)
@@ -227,30 +222,49 @@ def test_stranded_ledger_rows_refresh_on_empty_resume(spark, tmp_path):
 
 
 def test_refresh_feeds_coref_materialized_edges(spark, tmp_path, monkeypatch):
-    """The refresh materializes st5 before coref: the edges resolve_coref
-    receives are a checkpoint scan (LogicalRDD), so coref's actions and
-    the snapshot write never re-run the triple emission (Generate) or the
-    triple and edge dedups (Aggregate) beneath it."""
-    from legal_knowledge_graph_spark.operators import coref
-    from legal_knowledge_graph_spark.streaming import run_full_incremental
+    """The batch run and the streaming refresh share one st3-st6 suffix:
+    each calls canonicalize, emit_triples, normalize_edges and
+    resolve_coref exactly once, through their modules, and both
+    materialize st5 before coref: the edges resolve_coref receives are a
+    checkpoint scan (LogicalRDD), so coref's actions and the snapshot
+    write never re-run the triple emission (Generate) or the triple and
+    edge dedups (Aggregate) beneath it."""
+    from legal_knowledge_graph_spark.operators import (
+        canonicalize, coref, edge_norm, triples)
+    from legal_knowledge_graph_spark.plans import run_pipeline
 
-    seen = []
-    real = coref.resolve_coref
+    calls, coref_inputs = [], []
 
-    def spy(edges, nodes, spark_, *args, **kwargs):
-        seen.append(edges._jdf.queryExecution().analyzed())
-        return real(edges, nodes, spark_, *args, **kwargs)
+    def spy(module, name):
+        real = getattr(module, name)
 
-    monkeypatch.setattr(coref, "resolve_coref", spy)
+        def wrapper(*args, **kwargs):
+            calls.append(name)
+            if name == "resolve_coref":
+                coref_inputs.append(args[0]._jdf.queryExecution().analyzed())
+            return real(*args, **kwargs)
+        monkeypatch.setattr(module, name, wrapper)
+
+    stages = [(canonicalize, "canonicalize"), (triples, "emit_triples"),
+              (edge_norm, "normalize_edges"), (coref, "resolve_coref")]
+    for module, name in stages:
+        spy(module, name)
+
+    files = corpus_df(spark, 12, seed=3).coalesce(1)
     landing = str(tmp_path / "landing")
-    corpus_df(spark, 12, seed=3).coalesce(1).write.parquet(landing)
+    files.write.parquet(landing)
+    run_pipeline(spark, files)
+    batch_calls = calls[:]
+    calls.clear()
     run_full_incremental(spark, landing, str(tmp_path / "ledger"),
                          str(tmp_path / "graph"), str(tmp_path / "ckpt"))
-    assert len(seen) == 1
-    plan = seen[0]
-    assert plan.nodeName() == "LogicalRDD"
-    tree = plan.treeString()
-    assert "Generate" not in tree and "Aggregate" not in tree, tree
+    want = [name for _, name in stages]
+    assert batch_calls == want and calls == want, (batch_calls, calls)
+    assert len(coref_inputs) == 2
+    for plan in coref_inputs:
+        assert plan.nodeName() == "LogicalRDD"
+        tree = plan.treeString()
+        assert "Generate" not in tree and "Aggregate" not in tree, tree
 
 
 def test_upsert_handle_carries_observed_row_count(spark, tmp_path):

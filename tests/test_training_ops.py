@@ -1,6 +1,7 @@
 """Training-data operators: dedup families, similarity search, text
 analysis, multimodal plumbing — small planted cases with known answers."""
 
+import hashlib
 import math
 
 import numpy as np
@@ -14,6 +15,7 @@ from legal_knowledge_graph_spark.operators.dedup import (
 from legal_knowledge_graph_spark.operators.multimodal import (
     extract_features, sample_frames, synthetic_assets,
 )
+from legal_knowledge_graph_spark.operators.sampling import importance_weights
 from legal_knowledge_graph_spark.operators.similarity import (
     knn_bruteforce, knn_lsh,
 )
@@ -1664,3 +1666,42 @@ def test_rake_keyphrases_closed_form(spark):
     got2 = {r.phrase for r in
             rake_keyphrases(longdoc, top_k=5, max_phrase_len=4).collect()}
     assert got2 == {"zeta"}
+
+
+def _h32(word: str, seed: int = 9) -> int:
+    return int(hashlib.md5(f"{word}:{seed}".encode()).hexdigest()[:8], 16)
+
+
+def test_importance_weights_tiny_fixture(spark):
+    """Hand-computed DSIR weights on a 3-doc corpus: target docs score
+    higher than the off-target doc, and the exact value matches the
+    Laplace-smoothed log-ratio computed independently in python."""
+    docs = spark.createDataFrame(
+        [(1, "alpha beta alpha", "en"),
+         (2, "alpha beta", "en"),
+         (3, "gamma gamma delta", "de")],
+        "doc_id long, text string, lang string")
+    B = 64
+    out = {r.doc_id: (r.n_tokens, r.importance)
+           for r in importance_weights(
+               docs, F.col("lang") == "en", n_buckets=B).collect()}
+    # independent python model
+    toks = {1: ["alpha", "beta", "alpha"], 2: ["alpha", "beta"],
+            3: ["gamma", "gamma", "delta"]}
+    target = {1, 2}
+    n_t, n_r = {}, {}
+    for d, ws in toks.items():
+        for w in ws:
+            b = _h32(w) % B
+            n_r[b] = n_r.get(b, 0) + 1
+            if d in target:
+                n_t[b] = n_t.get(b, 0) + 1
+    tt, tr = sum(n_t.values()), sum(n_r.values())
+    def lr(b):
+        return (math.log((n_t.get(b, 0) + 1.0) / (tt + B))
+                - math.log((n_r.get(b, 0) + 1.0) / (tr + B)))
+    for d, ws in toks.items():
+        exp = round(sum(lr(_h32(w) % B) for w in ws) / len(ws), 6)
+        assert out[d] == (len(ws), pytest.approx(exp, abs=1e-6)), d
+    # in-domain docs outrank the off-target doc
+    assert min(out[1][1], out[2][1]) > out[3][1]

@@ -35,8 +35,7 @@ from legal_knowledge_graph_spark.session import build_session
 from legal_knowledge_graph_spark.corpus import corpus_df_distributed
 n_files = int(sys.argv[1]); scale = int(sys.argv[2]); path = sys.argv[3]
 mega = int(sys.argv[4]) if len(sys.argv) > 4 else 0
-spark = build_session(app_name="lkg-scale-gen", master="local[32]",
-                      shuffle_partitions=32)
+spark = build_session(app_name="lkg-scale-gen", shuffle_partitions=32)
 corpus_df_distributed(spark, n_files, seed=42, partitions=64,
                       content_scale=scale,
                       mega_files=mega or None).write.mode("overwrite").parquet(path)

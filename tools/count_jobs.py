@@ -3,6 +3,7 @@ per-job scheduling latency is the pipeline's serial floor — VERDICT r1 #7
 asked for the job count to be tracked per round).
 
 Usage: python tools/count_jobs.py [n_files]
+The master is local[$SPARK_GRAFT_CPUS] (all cores when unset).
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ def main() -> None:
     from legal_knowledge_graph_spark.plans import run_pipeline
     from legal_knowledge_graph_spark.session import build_session
 
-    spark = build_session(master="local[8]", shuffle_partitions=8)
+    spark = build_session(shuffle_partitions=8)
     files = corpus_df(spark, n, seed=42)
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
