@@ -8,9 +8,9 @@
   (SURVEY.md §2 + training-data ops); each takes (spark, sf_dir).
 - ``oracle_sql()``: DuckDB-runnable SQL equivalents for EVERY query (r2):
   the KG pipeline checks against spec-side golden parquet
-  (tools/make_goldens.py), minhash/LSH-ANN against the exact SQL their
-  verify stages guarantee (full recall verified deterministically at every
-  sf), simhash/multimodal via bit-exact SQL re-statements.
+  (tools/make_goldens.py), minhash-LSH against the exact SQL its verify
+  stage guarantees (full recall verified deterministically at every sf),
+  simhash via a bit-exact SQL re-statement.
 
 Column names and types are aligned pairwise (the driver hashes values
 after sorting columns by name).
@@ -26,14 +26,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from legal_knowledge_graph_spark.corpus import corpus_df
 from legal_knowledge_graph_spark.operators import doc_kg
 from legal_knowledge_graph_spark.operators.dedup import (
-    embedding_near_dup_pairs, exact_duplicates, minhash_lsh_pairs,
-    ngram_jaccard_pairs, simhash_near_dup_pairs,
-)
-from legal_knowledge_graph_spark.operators.multimodal import (
-    extract_features, synthetic_assets,
-)
-from legal_knowledge_graph_spark.operators.similarity import (
-    knn_bruteforce, knn_lsh,
+    exact_duplicates, minhash_lsh_pairs, ngram_jaccard_pairs,
+    simhash_near_dup_pairs,
 )
 from legal_knowledge_graph_spark.operators.text_analysis import (
     BPE_ISH_TOKEN_RE, EN_STOPWORDS, fingerprints, language_id, quality_scores,
@@ -41,8 +35,11 @@ from legal_knowledge_graph_spark.operators.text_analysis import (
 )
 from legal_knowledge_graph_spark.plans import run_pipeline
 
-_CORPUS_FILES = {"sf0.001": 60, "sf0.01": 240, "sf0.1": 1000}
-_KNN_QUERY_IDS = [0, 1, 2, 3, 4]
+# sf1.0 has no goldens of its own; it runs the sf0.01 corpus size, so
+# _golden_dir's fallback to the sf0.01 goldens keeps its P/R meaningful.
+_CORPUS_FILES = {"sf0.001": 60, "sf0.01": 240, "sf0.1": 1000, "sf1.0": 240}
+_GOLDEN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                           "golden", "sf0.01")
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -55,6 +52,13 @@ def _corpus_size(sf_dir: str) -> int:
         raise ValueError(f"no corpus size for {sf_name!r}; known sfs: "
                          f"{', '.join(_CORPUS_FILES)}")
     return _CORPUS_FILES[sf_name]
+
+
+def _golden_dir(sf_dir: str) -> str:
+    """``golden/<sf>`` when that directory exists, else the sf0.01 goldens."""
+    gdir = os.path.join(os.path.dirname(_GOLDEN_DIR),
+                        os.path.basename(sf_dir.rstrip("/")))
+    return gdir if os.path.isdir(gdir) else _GOLDEN_DIR
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -209,13 +213,9 @@ def kg_pipeline_pr(spark, sf_dir):
     res = run_pipeline(spark, corpus_df(spark, _corpus_size(sf_dir), seed=42))
     cols = ["subject_canonical", "predicate", "object_canonical"]
     got = res.edges.where(~F.col("need_coref")).select(*cols).distinct()
-    sf_name = os.path.basename(sf_dir.rstrip("/"))
-    gdir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "golden", sf_name)
-    if not os.path.isdir(gdir):
-        gdir = _GOLDEN_DIR
     want = spark.read.parquet(
-        os.path.join(gdir, "golden_triples.parquet")).select(*cols).distinct()
+        os.path.join(_golden_dir(sf_dir), "golden_triples.parquet"),
+    ).select(*cols).distinct()
     j = got.withColumn("g", F.lit(1)).join(
         want.withColumn("w", F.lit(1)), cols, "full")
     return j.agg(
@@ -303,129 +303,6 @@ def doc_dedup_keep(spark, sf_dir):
     )
 
     return deduplicate_corpus(_t(spark, sf_dir, "documents"), threshold=0.5)
-
-
-def emb_near_dup(spark, sf_dir):
-    return embedding_near_dup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.5, dim=64)
-
-
-def emb_dedup_keep(spark, sf_dir):
-    """SemDeDup-style semantic keep-one dedup
-    (dedup.deduplicate_embeddings): cosine >= 0.5 clusters collapse via
-    connected components, min vec_id keeps. Oracle: recursive closure
-    over the exact all-pairs cosine SQL (the emb_near_dup pair set is
-    exact — full LSH recall verified offline), min-reachable labeling."""
-    from legal_knowledge_graph_spark.operators.dedup import (
-        deduplicate_embeddings,
-    )
-
-    return deduplicate_embeddings(
-        _t(spark, sf_dir, "embeddings"), threshold=0.5, dim=64)
-
-
-# --- similarity search ------------------------------------------------------
-def emb_cosine_topk(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    return knn_bruteforce(e, _KNN_QUERY_IDS, k=10)
-
-
-def emb_knn_classify(spark, sf_dir):
-    """k-NN majority-vote label prediction (similarity.knn_classify):
-    exact cosine top-10 neighbors per query (broadcast-query scan), one
-    label equi-join, deterministic (votes DESC, label ASC) argmax."""
-    from legal_knowledge_graph_spark.operators.similarity import (
-        knn_classify,
-    )
-
-    return knn_classify(_t(spark, sf_dir, "embeddings"),
-                        _KNN_QUERY_IDS, k=10)
-
-
-def emb_project(spark, sf_dir):
-    """Johnson-Lindenstrauss 64->8 random projection
-    (similarity.project_embeddings): seeded md5-derived Gaussian matrix,
-    one codegen scan, zero shuffle; the oracle inlines the identical
-    matrix literals."""
-    from legal_knowledge_graph_spark.operators.similarity import (
-        project_embeddings,
-    )
-
-    return project_embeddings(_t(spark, sf_dir, "embeddings"),
-                              in_dim=64, out_dim=8, seed=0)
-
-
-def emb_knn_ivf(spark, sf_dir):
-    """IVF ANN (similarity.knn_ivf): KMeans-cell blocked approximate top-k.
-    KMeans is not SQL-expressible, so the oracle is the committed golden
-    parquet (tools/make_ivf_golden.py) captured from the seeded,
-    layout-pinned run — reproduced bit-identically at local[2] and
-    local[32]; result QUALITY (recall vs exact top-k) is pinned in pytest
-    (tests/test_training_ops.py)."""
-    from legal_knowledge_graph_spark.operators.similarity import knn_ivf
-
-    out = knn_ivf(_t(spark, sf_dir, "embeddings"), _KNN_QUERY_IDS, k=10)
-    return out.select(
-        "query_id", "neighbor_id", F.col("cosine").cast("double"),
-        F.col("rank").cast("int").alias("rank"))
-
-
-def emb_knn_pq(spark, sf_dir):
-    """IVF-PQ ANN (similarity.knn_ivf_pq): coarse KMeans cells + per-
-    subspace product-quantization codebooks, ADC candidate scoring over
-    (vec_id, cluster, codes) only, exact re-rank of the top survivors
-    via one equi-join back to the fat vector table. Oracle = committed
-    golden parquet (tools/make_pq_golden.py), reproduced at local[2]
-    and local[32]; recall quality pinned in pytest."""
-    from legal_knowledge_graph_spark.operators.similarity import knn_ivf_pq
-
-    out = knn_ivf_pq(_t(spark, sf_dir, "embeddings"), _KNN_QUERY_IDS, k=10)
-    return out.select(
-        "query_id", "neighbor_id", F.col("cosine").cast("double"),
-        F.col("rank").cast("int").alias("rank"))
-
-
-def emb_knn_lsh(spark, sf_dir):
-    """ANN top-k, tuned for FULL top-10 coverage on this corpus (verified
-    offline for every sf; planes are deterministic) so the exact-topk SQL is
-    a hard oracle. On uniformly-random test vectors that coverage needs
-    near-exhaustive probing (~95% of the corpus collides in >=1 of the 24
-    tables) — an inherent property of random data with no true near
-    neighbors, not of the plan, which stays the bucketed equi-join that
-    scales on clustered real embeddings."""
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").alias("embedding"))
-    return knn_lsh(e, _KNN_QUERY_IDS, k=10, dim=64, n_planes=3, n_tables=24)
-
-
-def multimodal_features(spark, sf_dir):
-    assets = synthetic_assets(spark, 90, seed=42)
-    return extract_features(assets, fake=True).select(
-        "asset_id", "media_type", "width", "height", "n_frames")
-
-
-def multimodal_real_decode(spark, sf_dir):
-    """REAL decode on the driver path (VERDICT r3 #5): stdlib WAV + RIFF/
-    AVI decoders over the deterministic synthetic A/V corpus (including
-    audio-first two-stream AVIs), features exploded to scalar rows. The
-    oracle is the committed driver-side replay of the same decode
-    (tools/make_av_golden.py) — the row must prove the DISTRIBUTED
-    mapInPandas path reproduces it bit-for-bit."""
-    from legal_knowledge_graph_spark.operators.multimodal import (
-        synthetic_av_assets,
-    )
-
-    assets = synthetic_av_assets(spark, n_audio=12, n_video=12, seed=42)
-    feats = extract_features(assets, fake=False,
-                             media_types={"audio", "video"})
-    return feats.select(
-        "asset_id", "media_type", "width", "height", "n_frames",
-        F.posexplode("feature").alias("fi", "fv"),
-    ).select(
-        "asset_id", "media_type", "width", "height", "n_frames",
-        F.col("fi").cast("int").alias("fi"),
-        F.col("fv").cast("double").alias("fv"))
 
 
 def kg_term_components(spark, sf_dir):
@@ -597,17 +474,6 @@ def doc_winnow(spark, sf_dir):
 
     out = winnow_fingerprints(_t(spark, sf_dir, "documents"))
     return out.select("doc_id", F.explode("winnow").alias("pick"))
-
-
-def frames_sampled(spark, sf_dir):
-    """Frame-sampling plumbing surfaced as a driver query: every-2nd-frame
-    rows of the video assets (features exercised in pytest; the oracle
-    replays the deterministic n_frames derivation)."""
-    from legal_knowledge_graph_spark.operators.multimodal import sample_frames
-
-    assets = synthetic_assets(spark, 90, seed=42)
-    return sample_frames(assets, every_n=2, fake=True).select(
-        "asset_id", F.col("frame_no").cast("int").alias("frame_no"))
 
 
 def kg_type_normalization(spark, sf_dir):
@@ -1329,15 +1195,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_dedup_keep": doc_dedup_keep,
         "doc_minhash_groups": doc_minhash_groups,
         "doc_simhash_groups": doc_simhash_groups,
-        "emb_near_dup": emb_near_dup,
-        "emb_dedup_keep": emb_dedup_keep,
-        "emb_cosine_topk": emb_cosine_topk,
-        "emb_knn_classify": emb_knn_classify,
-        "emb_project": emb_project,
-        "emb_knn_lsh": emb_knn_lsh,
-        "emb_knn_ivf": emb_knn_ivf,
-        "multimodal_features": multimodal_features,
-        "multimodal_real_decode": multimodal_real_decode,
         "doc_pii": doc_pii,
         "doc_boilerplate": doc_boilerplate,
         "doc_repetition": doc_repetition,
@@ -1345,7 +1202,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_stratified_sample": doc_stratified_sample,
         "doc_filter_chain": doc_filter_chain,
         "doc_winnow": doc_winnow,
-        "frames_sampled": frames_sampled,
         "kg_type_normalization": kg_type_normalization,
         "kg_term_neighbors": kg_term_neighbors,
         "kg_term_components": kg_term_components,
@@ -1385,7 +1241,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_ccnet_buckets": doc_ccnet_buckets,
         "graph_ppr": graph_ppr,
         "doc_ngram_diversity": doc_ngram_diversity,
-        "emb_knn_pq": emb_knn_pq,
         "doc_weighted_sample": doc_weighted_sample,
         "doc_bpe_tokens": doc_bpe_tokens,
         "doc_chunks": doc_chunks,
@@ -1442,26 +1297,6 @@ WITH toks AS (
   GROUP BY a.doc_id, b.doc_id
 )"""
 
-_COS_CTE = """
-WITH q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS q_vec FROM embeddings
-  WHERE vec_id IN (0, 1, 2, 3, 4)
-), pairs AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         list_cosine_similarity(q.q_vec, e.embedding::DOUBLE[]) AS cos
-  FROM q CROSS JOIN embeddings e
-  WHERE e.vec_id <> q.query_id
-)"""
-
-_TOPK_SQL = _COS_CTE + """
-, rk AS (
-  SELECT query_id, neighbor_id, round(cos, 6) AS cosine,
-    CAST(row_number() OVER (PARTITION BY query_id
-                            ORDER BY round(cos, 6) DESC, neighbor_id ASC) AS INT) AS rank
-  FROM pairs
-)
-SELECT query_id, neighbor_id, cosine, rank FROM rk WHERE rank <= 10"""
-
 _NGRAM_JACCARD_SQL = _SHINGLES_CTE + """
 SELECT doc_a, doc_b,
        round(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 6) AS jaccard
@@ -1472,9 +1307,6 @@ WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.5"""
 
 # Spec-side golden parquet (tools/make_goldens.py) — the driver's oracle runs
 # at sf0.01; tools/check_oracles.py rewrites the path for other sf dirs.
-_GOLDEN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "golden", "sf0.01")
-
 # 64-bit SimHash in SQL: per-DISTINCT-token md5 -> first 8 bytes big-endian,
 # per-bit majority vote, reassembled as a signed BIGINT — byte-for-byte the
 # semantics of dedup._simhash_udf; pairs are all-pairs (test-scale oracle).
@@ -1528,27 +1360,6 @@ UNION ALL
 SELECT 'member', grp.rep, sigs.doc_id, 0.0
 FROM sigs JOIN grp USING (v)"""
 
-# Deterministic fake-decode replay: synthetic_assets payload is the ASCII
-# hexdigest x4, so sha256(VARCHAR) reproduces multimodal._fake_decode.
-_HEXPOS = "strpos('0123456789abcdef', substr(hh, {i}, 1)) - 1"
-_MULTIMODAL_SQL = f"""
-WITH ids AS (
-  SELECT unnest(generate_series(0, 89)) AS i
-), h AS (
-  SELECT 'asset_' || lpad(CAST(i AS VARCHAR), 5, '0') AS asset_id,
-         CASE i % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
-         sha256(repeat(sha256('42:asset:' || CAST(i AS VARCHAR)), 4)) AS hh
-  FROM ids
-)
-SELECT asset_id, media_type,
-  CAST(16 + (16 * ({_HEXPOS.format(i=1)}) + ({_HEXPOS.format(i=2)})) % 64 AS INT) AS width,
-  CAST(16 + (16 * ({_HEXPOS.format(i=3)}) + ({_HEXPOS.format(i=4)})) % 64 AS INT) AS height,
-  CAST(CASE WHEN media_type = 'video'
-       THEN 1 + (16 * ({_HEXPOS.format(i=5)}) + ({_HEXPOS.format(i=6)})) % 8
-       ELSE 1 END AS INT) AS n_frames
-FROM h"""
-
-
 # Winnowing re-stated in SQL: 5-gram md5 -> first 8 bytes as signed BIGINT
 # (hex-digit positional sum in HUGEINT), sliding-window-of-4 minima,
 # distinct picks — byte-for-byte text_analysis._winnow_udf.
@@ -1580,22 +1391,6 @@ WITH toks AS (
   FROM h64
 )
 SELECT DISTINCT doc_id, pick FROM wm WHERE i <= greatest(1, n - 3)"""
-
-_FRAMES_SQL = f"""
-WITH ids AS (
-  SELECT unnest(generate_series(0, 89)) AS i
-), h AS (
-  SELECT 'asset_' || lpad(CAST(i AS VARCHAR), 5, '0') AS asset_id,
-         CASE i % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
-         sha256(repeat(sha256('42:asset:' || CAST(i AS VARCHAR)), 4)) AS hh
-  FROM ids
-), vids AS (
-  SELECT asset_id,
-         1 + (16 * ({_HEXPOS.format(i=5)}) + ({_HEXPOS.format(i=6)})) % 8 AS n_frames
-  FROM h WHERE media_type = 'video'
-)
-SELECT asset_id, CAST(f AS INT) AS frame_no
-FROM vids, unnest(generate_series(0, n_frames - 1, 2)) AS t(f)"""
 
 
 def _type_norm_oracle() -> str:
@@ -2159,23 +1954,6 @@ def _zorder_oracle(bits: int = 16) -> str:
             + " AS BIGINT) AS zkey\nFROM lineitem")
 
 
-def _jlproj_oracle(in_dim: int = 64, out_dim: int = 8, seed: int = 0) -> str:
-    """SQL restatement of similarity.project_embeddings with the seeded
-    projection matrix inlined as full-precision double literals — both
-    sides fold the dot product in array-index order."""
-    from legal_knowledge_graph_spark.operators.similarity import (
-        _projection_matrix,
-    )
-
-    R = _projection_matrix(in_dim, out_dim, seed)
-    dots = ",\n  ".join(
-        "round(list_dot_product(embedding::DOUBLE[], ["
-        + ", ".join(repr(float(v)) for v in R[i])
-        + f"]), 6) AS y{i}"
-        for i in range(out_dim))
-    return f"SELECT vec_id,\n  {dots}\nFROM embeddings"
-
-
 def _sssp_oracle(seeds: list, max_hops: int) -> str:
     """Fixed-unroll SQL restatement of graph_algos.sssp_weighted on the
     weighted symmetrized purchase graph (parallel edges min-collapsed
@@ -2432,13 +2210,6 @@ SELECT doc_id,
       '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g'),
     '\b[0-9]{3}[-. ][0-9]{3}[-. ][0-9]{4}\b', '<PHONE>', 'g') AS redacted
 FROM planted""",
-        "multimodal_features": _MULTIMODAL_SQL,
-        # real WAV/AVI decode vs the committed driver-side replay
-        # (tools/make_av_golden.py; float32 widened to double on both
-        # sides, so the check is bit-for-bit)
-        "multimodal_real_decode": f"""
-SELECT asset_id, media_type, width, height, n_frames, fi, fv
-FROM read_parquet('{_GOLDEN_DIR}/golden_av.parquet')""",
         # verbatim restatement of text_analysis.remove_boilerplate: same
         # plant, same >=2-distinct-docs threshold on trimmed lines of
         # length >= 4, same order-preserving rebuild
@@ -2603,7 +2374,6 @@ SELECT doc_id, reasons = '' AS kept, reasons, quality_score,
        predicted_lang, dup_3gram_frac
 FROM r""",
         "doc_winnow": _WINNOW_SQL,
-        "frames_sampled": _FRAMES_SQL,
         # connected components re-stated as a recursive-CTE transitive
         # closure: component label = min reachable term (undirected closure)
         "kg_term_components": _DOC_MENTIONS_CTE.replace(
@@ -2655,33 +2425,6 @@ FROM read_parquet('{_GOLDEN_DIR}/golden_triples.parquet')""",
         # the Spark side off 1.0 and fails this row (VERDICT r2 #6)
         "kg_pipeline_pr": "SELECT CAST(1.0 AS DOUBLE) AS precision, "
                           "CAST(1.0 AS DOUBLE) AS recall",
-        "emb_near_dup": """
-WITH pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) AS cos
-  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-)
-SELECT id_a, id_b, round(cos, 6) AS cosine FROM pairs WHERE cos >= 0.5""",
-        # semantic keep-one: closure over exact cosine >= 0.5 pairs,
-        # min-reachable labeling (see emb_dedup_keep)
-        "emb_dedup_keep": """
-WITH RECURSIVE pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-  WHERE list_cosine_similarity(a.embedding::DOUBLE[],
-                               b.embedding::DOUBLE[]) >= 0.5
-), bi AS (
-  SELECT id_a AS s, id_b AS d FROM pairs
-  UNION SELECT id_b, id_a FROM pairs
-), reach(t, r) AS (
-  SELECT vec_id, vec_id FROM embeddings
-  UNION
-  SELECT bi.d, reach.r FROM reach JOIN bi ON bi.s = reach.t
-)
-SELECT t AS vec_id, min(r) AS group_rep, t = min(r) AS keep
-FROM reach GROUP BY t""",
-        "emb_cosine_topk": _TOPK_SQL,
-        "emb_project": _jlproj_oracle(in_dim=64, out_dim=8, seed=0),
         "lineitem_zorder": _zorder_oracle(bits=16),
         "doc_textrank": _textrank_oracle(chunk_size=10, n_iter=10,
                                          damping=0.85, top_k=2),
@@ -2715,41 +2458,6 @@ SELECT a.word AS word_a, b.word AS word_b,
        CAST(levenshtein(a.word, b.word) AS INT) AS dist
 FROM v a JOIN v b ON a.word < b.word
 WHERE levenshtein(a.word, b.word) <= 1""",
-        "emb_knn_classify": _COS_CTE + """
-, rk AS (
-  SELECT query_id, neighbor_id,
-    row_number() OVER (PARTITION BY query_id
-                       ORDER BY round(cos, 6) DESC, neighbor_id ASC) AS rank
-  FROM pairs
-), votes AS (
-  SELECT n.query_id, e.label, count(*) AS votes
-  FROM rk n JOIN embeddings e ON e.vec_id = n.neighbor_id
-  WHERE n.rank <= 10
-  GROUP BY n.query_id, e.label
-), best AS (
-  SELECT query_id, label AS predicted_label, votes,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY votes DESC, label ASC) AS r
-  FROM votes
-)
-SELECT b.query_id, t.label AS true_label, b.predicted_label, b.votes
-FROM best b JOIN embeddings t ON t.vec_id = b.query_id
-WHERE b.r = 1""",
-        # ANN with deterministic full top-10 coverage on this corpus (see
-        # emb_knn_lsh docstring) -> the exact top-k IS its oracle.
-        "emb_knn_lsh": _TOPK_SQL,
-        # KMeans cells are not SQL-expressible: golden parquet captured
-        # from the seeded layout-pinned run (tools/make_ivf_golden.py),
-        # reproduced at local[2] and local[32] (VERDICT r3 #3)
-        "emb_knn_ivf": f"""
-SELECT query_id, neighbor_id, cosine, rank
-FROM read_parquet('{_GOLDEN_DIR}/golden_ivf.parquet')""",
-        # two seeded KMeans layers + fixed-order ADC are not SQL-
-        # expressible: golden parquet from tools/make_pq_golden.py,
-        # reproduced bit-identically at local[2]/local[32]
-        "emb_knn_pq": f"""
-SELECT query_id, neighbor_id, cosine, rank
-FROM read_parquet('{_GOLDEN_DIR}/golden_pq.parquet')""",
         "graph_pagerank": _pagerank_oracle(n_iter=10, damping=0.85, k=20),
         "graph_ppr": _pagerank_oracle(n_iter=10, damping=0.85, k=20,
                                       seeds=["n3", "n15"]),

@@ -63,7 +63,7 @@ def main() -> None:
     )
 
     for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "documents", "embeddings"):
+              "lineitem", "documents"):
         spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")) \
             .limit(256).collect()
     mentions_from_files(ingest(corpus_df_distributed(
@@ -75,12 +75,10 @@ def main() -> None:
         "kg_doc_mentions", "kg_term_cooccurrence",
         "doc_token_count", "doc_quality", "doc_lang_id", "doc_pii",
         "doc_boilerplate", "doc_exact_dedup",
-        "doc_minhash_dedup", "doc_simhash_dedup", "emb_cosine_topk",
-        "emb_knn_lsh",
+        "doc_minhash_dedup", "doc_simhash_dedup",
         # round-4 additions: two-phase stratified mixing, decontamination
-        # semi-join, IVF ANN (KMeans fit included)
-        "doc_stratified_sample", "doc_decontaminate", "emb_knn_ivf",
-        "doc_filter_chain",
+        # semi-join
+        "doc_stratified_sample", "doc_decontaminate", "doc_filter_chain",
         # round-5 additions: iterative PageRank over the purchase graph,
         # corpus-trained unigram-LM quality scoring, sequence packing
         "graph_pagerank", "doc_lm_score", "doc_pack_sequences",
@@ -99,12 +97,11 @@ def main() -> None:
         # Adamic-Adar) with the apex-degree hub cap; CCNet head/middle/
         # tail perplexity terciles
         "graph_link_predict", "doc_ccnet_buckets", "graph_ppr",
-        "doc_ngram_diversity", "emb_knn_pq", "doc_weighted_sample",
+        "doc_ngram_diversity", "doc_weighted_sample",
         "doc_chunks",
         # round-5 sixth-session addition: weighted shortest paths
         "graph_sssp",
-        "doc_inverted_index", "emb_knn_classify", "emb_project",
-        "lineitem_zorder",
+        "doc_inverted_index", "lineitem_zorder",
         "part_fuzzy_names", "doc_length_bins", "lineitem_corr",
         "doc_textrank", "dq_lineitem", "dq_lineitem_fk",
         "lineitem_rollup", "orders_diff", "lineitem_quantiles",

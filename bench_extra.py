@@ -38,7 +38,7 @@ def main() -> None:
                           master=f"local[{cpus}]",
                           shuffle_partitions=shuffle)
     for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "documents", "embeddings"):
+              "lineitem", "documents"):
         spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")) \
             .limit(256).collect()
 

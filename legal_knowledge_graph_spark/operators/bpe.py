@@ -19,9 +19,8 @@ learned artifact itself). Sequential rounds are inherent to BPE.
 
 The merge loop is not SQL-expressible in DuckDB, so the driver oracle
 is a committed golden parquet (tools/make_bpe_golden.py — an
-INDEPENDENT dict-based python implementation over the same corpus),
-the emb_knn_ivf precedent; the pytest replicates the recurrence
-closed-form.
+INDEPENDENT dict-based python implementation over the same corpus);
+the pytest replicates the recurrence closed-form.
 
 Reference parity note: the reference tokenizes with an external
 segmenter (/root/reference/src/pdf_processor/text_splitter.py); vocab

@@ -160,8 +160,6 @@ def segment(ingested: DataFrame) -> DataFrame:
                     ))
             yield pd.DataFrame(rows, columns=cols)
 
-    from .type_norm import normalize_block_types
-
-    # F4: alias projection + OTHER fallback (rules.py:143-167) — identity on
-    # this extractor's canonical output, active for external block sources
-    return normalize_block_types(ingested.mapInPandas(run, schema=BLOCKS_SCHEMA))
+    # block_type is a SECTION_PATTERNS key or "OTHER", both BLOCK_TYPES
+    # members (tests/test_type_norm.py holds that), so it needs no projection
+    return ingested.mapInPandas(run, schema=BLOCKS_SCHEMA)

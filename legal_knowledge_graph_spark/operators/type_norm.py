@@ -9,11 +9,10 @@ alias maps before anything downstream sees them:
   unknown (ner_agent.py:350-356).
 
 This engine's own extractors emit canonical types by construction, so
-the pipeline's mention extraction returns its rows unprojected
-(tests/test_type_norm.py guards that they are canonical); only the
-standalone blocks table (`segment`) still applies the block projection.
-The projections serve externally-ingested block or mention tables with
-raw spellings, which normalize exactly like the reference, and the
+neither `segment` nor mention extraction applies a projection
+(tests/test_type_norm.py guards that their types are canonical). The
+projections serve externally-ingested block or mention tables with raw
+spellings, which normalize exactly like the reference, and the
 `kg_type_normalization` query. Pure Catalyst: a literal MAP lookup +
 closed-enum CASE, no Python.
 """

@@ -1,5 +1,6 @@
 """Corpus generator contracts (FIXTURES.md §4 determinism + §1 skew)."""
 
+import os
 import statistics
 
 import pytest
@@ -50,11 +51,28 @@ def test_goldens_cover_all_predicates():
 
 
 def test_corpus_size_per_sf():
-    """The driver's KG queries size their corpus from the sf directory; an
-    sf with no size fails loudly instead of running some other size."""
-    from __spark_entry__ import _corpus_size
+    """The driver's KG queries size their corpus from the sf directory, and
+    kg_pipeline_pr scores it against the goldens `_golden_dir` picks; the
+    two must describe the same corpus (sf1.0 has no goldens and falls back
+    to sf0.01's). An sf with no size fails loudly instead of running some
+    other size."""
+    import pyarrow.parquet as pq
 
-    assert [_corpus_size(f"/data/{sf}/") for sf in
-            ("sf0.001", "sf0.01", "sf0.1")] == [60, 240, 1000]
-    with pytest.raises(ValueError, match="sf0.001, sf0.01, sf0.1"):
-        _corpus_size("/data/sf1.0")
+    from __spark_entry__ import _corpus_size, _golden_dir
+
+    for sf in ("sf0.001", "sf0.01", "sf0.1", "sf1.0"):
+        sf_dir = f"/data/{sf}/"
+        path = os.path.join(_golden_dir(sf_dir), "golden_nodes.parquet")
+        types = pq.read_table(path, columns=["entity_type"]).column(
+            "entity_type").to_pylist()
+        assert _corpus_size(sf_dir) == types.count("File"), sf
+    with pytest.raises(ValueError, match="sf0.001, sf0.01, sf0.1, sf1.0"):
+        _corpus_size("/data/sf2.0")
+
+
+def test_every_driver_query_has_an_oracle():
+    """The driver contract pairs each queries() entry with an oracle_sql()
+    entry; removing a query family must remove both halves."""
+    import __spark_entry__ as E
+
+    assert set(E.queries()) == set(E.oracle_sql())

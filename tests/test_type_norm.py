@@ -10,6 +10,7 @@ from legal_knowledge_graph_spark.operators.type_norm import (
 )
 from legal_knowledge_graph_spark.schema import (
     BLOCK_TYPE_ALIASES, BLOCK_TYPES, ENTITY_TYPE_ALIASES, ENTITY_TYPES,
+    SECTION_PATTERNS,
 )
 
 
@@ -48,14 +49,16 @@ def test_entity_alias_matrix_and_closed_enum(spark):
 
 def test_wired_into_pipeline_is_identity_on_canonical_output(spark):
     """Guards that the built-in extractors emit only canonical types:
-    mention extraction returns its rows without the entity-type projection
-    (tests/test_plans.py pins that plan shape), so a non-canonical type
-    from it would reach canonicalization unfiltered."""
+    segmentation and mention extraction return their rows without a type
+    projection (tests/test_plans.py pins the mention plan shape), so a
+    non-canonical type from either would reach downstream unfiltered."""
     from legal_knowledge_graph_spark.corpus import corpus_df
     from legal_knowledge_graph_spark.operators.ingest import ingest
     from legal_knowledge_graph_spark.operators.mentions import mentions_from_files
     from legal_knowledge_graph_spark.operators.segment import segment
 
+    # segment_text labels a block with a SECTION_PATTERNS key or "OTHER"
+    assert {t for t, _ in SECTION_PATTERNS} | {"OTHER"} <= set(BLOCK_TYPES)
     ing = ingest(corpus_df(spark, 20, seed=42))
     blocks = segment(ing)
     assert blocks.where(~F.col("block_type").isin(BLOCK_TYPES)).count() == 0

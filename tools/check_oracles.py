@@ -15,7 +15,7 @@ import duckdb
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "documents", "embeddings"]
+          "lineitem", "documents"]
 
 
 def canon(df_pandas):

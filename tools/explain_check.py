@@ -79,17 +79,6 @@ def main() -> None:
           must_contain=("Generate",),  # the explode
           must_not=("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas"))
 
-    # similarity cosine: JVM higher-order functions, no UDF
-    p = plan_of(E.emb_cosine_topk(spark, sf_dir))
-    check("emb_cosine_topk JVM-only", p,
-          must_not=("BatchEvalPython", "ArrowEvalPython"))
-
-    # embedding near-dup: LSH-bucket blocked, never an O(n^2) pair join
-    # (VERDICT r1 #1)
-    p = plan_of(E.emb_near_dup(spark, sf_dir))
-    check("emb_near_dup no-cartesian", p,
-          must_not=("BroadcastNestedLoopJoin", "CartesianProduct"))
-
     # round-4 ops: the filter chain must stay a single zero-shuffle
     # projection; stratified sampling and keep-one dedup must never go
     # nested-loop/cartesian
@@ -103,7 +92,7 @@ def main() -> None:
     check("doc_dedup_keep no-cartesian", p,
           must_not=("BroadcastNestedLoopJoin", "CartesianProduct"))
     for gq in ("doc_minhash_groups", "doc_simhash_groups",
-               "emb_dedup_keep", "graph_link_predict", "emb_knn_pq"):
+               "graph_link_predict"):
         p = plan_of(E.queries()[gq](spark, sf_dir))
         check(f"{gq} no-cartesian", p,
               must_not=("BroadcastNestedLoopJoin", "CartesianProduct"))

@@ -1,7 +1,8 @@
 """Materialize the BPE-merge golden parquet: learn_bpe's merge loop is
 not SQL-expressible in DuckDB, so its CORRECTNESS row checks against a
-committed golden learned by THIS independent dict-based implementation
-(the emb_knn_ivf precedent). The recurrence is deterministic and
+committed golden learned by THIS independent dict-based implementation,
+as the KG goldens come from tools/make_goldens.py rather than from the
+operator they check. The recurrence is deterministic and
 parallelism-invariant (global argmax with a total-order tiebreak), which
 `--check` verifies by re-running the Spark operator at local[2] and
 local[32] and diffing against the golden.
