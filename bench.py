@@ -62,16 +62,13 @@ def main() -> None:
         mentions_from_files,
     )
 
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "documents"):
+    for t in E.TABLES:
         spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")) \
             .limit(256).collect()
     mentions_from_files(ingest(corpus_df_distributed(
         spark, 64, seed=1, partitions=int(cpus)))).count()
 
     names = [
-        "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
-        "q4_order_priority", "top_customers_per_nation",
         "kg_doc_mentions", "kg_term_cooccurrence",
         "doc_token_count", "doc_quality", "doc_lang_id", "doc_pii",
         "doc_boilerplate", "doc_exact_dedup",
@@ -101,10 +98,7 @@ def main() -> None:
         "doc_chunks",
         # round-5 sixth-session addition: weighted shortest paths
         "graph_sssp",
-        "doc_inverted_index", "lineitem_zorder",
-        "part_fuzzy_names", "doc_length_bins", "lineitem_corr",
-        "doc_textrank", "dq_lineitem", "dq_lineitem_fk",
-        "lineitem_rollup", "orders_diff", "lineitem_quantiles",
+        "doc_inverted_index", "doc_length_bins", "doc_textrank",
         "doc_rake",
     ]
     qfns = E.queries()

@@ -37,8 +37,7 @@ def main() -> None:
     spark = build_session(app_name="lkg-bench-extra",
                           master=f"local[{cpus}]",
                           shuffle_partitions=shuffle)
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "documents"):
+    for t in E.TABLES:
         spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")) \
             .limit(256).collect()
 

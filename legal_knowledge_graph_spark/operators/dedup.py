@@ -731,48 +731,3 @@ def remove_duplicate_spans(
         )
     )
 
-
-def edit_distance_pairs(
-    words: DataFrame, word_col: str = "word", max_len: int = 40,
-) -> DataFrame:
-    """All unordered pairs of distinct words at Levenshtein distance
-    <= 1 (the typo/variant-detection primitive of fuzzy dedup), found by
-    DELETION-NEIGHBORHOOD blocking [Bocek et al. 2007, "fastss"]: every
-    word emits itself plus each single-character deletion; two words are
-    within distance 1 iff they share a variant (substitution -> same
-    deletion position, insert/delete -> one side's deletion equals the
-    other), so an equi-join on the variant enumerates exactly the
-    candidates and an exact levenshtein() confirms — never a cross
-    join. Output (word_a, word_b, dist), word_a < word_b.
-
-    Scale shape (10^9-word vocab): candidate generation is a linear
-    explode bounded by word length (`max_len` guards pathological
-    tokens); the variant equi-join shuffles on the variant string;
-    per-variant groups are bounded by alphabet size in practice. The
-    confirm filter is whole-stage-codegen levenshtein on candidate
-    pairs only."""
-    w = (
-        words.select(F.col(word_col).cast("string").alias("w"))
-        .where((F.col("w") != "") & (F.length("w") <= max_len))
-        .dropDuplicates(["w"])
-    )
-    variants = w.select(
-        "w",
-        F.explode(F.concat(
-            F.array(F.col("w")),
-            F.transform(
-                F.sequence(F.lit(1), F.length("w")),
-                lambda i: F.concat(
-                    F.substring(F.col("w"), F.lit(1), i - 1),
-                    F.col("w").substr(i + 1, F.length("w"))))))
-        .alias("v"))
-    a = variants.select(F.col("w").alias("word_a"), "v")
-    b = variants.select(F.col("w").alias("word_b"), "v")
-    return (
-        a.join(b, "v")
-        .where(F.col("word_a") < F.col("word_b"))
-        .dropDuplicates(["word_a", "word_b"])
-        .withColumn("dist", F.levenshtein("word_a", "word_b"))
-        .where(F.col("dist") <= 1)
-        .select("word_a", "word_b", "dist")
-    )

@@ -1,6 +1,4 @@
-"""Corpus/statistical profiling operators — the "understand your 100 TB
-before training on it" toolkit: equi-depth histograms, pairwise Pearson
-correlation and exact quantiles. All exact and deterministic.
+"""Corpus profiling: exact, deterministic equi-depth histograms.
 
 The reference reports only fixed counters (pipeline/QA summaries,
 /root/reference/src/neo4j/models.py:100-159); distribution-level
@@ -26,8 +24,7 @@ def equidepth_bins(
     Scale shape: the ntile window is a single ordered partition over
     (value, id) pairs only — acceptable for profiling runs; sustained
     100 TB pipelines would bucket by range boundaries from a first
-    aggregate pass instead (see layout.repartition_zorder for the
-    range-partition machinery)."""
+    aggregate pass instead (repartitionByRange)."""
     from pyspark.sql.window import Window
 
     w = Window.orderBy(F.col("v").asc(), F.col("i").asc())
@@ -41,164 +38,3 @@ def equidepth_bins(
         .select("bin", "n", "lo", "hi", "mean")
     )
 
-
-def numeric_corr(df: DataFrame, cols: list) -> DataFrame:
-    """Pairwise Pearson correlations of numeric columns, long-form
-    (col_a, col_b, corr) for a < b. One aggregate row computes every
-    pair (map-side combinable moments), then unpivots — the table is
-    scanned once regardless of how many pairs."""
-    aggs = []
-    pairs = [(a, b) for i, a in enumerate(cols) for b in cols[i + 1:]]
-    for a, b in pairs:
-        aggs.append(F.round(F.corr(a, b), 6).alias(f"{a}__X__{b}"))
-    row = df.agg(*aggs)
-    stacked = F.explode(F.array(*[
-        F.struct(F.lit(a).alias("col_a"), F.lit(b).alias("col_b"),
-                 F.col(f"{a}__X__{b}").alias("corr"))
-        for a, b in pairs]))
-    return row.select(stacked.alias("s")).select("s.*")
-
-
-def exact_quantiles(
-    df: DataFrame, col: str, ps: list, n_buckets: int = 8192,
-    collect_cap: int = 100_000, max_depth: int = 8,
-) -> DataFrame:
-    """EXACT type-7 quantiles without a global sort — the 100 TB
-    selection shape: histogram passes narrow each needed order statistic
-    to one bucket, recursing only while a candidate bucket exceeds
-    `collect_cap`, then one bounded collect yields the exact k-th
-    elements. Driver state is histogram counts — never data.
-
-    r6 OPTIMIZATION (VERDICT r5 #1 / guide §5 "the driver should do
-    almost no data work"): ALL order statistics are answered together —
-    3 jobs total at any scale where one histogram level suffices:
-    (1) the checkpoint, whose count/min/max ride an observe();
-    (2) ONE histogram job per recursion level bucketing every pending
-        k across every live scope (scopes are pairwise disjoint-or-
-        identical ranges, so one CASE expression assigns scope ids and
-        per-scope buckets in a single pass), with each bucket's count,
-        min and max aggregated together so the recursion needs no
-        separate bounds or count jobs (a child scope's row count is its
-        parent bucket's count, known for free);
-    (3) ONE batched collect resolving every at-or-under-cap scope
-        (per-scope values sorted on the driver, bounded by
-        |ks| x collect_cap rows).
-    The previous shape ran count + full collect + sort PER order
-    statistic (~17 jobs and 8 full-column collects for the 4-quantile
-    bench query). `collect_cap` drops 2M -> 100k so the driver sort
-    stays trivial even with every k resolving in the same scope.
-
-    Deterministic by definition: the k-th smallest VALUE of a multiset
-    is partitioning-independent. NULL and NaN rows are excluded up
-    front (Spark's max() would rank NaN above everything and poison
-    the bucket arithmetic). Returns (p, value) with the same
-    interpolation DuckDB's quantile_cont applies:
-    x_lo + frac * (x_hi - x_lo), rounded to 6."""
-    import math
-
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    vals = df.select(F.col(col).cast("double").alias("v")) \
-        .where(F.col("v").isNotNull() & ~F.isnan("v")) \
-        .observe(obs, F.count(F.lit(1)).alias("n"),
-                 F.min("v").alias("lo"), F.max("v").alias("hi")) \
-        .localCheckpoint()
-    got = obs.get
-    n = got["n"]
-    if n == 0:
-        return df.sparkSession.createDataFrame(
-            [(float(p), None) for p in ps], "p double, value double")
-    needed = {}
-    for p in ps:
-        h = (n - 1) * float(p)
-        k0 = int(math.floor(h)) + 1
-        needed.setdefault(k0, None)
-        needed.setdefault(min(k0 + 1, n), None)
-
-    # pending k's: (k, lo, hi, base, cnt) — `base` values lie strictly
-    # below lo, all k-relevant values lie in [lo, hi], cnt = |scope|.
-    # The bucket expression is monotone in v (IEEE subtract/divide by a
-    # positive constant, floor, clamp all preserve order), so a bucket's
-    # members form a contiguous value range: its (min, max) bounds the
-    # child scope and the cumulative count below it is exact — no
-    # arithmetic boundary (lo + b*width) ever re-enters, so FP bucket
-    # assignment cannot double-count or drop a rank.
-    pending = [(k, got["lo"], got["hi"], 0, n) for k in needed]
-    to_collect: list[tuple[int, float, float, int]] = []
-    depth = 0
-    while pending:
-        big: dict[tuple[float, float], list[tuple[int, int]]] = {}
-        for k, lo, hi, base, cnt in pending:
-            if lo == hi:
-                needed[k] = lo
-            elif cnt <= collect_cap or depth >= max_depth:
-                to_collect.append((k, lo, hi, base))
-            else:
-                big.setdefault((lo, hi), []).append((k, base))
-        if not big:
-            break
-        scopes = sorted(big)
-        sid = None
-        for i, (lo, hi) in enumerate(scopes):
-            cond = (F.col("v") >= lo) & (F.col("v") <= hi)
-            sid = F.when(cond, F.lit(i)) if sid is None else sid.when(
-                cond, F.lit(i))
-        bexpr = None
-        for i, (lo, hi) in enumerate(scopes):
-            width = (hi - lo) / n_buckets
-            be = F.least(F.lit(n_buckets - 1),
-                         F.floor((F.col("v") - lo) / width))
-            bexpr = F.when(F.col("s") == i, be) if bexpr is None \
-                else bexpr.when(F.col("s") == i, be)
-        hist = (
-            vals.select(sid.alias("s"), "v").where(F.col("s").isNotNull())
-            .select("s", bexpr.alias("b"), "v")
-            .groupBy("s", "b")
-            .agg(F.count(F.lit(1)).alias("c"),
-                 F.min("v").alias("l"), F.max("v").alias("h"))
-            .collect()
-        )
-        buckets: dict[int, list] = {}
-        for r in hist:
-            buckets.setdefault(int(r.s), []).append(
-                (int(r.b), r.c, r.l, r.h))
-        pending = []
-        for i, (lo, hi) in enumerate(scopes):
-            bl = sorted(buckets.get(i, []))
-            for k, base in big[(lo, hi)]:
-                cum = base
-                for _b, c, bl_lo, bl_hi in bl:
-                    if cum + c >= k:
-                        pending.append((k, bl_lo, bl_hi, cum, c))
-                        break
-                    cum += c
-                else:
-                    raise AssertionError("k beyond scope")  # unreachable
-        depth += 1
-    if to_collect:
-        cscopes = sorted({(lo, hi) for _, lo, hi, _ in to_collect})
-        sid = None
-        for i, (lo, hi) in enumerate(cscopes):
-            cond = (F.col("v") >= lo) & (F.col("v") <= hi)
-            sid = F.when(cond, F.lit(i)) if sid is None else sid.when(
-                cond, F.lit(i))
-        rows_v = vals.select(sid.alias("s"), "v") \
-            .where(F.col("s").isNotNull()).collect()
-        per_scope: dict[int, list] = {}
-        for r in rows_v:
-            per_scope.setdefault(int(r.s), []).append(r.v)
-        for xs in per_scope.values():
-            xs.sort()
-        scope_ix = {sc: i for i, sc in enumerate(cscopes)}
-        for k, lo, hi, base in to_collect:
-            needed[k] = per_scope[scope_ix[(lo, hi)]][k - base - 1]
-    rows = []
-    for p in ps:
-        h = (n - 1) * float(p)
-        k0 = int(math.floor(h)) + 1
-        frac = h - math.floor(h)
-        x0 = needed[k0]
-        x1 = needed[min(k0 + 1, n)]
-        rows.append((float(p), round(x0 + frac * (x1 - x0), 6)))
-    return df.sparkSession.createDataFrame(rows, "p double, value double")

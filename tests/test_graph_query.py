@@ -1,6 +1,9 @@
 """Graph read-back: by-id lookup + bounded neighbor expansion (S8/J-read
 analog of /root/reference/src/neo4j/models.py:100-159)."""
 
+import io
+from contextlib import redirect_stdout
+
 from legal_knowledge_graph_spark.corpus import corpus_df
 from legal_knowledge_graph_spark.operators.graph_query import (
     get_node, neighbors, nodes_of_type,
@@ -9,12 +12,26 @@ from legal_knowledge_graph_spark.plans import run_pipeline
 from legal_knowledge_graph_spark.sources.io import materialize_graph
 
 
+def _pushed_filters(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return "\n".join(line for line in buf.getvalue().splitlines()
+                     if "PushedFilters:" in line)
+
+
 def test_graph_readback(spark, tmp_path):
     res = run_pipeline(spark, corpus_df(spark, 50, seed=42))
     nodes, edges = materialize_graph(spark, str(tmp_path), res.nodes, res.edges)
 
     a_file = nodes_of_type(nodes, "File", limit=1).collect()[0]
     assert get_node(nodes, a_file.entity_id).count() == 1
+    # the snapshot read pushes the by-id and by-type predicates into the
+    # parquet scan (explain only: no Spark job)
+    assert "EqualTo(entity_id," in _pushed_filters(
+        get_node(nodes, a_file.entity_id))
+    assert "EqualTo(entity_type,File)" in _pushed_filters(
+        nodes_of_type(nodes, "File"))
 
     hop1 = neighbors(nodes, edges, a_file.entity_id, depth=1)
     rows1 = hop1.collect()

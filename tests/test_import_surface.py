@@ -1,13 +1,16 @@
-"""The KG entry points load only KG modules.
+"""The KG entry points load only KG modules, and every source file
+compiles without warnings.
 
 Importing the batch pipeline (`plans`) and the incremental driver
 (`streaming`) must not pull in any operator that no KG stage calls.
 """
 
+import glob
 import json
 import os
 import subprocess
 import sys
+import warnings
 
 PKG = "legal_knowledge_graph_spark"
 KG_MODULES = {
@@ -42,3 +45,21 @@ def test_kg_import_surface_loads_only_kg_modules():
     loaded = set(json.loads(out.stdout.strip().splitlines()[-1]))
     assert f"{PKG}.streaming.incremental" in loaded
     assert loaded - KG_MODULES - KG_PACKAGES == set()
+
+
+def test_sources_compile_without_warnings():
+    """An invalid escape such as '\\s' in a non-raw string is a
+    DeprecationWarning today and a SyntaxError in later Pythons."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [os.path.join(root, f) for f in (
+        "__spark_entry__.py", "bench.py", "bench_extra.py")]
+    for d in (PKG, "tests", "tools"):
+        paths += glob.glob(os.path.join(root, d, "**", "*.py"),
+                           recursive=True)
+    assert len(paths) > 3
+    for path in paths:
+        with open(path, encoding="utf-8") as f:
+            src = f.read()
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            compile(src, path, "exec")

@@ -124,53 +124,6 @@ def test_contamination_plan(spark, docs):
     assert "LeftSemi" in plan
 
 
-def test_zorder_key_closed_form_and_layout(spark):
-    from pyspark.sql import functions as F
-
-    from legal_knowledge_graph_spark.operators.layout import (
-        repartition_zorder, zorder_key,
-    )
-
-    # closed form: interleave bits of small known values
-    def morton2(x, y, bits=16):
-        z = 0
-        for i in range(bits):
-            z |= ((x >> i) & 1) << (2 * i)
-            z |= ((y >> i) & 1) << (2 * i + 1)
-        return z
-
-    df = spark.createDataFrame(
-        [(x, y) for x in range(8) for y in range(8)], "x long, y long")
-    got = {(r.x, r.y): r.z for r in df.select(
-        "x", "y", zorder_key(["x", "y"]).alias("z")).collect()}
-    for (x, y), z in got.items():
-        assert z == morton2(x, y)
-    # locality: the z-curve visits each 2x2 quad contiguously
-    assert got[(0, 0)] == 0 and got[(1, 0)] == 1
-    assert got[(0, 1)] == 2 and got[(1, 1)] == 3
-
-    # layout contract: range partitions hold contiguous, non-overlapping
-    # zkey ranges and rows are sorted within each partition
-    big = spark.createDataFrame(
-        [(i * 37 % 1024, i * 91 % 1024) for i in range(4000)],
-        "x long, y long")
-    parts = (
-        repartition_zorder(big, ["x", "y"], n_partitions=8)
-        .select(F.spark_partition_id().alias("pid"), "zkey")
-        .groupBy("pid")
-        .agg(F.min("zkey").alias("lo"), F.max("zkey").alias("hi"),
-             F.count(F.lit(1)).alias("n"))
-        .orderBy("lo")
-        .collect()
-    )
-    assert sum(p.n for p in parts) == 4000 and len(parts) > 1
-    for a, b in zip(parts, parts[1:]):
-        assert a.hi <= b.lo  # non-overlapping ascending ranges
-    plan = repartition_zorder(big, ["x", "y"], 8)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in plan.lower()
-
-
 def test_mention_extraction_plan_tops_at_map_in_pandas(spark):
     """The extractor emits only canonical entity types, so its output is
     returned as the mapInPandas produced it: no type projection or

@@ -894,49 +894,6 @@ def test_inverted_index_cap_is_global_smallest_k(spark):
     assert (r.word, r.df, r.postings) == ("w", 300, "0,1,2,3,4")
 
 
-def _lev1(a, b):
-    # distance <= 1 check (lengths differ by > 1 -> no)
-    if a == b:
-        return True
-    la, lb = len(a), len(b)
-    if abs(la - lb) > 1:
-        return False
-    if la == lb:
-        return sum(x != y for x, y in zip(a, b)) <= 1
-    s, t = (a, b) if la < lb else (b, a)
-    for i in range(len(t)):
-        if t[:i] + t[i + 1:] == s:
-            return True
-    return False
-
-
-def test_edit_distance_pairs_complete_vs_bruteforce(spark):
-    import random
-
-    from legal_knowledge_graph_spark.operators.dedup import (
-        edit_distance_pairs,
-    )
-
-    rng = random.Random(11)
-    base = ["".join(rng.choice("abcd") for _ in range(rng.randint(2, 6)))
-            for _ in range(80)]
-    # plant guaranteed neighbors: deletions, substitutions, insertions
-    planted = [w[1:] for w in base[:10]] + \
-              ["x" + w[1:] for w in base[10:20]] + \
-              [w + "z" for w in base[20:30]]
-    vocab = sorted(set(base + planted) - {""})
-    df = spark.createDataFrame([(w,) for w in vocab], "word string")
-    got = {(r.word_a, r.word_b) for r in edit_distance_pairs(df).collect()}
-    want = {(a, b) for i, a in enumerate(vocab) for b in vocab[i + 1:]
-            if _lev1(a, b)}
-    assert got == want and len(want) > 20
-    # blocked plan: equi-join on the variant, never a cartesian product
-    plan = edit_distance_pairs(df)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_equidepth_bins_closed_form(spark):
     from legal_knowledge_graph_spark.operators.profiling import (
         equidepth_bins,
@@ -952,25 +909,6 @@ def test_equidepth_bins_closed_form(spark):
     # bins partition the ordered domain: ranges don't overlap
     for b in range(1, 10):
         assert out[b][2] < out[b + 1][1] or out[b][2] <= out[b + 1][1]
-
-
-def test_numeric_corr_matches_numpy(spark):
-    from legal_knowledge_graph_spark.operators.profiling import (
-        numeric_corr,
-    )
-
-    rng = np.random.RandomState(5)
-    x = rng.standard_normal(500)
-    y = 2 * x + rng.standard_normal(500) * 0.5
-    z = rng.standard_normal(500)
-    df = spark.createDataFrame(
-        [(float(a), float(b), float(c)) for a, b, c in zip(x, y, z)],
-        "x double, y double, z double")
-    got = {(r.col_a, r.col_b): r.corr
-           for r in numeric_corr(df, ["x", "y", "z"]).collect()}
-    assert set(got) == {("x", "y"), ("x", "z"), ("y", "z")}
-    assert abs(got[("x", "y")] - np.corrcoef(x, y)[0, 1]) < 1e-6
-    assert abs(got[("x", "z")] - np.corrcoef(x, z)[0, 1]) < 1e-6
 
 
 def test_textrank_chunks_matches_numpy_reference(spark):
@@ -1019,111 +957,6 @@ def test_textrank_chunks_matches_numpy_reference(spark):
     assert got[(2, 1)][0] == round(0.15 / 2, 6)
     # chunk text reassembles in position order
     assert got[(1, 0)][2].startswith("alpha beta gamma delta")
-
-
-def test_check_rules_and_referential_integrity(spark):
-    from legal_knowledge_graph_spark.operators.quality_checks import (
-        check_rules, referential_integrity,
-    )
-
-    df = spark.createDataFrame(
-        [(1, 10.0, "x"), (2, None, "y"), (3, 200.0, None), (4, -5.0, "x")],
-        "id long, v double, s string")
-    rules = [
-        {"name": "v_null", "kind": "null_rate", "col": "v"},
-        {"name": "v_range", "kind": "range", "col": "v", "lo": 0, "hi": 100},
-        {"name": "s_enum", "kind": "expression", "expr": "s IN ('x', 'y')"},
-    ]
-    got = {r.rule: (r.n_violations, r.n_rows, r.violation_rate)
-           for r in check_rules(df, rules).collect()}
-    assert got["v_null"] == (1, 4, 0.25)
-    # range violations include the NULL (must hold provably) + 200 + -5
-    assert got["v_range"] == (3, 4, 0.75)
-    # expression: NULL s is a violation
-    assert got["s_enum"] == (1, 4, 0.25)
-    # the battery is ONE aggregate: a single scan in the plan
-    plan = check_rules(df, rules)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert plan.lower().count("scan existingrdd") <= 1
-
-    parent = spark.createDataFrame([(1,), (2,)], "k long")
-    child = spark.createDataFrame(
-        [(1,), (1,), (2,), (9,), (None,)], "k long")
-    [r] = referential_integrity(child, parent, "k", "k").collect()
-    assert (r.n_orphans, r.n_child_rows, r.orphan_rate) == (2, 5, 0.4)
-
-
-def test_table_diff_closed_form(spark):
-    from legal_knowledge_graph_spark.operators.diff import table_diff
-
-    old = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", None), (4, "d", 40.0)],
-        "k long, s string, v double")
-    new = spark.createDataFrame(
-        [(1, "a", 10.0),          # unchanged -> dropped
-         (2, "B", 21.0),          # changed: s and v
-         (3, "c", 30.0),          # changed: NULL -> value (null-safe)
-         (5, "e", 50.0)],         # added; key 4 removed
-        "k long, s string, v double")
-    got = {r.k: (r.change, r.changed_cols)
-           for r in table_diff(old, new, ["k"]).collect()}
-    assert got == {2: ("changed", "s,v"),
-                   3: ("changed", "v"),
-                   4: ("removed", ""),
-                   5: ("added", "")}
-    assert 1 not in got
-    # compare_cols restricts which columns participate
-    got2 = {r.k: r.change
-            for r in table_diff(old, new, ["k"], ["s"]).collect()}
-    assert got2 == {2: "changed", 4: "removed", 5: "added"}
-
-
-def test_exact_quantiles_matches_numpy_via_histogram_path(spark):
-    from legal_knowledge_graph_spark.operators.profiling import (
-        exact_quantiles,
-    )
-
-    rng = np.random.RandomState(3)
-    xs = np.round(rng.lognormal(4, 1, 5000), 2)
-    df = spark.createDataFrame([(float(v),) for v in xs], "v double")
-    ps = [0.1, 0.5, 0.9, 0.99]
-    # collect_cap far below n forces the histogram-narrowing recursion
-    got = {r.p: r.value for r in exact_quantiles(
-        df, "v", ps, n_buckets=64, collect_cap=200).collect()}
-    want = np.quantile(xs, ps)  # numpy default = type-7 interpolation
-    for p, w in zip(ps, want):
-        assert abs(got[p] - round(float(w), 6)) <= 1e-6
-    # duplicate-heavy distribution (all-dup buckets short-circuit)
-    dup = spark.createDataFrame(
-        [(float(v),) for v in [1.0] * 3000 + [2.0] * 1000], "v double")
-    got2 = {r.p: r.value for r in exact_quantiles(
-        dup, "v", [0.5, 0.9], n_buckets=8, collect_cap=100).collect()}
-    assert got2[0.5] == 1.0
-    assert got2[0.9] == round(float(np.quantile(
-        [1.0] * 3000 + [2.0] * 1000, 0.9)), 6)
-
-
-def test_exact_quantiles_job_count_batched(spark):
-    """r6 (VERDICT r5 #1): ALL order statistics must resolve in a
-    constant number of jobs — one checkpoint (stats ride observe()),
-    one histogram per level, one batched collect — never a count +
-    full collect per k (the r5 shape was ~17 jobs for 4 quantiles)."""
-    from legal_knowledge_graph_spark.operators.profiling import (
-        exact_quantiles,
-    )
-
-    df = spark.range(300_000).select(
-        F.col("id").alias("doc_id"),
-        (F.pmod(F.xxhash64("id"), F.lit(100_000)) / 7.0).alias("v"))
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
-    out = exact_quantiles(df, "v", [0.25, 0.5, 0.75, 0.99],
-                          collect_cap=50_000).collect()
-    jobs = len(set(tracker.getJobIdsForGroup(None)) - before)
-    assert len(out) == 4
-    # checkpoint + 1 histogram level + batched collect (+ slack for
-    # runner-internal jobs); the per-k shape needed >= 2 jobs per k
-    assert jobs <= 6, f"expected batched job count, got {jobs}"
 
 
 def test_textrank_long_doc_blocking(spark):

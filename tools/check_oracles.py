@@ -14,9 +14,6 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "documents"]
-
 
 def canon(df_pandas):
     cols = sorted(df_pandas.columns)
@@ -43,7 +40,7 @@ def main():
 
     spark = build_session(shuffle_partitions=8)
     con = duckdb.connect()
-    for t in TABLES:
+    for t in entrymod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 

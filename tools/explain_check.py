@@ -1,11 +1,15 @@
 """Physical-plan assertions: the plans we want, not just plans that pass.
 
 Checks (via .explain formatted output) that:
-- parquet scans push filters down (PushedFilters) and prune columns
-  (ReadSchema excludes unused columns);
-- small dimensions join via BroadcastHashJoin;
-- relational stages run inside WholeStageCodegen;
+- small tables join via BroadcastHashJoin (the doc-KG dictionary, the
+  mixture rate table, the DSIR bucket table);
+- pair generators and graph iterations use equi-joins only, never a
+  nested-loop or cartesian join, within their shuffle budgets;
+- top-k results come from TakeOrderedAndProject, not a global sort;
 - the KG triple-emission stage contains NO python UDF (pure Catalyst).
+
+Parquet filter pushdown on the KG read path is asserted in
+tests/test_graph_query.py::test_graph_readback.
 
 Run: python tools/explain_check.py [sf_dir]
 """
@@ -45,23 +49,6 @@ def main() -> None:
         print(f"[{name}] "
               + " ".join(f"{frag}={'Y' if frag in plan else 'N'}"
                          for frag in must_contain + must_not))
-
-    # q6: filter pushdown + column pruning on the lineitem scan
-    # ("Batched: true" = vectorized columnar scan; AQE hides the
-    # WholeStageCodegen label in pre-execution formatted plans)
-    p = plan_of(E.q6_revenue(spark, sf_dir))
-    check("q6 pushdown", p, must_contain=(
-        "PushedFilters: [IsNotNull(l_shipdate)", "Batched: true"))
-    if "l_returnflag" in p.split("ReadSchema")[-1][:400]:
-        failures.append("q6: ReadSchema not pruned (reads l_returnflag)")
-
-    # q3: broadcast of the filtered customer dim
-    p = plan_of(E.q3_shipping_priority(spark, sf_dir))
-    check("q3 broadcast", p, must_contain=("BroadcastHashJoin",))
-
-    # q5: six-way join uses broadcasts for nation/region
-    p = plan_of(E.q5_local_supplier(spark, sf_dir))
-    check("q5 broadcast", p, must_contain=("BroadcastHashJoin",))
 
     # doc-KG dictionary join is broadcast (J1)
     p = plan_of(E.kg_doc_mentions(spark, sf_dir))
