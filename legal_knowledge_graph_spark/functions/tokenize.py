@@ -1,5 +1,19 @@
-"""Deterministic identifier/text tokenization shared by the clustering
+r"""Deterministic identifier/text tokenization shared by the clustering
 stage (st3), the similarity spec, and the golden-corpus generator.
+
+It exists in two forms that must agree on every input: `split_tokens`
+(Python, used by the golden generator and the spec functions below) and
+`TOKEN_PATTERN`, the one-pass Java regex st3 evaluates inside the JVM as
+`array_sort(array_distinct(transform(regexp_extract_all(text,
+TOKEN_PATTERN), lower)))`. For every string t that expression equals
+`sorted(set(split_tokens(t)))` (tests/test_tokenize.py holds this). The
+pattern is `_CAMEL_RE` on letter runs plus `_TOKEN_RE`'s numeric runs,
+with `\p{Nd}` for Python's Unicode `\d` (Java's `\d` is ASCII-only);
+both forms lowercase only ASCII letters, so the two case mappings agree.
+`\p{Nd}` and `\d` read the Unicode tables of their runtimes, so digits
+one table knows and the other does not split differently: Java 17
+(Unicode 13) has no Tangsa digits (U+16AC0-U+16AC9, Unicode 14), which
+Python 3.11 keeps as a numeric token and the JVM form drops.
 
 This replaces the reference's pkuseg Chinese segmentation
 (/root/reference/src/normalization/segmenter.py:29-87) with a code-aware
@@ -28,6 +42,8 @@ import re
 # letters runs OR digit runs glued by . or - (dates/versions stay whole)
 _TOKEN_RE = re.compile(r"[A-Za-z]+|\d+(?:[.-]\d+)*")
 _CAMEL_RE = re.compile(r"[A-Z]+(?=[A-Z][a-z])|[A-Z]?[a-z]+|[A-Z]+")
+# the JVM form of split_tokens (java.util.regex; see the module docstring)
+TOKEN_PATTERN = r"[A-Z]+(?=[A-Z][a-z])|[A-Z]?[a-z]+|[A-Z]+|\p{Nd}+(?:[.-]\p{Nd}+)*"
 
 SIMILARITY_THRESHOLD = 0.6
 CONTAINMENT_SCORE = 0.9

@@ -35,21 +35,21 @@ Scale design:
 - node identity is content-derived: sha2(entity_type, canonical_name)
   (SURVEY §1.3) — clusters that share a dictionary canonical unify by
   name, exactly like the reference's representative naming.
-- all verify math is Catalyst column expressions (whole-stage codegen);
-  Python only tokenizes (Arrow-batched pandas UDF).
+- tokenization and all verify math are Catalyst column expressions
+  (whole-stage codegen): the tokenizer is the JVM form of
+  functions.tokenize.split_tokens (TOKEN_PATTERN), and the dictionary is
+  a LocalRelation, so st3 starts no Python worker.
 - collect_set aggregates are capped (slice+sort) so a mega-cluster cannot
   blow an executor (SURVEY §4.2 spill-aware).
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import (
-    DataFrame, Observation, SparkSession, functions as F, types as T,
-)
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from ..functions.tokenize import TOKEN_DF_CAP, split_tokens
+from ..functions.tokenize import TOKEN_DF_CAP, TOKEN_PATTERN
 from ..schema import SIMILARITY_TYPES, dictionary_rows
+from ..sources.io import local_table
 from .components import connected_components
 from .mentions import filter_pronouns
 
@@ -60,20 +60,24 @@ _SEP = "\x1f"
 
 
 def dictionary_df(spark: SparkSession) -> DataFrame:
-    rows = dictionary_rows()
-    return spark.createDataFrame(
-        rows, "alias_lc string, dict_canonical string, entity_type string, dict_conf double"
+    return local_table(
+        spark, dictionary_rows(),
+        "alias_lc string, dict_canonical string, entity_type string, dict_conf double",
     )
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def _tokens_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: sorted(set(split_tokens(t or ""))))
+def token_array(text) -> F.Column:
+    """sorted(set(split_tokens(text))) as a Catalyst expression (the JVM
+    form; functions/tokenize.py states why the two agree)."""
+    return F.array_sort(F.array_distinct(F.transform(
+        F.regexp_extract_all(F.coalesce(text, F.lit("")), F.lit(TOKEN_PATTERN), 0),
+        F.lower)))
 
 
 def build_forms(entity_mentions: DataFrame, spark: SparkSession) -> DataFrame:
     """Distinct surface forms with mention stats + dictionary pre-match
-    (J1: broadcast hash join, normalizer.py:66-96)."""
+    (J1: broadcast hash join, normalizer.py:66-96), and the token set of
+    each similarity-type form (null for the identity types)."""
     forms = entity_mentions.groupBy("entity_type", "text").agg(
         F.count(F.lit(1)).alias("n_mentions"),
         F.min("block_type").alias("block_type_min"),
@@ -92,7 +96,10 @@ def build_forms(entity_mentions: DataFrame, spark: SparkSession) -> DataFrame:
     return forms.withColumn(
         "is_dict",
         F.col("dict_canonical").isNotNull() & (F.col("dict_canonical") != F.col("text")),
-    ).withColumn("fid", F.xxhash64("entity_type", "text"))
+    ).withColumn("fid", F.xxhash64("entity_type", "text")).withColumn(
+        "tokens",
+        F.when(F.col("entity_type").isin(list(SIMILARITY_TYPES)), token_array("text")),
+    )
 
 
 def candidate_pairs_token_blocking(forms_tok: DataFrame) -> DataFrame:
@@ -152,16 +159,14 @@ def canonicalize(
     endpoints in st5 (J3).
     """
     entity_mentions = filter_pronouns(mentions)
-    # forms feed the sim branch, the ident branch, and mention_stats —
-    # materialize once (the groupBy over all mentions is the stage's
-    # only full-data pass)
+    # forms feed the sim branch (candidates, verify, the cluster join),
+    # the ident branch, and mention_stats — materialize once (the groupBy
+    # over all mentions is the stage's only full-data pass)
     forms = build_forms(entity_mentions, spark).localCheckpoint()
 
-    sim = forms.where(F.col("entity_type").isin(list(SIMILARITY_TYPES)))
+    sim_tok = forms.where(F.col("entity_type").isin(list(SIMILARITY_TYPES)))
     ident = forms.where(~F.col("entity_type").isin(list(SIMILARITY_TYPES)))
 
-    # three consumers: candidates, verify, and the cluster join
-    sim_tok = sim.withColumn("tokens", _tokens_udf("text")).localCheckpoint()
     merges = verify_pairs(candidate_pairs_token_blocking(sim_tok), sim_tok)
 
     comp = connected_components(

@@ -32,8 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..schema import RELATION_TYPES
-from .edge_norm import dedup_edges
+from .edge_norm import dedup_edges, predicate_tables
 
 MAX_HOPS = 3
 MEMBERSHIP_PREDICATES = ("file_defines_function", "file_defines_class")
@@ -82,16 +81,13 @@ def resolve_coref(
     hopeless = u.where(F.col("side").isNull()).drop("side")
     u = u.where(F.col("side").isNotNull())
 
-    sig = spark.createDataFrame(
-        [(p, s, o) for p, (s, o) in sorted(RELATION_TYPES.items())],
-        "predicate string, sig_subject string, sig_object string",
-    )
+    _, sig = predicate_tables(spark)
     u = u.join(F.broadcast(sig), "predicate", "left").select(
         "*",
         F.when(F.col("side") == "subject", F.col("object_entity_id"))
         .otherwise(F.col("subject_entity_id")).alias("start"),
-        F.when(F.col("side") == "subject", F.col("sig_subject"))
-        .otherwise(F.col("sig_object")).alias("expected_type"),
+        F.when(F.col("side") == "subject", F.col("expected_subject_type"))
+        .otherwise(F.col("expected_object_type")).alias("expected_type"),
     )
     from pyspark.sql import Observation
 
@@ -222,8 +218,8 @@ def resolve_coref(
             "validation_passed",
             ~F.col("need_coref")
             & F.col("expected_type").isNotNull()
-            & (F.col("subject_type") == F.col("sig_subject"))
-            & (F.col("object_type") == F.col("sig_object")))
+            & (F.col("subject_type") == F.col("expected_subject_type"))
+            & (F.col("object_type") == F.col("expected_object_type")))
         .select(*edges.columns)
     )
     # resolved/hopeless are already (s,p,o)-deduped from st5 and keyed

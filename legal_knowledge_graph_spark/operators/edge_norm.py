@@ -31,15 +31,17 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..schema import PREDICATE_ALIASES, RELATION_TYPES
+from ..sources.io import local_table
 
 _SEP = "\x1f"
 
 
 def predicate_tables(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
-    alias_df = spark.createDataFrame(
-        sorted(PREDICATE_ALIASES.items()), "alias string, canonical string")
-    sig_df = spark.createDataFrame(
-        [(p, s, o) for p, (s, o) in sorted(RELATION_TYPES.items())],
+    """(alias map, predicate signature table) as LocalRelations."""
+    alias_df = local_table(
+        spark, sorted(PREDICATE_ALIASES.items()), "alias string, canonical string")
+    sig_df = local_table(
+        spark, [(p, s, o) for p, (s, o) in sorted(RELATION_TYPES.items())],
         "predicate string, expected_subject_type string, expected_object_type string",
     )
     return alias_df, sig_df

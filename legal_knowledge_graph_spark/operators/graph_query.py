@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..sources.io import read_graph_table
+from ..sources.io import local_table, read_graph_table
 
 
 def load_graph(spark: SparkSession, root: str) -> tuple[DataFrame, DataFrame]:
@@ -62,16 +62,18 @@ def neighbors(
         F.col("object_entity_id").alias("src"),
         F.col("subject_entity_id").alias("dst"),
     ))
-    frontier = nodes.sparkSession.createDataFrame(
-        [(entity_id,)], "node string")
+    frontier = local_table(nodes.sparkSession, [(entity_id,)], "node string")
     seen = frontier.withColumn("hop", F.lit(0))
+    # the anti-join side: at hop 1 the very frontier frame, so both of its
+    # joins share one broadcast
+    seen_nodes = frontier
     frontier_n = seen_n = 1
     for hop in range(1, depth + 1):
         obs = Observation()
         step = (
             bi.join(_side(frontier, frontier_n), frontier["node"] == bi["src"])
             .select(F.col("dst").alias("node")).distinct()
-            .join(_side(seen.select("node"), seen_n), "node", "left_anti")
+            .join(_side(seen_nodes, seen_n), "node", "left_anti")
             .observe(obs, F.count(F.lit(1)).alias("n"))
             .localCheckpoint()
         )
@@ -80,6 +82,7 @@ def neighbors(
             break
         # union of checkpointed steps: no lineage growth across hops
         seen = seen.unionByName(step.withColumn("hop", F.lit(hop)))
+        seen_nodes = seen_nodes.unionByName(step)
         seen_n += n_step
         frontier = step
         frontier_n = n_step

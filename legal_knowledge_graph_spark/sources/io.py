@@ -1,4 +1,5 @@
-"""Stage-table IO, checkpoint manifest, and the graph store (st8).
+"""Stage-table IO, checkpoint manifest, the graph store (st8), and the
+KG path's small constant tables (`local_table`).
 
 Production target is Iceberg (`MERGE INTO` node/edge upsert, snapshot
 checkpointing — SURVEY §2.1 S4-S7). This sandbox has no Iceberg runtime
@@ -25,6 +26,7 @@ import json
 import os
 from typing import Iterable
 
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
@@ -138,6 +140,15 @@ def upsert_parquet(spark: SparkSession, path: str, updates: DataFrame,
         spark, path, merged.observe(obs, F.count(F.lit(1)).alias("rows")))
     out._kg_rows = obs.get["rows"]
     return out
+
+
+def local_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small constant table (non-empty rows, DDL schema) as a
+    LocalRelation: under build_session's Arrow setting, createDataFrame
+    plans a pandas frame as a LocalTableScan, which collects with no Spark
+    job and runs no Python worker. A Python list (or an empty frame) plans
+    as a scan of a Python-built RDD instead."""
+    return spark.createDataFrame(pd.DataFrame.from_records(rows), schema)
 
 
 def read_graph_table(spark: SparkSession, path: str) -> DataFrame:

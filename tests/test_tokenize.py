@@ -1,4 +1,7 @@
-"""Pure-python spec tests: tokenizer, pair-similarity spec, pool safety."""
+"""Spec tests: tokenizer, pair-similarity spec, pool safety, and the
+agreement of the tokenizer's Python and JVM forms."""
+
+import random
 
 from legal_knowledge_graph_spark.corpus import (
     BASE_POOL, CLASS_POOL, FUNCTION_POOL, PLAIN_MODULES,
@@ -55,3 +58,43 @@ def test_pools_containment_safe():
             for b in pool:
                 if a != b:
                     assert not sets[a] <= sets[b], (a, b)
+
+
+def test_jvm_tokens_equal_split_tokens(spark):
+    """st3's Catalyst tokenizer (TOKEN_PATTERN) equals
+    sorted(set(split_tokens(t))) — the golden generator's form — on the
+    corpus pools, non-ASCII digits and letters, camel and numeric edge
+    cases, empty and null, and seeded random strings over an alphabet of
+    those characters."""
+    from legal_knowledge_graph_spark.operators.canonicalize import token_array
+
+    texts = [*FUNCTION_POOL, *CLASS_POOL, *BASE_POOL, *PLAIN_MODULES,
+             "٣٤.٥", "x²y", "İstanbul", "\u212a", "getHTTPResponse2",
+             "HTTPServer", "v1.2.3-rc", "a..b", "1-2-", "", None]
+    rng = random.Random(7)
+    alphabet = "aZbY_.- 09٣٤²İ\u212aéÉ"
+    texts += ["".join(rng.choice(alphabet) for _ in range(rng.randint(1, 12)))
+              for _ in range(2000)]
+    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    rows = df.select("t", token_array("t").alias("k")).collect()
+    assert len(rows) == len(texts)
+    assert [(r.t, r.k) for r in rows
+            if list(r.k) != sorted(set(split_tokens(r.t)))] == []
+    assert split_tokens("getHTTPResponse2") == ["get", "http", "response", "2"]
+    assert split_tokens("٣٤.٥") == ["٣٤.٥"]
+
+
+def test_jvm_tokens_every_unicode_digit(spark):
+    """Every character Python's `\\d` matches is one numeric token in both
+    forms, except where the JVM's Unicode table predates Python's: Java
+    17 lacks the Tangsa digits (functions/tokenize.py docstring)."""
+    import unicodedata
+
+    from legal_knowledge_graph_spark.operators.canonicalize import token_array
+
+    digits = [chr(c) for c in range(0x110000)
+              if unicodedata.category(chr(c)) == "Nd"]
+    df = spark.createDataFrame([(d * 2 + "." + d,) for d in digits], "t string")
+    differ = {ord(r.t[0]) for r in df.select("t", token_array("t").alias("k"))
+              .collect() if list(r.k) != [r.t]}
+    assert differ <= set(range(0x16AC0, 0x16ACA))

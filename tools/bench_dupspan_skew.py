@@ -55,8 +55,7 @@ def main() -> None:
 
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     uniq = int(sys.argv[2]) if len(sys.argv) > 2 else 50
-    spark = build_session(app_name="lkg-dupspan-skew", master="local[32]",
-                          shuffle_partitions=32)
+    spark = build_session(app_name="lkg-dupspan-skew", shuffle_partitions=32)
     hot = build_corpus(spark, n_docs, uniq, True).localCheckpoint()
     control = build_corpus(spark, n_docs, uniq, False).localCheckpoint()
 

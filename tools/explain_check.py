@@ -36,7 +36,7 @@ def main() -> None:
     from legal_knowledge_graph_spark.session import build_session
     import __spark_entry__ as E
 
-    spark = build_session(master="local[8]", shuffle_partitions=8)
+    spark = build_session(shuffle_partitions=8)
     failures = []
 
     def check(name, plan, must_contain=(), must_not=()):
