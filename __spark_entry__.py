@@ -40,7 +40,7 @@ from legal_knowledge_graph_spark.plans import run_pipeline
 _CORPUS_FILES = {"sf0.001": 60, "sf0.01": 240, "sf0.1": 1000, "sf1.0": 240}
 # The sf-dir parquet tables the queries and oracles read; the harnesses
 # warm or register exactly these.
-TABLES = ("supplier", "orders", "lineitem", "documents")
+TABLES = ("documents",)
 _GOLDEN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "golden", "sf0.01")
 
@@ -417,67 +417,6 @@ def _type_norm_inputs(block_aliases, block_types, entity_aliases, entity_types):
     return rows
 
 
-def graph_pagerank(spark, sf_dir):
-    """Iterative PageRank (graph_algos.pagerank: dangling-mass
-    redistribution, 10 fixed iterations) over the customer->supplier->
-    nation purchase graph; top 20 by rounded rank with deterministic
-    tiebreak. Top-k via orderBy+limit (TakeOrderedAndProject — per-
-    partition top-k then merge, never a global sort); the oracle unrolls
-    the identical recurrence in SQL."""
-    from pyspark.sql.window import Window
-
-    from legal_knowledge_graph_spark.operators.graph_algos import pagerank
-
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    cs = orders.join(li, orders["o_orderkey"] == li["l_orderkey"]).select(
-        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"))
-    sn = supp.select(
-        F.concat(F.lit("s"), F.col("s_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("n"), F.col("s_nationkey").cast("string")).alias("dst"))
-    pr = pagerank(cs.unionByName(sn), n_iter=10, damping=0.85)
-    top = (
-        pr.select("node", F.round("rank", 6).alias("pr"))
-        .orderBy(F.col("pr").desc(), F.col("node").asc()).limit(20)
-    )
-    w = Window.orderBy(F.col("pr").desc(), F.col("node").asc())
-    return top.withColumn("rk", F.row_number().over(w).cast("int"))
-
-
-def graph_ppr(spark, sf_dir):
-    """Personalized PageRank (graph_algos.pagerank with seeds): teleport
-    restricted to two nation nodes, scoring every graph entity by
-    proximity to the seed set — the standard 'entities relevant to X'
-    query over a knowledge graph. Same recurrence/oracle as
-    graph_pagerank with the tele vector in place of the uniform 1/N;
-    top 20 by rounded rank."""
-    from pyspark.sql.window import Window
-
-    from legal_knowledge_graph_spark.operators.graph_algos import pagerank
-
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    cs = orders.join(li, orders["o_orderkey"] == li["l_orderkey"]).select(
-        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"))
-    sn = supp.select(
-        F.concat(F.lit("s"), F.col("s_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("n"), F.col("s_nationkey").cast("string")).alias("dst"))
-    # s->n edges make the seed nations reachable; nations dangle, so the
-    # dangling mass cycles back through the teleport each iteration
-    pr = pagerank(cs.unionByName(sn), n_iter=10, damping=0.85,
-                  seeds=["n3", "n15"])
-    top = (
-        pr.select("node", F.round("rank", 6).alias("pr"))
-        .orderBy(F.col("pr").desc(), F.col("node").asc()).limit(20)
-    )
-    w = Window.orderBy(F.col("pr").desc(), F.col("node").asc())
-    return top.withColumn("rk", F.row_number().over(w).cast("int"))
-
-
 def doc_lm_score(spark, sf_dir):
     """Unigram-LM quality score (text_analysis.unigram_lm_scores): corpus-
     trained token frequencies, per-doc mean log10 probability — the
@@ -518,27 +457,6 @@ def doc_pack_sequences(spark, sf_dir):
                           budget=512, n_shards=8)
 
 
-def graph_triangles(spark, sf_dir):
-    """Per-node triangle counts + local clustering coefficient
-    (graph_algos.triangle_count: degree-ordered orientation, wedge join
-    bounded O(sqrt(m)) per node) over the part co-purchase graph — parts
-    connected when they appear in the same order. Triangle counts are
-    orientation-invariant, so the oracle uses the simple a<b<c id-ordered
-    SQL form and must agree exactly."""
-    from legal_knowledge_graph_spark.operators.graph_algos import (
-        triangle_count,
-    )
-
-    li = _t(spark, sf_dir, "lineitem")
-    a = li.select(F.col("l_orderkey").alias("ok"),
-                  F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("ok"),
-                  F.col("l_partkey").alias("pb"))
-    pairs = a.join(b, "ok").where(F.col("pa") < F.col("pb")).select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst"))
-    return triangle_count(pairs)
-
-
 def doc_vocab(spark, sf_dir):
     """Tokenizer-prep corpus vocabulary (text_analysis.corpus_vocab):
     top-200 tokens by global frequency with cumulative coverage of the
@@ -560,27 +478,6 @@ def doc_tfidf_keywords(spark, sf_dir):
     )
 
     return tfidf_keywords(_t(spark, sf_dir, "documents"), k=5)
-
-
-def graph_communities(spark, sf_dir):
-    """Synchronous label propagation (graph_algos.label_propagation, 5
-    deterministic rounds: most-frequent neighbor label, min-label
-    tiebreak) over the customer->supplier->nation purchase graph; the
-    oracle unrolls the identical recurrence in SQL."""
-    from legal_knowledge_graph_spark.operators.graph_algos import (
-        label_propagation,
-    )
-
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    cs = orders.join(li, orders["o_orderkey"] == li["l_orderkey"]).select(
-        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"))
-    sn = supp.select(
-        F.concat(F.lit("s"), F.col("s_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("n"), F.col("s_nationkey").cast("string")).alias("dst"))
-    return label_propagation(cs.unionByName(sn), n_iter=5)
 
 
 def doc_collocations(spark, sf_dir):
@@ -756,52 +653,6 @@ def doc_importance(spark, sf_dir):
         _t(spark, sf_dir, "documents"), F.col("lang") == "en")
 
 
-def graph_bfs(spark, sf_dir):
-    """Multi-source BFS hop distances (graph_algos.bfs_distances,
-    min-relaxation with observe()-gated fixpoint exit — identity rounds
-    make the early exit output-identical to the oracle's fixed 6-hop
-    unroll) from two nation seeds over the undirected purchase graph."""
-    from legal_knowledge_graph_spark.operators.graph_algos import (
-        bfs_distances,
-    )
-
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    cs = orders.join(li, orders["o_orderkey"] == li["l_orderkey"]).select(
-        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"))
-    sn = supp.select(
-        F.concat(F.lit("s"), F.col("s_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("n"), F.col("s_nationkey").cast("string")).alias("dst"))
-    # n3/n15 exist at every testdata sf (low nation keys are absent from
-    # the sf0.001 supplier sample)
-    out = bfs_distances(cs.unionByName(sn), ["n3", "n15"],
-                        max_hops=6, directed=False)
-    return out.select("node", F.col("dist").cast("int").alias("dist"))
-
-
-def graph_link_predict(spark, sf_dir):
-    """Link prediction (graph_algos.link_prediction: common-neighbor /
-    Jaccard / Adamic-Adar scores for non-adjacent pairs) over the part
-    co-purchase graph, pairs counted through apexes with degree <= 64
-    (the declared hub cap — the 100 TB skew lever), global top 100 by
-    (adamic_adar DESC, common_neighbors DESC, a, b). The oracle restates
-    the same wedge-group-anti-join pipeline in SQL with the same cap."""
-    from legal_knowledge_graph_spark.operators.graph_algos import (
-        link_prediction,
-    )
-
-    li = _t(spark, sf_dir, "lineitem")
-    a = li.select(F.col("l_orderkey").alias("ok"),
-                  F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("ok"),
-                  F.col("l_partkey").alias("pb"))
-    pairs = a.join(b, "ok").where(F.col("pa") < F.col("pb")).select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst"))
-    return link_prediction(pairs, max_apex_degree=64, top_k=100)
-
-
 def doc_bpe_merges(spark, sf_dir):
     """Distributed BPE merge learning (bpe.learn_bpe, Sennrich-style over
     the word-frequency table): 30 merges, min_count=2. The merge loop is
@@ -824,80 +675,6 @@ def doc_length_stats(spark, sf_dir):
     )
 
     return corpus_length_stats(_t(spark, sf_dir, "documents"), by="lang")
-
-
-def graph_kcore(spark, sf_dir):
-    """3-core of the high-quantity part co-purchase graph
-    (graph_algos.k_core: fixed-unroll peeling with observe()-riding
-    fixpoint early-exit — identity rounds make the early exit
-    output-identical to the oracle's full 8-round unroll)."""
-    from legal_knowledge_graph_spark.operators.graph_algos import k_core
-
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_quantity") >= 45)
-    a = li.select(F.col("l_orderkey").alias("ok"),
-                  F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("ok"),
-                  F.col("l_partkey").alias("pb"))
-    pairs = a.join(b, "ok").where(F.col("pa") < F.col("pb")).select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst"))
-    core = k_core(pairs, k=3, max_iter=8)
-    return core.select("node", F.col("degree").cast("long").alias("degree"))
-
-
-def graph_hits(spark, sf_dir):
-    """HITS hubs & authorities (graph_algos.hits: L1-normalized, 5 fixed
-    iterations, normalization constants riding each half-step's
-    checkpoint via observe()) over the customer->supplier->nation
-    purchase graph; top 20 by rounded authority with deterministic
-    tiebreak — the oracle unrolls the identical recurrence in SQL."""
-    from pyspark.sql.window import Window
-
-    from legal_knowledge_graph_spark.operators.graph_algos import hits
-
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    cs = orders.join(li, orders["o_orderkey"] == li["l_orderkey"]).select(
-        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"))
-    sn = supp.select(
-        F.concat(F.lit("s"), F.col("s_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("n"), F.col("s_nationkey").cast("string")).alias("dst"))
-    out = hits(cs.unionByName(sn), n_iter=5)
-    top = (
-        out.select("node", F.round("hub", 6).alias("hub"),
-                   F.round("auth", 6).alias("auth"))
-        .orderBy(F.col("auth").desc(), F.col("node").asc()).limit(20)
-    )
-    w = Window.orderBy(F.col("auth").desc(), F.col("node").asc())
-    return top.withColumn("rk", F.row_number().over(w).cast("int"))
-
-
-def graph_sssp(spark, sf_dir):
-    """Weighted shortest paths (graph_algos.sssp_weighted: Bellman-Ford
-    min-relaxation, hop-bounded, observe()-gated fixpoint exit that is
-    output-identical to the oracle's fixed 6-round unroll) from two
-    nation seeds over the undirected purchase graph. Edge weights:
-    customer->supplier = min l_quantity over the pair (integral 1..50,
-    so path sums are integer-exact), supplier->nation = 1."""
-    from legal_knowledge_graph_spark.operators.graph_algos import (
-        sssp_weighted,
-    )
-
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    cs = orders.join(li, orders["o_orderkey"] == li["l_orderkey"]).select(
-        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        F.col("l_quantity").alias("weight"))
-    sn = supp.select(
-        F.concat(F.lit("s"), F.col("s_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("n"), F.col("s_nationkey").cast("string")).alias("dst"),
-        F.lit(1.0).alias("weight"))
-    out = sssp_weighted(cs.unionByName(sn), ["n3", "n15"],
-                        max_hops=6, directed=False)
-    return out.select("node", F.col("dist").cast("int").alias("dist"))
 
 
 BM25_QUERIES = {
@@ -976,33 +753,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_type_normalization": kg_type_normalization,
         "kg_term_neighbors": kg_term_neighbors,
         "kg_term_components": kg_term_components,
-        "graph_pagerank": graph_pagerank,
         "doc_lm_score": doc_lm_score,
         "doc_pack_sequences": doc_pack_sequences,
-        "graph_triangles": graph_triangles,
         "doc_vocab": doc_vocab,
         "doc_tfidf_keywords": doc_tfidf_keywords,
-        "graph_communities": graph_communities,
         "doc_collocations": doc_collocations,
         "doc_mixture_plan": doc_mixture_plan,
         "doc_mixture_sample": doc_mixture_sample,
         "doc_dup_spans": doc_dup_spans,
         "doc_dup_clean": doc_dup_clean,
         "doc_bm25": doc_bm25,
-        "graph_hits": graph_hits,
-        "graph_kcore": graph_kcore,
-        "graph_sssp": graph_sssp,
         "doc_length_stats": doc_length_stats,
         "doc_bpe_merges": doc_bpe_merges,
-        "graph_bfs": graph_bfs,
         "doc_length_bins": doc_length_bins,
         "doc_textrank": doc_textrank,
         "doc_rake": doc_rake,
         "doc_inverted_index": doc_inverted_index,
         "doc_importance": doc_importance,
-        "graph_link_predict": graph_link_predict,
         "doc_ccnet_buckets": doc_ccnet_buckets,
-        "graph_ppr": graph_ppr,
         "doc_ngram_diversity": doc_ngram_diversity,
         "doc_weighted_sample": doc_weighted_sample,
         "doc_bpe_tokens": doc_bpe_tokens,
@@ -1192,48 +960,6 @@ SELECT kind, raw_type,
 FROM j"""
 
 
-def _label_prop_oracle(n_iter: int) -> str:
-    """Unrolled-iteration SQL restatement of
-    graph_algos.label_propagation on the customer->supplier->nation
-    purchase graph: symmetrized distinct edge set, then per round one
-    (votes, labels) CTE pair — most-frequent neighbor label, min-label
-    tiebreak. MATERIALIZED everywhere (DuckDB inlines CTEs by default
-    and the unroll would explode exponentially)."""
-    parts = ["""
-WITH half AS MATERIALIZED (
-  SELECT 'c' || CAST(o_custkey AS VARCHAR) AS v,
-         's' || CAST(l_suppkey AS VARCHAR) AS u
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  UNION ALL
-  SELECT 's' || CAST(s_suppkey AS VARCHAR),
-         'n' || CAST(s_nationkey AS VARCHAR)
-  FROM supplier
-), e AS MATERIALIZED (
-  SELECT DISTINCT v, u FROM (
-    SELECT v, u FROM half UNION ALL SELECT u AS v, v AS u FROM half
-  )
-), l0 AS MATERIALIZED (
-  SELECT DISTINCT v AS node, v AS label FROM e
-)"""]
-    for i in range(1, n_iter + 1):
-        parts.append(f""",
-v{i} AS MATERIALIZED (
-  SELECT e.v, l.label, count(*) AS n
-  FROM e JOIN l{i - 1} l ON l.node = e.u
-  GROUP BY e.v, l.label
-), l{i} AS MATERIALIZED (
-  SELECT v AS node, label FROM (
-    SELECT v, label,
-           row_number() OVER (PARTITION BY v
-                              ORDER BY n DESC, label ASC) AS rn
-    FROM v{i}
-  ) WHERE rn = 1
-)""")
-    parts.append(f"""
-SELECT node, label FROM l{n_iter}""")
-    return "".join(parts)
-
-
 def _mixture_cte(target: dict[str, float]) -> str:
     """Shared CTE chain restating sampling.mixture_weights on
     documents.lang: normalized target fractions are computed in PYTHON
@@ -1255,87 +981,6 @@ w AS (
 ), w2 AS (
   SELECT *, target_frac / actual_frac AS weight FROM w
 ), m AS (SELECT max(weight) AS wmax FROM w2)"""
-
-
-def _pagerank_oracle(n_iter: int, damping: float, k: int,
-                     seeds: list | None = None) -> str:
-    """Unrolled-iteration SQL restatement of graph_algos.pagerank on the
-    customer->supplier->nation purchase graph: one (contribs, ranks) CTE
-    pair per iteration, dangling mass = 1 - contributed (the same
-    recurrence the Spark operator evaluates), every literal cast to
-    DOUBLE so DuckDB's DECIMAL arithmetic never diverges from Spark's
-    doubles. With `seeds`, the teleport vector is 1/|S| on the seed
-    nodes and 0 elsewhere (personalized PageRank) — the same tele CTE
-    feeds rank_0 and every iteration's base/dangling terms."""
-    d = repr(float(damping))
-    parts = [f"""
-WITH e AS MATERIALIZED (
-  SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-                  's' || CAST(l_suppkey AS VARCHAR) AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  UNION
-  SELECT DISTINCT 's' || CAST(s_suppkey AS VARCHAR),
-                  'n' || CAST(s_nationkey AS VARCHAR)
-  FROM supplier
-), nodes AS MATERIALIZED (
-  SELECT src AS node FROM e UNION SELECT dst FROM e
-), nn AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-deg AS MATERIALIZED (SELECT src, count(*) AS outdeg FROM e GROUP BY src),"""]
-    if seeds:
-        in_list = ", ".join(f"'{s}'" for s in sorted(set(seeds)))
-        parts.append(f"""
-sn AS MATERIALIZED (
-  SELECT CAST(count(*) AS DOUBLE) AS s FROM nodes
-  WHERE node IN ({in_list})
-),
-tele AS MATERIALIZED (
-  SELECT node,
-         CASE WHEN node IN ({in_list})
-              THEN CAST(1 AS DOUBLE) / (SELECT s FROM sn)
-              ELSE CAST(0 AS DOUBLE) END AS w
-  FROM nodes
-),
-p0 AS MATERIALIZED (SELECT node, w AS rank FROM tele)""")
-    else:
-        parts.append("""
-p0 AS MATERIALIZED (
-  SELECT node, CAST(1 AS DOUBLE) / (SELECT n FROM nn) AS rank FROM nodes
-)""")
-    for i in range(1, n_iter + 1):
-        if seeds:
-            base = (f"(CAST(1 AS DOUBLE) - {d}) * t.w"
-                    f"\n    + {d} * (COALESCE(c.c, CAST(0 AS DOUBLE))"
-                    f"\n             + greatest(CAST(0 AS DOUBLE),"
-                    f"\n                        CAST(1 AS DOUBLE)"
-                    f" - (SELECT sum(c) FROM c{i})) * t.w)")
-            frm = (f"FROM nodes n JOIN tele t ON t.node = n.node"
-                   f" LEFT JOIN c{i} c ON n.node = c.node")
-        else:
-            base = (f"(CAST(1 AS DOUBLE) - {d}) / (SELECT n FROM nn)"
-                    f"\n    + {d} * (COALESCE(c.c, CAST(0 AS DOUBLE))"
-                    f"\n             + greatest(CAST(0 AS DOUBLE),"
-                    f"\n                        CAST(1 AS DOUBLE)"
-                    f" - (SELECT sum(c) FROM c{i}))"
-                    f"\n               / (SELECT n FROM nn))")
-            frm = f"FROM nodes n LEFT JOIN c{i} c ON n.node = c.node"
-        parts.append(f""",
-c{i} AS MATERIALIZED (
-  SELECT e.dst AS node, sum(p.rank / dg.outdeg) AS c
-  FROM e JOIN p{i - 1} p ON e.src = p.node JOIN deg dg ON dg.src = e.src
-  GROUP BY e.dst
-), p{i} AS MATERIALIZED (
-  SELECT n.node,
-    {base} AS rank
-  {frm}
-)""")
-    parts.append(f"""
-SELECT node, pr, rk FROM (
-  SELECT node, round(rank, 6) AS pr,
-         CAST(row_number() OVER (ORDER BY round(rank, 6) DESC, node ASC)
-              AS INT) AS rk
-  FROM p{n_iter}
-) WHERE rk <= {k}""")
-    return "".join(parts)
 
 
 def _bm25_oracle(queries: dict, k1: float, b: float, topk: int) -> str:
@@ -1453,124 +1098,6 @@ SELECT d.doc_id,
 FROM documents d
 LEFT JOIN orig o ON o.doc_id = d.doc_id
 LEFT JOIN reb r ON r.doc_id = d.doc_id"""
-
-
-def _hits_oracle(n_iter: int, k: int) -> str:
-    """Unrolled-iteration SQL restatement of graph_algos.hits on the
-    purchase graph: per iteration an (a_raw, a_norm, h_raw, h_norm) CTE
-    quartet; each normalization divides PER ROW by the scalar sum of the
-    same raw table (exactly what the Spark operator does with its
-    observe()d constant), so the engines agree to summation-order ulp
-    before round(,6)."""
-    parts = ["""
-WITH e AS MATERIALIZED (
-  SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-                  's' || CAST(l_suppkey AS VARCHAR) AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  UNION
-  SELECT DISTINCT 's' || CAST(s_suppkey AS VARCHAR),
-                  'n' || CAST(s_nationkey AS VARCHAR)
-  FROM supplier
-), nodes AS MATERIALIZED (
-  SELECT src AS node FROM e UNION SELECT dst FROM e
-), nn AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-hn0 AS MATERIALIZED (
-  SELECT node, CAST(1 AS DOUBLE) / (SELECT n FROM nn) AS h FROM nodes
-)"""]
-    for i in range(1, n_iter + 1):
-        parts.append(f""",
-a{i} AS MATERIALIZED (
-  SELECT e.dst AS node, sum(h.h) AS a
-  FROM e JOIN hn{i - 1} h ON h.node = e.src GROUP BY e.dst
-), an{i} AS MATERIALIZED (
-  SELECT node, a / (SELECT sum(a) FROM a{i}) AS a FROM a{i}
-), h{i} AS MATERIALIZED (
-  SELECT e.src AS node, sum(an.a) AS hh
-  FROM e JOIN an{i} an ON an.node = e.dst GROUP BY e.src
-), hn{i} AS MATERIALIZED (
-  SELECT node, hh / (SELECT sum(hh) FROM h{i}) AS h FROM h{i}
-)""")
-    parts.append(f"""
-SELECT node, hub, auth, rk FROM (
-  SELECT n.node,
-         round(coalesce(h.h, CAST(0 AS DOUBLE)), 6) AS hub,
-         round(coalesce(a.a, CAST(0 AS DOUBLE)), 6) AS auth,
-         CAST(row_number() OVER (
-              ORDER BY round(coalesce(a.a, CAST(0 AS DOUBLE)), 6) DESC,
-                       n.node ASC) AS INT) AS rk
-  FROM nodes n
-  LEFT JOIN hn{n_iter} h ON h.node = n.node
-  LEFT JOIN an{n_iter} a ON a.node = n.node
-) WHERE rk <= {k}""")
-    return "".join(parts)
-
-
-def _kcore_oracle(k: int, n_rounds: int) -> str:
-    """Fixed-unroll SQL restatement of graph_algos.k_core on the
-    high-quantity co-purchase graph: one (degree, survivors, edges)
-    round per CTE triple. Peeling is identity at the fixpoint, so the
-    Spark side's observe()-gated early exit matches the full unroll."""
-    parts = ["""
-WITH e0 AS MATERIALIZED (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS a,
-                  greatest(a.l_partkey, b.l_partkey) AS b
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity >= 45 AND b.l_quantity >= 45
-)"""]
-    for i in range(1, n_rounds + 1):
-        parts.append(f""",
-d{i} AS (
-  SELECT node, count(*) AS deg FROM (
-    SELECT a AS node FROM e{i - 1} UNION ALL SELECT b FROM e{i - 1}
-  ) GROUP BY node
-), s{i} AS MATERIALIZED (SELECT node FROM d{i} WHERE deg >= {k}),
-e{i} AS MATERIALIZED (
-  SELECT a, b FROM e{i - 1}
-  WHERE a IN (SELECT node FROM s{i}) AND b IN (SELECT node FROM s{i})
-)""")
-    parts.append(f"""
-SELECT node, CAST(count(*) AS BIGINT) AS degree FROM (
-  SELECT a AS node FROM e{n_rounds} UNION ALL SELECT b FROM e{n_rounds}
-) GROUP BY node""")
-    return "".join(parts)
-
-
-def _bfs_oracle(seeds: list, max_hops: int) -> str:
-    """Fixed-unroll SQL restatement of graph_algos.bfs_distances on the
-    symmetrized purchase graph: one min-relaxation CTE per hop. The
-    Spark side's fixpoint early exit is output-identical because
-    settled rounds are identity."""
-    seed_vals = ", ".join(f"('{s}', 0)" for s in sorted(set(seeds)))
-    parts = [f"""
-WITH base AS MATERIALIZED (
-  SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-                  's' || CAST(l_suppkey AS VARCHAR) AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  UNION
-  SELECT DISTINCT 's' || CAST(s_suppkey AS VARCHAR),
-                  'n' || CAST(s_nationkey AS VARCHAR)
-  FROM supplier
-), e AS MATERIALIZED (
-  SELECT u, v FROM (
-    SELECT src AS u, dst AS v FROM base
-    UNION
-    SELECT dst AS u, src AS v FROM base
-  ) WHERE u <> v
-), d0(node, dist) AS (VALUES {seed_vals})"""]
-    for i in range(1, max_hops + 1):
-        parts.append(f""",
-d{i} AS MATERIALIZED (
-  SELECT node, min(dist) AS dist FROM (
-    SELECT node, dist FROM d{i - 1}
-    UNION ALL
-    SELECT e.v AS node, d.dist + 1 AS dist
-    FROM e JOIN d{i - 1} d ON d.node = e.u
-  ) GROUP BY node
-)""")
-    parts.append(f"""
-SELECT node, CAST(dist AS INT) AS dist FROM d{max_hops}""")
-    return "".join(parts)
 
 
 def _rake_oracle(top_k: int = 3, max_phrase_len: int = 4) -> str:
@@ -1701,44 +1228,6 @@ fin AS (
 )
 SELECT doc_id, idx, score, rk, chunk_text FROM rk WHERE rk <= {top_k}"""
     return head + "".join(its) + tail
-
-
-def _sssp_oracle(seeds: list, max_hops: int) -> str:
-    """Fixed-unroll SQL restatement of graph_algos.sssp_weighted on the
-    weighted symmetrized purchase graph (parallel edges min-collapsed
-    exactly as the operator does). Settled rounds are identity, so the
-    Spark side's (count, sum)-observed early exit is output-identical."""
-    seed_vals = ", ".join(f"('{s}', 0.0)" for s in sorted(set(seeds)))
-    parts = [f"""
-WITH base AS MATERIALIZED (
-  SELECT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-         's' || CAST(l_suppkey AS VARCHAR) AS dst,
-         CAST(l_quantity AS DOUBLE) AS w
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  UNION ALL
-  SELECT 's' || CAST(s_suppkey AS VARCHAR),
-         'n' || CAST(s_nationkey AS VARCHAR), 1.0
-  FROM supplier
-), e AS MATERIALIZED (
-  SELECT u, v, min(w) AS w FROM (
-    SELECT src AS u, dst AS v, w FROM base
-    UNION ALL
-    SELECT dst AS u, src AS v, w FROM base
-  ) WHERE u <> v GROUP BY u, v
-), d0(node, dist) AS (VALUES {seed_vals})"""]
-    for i in range(1, max_hops + 1):
-        parts.append(f""",
-d{i} AS MATERIALIZED (
-  SELECT node, min(dist) AS dist FROM (
-    SELECT node, dist FROM d{i - 1}
-    UNION ALL
-    SELECT e.v AS node, d.dist + e.w AS dist
-    FROM e JOIN d{i - 1} d ON d.node = e.u
-  ) GROUP BY node
-)""")
-    parts.append(f"""
-SELECT node, CAST(dist AS INT) AS dist FROM d{max_hops}""")
-    return "".join(parts)
 
 
 def oracle_sql() -> dict[str, str]:
@@ -2130,9 +1619,6 @@ WITH b AS (
 SELECT bin, count(*) AS n, min(v) AS lo, max(v) AS hi,
        round(avg(v), 6) AS mean
 FROM b GROUP BY bin""",
-        "graph_pagerank": _pagerank_oracle(n_iter=10, damping=0.85, k=20),
-        "graph_ppr": _pagerank_oracle(n_iter=10, damping=0.85, k=20,
-                                      seeds=["n3", "n15"]),
         "doc_lm_score": r"""
 WITH words AS (
   SELECT doc_id,
@@ -2201,35 +1687,6 @@ SELECT doc_id, shard, n_tokens, token_end - n_tokens AS token_start,
        (token_end - n_tokens) // 512 AS seq_first,
        (token_end - 1) // 512 AS seq_last
 FROM c""",
-        # triangle counts are orientation-invariant: the engine uses
-        # degree-ordered orientation (skew-safe), the oracle the naive
-        # a<b<c id-ordered join — they must agree exactly
-        "graph_triangles": """
-WITH e0 AS (
-  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-), deg AS (
-  SELECT node, count(*) AS degree FROM (
-    SELECT a AS node FROM e0 UNION ALL SELECT b AS node FROM e0
-  ) GROUP BY node
-), tri AS (
-  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-  FROM e0 e1
-  JOIN e0 e2 ON e1.b = e2.a
-  JOIN e0 e3 ON e3.a = e1.a AND e3.b = e2.b
-), pn AS (
-  SELECT node, count(*) AS n_triangles FROM (
-    SELECT x AS node FROM tri UNION ALL SELECT y AS node FROM tri
-    UNION ALL SELECT z AS node FROM tri
-  ) GROUP BY node
-)
-SELECT d.node, d.degree, coalesce(pn.n_triangles, 0) AS n_triangles,
-       CASE WHEN d.degree >= 2
-            THEN round(2.0 * coalesce(pn.n_triangles, 0)
-                       / (d.degree * (d.degree - 1)), 6)
-            ELSE 0.0 END AS clustering
-FROM deg d LEFT JOIN pn USING (node)""",
         "doc_vocab": r"""
 WITH words AS (
   SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS word
@@ -2268,7 +1725,6 @@ WITH words AS (
   FROM scored
 )
 SELECT doc_id, word, tfidf, rank FROM rk WHERE rank <= 5""",
-        "graph_communities": _label_prop_oracle(n_iter=5),
         "doc_collocations": r"""
 WITH w AS (
   SELECT string_split_regex(lower(trim(text)), '\s+') AS wl FROM documents
@@ -2311,45 +1767,6 @@ SELECT d.doc_id, d.lang, d.source
 FROM documents d JOIN rates r ON d.lang = r.stratum
 WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR) || ':7'), 1, 8))::BIGINT
       < r.accept_frac * 4294967296""",
-        "graph_hits": _hits_oracle(n_iter=5, k=20),
-        "graph_bfs": _bfs_oracle(["n3", "n15"], max_hops=6),
-        "graph_sssp": _sssp_oracle(["n3", "n15"], max_hops=6),
-        # same wedge-group-anti-join pipeline restated in SQL with the
-        # same apex-degree cap; a degree-1 apex forms no pair so the
-        # 1/ln(1) pole is unreachable on both sides
-        "graph_link_predict": """
-WITH e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-), deg AS MATERIALIZED (
-  SELECT node, count(*) AS degree FROM (
-    SELECT a AS node FROM e0 UNION ALL SELECT b AS node FROM e0
-  ) GROUP BY node
-), adjd AS (
-  SELECT adj.apex, adj.nb, 1.0 / ln(d.degree) AS w
-  FROM (SELECT a AS apex, b AS nb FROM e0
-        UNION ALL SELECT b AS apex, a AS nb FROM e0) adj
-  JOIN deg d ON d.node = adj.apex
-  WHERE d.degree BETWEEN 2 AND 64
-), pairs AS (
-  SELECT x.nb AS a, y.nb AS b,
-         count(*) AS common_neighbors, sum(x.w) AS aa
-  FROM adjd x JOIN adjd y ON x.apex = y.apex AND x.nb < y.nb
-  GROUP BY x.nb, y.nb
-), nonadj AS (
-  SELECT p.* FROM pairs p ANTI JOIN e0 ON p.a = e0.a AND p.b = e0.b
-)
-SELECT n.a, n.b, n.common_neighbors,
-       round(n.common_neighbors
-             / (da.degree + db.degree - n.common_neighbors), 6) AS jaccard,
-       round(n.aa, 6) AS adamic_adar
-FROM nonadj n
-JOIN deg da ON da.node = n.a
-JOIN deg db ON db.node = n.b
-ORDER BY adamic_adar DESC, common_neighbors DESC, a ASC, b ASC
-LIMIT 100""",
-        "graph_kcore": _kcore_oracle(k=3, n_rounds=8),
         "doc_inverted_index": r"""
 WITH toks AS (
   SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS wl

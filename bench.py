@@ -76,28 +76,22 @@ def main() -> None:
         # round-4 additions: two-phase stratified mixing, decontamination
         # semi-join
         "doc_stratified_sample", "doc_decontaminate", "doc_filter_chain",
-        # round-5 additions: iterative PageRank over the purchase graph,
-        # corpus-trained unigram-LM quality scoring, sequence packing
-        "graph_pagerank", "doc_lm_score", "doc_pack_sequences",
-        # round-5 late additions: skew-safe triangle counting, tokenizer
-        # vocab coverage, tf-idf keywording
-        "graph_triangles", "doc_vocab", "doc_tfidf_keywords",
-        "graph_communities", "doc_collocations",
+        # round-5 additions: corpus-trained unigram-LM quality scoring,
+        # sequence packing, tokenizer vocab coverage, tf-idf keywording
+        "doc_lm_score", "doc_pack_sequences", "doc_vocab",
+        "doc_tfidf_keywords", "doc_collocations",
         "doc_mixture_plan", "doc_mixture_sample",
         # round-5 third-session additions: duplicate-passage spans, BM25
-        # ranked retrieval, HITS hubs/authorities
-        "doc_dup_spans", "doc_dup_clean", "doc_bm25", "graph_hits",
-        "graph_kcore", "graph_bfs", "doc_length_stats", "doc_bpe_merges",
+        # ranked retrieval
+        "doc_dup_spans", "doc_dup_clean", "doc_bm25", "doc_length_stats",
+        "doc_bpe_merges",
         # round-5 fourth-session addition: DSIR importance weighting
         "doc_importance",
-        # round-5 fifth-session additions: link prediction (CN/Jaccard/
-        # Adamic-Adar) with the apex-degree hub cap; CCNet head/middle/
-        # tail perplexity terciles
-        "graph_link_predict", "doc_ccnet_buckets", "graph_ppr",
+        # round-5 fifth-session addition: CCNet head/middle/tail
+        # perplexity terciles
+        "doc_ccnet_buckets",
         "doc_ngram_diversity", "doc_weighted_sample",
         "doc_chunks",
-        # round-5 sixth-session addition: weighted shortest paths
-        "graph_sssp",
         "doc_inverted_index", "doc_length_bins", "doc_textrank",
         "doc_rake",
     ]

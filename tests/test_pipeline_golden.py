@@ -1,7 +1,7 @@
 """Golden end-to-end gate (SURVEY §5.3): synthetic corpus -> full pipeline
 -> P/R >= 0.95 on (subject_canonical, predicate, object_canonical), plus
-the invariant suite: sha propagation, determinism, checkpoint-resume,
-idempotent materialization."""
+the invariant suite: resolved edges reference nodes, sha propagation,
+determinism, checkpoint-resume, idempotent materialization."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -42,6 +42,16 @@ def test_nodes_pr_gate(result, golden):
     got = {(r.entity_type, r.canonical_name) for r in result.nodes.collect()}
     p, r = _pr(got, gn)
     assert p >= 0.95 and r >= 0.95, (p, r)
+
+
+def test_resolved_edges_reference_nodes(result):
+    """Both endpoints of every resolved edge are rows of the node table."""
+    edges = result.edges.where(~F.col("need_coref"))
+    node_ids = result.nodes.select(F.col("entity_id").alias("id"))
+    for side in ("subject_entity_id", "object_entity_id"):
+        dangling = edges.join(
+            node_ids, edges[side] == node_ids["id"], "left_anti").count()
+        assert dangling == 0, side
 
 
 def test_content_sha_invariant(spark, result):
