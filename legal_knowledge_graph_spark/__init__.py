@@ -16,7 +16,7 @@ Pipeline stages (see SURVEY.md §7.1):
     st5 edgenorm  predicate alias + schema check  (ref: src/langgraph_agents/relation_norm_agent.py:87-298)
     st6 coref     BFS endpoint resolution         (ref: src/langgraph_agents/coref_agent.py:25-396)
     st7 metrics   QA metrics tables               (ref: src/langgraph_agents/qa_agent.py:102-150)
-    st8 graph     idempotent node/edge upsert     (ref: src/neo4j/client.py:47-194)
+    st8 graph     replace-snapshot node/edge write (ref: src/neo4j/client.py:47-194)
 
 Everything is DataFrame/SQL + Arrow-batched pandas UDFs; no per-row
 Python, no RDDs, no driver-side loops over data.

@@ -1,11 +1,12 @@
 """Stage-table IO, checkpoint manifest, the graph store (st8), and the
 KG path's small constant tables (`local_table`).
 
-Production target is Iceberg (`MERGE INTO` node/edge upsert, snapshot
-checkpointing — SURVEY §2.1 S4-S7). This sandbox has no Iceberg runtime
-jar, so the same contracts are implemented over parquet stage directories
-plus a JSON manifest, and `iceberg_merge_sql` emits the production
-upsert statement.
+Production target is Iceberg (snapshot checkpointing — SURVEY §2.1
+S4-S7). The graph is recomputed from its whole input, so each graph write
+replaces both tables (`INSERT OVERWRITE` / `REPLACE TABLE … AS SELECT`);
+only the mention ledger is upserted. This sandbox has no Iceberg runtime
+jar, so the same contracts are implemented over snapshot-versioned parquet
+directories plus a JSON manifest.
 
 Checkpoint-resume contract (north_rule "resumable from checkpoint with
 per-partition lineage"):
@@ -24,7 +25,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-from typing import Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
@@ -90,23 +90,8 @@ class StageStore:
 
 
 # ---------------------------------------------------------------------------
-# Graph store: idempotent node/edge upsert (st8)
+# Graph store: snapshot-versioned tables (st8)
 # ---------------------------------------------------------------------------
-def iceberg_merge_sql(table: str, key_cols: Iterable[str], all_cols: Iterable[str],
-                      source_view: str = "updates") -> str:
-    """The production Iceberg upsert (S4/S5 analog of the reference's
-    per-row Cypher MERGE, /root/reference/src/neo4j/client.py:80-96,128-142
-    — one set-oriented statement instead of one bolt round-trip per row)."""
-    on = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-    sets = ", ".join(f"t.{c} = s.{c}" for c in all_cols)
-    vals = ", ".join(all_cols)
-    return (
-        f"MERGE INTO {table} t USING {source_view} s ON {on} "
-        f"WHEN MATCHED THEN UPDATE SET {sets} "
-        f"WHEN NOT MATCHED THEN INSERT ({vals}) VALUES ({vals})"
-    )
-
-
 def _current_version(path: str) -> int | None:
     ptr = os.path.join(path, "_current")
     if os.path.exists(ptr):
@@ -121,14 +106,12 @@ def _version_dir(path: str, v: int) -> str:
 
 def upsert_parquet(spark: SparkSession, path: str, updates: DataFrame,
                    key_cols: list[str]) -> DataFrame:
-    """Idempotent last-write-wins upsert over a SNAPSHOT-VERSIONED parquet
-    table (sandbox stand-in for Iceberg MERGE INTO; same key semantics as
-    the reference's MERGE — client.py:80-84 'SET n = $properties'
-    overwrite). Each upsert writes a new immutable snapshot directory and
-    advances a `_current` pointer — previously returned DataFrame handles
-    stay valid, mirroring Iceberg snapshot isolation. The returned handle
-    carries the snapshot's row count as `_kg_rows`, observed on the write
-    job (no count job)."""
+    """The mention ledger's exactly-once upsert: last write wins on
+    `key_cols` (Iceberg `MERGE INTO` analog), so a replayed micro-batch
+    leaves the ledger unchanged. The merged table is written through
+    `replace_parquet` as a new snapshot. The returned handle carries the
+    snapshot's row count as `_kg_rows`, observed on the write job (no
+    count job)."""
     merged = updates.dropDuplicates(key_cols)
     cur = _current_version(path)
     if cur is not None:
@@ -158,64 +141,12 @@ def read_graph_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(_version_dir(path, cur))
 
 
-def _attached_edges(edges: DataFrame, stored_nodes: DataFrame) -> DataFrame:
-    """Resolved edges whose both endpoints are stored nodes (J6)."""
-    ids = stored_nodes.select("entity_id")
-    return (
-        edges.where(~F.col("need_coref"))
-        .join(ids.withColumnRenamed("entity_id", "subject_entity_id"),
-              "subject_entity_id", "left_semi")
-        .join(ids.withColumnRenamed("entity_id", "object_entity_id"),
-              "object_entity_id", "left_semi")
-    )
-
-
-def materialize_graph(spark: SparkSession, root: str, nodes: DataFrame,
-                      edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """st8: upsert nodes, then edges restricted to existing endpoints
-    (J6: Cypher `MATCH a MATCH b MERGE` writes nothing for dangling
-    endpoints — client.py:128-133)."""
-    nodes_path = os.path.join(root, "graph_nodes")
-    edges_path = os.path.join(root, "graph_edges")
-    stored_nodes = upsert_parquet(spark, nodes_path, nodes, ["entity_id"])
-    stored_edges = upsert_parquet(
-        spark, edges_path, _attached_edges(edges, stored_nodes), ["edge_id"])
-    return stored_nodes, stored_edges
-
-
-def write_bucketed_graph(
-    spark: SparkSession, nodes: DataFrame, edges: DataFrame,
-    n_buckets: int = 64, prefix: str = "kg",
-) -> tuple[str, str]:
-    """Materialize the graph as BUCKETED tables — nodes bucketed+sorted by
-    entity_id, edges by subject_entity_id — so the hot read-side join
-    (edge -> subject node expansion) is co-located: both sides' bucket
-    layout satisfies the join's required distribution and Catalyst plans a
-    SortMergeJoin with ZERO Exchange (asserted in tests/test_bucketed.py).
-    Production analog: Iceberg `bucket(N, entity_id)` partition transforms
-    with storage-partitioned joins; n_buckets scales with cluster cores
-    (4x tasks/core at the target parallelism). Returns the table names."""
-    nodes_t, edges_t = f"{prefix}_nodes_b", f"{prefix}_edges_b"
-    (nodes.write.bucketBy(n_buckets, "entity_id").sortBy("entity_id")
-     .mode("overwrite").format("parquet").saveAsTable(nodes_t))
-    (edges.write.bucketBy(n_buckets, "subject_entity_id")
-     .sortBy("subject_entity_id")
-     .mode("overwrite").format("parquet").saveAsTable(edges_t))
-    return nodes_t, edges_t
-
-
-def bucketed_edge_expansion(spark: SparkSession, nodes_t: str,
-                            edges_t: str) -> DataFrame:
-    """edges ⋈ subject-node over the bucketed tables: shuffle-free."""
-    n = spark.table(nodes_t).withColumnRenamed("entity_id", "subject_entity_id")
-    return spark.table(edges_t).join(n, "subject_entity_id")
-
-
 def replace_parquet(spark: SparkSession, path: str, df: DataFrame) -> DataFrame:
-    """Write `df` as a NEW snapshot version and swap the `_current` pointer
-    (Iceberg `REPLACE TABLE ... AS SELECT` analog). Unlike upsert_parquet
-    this does not merge: the new snapshot is exactly `df`, so rows absent
-    from it are gone — the right semantics for a recomputed view."""
+    """Write `df` as a new immutable snapshot directory `v0000N` and swap
+    the `_current` pointer (Iceberg `REPLACE TABLE … AS SELECT` analog):
+    the table is exactly `df` from then on, and handles returned earlier
+    keep reading their own snapshot, as under Iceberg snapshot
+    isolation."""
     cur = _current_version(path)
     nxt = 0 if cur is None else cur + 1
     out_dir = _version_dir(path, nxt)
@@ -230,16 +161,26 @@ def replace_parquet(spark: SparkSession, path: str, df: DataFrame) -> DataFrame:
 
 def snapshot_graph(spark: SparkSession, root: str, nodes: DataFrame,
                    edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Streaming-refresh materialization: the graph is a deterministic
-    function of the accumulated mention ledger, so each refresh REPLACES
-    the node/edge snapshots (merge would strand rows whose canonical
-    representative changed as later batches arrived). Same dangling-edge
-    guard as materialize_graph (J6)."""
+    """st8, the graph store's only writer: the graph is a deterministic
+    function of its whole input, so each write REPLACES the node and edge
+    snapshots under `root` (a merge would strand rows whose canonical
+    representative changed as the input grew). Returns the stored
+    tables."""
     stored_nodes = replace_parquet(
         spark, os.path.join(root, "graph_nodes"), nodes)
+    # J6: only resolved edges whose both endpoints are stored nodes
+    # (Cypher `MATCH a MATCH b MERGE` writes nothing for dangling
+    # endpoints — client.py:128-133)
+    ids = stored_nodes.select("entity_id")
+    attached = (
+        edges.where(~F.col("need_coref"))
+        .join(ids.withColumnRenamed("entity_id", "subject_entity_id"),
+              "subject_entity_id", "left_semi")
+        .join(ids.withColumnRenamed("entity_id", "object_entity_id"),
+              "object_entity_id", "left_semi")
+    )
     stored_edges = replace_parquet(
-        spark, os.path.join(root, "graph_edges"),
-        _attached_edges(edges, stored_nodes))
+        spark, os.path.join(root, "graph_edges"), attached)
     return stored_nodes, stored_edges
 
 
@@ -299,14 +240,3 @@ def export_graph_json(nodes: DataFrame, edges: DataFrame, path: str,
         json.dump(payload, f, indent=1, sort_keys=True, default=str)
     return {"format": "inline"}
 
-
-def clear_graph(root: str) -> None:
-    """S9 (client.py:168-173): drop the graph tables."""
-    for name in ("graph_nodes", "graph_edges"):
-        _rm(os.path.join(root, name))
-
-
-def _rm(path: str) -> None:
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)

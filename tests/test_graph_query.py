@@ -9,7 +9,7 @@ from legal_knowledge_graph_spark.operators.graph_query import (
     get_node, neighbors, nodes_of_type,
 )
 from legal_knowledge_graph_spark.plans import run_pipeline
-from legal_knowledge_graph_spark.sources.io import materialize_graph
+from legal_knowledge_graph_spark.sources.io import snapshot_graph
 
 
 def _pushed_filters(df) -> str:
@@ -22,7 +22,7 @@ def _pushed_filters(df) -> str:
 
 def test_graph_readback(spark, tmp_path):
     res = run_pipeline(spark, corpus_df(spark, 50, seed=42))
-    nodes, edges = materialize_graph(spark, str(tmp_path), res.nodes, res.edges)
+    nodes, edges = snapshot_graph(spark, str(tmp_path), res.nodes, res.edges)
 
     a_file = nodes_of_type(nodes, "File", limit=1).collect()[0]
     assert get_node(nodes, a_file.entity_id).count() == 1

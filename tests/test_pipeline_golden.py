@@ -1,14 +1,20 @@
 """Golden end-to-end gate (SURVEY §5.3): synthetic corpus -> full pipeline
 -> P/R >= 0.95 on (subject_canonical, predicate, object_canonical), plus
 the invariant suite: resolved edges reference nodes, sha propagation,
-determinism, checkpoint-resume, idempotent materialization."""
+determinism, checkpoint-resume, and a graph store that holds exactly the
+batch graph of its latest input (an idempotent snapshot write, and a
+prefix-then-whole write equal to the whole corpus's batch run)."""
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from legal_knowledge_graph_spark.corpus import corpus_df, generate_corpus
 from legal_knowledge_graph_spark.plans import KGPipeline, run_pipeline
-from legal_knowledge_graph_spark.sources.io import materialize_graph
+from legal_knowledge_graph_spark.sources.io import (
+    read_graph_table, snapshot_graph,
+)
 
 N = 120
 
@@ -104,12 +110,44 @@ def test_checkpoint_resume_equals_single_run(spark, result, tmp_path):
     assert e1 == e2 == direct
 
 
+def _ids(df, col):
+    return [getattr(r, col) for r in df.select(col).collect()]
+
+
 def test_materialize_idempotent(spark, result, tmp_path):
     root = str(tmp_path / "graph")
-    n1, e1 = materialize_graph(spark, root, result.nodes, result.edges)
-    c1 = (n1.count(), e1.count())
-    n2, e2 = materialize_graph(spark, root, result.nodes, result.edges)
-    assert (n2.count(), e2.count()) == c1
+    n1, e1 = snapshot_graph(spark, root, result.nodes, result.edges)
+    ids1 = (sorted(_ids(n1, "entity_id")), sorted(_ids(e1, "edge_id")))
+    n2, e2 = snapshot_graph(spark, root, result.nodes, result.edges)
+    assert (sorted(_ids(n2, "entity_id")), sorted(_ids(e2, "edge_id"))) == ids1
+    # each write is a new snapshot: the `_current` pointer advances
+    for name in ("graph_nodes", "graph_edges"):
+        with open(os.path.join(root, name, "_current")) as f:
+            assert f.read() == "1"
     # dangling edges (unresolved coref) are never materialized (J6)
     assert e2.where(e2.subject_entity_id.isNull()
                     | e2.object_entity_id.isNull()).count() == 0
+
+
+def test_snapshot_of_grown_input_equals_batch(spark, tmp_path):
+    """The store is a function of its whole input (ROADMAP direction 6):
+    the graph of a 60-file prefix, then the graph of all 240 files,
+    written into one root, leaves exactly the 240-file batch graph. An
+    upsert would keep a prefix node whose canonical representative
+    changed as the input grew, and that node's edge."""
+    files = corpus_df(spark, 240, seed=42)
+    root = str(tmp_path / "graph")
+    prefix = run_pipeline(spark, files.orderBy("repo", "path").limit(60))
+    snapshot_graph(spark, root, prefix.nodes, prefix.edges)
+    whole = run_pipeline(spark, files)
+    snapshot_graph(spark, root, whole.nodes, whole.edges)
+
+    node_ids = _ids(read_graph_table(spark, os.path.join(root, "graph_nodes")),
+                    "entity_id")
+    edge_ids = _ids(read_graph_table(spark, os.path.join(root, "graph_edges")),
+                    "edge_id")
+    assert len(node_ids) == len(set(node_ids))
+    assert len(edge_ids) == len(set(edge_ids))
+    assert set(node_ids) == set(_ids(whole.nodes, "entity_id"))
+    assert set(edge_ids) == set(_ids(
+        whole.edges.where(~F.col("need_coref")), "edge_id"))

@@ -30,7 +30,7 @@ def main() -> None:
     from legal_knowledge_graph_spark.operators.metrics import quality_report
     from legal_knowledge_graph_spark.plans import run_pipeline
     from legal_knowledge_graph_spark.session import build_session
-    from legal_knowledge_graph_spark.sources.io import materialize_graph
+    from legal_knowledge_graph_spark.sources.io import snapshot_graph
 
     spark = build_session(app_name="lkg-submit")
     if args.synthetic:
@@ -45,7 +45,9 @@ def main() -> None:
 
     res = run_pipeline(spark, files, checkpoint_root=args.checkpoint,
                        bucket_by_repo=args.buckets)
-    nodes, edges = materialize_graph(spark, args.output, res.nodes, res.edges)
+    # --input is the whole table, so replacing the graph snapshot leaves
+    # exactly the batch graph of that input, re-runs on a grown corpus too
+    nodes, edges = snapshot_graph(spark, args.output, res.nodes, res.edges)
     print(json.dumps(quality_report(nodes, edges)))
 
 
