@@ -320,13 +320,6 @@ def detect_mentions(block_type: str, lang: str, content: str) -> list[dict]:
     return out
 
 
-def _lines(content: str):
-    off = 0
-    for line in content.split("\n"):
-        yield line, off
-        off += len(line) + 1
-
-
 # --------------------------------------------------------------------------
 # Spark operators
 # --------------------------------------------------------------------------

@@ -4,8 +4,19 @@ Settings rationale (100 TB mindset, tested at local[*]):
 
 - Arrow on + bounded batch size: every extraction stage is a
   ``mapInPandas`` over Arrow batches; batch size bounds executor memory
-  for wide ``content`` rows (files up to ~50 KB mean a 10k-row batch is
-  ~500 MB — keep batches small where content is carried).
+  for wide ``content`` rows (files up to ~50 KB each), so batches stay at
+  2048 rows while content is carried.
+- Master: spark-submit's ``--master`` wins. When the driver was launched
+  by spark-submit (``PYSPARK_GATEWAY_PORT`` is set) and no ``master`` is
+  passed, the session leaves ``spark.master`` to it; otherwise the master
+  is ``local[$SPARK_GRAFT_CPUS]``, or ``local[*]`` when that is unset.
+- Python workers: for a local master this function resolves itself, the
+  workers fork from ``worker_daemon``, which imports pandas, pyarrow and
+  the extraction kernel once and freezes them, so the workers share those
+  pages instead of each holding a private copy. It is local-only because
+  the daemon must import the package when it starts: under spark-submit
+  ``--py-files`` the package reaches the workers per task, after the
+  daemon is up, so those runs keep Spark's stock daemon.
 - AQE on with skew-join handling: mega-repos (FIXTURES.md §1) skew the
   per-repo stages; AQE splits skewed partitions at runtime.
 - shuffle.partitions defaults to a small-cluster value; production
@@ -21,6 +32,8 @@ from pyspark.sql import SparkSession
 # Arrow batch ceiling while `content` is still in-flight. After st2 the
 # content column is pruned and default batching is fine.
 _ARROW_BATCH = "2048"
+
+_WORKER_DAEMON = "legal_knowledge_graph_spark.worker_daemon"
 
 
 def _default_driver_memory() -> str:
@@ -39,18 +52,26 @@ def build_session(
     """Create (or get) a SparkSession with the engine's standard config.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (all cores when
-    unset) so bench harnesses can pin parallelism; on a real cluster the
-    spark-submit master wins and this argument is left None.
+    unset) so bench harnesses can pin parallelism. Under spark-submit the
+    ``--master`` it was given wins and this argument is left None.
     """
-    if master is None:
+    builder = SparkSession.builder.appName(app_name)
+    submitted = "PYSPARK_GATEWAY_PORT" in os.environ
+    if master is None and not submitted:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
+    if master is not None:
+        builder = builder.master(master)
+        # local and local[N] only: local-cluster executors are separate
+        # JVMs that need not see the package
+        if master.split("[")[0] == "local" and not submitted:
+            builder = builder.config("spark.python.daemon.module",
+                                     _WORKER_DAEMON)
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
+        builder
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         # r6: coalescing stays ON — iteration-heavy operators scanning

@@ -47,6 +47,31 @@ def test_kg_import_surface_loads_only_kg_modules():
     assert loaded - KG_MODULES - KG_PACKAGES == set()
 
 
+def test_worker_daemon_import_preloads_kernel_without_serving():
+    """Importing `worker_daemon` loads what the forked workers share and
+    returns: `manager()` runs only under `__main__` (it would take the
+    process group and never return), and nothing is frozen yet."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import gc, json, os, sys\n"
+        "pgid = os.getpgid(0)\n"
+        f"import {PKG}.worker_daemon\n"
+        "print(json.dumps([sorted(sys.modules), gc.get_freeze_count(),\n"
+        "                  os.getpgid(0) == pgid]))\n"
+    )
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, env.get("PYTHONPATH")) if p)
+    out = subprocess.run([sys.executable, "-c", code], cwd=root, env=env,
+                         stdin=subprocess.DEVNULL, capture_output=True,
+                         text=True, check=True, timeout=120)
+    loaded, frozen, same_group = json.loads(
+        out.stdout.strip().splitlines()[-1])
+    assert {"pandas", "pyarrow", f"{PKG}.operators.mentions"} <= set(loaded)
+    assert frozen == 0
+    assert same_group
+
+
 def test_sources_compile_without_warnings():
     """An invalid escape such as '\\s' in a non-raw string is a
     DeprecationWarning today and a SyntaxError in later Pythons."""

@@ -36,6 +36,14 @@ def _by_type(ms, t):
     return [m for m in ms if m["entity_type"] == t]
 
 
+def _lines(content):
+    """(line, offset) pairs: the per-line walk the spec scans."""
+    off = 0
+    for line in content.split("\n"):
+        yield line, off
+        off += len(line) + 1
+
+
 def test_license_author_date():
     ms = detect_mentions(
         "LICENSE", "python",
@@ -141,7 +149,7 @@ def test_vectorized_scan_matches_per_line_spec():
     from legal_knowledge_graph_spark.operators.mentions import (
         AT_AUTHOR_RE, CALL_KEYWORDS, CALL_RE, CLASS_RE, COPYRIGHT_RE,
         DATE_RE, DEF_RE, LICENSE_RE, METHOD_RE, VER_DUNDER_RE,
-        VER_REQUIRES_RE, VER_WORD_RE, _lines, _mention,
+        VER_REQUIRES_RE, VER_WORD_RE, _mention,
     )
     from legal_knowledge_graph_spark.operators.segment import segment_text
     from legal_knowledge_graph_spark.schema import PRONOUNS
