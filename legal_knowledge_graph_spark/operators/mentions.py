@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..schema import DICTIONARY, MENTIONS_SCHEMA, PRONOUNS
-from .segment import segment_text
+from .segment import line_matches, segment_text
 
 # --------------------------------------------------------------------------
 # Pattern tables (compiled once per executor)
@@ -56,68 +56,6 @@ VER_REQUIRES_RE = re.compile(r"requires\s+version\s*>=\s*v?(\d+(?:\.\d+)+)", re.
 VER_DUNDER_RE = re.compile(r"__version__\s*=\s*[\"'](\d+(?:\.\d+)+)[\"']")
 VER_WORD_RE = re.compile(r"\bversion\s+v?(\d+(?:\.\d+)+)\b", re.IGNORECASE)
 
-
-# The patterns above are the spec; the hot path scans with forms derived
-# from them that find exactly the same matches in linear time. Rules
-# (the possessive `*+` needs Python >= 3.11):
-# - a first-character lookahead guard, compiled inside the pattern's own
-#   flags so it case-folds exactly as the pattern's first literal does
-#   (never a str.lower() prefilter: its folding differs from IGNORECASE).
-#   It lets the scan reject a start position with one class test instead
-#   of a lookbehind plus a 30-way alternation;
-# - a run is made possessive only where the token after it can never
-#   match a character the run would give back (whitespace before a
-#   non-space token, [\w.] before whitespace or "("), so backtracking into
-#   it could never produce a match.
-# Equivalence is pinned in tests/test_mentions.py, old against new.
-def _guarded(pat: re.Pattern, first: str) -> re.Pattern:
-    """`pat` behind a lookahead for the class its matches start with."""
-    return re.compile(f"(?={first})" + pat.pattern, pat.flags)
-
-
-LICENSE_ML = _guarded(LICENSE_RE, "[{}]".format(
-    "".join(sorted({re.escape(t[0]) for t in _license_terms}))))
-DATE_ML = _guarded(DATE_RE, r"\d")
-
-# Whole-content MULTILINE twins of the metadata patterns above. The hot
-# path scans each block ONCE per pattern (C-level) instead of once per
-# line per pattern — profiling showed the per-line loop at ~5 regex
-# invocations x ~1k lines/file was the top Python cost of the dominant
-# extraction stage. Every `\s` is narrowed to horizontal whitespace
-# ([^\S\n]) so a match can never absorb a newline and couple two lines —
-# semantics stay exactly line-local, asserted equal to the per-line
-# originals in tests/test_mentions.py. VER_WORD_ML is guarded and CALL_ML
-# possessive by the rules above.
-_HS = r"[^\S\n]"
-COPYRIGHT_ML = re.compile(
-    r"Copyright" + _HS + r"*(?:\(c\)|©)?" + _HS + r"*(\d{4})"
-    r"(?:" + _HS + r"*[-–]" + _HS + r"*\d{4})?,?" + _HS + r"+([^\n]+?)"
-    + _HS + r"*$", re.MULTILINE)
-AT_AUTHOR_ML = re.compile(
-    r"@author:?" + _HS + r"+(.+?)" + _HS + r"*$", re.MULTILINE)
-VER_REQUIRES_ML = re.compile(
-    r"requires" + _HS + r"+version" + _HS + r"*>=" + _HS
-    + r"*v?(\d+(?:\.\d+)+)", re.IGNORECASE)
-VER_DUNDER_ML = re.compile(
-    r"__version__" + _HS + r"*=" + _HS + r"*[\"'](\d+(?:\.\d+)+)[\"']")
-VER_WORD_ML = _guarded(re.compile(
-    r"\bversion" + _HS + r"+v?(\d+(?:\.\d+)+)\b", re.IGNORECASE), "v")
-GO_IMPORT_ML = re.compile(r"^" + _HS + r"*\"([\w/.-]+)\",?" + _HS + r"*$",
-                          re.MULTILINE)
-CLASS_ML = re.compile(
-    r"^class" + _HS + r"+([A-Za-z_]\w*)" + _HS
-    + r"*(?:\(" + _HS + r"*([A-Za-z_][\w.]*)" + _HS + r"*\))?" + _HS + r"*:|"
-    r"^class" + _HS + r"+([A-Za-z_]\w*)"
-    r"(?:" + _HS + r"+extends" + _HS + r"+([A-Za-z_][\w.]*))?"
-    + _HS + r"*\{", re.MULTILINE)
-DEF_ML = re.compile(
-    r"^(?:def|func)" + _HS + r"+([A-Za-z_]\w*)" + _HS + r"*\(|"
-    r"^(?:export" + _HS + r"+)?(?:async" + _HS + r"+)?function"
-    + _HS + r"+([A-Za-z_]\w*)" + _HS + r"*\(", re.MULTILINE)
-METHOD_ML = re.compile(
-    r"^" + _HS + r"+def" + _HS + r"+([A-Za-z_]\w*)" + _HS + r"*\(",
-    re.MULTILINE)
-CALL_ML = re.compile(r"([A-Za-z_][\w.]*+)" + _HS + r"*+\(")
 
 MODULE_PATTERNS: dict[str, list[re.Pattern]] = {
     "python": [
@@ -159,6 +97,116 @@ CALL_KEYWORDS = frozenset({
 _CALL_BLOCKS = {"CLASS", "FUNCTION", "TEST"}
 
 
+# The patterns above are the spec. The hot path finds exactly their
+# matches, in finditer order, without letting `re` try a match at every
+# character (~25-30 ns a position). Every scan is candidate-then-confirm:
+# - a C-speed literal search (str.find, or a regex whose first item is a
+#   literal, which `re` jumps between) yields a superset of the positions
+#   where the pattern can start a match;
+# - each candidate is confirmed left to right with pattern.match(content,
+#   pos), skipping candidates before the previous match's end, which is
+#   finditer's leftmost, non-overlapping order. Lookbehinds and \b still
+#   see the characters before pos.
+# Case-insensitive heads are found in a case-folded copy of the block. The
+# fold (_FOLD) maps one character to one, so positions carry over, and it
+# is used only to find candidates: ASCII A-Z to a-z plus the four other
+# code points IGNORECASE matches to [a-z] (U+0130, U+0131 -> i, U+017F -> s,
+# U+212A -> k). A plain str.lower() would not do: it lengthens U+0130 and
+# misses the other three.
+# Per-line spec patterns scan whole blocks through twins (_twin): every \s
+# narrowed to a horizontal blank, so no match spans a newline and each
+# equals the per-line match. Equivalence is pinned in tests/test_mentions.py.
+_HS = r"[^\S\n]"
+_FOLD = str.maketrans({**{chr(c): chr(c + 32) for c in range(65, 91)},
+                       "\u0130": "i", "\u0131": "i", "\u017f": "s",
+                       "\u212a": "k"})
+_LICENSE_HEADS = sorted({t[:3].lower() for t in _license_terms})
+# the date starts 4 characters before the "-" this twin of DATE_RE matches
+_DATE_DASH = re.compile(r"-(?<=(?<![\d-])\d\d\d\d-)\d\d-\d\d(?![\d-])")
+# "(" and the run before it, read backwards: the call name starts at the
+# first [A-Za-z_] of the [\w.] run before the blanks before "(". Exact
+# because "(" is neither an identifier character nor a blank.
+_CALL_BACK = re.compile(r"\(" + _HS + r"*+[\w.]*[A-Za-z_]")
+
+
+def _twin(pat: re.Pattern) -> re.Pattern:
+    """Whole-block twin of a per-line spec pattern (^ and $ at line bounds)."""
+    return re.compile(pat.pattern.replace(r"\s", _HS), pat.flags | re.MULTILINE)
+
+
+def _line_led(pat: re.Pattern) -> tuple[re.Pattern, re.Pattern | None]:
+    """`pat` and, when it opens with ^ (MULTILINE), its twin behind a
+    literal "\\n". Every alternative must then open with ^, as in each
+    pattern here."""
+    if not pat.pattern.startswith("^"):
+        return pat, None
+    return pat, re.compile(r"\n(?:" + pat.pattern + ")", pat.flags)
+
+
+COPYRIGHT_ML, AT_AUTHOR_ML, VER_REQUIRES_ML, VER_DUNDER_ML, VER_WORD_ML, \
+    CALL_ML = map(_twin, (COPYRIGHT_RE, AT_AUTHOR_RE, VER_REQUIRES_RE,
+                          VER_DUNDER_RE, VER_WORD_RE, CALL_RE))
+CLASS_LINES, DEF_LINES, METHOD_LINES, GO_IMPORT_LINES = (
+    _line_led(_twin(p)) for p in (CLASS_RE, DEF_RE, METHOD_RE,
+                                  GO_IMPORT_LINE_RE))
+MODULE_SCANS = {lang: [_line_led(p) for p in pats]
+                for lang, pats in MODULE_PATTERNS.items()}
+
+
+def _finds(hay: str, needle: str) -> Iterator[int]:
+    """Every index of `needle` in `hay`, ascending."""
+    i = hay.find(needle)
+    while i != -1:
+        yield i
+        i = hay.find(needle, i + 1)
+
+
+def _confirmed(pat: re.Pattern, content: str,
+               starts: Iterable[int]) -> Iterator[re.Match]:
+    """pat.finditer(content), given ascending candidate starts that include
+    every position where pat can start a match."""
+    end = 0
+    for pos in starts:
+        if pos >= end:
+            m = pat.match(content, pos)
+            if m:
+                end = m.end()
+                yield m
+
+
+def _scan(led, content: str) -> Iterator[tuple[int, re.Match]]:
+    """(match start, match) for every match of led[0], in finditer order;
+    a ^-anchored pattern tries only line starts (segment.line_matches)."""
+    pat, twin = led
+    if twin is None:
+        return ((m.start(), m) for m in pat.finditer(content))
+    return line_matches(pat, twin, content)
+
+
+def _licenses(content: str, low: str) -> Iterator[re.Match]:
+    starts = sorted(i for h in _LICENSE_HEADS for i in _finds(low, h))
+    return _confirmed(LICENSE_RE, content, starts)
+
+
+def _requires(content: str, low: str) -> Iterator[re.Match]:
+    return _confirmed(VER_REQUIRES_ML, content, _finds(low, "requires"))
+
+
+def _version_words(content: str, low: str) -> Iterator[re.Match]:
+    return _confirmed(VER_WORD_ML, content, _finds(low, "version"))
+
+
+def _dates(content: str) -> Iterator[re.Match]:
+    return _confirmed(DATE_RE, content,
+                      [d.start() - 4 for d in _DATE_DASH.finditer(content)])
+
+
+def _calls(content: str) -> Iterator[re.Match]:
+    n = len(content)
+    starts = [n - m.end() for m in _CALL_BACK.finditer(content[::-1])]
+    return _confirmed(CALL_ML, content, starts[::-1])
+
+
 def _mention(etype, text, start, end, conf, is_ref=False, evidence=None, **attrs):
     return {
         "entity_type": etype, "text": text, "start_pos": start, "end_pos": end,
@@ -174,21 +222,20 @@ def detect_mentions(block_type: str, lang: str, content: str) -> list[dict]:
     if not content:
         return out
 
-    # --- licenses / authors / dates / versions: scanned in any block ----
-    for m in LICENSE_ML.finditer(content):
-        line = content[content.rfind("\n", 0, m.start()) + 1:]
-        line = line[: line.find("\n")] if "\n" in line else line
-        out.append(_mention("License", m.group(0), m.start(), m.end(), 0.9,
-                            evidence=line.strip()[:200]))
-    # one C-level scan per pattern over the whole block; matches are
-    # line-confined by construction (see the _ML pattern definitions), so
-    # each is exactly what the former per-line loop produced. _line()
-    # reconstructs the enclosing line only per MATCH (rare), not per line.
+    # one scan per pattern over the whole block; matches are line-confined
+    # by construction (see _twin), so each is exactly what the former
+    # per-line loop produced. _line() reconstructs the enclosing line only
+    # per MATCH (rare), not per line.
     def _line(pos: int) -> str:
         ls = content.rfind("\n", 0, pos) + 1
         le = content.find("\n", pos)
         return content[ls:] if le == -1 else content[ls:le]
 
+    # --- licenses / authors / dates / versions: scanned in any block ----
+    low = content.translate(_FOLD)
+    for m in _licenses(content, low):
+        out.append(_mention("License", m.group(0), m.start(), m.end(), 0.9,
+                            evidence=_line(m.start()).strip()[:200]))
     for cm in COPYRIGHT_ML.finditer(content):
         line = _line(cm.start())
         out.append(_mention("Date", cm.group(1), cm.start(1), cm.end(1), 0.9,
@@ -201,10 +248,11 @@ def detect_mentions(block_type: str, lang: str, content: str) -> list[dict]:
     for am in AT_AUTHOR_ML.finditer(content):
         out.append(_mention("Author", am.group(1), am.start(1), am.end(1),
                             0.9, evidence=_line(am.start()).strip()[:200]))
-    for dm in DATE_ML.finditer(content):
+    for dm in _dates(content):
         line = _line(dm.start())
-        low = line.lower()
-        ctx = "modified" if ("last modified" in low or "updated" in low) else None
+        lowered = line.lower()
+        ctx = ("modified" if ("last modified" in lowered or "updated" in lowered)
+               else None)
         out.append(_mention("Date", dm.group(1), dm.start(1), dm.end(1), 0.9,
                             ctx=ctx, evidence=line.strip()[:200]))
     # versions keep the original PER-LINE precedence: first requires-match
@@ -213,7 +261,7 @@ def detect_mentions(block_type: str, lang: str, content: str) -> list[dict]:
     # a file version). finditer is left-to-right, so first-seen per
     # line-start == the per-line search()'s leftmost match.
     ver_lines: dict[int, object] = {}
-    for rm in VER_REQUIRES_ML.finditer(content):
+    for rm in _requires(content, low):
         ls = content.rfind("\n", 0, rm.start()) + 1
         if ls not in ver_lines:
             ver_lines[ls] = rm
@@ -227,24 +275,24 @@ def detect_mentions(block_type: str, lang: str, content: str) -> list[dict]:
             out.append(_mention("Version", vm.group(1), vm.start(1),
                                 vm.end(1), 0.9, ctx="has",
                                 evidence=_line(vm.start()).strip()[:200]))
-    for vm in VER_WORD_ML.finditer(content):
+    for vm in _version_words(content, low):
         ls = content.rfind("\n", 0, vm.start()) + 1
         if ls in ver_lines:
             continue
         ver_lines[ls] = None  # line handled either way (emit or suppress)
         line = _line(vm.start())
-        if not LICENSE_ML.search(line):
+        if not LICENSE_RE.search(line):
             out.append(_mention("Version", vm.group(1), vm.start(1),
                                 vm.end(1), 0.9, ctx="has",
                                 evidence=line.strip()[:200]))
 
     # --- modules --------------------------------------------------------
-    for pat in MODULE_PATTERNS.get(lang, MODULE_PATTERNS["python"]):
-        for m in pat.finditer(content):
+    for led in MODULE_SCANS.get(lang, MODULE_SCANS["python"]):
+        for _start, m in _scan(led, content):
             out.append(_mention("Module", m.group(1), m.start(1), m.end(1),
                                 0.95, role="import"))
     if lang == "go" and block_type == "IMPORTS":
-        for gm in GO_IMPORT_ML.finditer(content):
+        for _ls, gm in _scan(GO_IMPORT_LINES, content):
             out.append(_mention("Module", gm.group(1), gm.start(1),
                                 gm.end(1), 0.95, role="import"))
 
@@ -261,19 +309,17 @@ def detect_mentions(block_type: str, lang: str, content: str) -> list[dict]:
     # is equivalent to the per-line decl_span check).
     if block_type in _CALL_BLOCKS:
         events: list[tuple[int, int, str, re.Match]] = []
-        for cm in CLASS_ML.finditer(content):
-            events.append((cm.start(), 0, "class", cm))
-        for dm in DEF_ML.finditer(content):
-            events.append((dm.start(), 0, "def", dm))
-        for mm in METHOD_ML.finditer(content):
-            events.append((mm.start(), 0, "method", mm))
-        for m in CALL_ML.finditer(content):
+        for kind, led in (("class", CLASS_LINES), ("def", DEF_LINES),
+                          ("method", METHOD_LINES)):
+            for ls, m in _scan(led, content):
+                events.append((ls, 0, kind, m))
+        for m in _calls(content):
             events.append((m.start(1), 1, "call", m))
         events.sort(key=lambda e: (e[0], e[1]))
         encl: str | None = None
         cls: str | None = None
         decl_starts: set[int] = set()
-        for _pos, _, kind, m in events:
+        for pos, _, kind, m in events:
             if kind == "class":
                 name = m.group(1) or m.group(3)
                 base = m.group(2) or m.group(4)
@@ -281,7 +327,7 @@ def detect_mentions(block_type: str, lang: str, content: str) -> list[dict]:
                 cls, encl = name, None
                 out.append(_mention("Class", name, m.start(gi), m.end(gi),
                                     0.95, role="def",
-                                    evidence=_line(m.start()).strip()[:200]))
+                                    evidence=_line(pos).strip()[:200]))
                 if base:
                     bi = 2 if m.group(2) else 4
                     out.append(_mention("Class", base, m.start(bi), m.end(bi),
@@ -293,7 +339,7 @@ def detect_mentions(block_type: str, lang: str, content: str) -> list[dict]:
                 encl, cls = name, None
                 out.append(_mention("Function", name, m.start(gi), m.end(gi),
                                     0.95, role="def",
-                                    evidence=_line(m.start()).strip()[:200]))
+                                    evidence=_line(pos).strip()[:200]))
                 decl_starts.add(m.start(gi))
             elif kind == "method":
                 if cls is None:
@@ -302,7 +348,7 @@ def detect_mentions(block_type: str, lang: str, content: str) -> list[dict]:
                 encl = name
                 out.append(_mention("Function", name, m.start(1), m.end(1),
                                     0.95, role="method", cls=cls,
-                                    evidence=_line(m.start()).strip()[:200]))
+                                    evidence=_line(pos).strip()[:200]))
                 decl_starts.add(m.start(1))
             else:
                 name = m.group(1)

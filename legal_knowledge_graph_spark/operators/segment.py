@@ -32,7 +32,9 @@ from ..schema import BLOCKS_SCHEMA, HIERARCHY_PATTERNS, SECTION_PATTERNS
 # starting a new one (an import section is one block; each def is its own)
 _MERGEABLE = {"LICENSE", "HEADER", "IMPORTS", "DOC", "CONFIG", "COMMENT", "OTHER"}
 
-_COLLAPSE_RE = re.compile(r"\n{3,}")
+# "\n\n\n" is the literal prefix `re` jumps between; r"\n{3,}" has none
+# and is tried at every newline (10x slower on code)
+_COLLAPSE_RE = re.compile(r"\n\n\n+")
 
 
 def clean_text(content: str) -> str:
@@ -44,13 +46,19 @@ def clean_text(content: str) -> str:
     return _COLLAPSE_RE.sub("\n\n", "\n".join(lines))
 
 
-# The ordered pattern table compiled into ONE alternation: .match() tries
-# alternatives left-to-right at position 0, so the first table entry that
-# matches wins — identical first-match-wins semantics (rules.py:106-123)
-# at one C-level call per line instead of len(table). None of the table
-# patterns contain capturing groups, so each alternative's own group is
-# sequential and m.lastindex IS the matched table index; per-pattern
-# IGNORECASE is scoped inline with (?i:...).
+# The ordered pattern table compiled into ONE alternation: a match tries
+# alternatives left-to-right, so the first table entry that matches a line
+# wins — identical first-match-wins semantics (rules.py:106-123). None of
+# the table patterns contain capturing groups, so each alternative's own
+# group is sequential and m.lastindex IS the matched table index;
+# per-pattern IGNORECASE is scoped inline with (?i:...).
+#
+# The alternation scans a whole file at once, candidate-then-confirm as in
+# operators/mentions.py: one .match at 0, then a twin behind a literal
+# "\n", which `re` jumps between, so only line starts are tried. Every \s
+# is narrowed to a horizontal blank ([^\S\n]) and ^/$ hold at line bounds
+# (MULTILINE), so each match stays inside its line and equals the
+# per-line match of the table.
 #
 # The LICENSE and COMMENT alternatives open with `^\s*(?:prefix)?\s*`,
 # which splits a line's leading whitespace between the two runs in O(n^2)
@@ -66,19 +74,42 @@ def _hot_pattern(btype: str, pat: re.Pattern) -> str:
     src = pat.pattern
     if btype in _POSSESSIVE_WS:
         src = src.replace(r"\s*", r"\s*+")
+    src = src.replace(r"\s", r"[^\S\n]")
     return "((?i:{}))".format(src) if (pat.flags & re.IGNORECASE) \
         else "((?:{}))".format(src)
 
 
-_COMBINED_SECTION_RE = re.compile("|".join(
-    _hot_pattern(t, pat) for t, pat in SECTION_PATTERNS))
+_SECTIONS = "|".join(_hot_pattern(t, pat) for t, pat in SECTION_PATTERNS)
+# The twin tries the alternation only where a table entry can match: a
+# non-blank first character, or blanks then what the two entries that
+# open with \s* need next, a comment-prefix character or the first two
+# letters of a LICENSE keyword (inside (?i:), so they fold as the keywords
+# do). Most code lines are indented, and this rejects them in one pass
+# over their indentation.
+_LINE_GUARD = r"(?=\S|[^\S\n]++(?:[-#/*]|(?i:co|sp|li|mi|ap|bs|gp|mp|lg)))"
+_SECTION_AT_0 = re.compile(_SECTIONS, re.MULTILINE)
+_SECTION_LINES = re.compile(r"\n" + _LINE_GUARD + "(?:" + _SECTIONS + ")",
+                            re.MULTILINE)
 _SECTION_TYPES = [t for t, _p in SECTION_PATTERNS]
 
 
-def _line_type(line: str) -> str | None:
-    """First-match-wins over the ordered pattern table (rules.py:106-123)."""
-    m = _COMBINED_SECTION_RE.match(line)
-    return _SECTION_TYPES[m.lastindex - 1] if m else None
+def line_matches(at0: re.Pattern, twin: re.Pattern,
+                 text: str) -> Iterator[tuple[int, re.Match]]:
+    """(line start, match) of every match of the ^-anchored `at0`, in
+    finditer order: one .match at 0, then `twin` (`at0` behind a literal
+    "\\n") from there on, so only line starts are tried. No match may end
+    in "\\n"; then the twin's next "\\n" is never inside the previous match."""
+    m = at0.match(text)
+    if m:
+        yield 0, m
+    for t in twin.finditer(text, m.end() if m else 0):
+        yield t.start() + 1, t
+
+
+def _typed_lines(text: str) -> Iterator[tuple[int, str]]:
+    """(line start, block type) of every line the table types, in order."""
+    for start, m in line_matches(_SECTION_AT_0, _SECTION_LINES, text):
+        yield start, _SECTION_TYPES[m.lastindex - 1]
 
 
 def _level(line: str) -> int:
@@ -94,35 +125,27 @@ def segment_text(doc_key: str, content: str) -> list[dict]:
     if not text.strip():
         return []
 
+    # block-opening lines: the first line (OTHER when untyped), then each
+    # typed line unless it merges into the open block (same mergeable
+    # type); untyped lines continue the open block
+    typed = list(_typed_lines(text))
+    opens = [] if typed and typed[0][0] == 0 else [(0, "OTHER")]
+    for start, btype in typed:
+        if not opens or btype != opens[-1][1] or btype not in _MERGEABLE:
+            opens.append((start, btype))
+
     blocks: list[dict] = []
-    cur: dict | None = None
-    offset = 0
-    for line in text.split("\n"):
-        line_end = offset + len(line)
-        btype = _line_type(line)
-        if btype is None:
-            starts_new = cur is None  # continuation line
-        else:
-            starts_new = (
-                cur is None
-                or btype != cur["block_type"]
-                or btype not in _MERGEABLE
-            )
-        if starts_new:
-            if cur is not None:
-                blocks.append(cur)
-            cur = {
-                "block_type": btype or "OTHER",
-                "title": line.strip()[:120] or None,
-                "start_pos": offset,
-                "end_pos": line_end,
-                "level": _level(line),
-            }
-        else:
-            cur["end_pos"] = line_end
-        offset = line_end + 1
-    if cur is not None:
-        blocks.append(cur)
+    for i, (start, btype) in enumerate(opens):
+        end = opens[i + 1][0] - 1 if i + 1 < len(opens) else len(text)
+        line_end = text.find("\n", start, end)
+        line = text[start:end if line_end == -1 else line_end]
+        blocks.append({
+            "block_type": btype,
+            "title": line.strip()[:120] or None,
+            "start_pos": start,
+            "end_pos": end,
+            "level": _level(line),
+        })
 
     # parenting: nearest preceding block with smaller (nonzero) level
     stack: list[tuple[int, int]] = []  # (level, block index)

@@ -3,15 +3,18 @@
 import re
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
+import kernel_spec
 from legal_knowledge_graph_spark.operators import mentions as mn
 from legal_knowledge_graph_spark.operators.mentions import detect_mentions
 
-# Inputs where a guarded or possessive rewrite of a pattern would first
-# differ from its spec form: long blank runs, identifiers glued to
-# digits, dots and blanks before "(", license terms glued to "-" or \w,
-# dates touching digits or "-", and the case folds of the IGNORECASE
-# patterns (dotted/dotless i, Kelvin sign, long s).
+# Inputs where a candidate-then-confirm scan would first differ from its
+# spec form: long blank runs, identifiers glued to digits, dots and
+# blanks before "(", "(" at a block or line start, license terms glued to
+# "-" or \w, dates touching digits or "-" or the block bounds, candidate
+# heads inside words, keywords at position 0, and the case folds of the
+# IGNORECASE patterns (dotted/dotless i, Kelvin sign, long s).
 ADVERSARIAL = [
     "1abc( .foo( a.b  ( a.b\t\t( ab.( x.y.z   (1)\nfoo\n(bar)\n",
     "call" + " " * 400 + "x" + "\t" * 300 + "(\n" + "a" * 2000 + "\n",
@@ -29,19 +32,28 @@ ADVERSARIAL = [
     "Version 1.2 VERSION v2.0.1 version  1 xversion 1.0 versions 1.0\n"
     "version\n1.0 version 1.2.x \u1d5bersion 1.0 version 4.5_6\n",
     " " * 300 + "def f(): g()\n" + "\t" * 300 + "# Copyright 2020 X\n",
+    "(a) b(c)\n(d)\n  (e) 9x( 12( ._a.b( ..( a1.2( 1_( .( x.\n(y)\n",
+    "f\u3000(x) g\xa0\u2003(y) h\u2028(z) i\x0b\x0c(w) j\u205f\u3000 (v)\n",
+    "2024-01-15 starts and ends 2024-01-16",
+    "submit mitigate theme newline isclose conversion 1.0 subversion 2.0 "
+    "prerequires version >= 1.0 gplx ascl mozzarella apachee\n",
+    "İSC ıSC BſD-3-Clause verſion 1.0 versİon 2.0 versıon 3.0 "
+    "requıres version >= 4.0 requireſ verſion >= 5.0 \u212a\n",
+    "class A:\n  def m(s): pass\n",
+    "def f(x): return g(x)\n",
+    "import os\nfrom a.b import c\n",
+    "requires version >= 1.0 then version 2.0",
+    "version 1.2",
+    "MIT",
+    "\n\n   import x\n\n\n  from y import z\n",
+    "\nimport a as b\nclass B(C):\n    def m(self): d()\n",
+    "import helper from 'axios';\n  import {a, b}\nfrom \"x\"\nimport * as y from 'z'\n",
+    'import "fmt"\nimport (\n    "strings",\n\t"os/exec"\n)\n  import "a/b"\n',
 ]
 
 
 def _by_type(ms, t):
     return [m for m in ms if m["entity_type"] == t]
-
-
-def _lines(content):
-    """(line, offset) pairs: the per-line walk the spec scans."""
-    off = 0
-    for line in content.split("\n"):
-        yield line, off
-        off += len(line) + 1
 
 
 def test_license_author_date():
@@ -136,125 +148,29 @@ def test_date_modified_ctx():
     assert d["attributes"]["ctx"] == "modified"
 
 
+# block types x langs that reach every branch of the kernel: the code
+# walk, metadata only, go import lines, the javascript module patterns
+_KINDS = (("FUNCTION", "python"), ("COMMENT", "python"), ("IMPORTS", "go"),
+          ("CLASS", "javascript"))
+
+
+def _assert_kernel_matches_spec(content, kinds=_KINDS):
+    for bt, lang in kinds:
+        got = detect_mentions(bt, lang, content)
+        want = kernel_spec.mentions(bt, lang, content)
+        assert sorted(map(kernel_spec.mention_key, got)) == \
+            sorted(map(kernel_spec.mention_key, want)), (bt, lang, content)
+
+
 def test_vectorized_scan_matches_per_line_spec():
-    """The whole-content MULTILINE scans (one C-level pass per pattern)
-    must reproduce the per-line reference semantics exactly: matches are
-    line-confined (horizontal-whitespace-only patterns), version
-    precedence is per-line (requires > __version__ > word-form, license
-    lines suppress word-form), and the code walk replays the cls/encl
-    state machine. This reference implementation IS the spec the
-    vectorized path is pinned to; it scans with the spec patterns, the
-    kernel with their guarded and possessive hot-path forms."""
+    """The whole-block scans must reproduce the per-line reference
+    semantics exactly (tests/kernel_spec.py): matches are line-confined,
+    version precedence is per-line (requires > __version__ > word-form,
+    license lines suppress word-form), and the code walk replays the
+    cls/encl state machine. The reference scans with the spec patterns,
+    the kernel with its candidate-then-confirm scans."""
     from legal_knowledge_graph_spark.corpus import generate_corpus
-    from legal_knowledge_graph_spark.operators.mentions import (
-        AT_AUTHOR_RE, CALL_KEYWORDS, CALL_RE, CLASS_RE, COPYRIGHT_RE,
-        DATE_RE, DEF_RE, LICENSE_RE, METHOD_RE, VER_DUNDER_RE,
-        VER_REQUIRES_RE, VER_WORD_RE, _mention,
-    )
     from legal_knowledge_graph_spark.operators.segment import segment_text
-    from legal_knowledge_graph_spark.schema import PRONOUNS
-
-    def spec(block_type, content):
-        out = []
-        for line, off in _lines(content):
-            # no license term spans a newline, and the lookarounds treat
-            # a line boundary like a string boundary: per-line == whole
-            for lm in LICENSE_RE.finditer(line):
-                out.append(_mention("License", lm.group(0), off + lm.start(),
-                                    off + lm.end(), 0.9,
-                                    evidence=line.strip()[:200]))
-            cm = COPYRIGHT_RE.search(line)
-            if cm:
-                out.append(_mention("Date", cm.group(1), off + cm.start(1),
-                                    off + cm.end(1), 0.9, ctx="copyright",
-                                    evidence=line.strip()[:200]))
-                author = cm.group(2).rstrip(",;")
-                if author and len(author) <= 60 and not author[0].isdigit():
-                    out.append(_mention(
-                        "Author", author, off + cm.start(2),
-                        off + cm.start(2) + len(author), 0.9,
-                        evidence=line.strip()[:200]))
-            am = AT_AUTHOR_RE.search(line)
-            if am:
-                out.append(_mention("Author", am.group(1), off + am.start(1),
-                                    off + am.end(1), 0.9,
-                                    evidence=line.strip()[:200]))
-            low = line.lower()
-            ctx = ("modified"
-                   if ("last modified" in low or "updated" in low) else None)
-            for dm in DATE_RE.finditer(line):
-                out.append(_mention("Date", dm.group(1), off + dm.start(1),
-                                    off + dm.end(1), 0.9, ctx=ctx,
-                                    evidence=line.strip()[:200]))
-            rm = VER_REQUIRES_RE.search(line)
-            if rm:
-                out.append(_mention("Version", rm.group(1), off + rm.start(1),
-                                    off + rm.end(1), 0.9, ctx="requires",
-                                    evidence=line.strip()[:200]))
-            else:
-                vm = VER_DUNDER_RE.search(line) or (
-                    None if LICENSE_RE.search(line)
-                    else VER_WORD_RE.search(line))
-                if vm:
-                    out.append(_mention(
-                        "Version", vm.group(1), off + vm.start(1),
-                        off + vm.end(1), 0.9, ctx="has",
-                        evidence=line.strip()[:200]))
-        if block_type in {"CLASS", "FUNCTION", "TEST"}:
-            encl = cls = None
-            for line, off in _lines(content):
-                decl_span = None
-                cm = CLASS_RE.match(line)
-                dm = DEF_RE.match(line)
-                mm = METHOD_RE.match(line) if cls is not None else None
-                if cm:
-                    name = cm.group(1) or cm.group(3)
-                    base = cm.group(2) or cm.group(4)
-                    gi = 1 if cm.group(1) else 3
-                    cls, encl = name, None
-                    out.append(_mention("Class", name, off + cm.start(gi),
-                                        off + cm.end(gi), 0.95, role="def",
-                                        evidence=line.strip()[:200]))
-                    if base:
-                        bi = 2 if cm.group(2) else 4
-                        out.append(_mention("Class", base, off + cm.start(bi),
-                                            off + cm.end(bi), 0.95,
-                                            role="base", cls=name))
-                    decl_span = (cm.start(gi), cm.end(gi))
-                elif dm:
-                    name = dm.group(1) or dm.group(2)
-                    gi = 1 if dm.group(1) else 2
-                    encl, cls = name, None
-                    out.append(_mention("Function", name, off + dm.start(gi),
-                                        off + dm.end(gi), 0.95, role="def",
-                                        evidence=line.strip()[:200]))
-                    decl_span = (dm.start(gi), dm.end(gi))
-                elif mm:
-                    name = mm.group(1)
-                    encl = name
-                    out.append(_mention("Function", name, off + mm.start(1),
-                                        off + mm.end(1), 0.95, role="method",
-                                        cls=cls, evidence=line.strip()[:200]))
-                    decl_span = (mm.start(1), mm.end(1))
-                for m in CALL_RE.finditer(line):
-                    name = m.group(1)
-                    if decl_span and m.start(1) == decl_span[0]:
-                        continue
-                    if name.lower() in CALL_KEYWORDS:
-                        continue
-                    head = name.split(".", 1)[0].lower()
-                    if head in PRONOUNS or name.lower() in PRONOUNS:
-                        continue
-                    out.append(_mention(
-                        "Function", name, off + m.start(1), off + m.end(1),
-                        0.85, is_ref=len(name) <= 2, role="call", encl=encl,
-                        evidence=line.strip()[:200]))
-        return out
-
-    def key(m):
-        return (m["entity_type"], m["text"], m["start_pos"], m["end_pos"],
-                m["confidence"], m["is_reference"], m["evidence"],
-                tuple(sorted((m["attributes"] or {}).items())))
 
     fixtures = [
         "class A:\n    def m(self):\n        x(1)\n\ndef top():\n    y(2)\n"
@@ -280,73 +196,176 @@ def test_vectorized_scan_matches_per_line_spec():
     # blocks of large (content_scale 32) corpus files
     fixtures += [b["content"] for r in generate_corpus(3, 3, 32)[0]
                  for b in segment_text("d", r[4])]
-    # metadata patterns are scanned in every block type; Module patterns
-    # differ by lang and are already covered by dedicated tests — pin the
-    # python path here
     for content in fixtures:
-        for bt in ("FUNCTION", "COMMENT"):
-            got = [m for m in detect_mentions(bt, "python", content)
-                   if m["attributes"].get("role") != "import"]
-            want = spec(bt, content)
-            assert sorted(map(key, got)) == sorted(map(key, want)), (
-                bt, content)
+        _assert_kernel_matches_spec(content)
+
+
+# pieces of the inputs each scan's candidate rule reasons about
+_TOKENS = [
+    "(", ")", " ", "\t", "\n", "\u3000", "\xa0", "a", "Z", "_", ".", "1",
+    "-", ":", "#", "=", ">=", "'", "\"", "{", "\u0130", "\u0131", "\u017f",
+    "\u212a", "x(", "def ", "class ", "import ", "from ", "function ",
+    "    ", "extends ", "version ", "VERSION ", "requires ", "MIT", "mit",
+    "Apache-2.0", "BSD", "License", "the ", "2024-01-15", "2.0", "v1.2",
+    "Copyright ", "@author ", "__version__ = '1.0'", "updated ",
+]
+
+
+@given(st.lists(st.sampled_from(_TOKENS), max_size=40).map("".join))
+@settings(max_examples=300, deadline=None)
+def test_kernel_matches_spec_on_random_text(content):
+    _assert_kernel_matches_spec(content)
+
+
+def _stdlib_slice(cap_chars=5_000_000):
+    """The installed stdlib's .py files without site-packages or test
+    directories, sorted by path, taken in order until `cap_chars`."""
+    import os
+    import sysconfig
+
+    root = sysconfig.get_paths()["stdlib"]
+    skip = {"site-packages", "dist-packages", "test", "tests", "idle_test"}
+    paths = []
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if x not in skip]
+        paths += [os.path.relpath(os.path.join(d, f), root)
+                  for f in files if f.endswith(".py")]
+    out, total = [], 0
+    for rel in sorted(paths):
+        with open(os.path.join(root, rel), encoding="utf-8",
+                  errors="replace") as fh:
+            content = fh.read()
+        out.append((rel, content))
+        total += len(content)
+        if total >= cap_chars:
+            break
+    return out
+
+
+def test_stdlib_slice_matches_per_line_spec():
+    """Real code the generator never wrote: segmentation and mentions of
+    a sorted, size-capped slice of the installed stdlib equal the per-line
+    reference, row for row (the slice varies with the host's Python, so
+    rows are compared, never counts)."""
+    from legal_knowledge_graph_spark.operators.segment import segment_text
+
+    files = _stdlib_slice()
+    assert files
+    for rel, content in files:
+        blocks = segment_text(rel, content)
+        assert blocks == kernel_spec.segment(rel, content), rel
+        for b in blocks:
+            _assert_kernel_matches_spec(
+                b["content"], kinds=((b["block_type"], "python"),))
 
 
 def _twin(pat):
-    """The whole-content twin of a per-line spec pattern, built as the
-    twins are: every `\\s` narrowed to horizontal whitespace."""
-    return re.compile(pat.pattern.replace(r"\s", mn._HS), pat.flags)
+    """The whole-content twin of a per-line spec pattern: every `\\s`
+    narrowed to horizontal whitespace, ^ and $ at line bounds."""
+    return re.compile(pat.pattern.replace(r"\s", mn._HS),
+                      pat.flags | re.MULTILINE)
 
 
-# (spec form, hot-path form) of every pattern the hot path rewrites
+def _starts(ms):
+    return [(m.start(), m) for m in ms]
+
+
+def _low(t):
+    return t.translate(mn._FOLD)
+
+
+def _lines_of(led):
+    return lambda t: list(mn._scan(led, t))
+
+
+_PY, _JS, _GO = (mn.MODULE_PATTERNS[k] for k in ("python", "javascript", "go"))
+_PYS, _JSS, _GOS = (mn.MODULE_SCANS[k] for k in ("python", "javascript", "go"))
+
+# (spec form, hot scan as (match start, match) pairs) of every scan the
+# kernel runs in a candidate-then-confirm form
 SPEC_PAIRS = {
-    "LICENSE": (mn.LICENSE_RE, mn.LICENSE_ML),
-    "DATE": (mn.DATE_RE, mn.DATE_ML),
-    "VER_WORD": (_twin(mn.VER_WORD_RE), mn.VER_WORD_ML),
-    "CALL": (_twin(mn.CALL_RE), mn.CALL_ML),
+    "LICENSE": (mn.LICENSE_RE, lambda t: _starts(mn._licenses(t, _low(t)))),
+    "DATE": (mn.DATE_RE, lambda t: _starts(mn._dates(t))),
+    "VER_WORD": (_twin(mn.VER_WORD_RE),
+                 lambda t: _starts(mn._version_words(t, _low(t)))),
+    "VER_REQUIRES": (_twin(mn.VER_REQUIRES_RE),
+                     lambda t: _starts(mn._requires(t, _low(t)))),
+    "CALL": (_twin(mn.CALL_RE), lambda t: _starts(mn._calls(t))),
+    "CLASS": (_twin(mn.CLASS_RE), _lines_of(mn.CLASS_LINES)),
+    "DEF": (_twin(mn.DEF_RE), _lines_of(mn.DEF_LINES)),
+    "METHOD": (_twin(mn.METHOD_RE), _lines_of(mn.METHOD_LINES)),
+    "GO_IMPORT_LINE": (_twin(mn.GO_IMPORT_LINE_RE),
+                       _lines_of(mn.GO_IMPORT_LINES)),
+    "MODULE_PY_IMPORT": (_PY[0], _lines_of(_PYS[0])),
+    "MODULE_PY_FROM": (_PY[1], _lines_of(_PYS[1])),
+    "MODULE_JS_IMPORT": (_JS[1], _lines_of(_JSS[1])),
+    "MODULE_GO_IMPORT": (_GO[0], _lines_of(_GOS[0])),
 }
 
 
 @pytest.mark.parametrize("name", sorted(SPEC_PAIRS))
 def test_hot_patterns_match_spec_forms(name):
-    """Every match (span and groups) of a hot-path pattern equals its spec
-    form's, on large corpus files and on the adversarial fixtures."""
+    """Every match (start, end, group spans and groups) of a hot scan
+    equals its spec form's finditer, on large corpus files and on the
+    adversarial fixtures."""
     from legal_knowledge_graph_spark.corpus import generate_corpus
 
     spec, hot = SPEC_PAIRS[name]
     texts = [r[4] for r in generate_corpus(4, 7, 32)[0]] + ADVERSARIAL
 
-    def found(pat):
-        return [(m.span(), m.groups()) for t in texts for m in pat.finditer(t)]
+    def found(pairs):
+        return [(s, m.end(), m.regs[1:], m.groups()) for s, m in pairs]
 
-    want = found(spec)
+    want = found((m.start(), m) for t in texts for m in spec.finditer(t))
     assert want, name  # the inputs exercise the pattern
-    assert found(hot) == want
+    assert found(p for t in texts for p in hot(t)) == want
 
 
 def _all_chars() -> str:
     return "".join(map(chr, (*range(0xD800), *range(0xE000, 0x110000))))
 
 
+def test_fold_table_is_every_ignorecase_fold_onto_a_to_z():
+    """_FOLD maps one character to one, and exactly the code points
+    IGNORECASE matches to [a-z] (besides a-z itself) onto the letter they
+    match, so a head's candidates in the folded block are a superset of
+    where the IGNORECASE pattern can start."""
+    import string
+
+    hits = set(re.findall("[a-z]", _all_chars(), re.IGNORECASE))
+    assert {chr(k) for k in mn._FOLD} | set(string.ascii_lowercase) == hits
+    for c in hits:
+        f = c.translate(mn._FOLD)
+        assert f in string.ascii_lowercase and re.fullmatch(f, c, re.I), c
+
+
 def test_license_guard_accepts_every_case_fold():
-    """Each license term, with its first character replaced by every code
-    point IGNORECASE folds onto it (e.g. dotless i, Kelvin sign), is found
-    by the guarded pattern exactly as by the spec."""
+    """Each license term, with each character of its head (the first
+    three, which the scan finds in the folded block) replaced by every
+    code point IGNORECASE folds onto it (e.g. dotless i, long s), is found
+    by the kernel's license scan exactly as by the spec."""
     chars = _all_chars()
+    folds: dict[str, list[str]] = {}
     probes = []
     for term in mn._license_terms:
-        folds = re.findall(re.escape(term[0]), chars, re.IGNORECASE)
-        assert term[0] in folds
-        probes += [f"{c}{term[1:]} and ({c}{term[1:]})" for c in folds]
-    assert any(not p[0].isascii() for p in probes)  # folds exist
+        for k in range(3):
+            ch = term[k]
+            if ch not in folds:
+                folds[ch] = re.findall(re.escape(ch), chars, re.IGNORECASE)
+            assert ch in folds[ch]
+            probes += [f"{term[:k]}{c}{term[k + 1:]} and "
+                       f"({term[:k]}{c}{term[k + 1:]})" for c in folds[ch]]
+    assert any(not p.isascii() for p in probes)  # folds exist
     for p in probes:
         want = [m.span() for m in mn.LICENSE_RE.finditer(p)]
-        assert [m.span() for m in mn.LICENSE_ML.finditer(p)] == want, p
+        assert [m.span() for m in mn._licenses(p, _low(p))] == want, p
         assert want, p
 
 
 def test_possessive_runs_never_give_back_a_match():
-    """The premise of CALL_ML's possessive runs: no code point is both an
-    identifier character and a horizontal blank or "(", so giving one back
-    could never let the rest of the pattern match."""
+    """The premise of the CALL scan, read backwards from each "(": no code
+    point is both an identifier character and a horizontal blank or "(",
+    so the blanks and the [\\w.] run before a "(" are found exactly, and
+    a walk back from one "(" never passes the previous one."""
     assert not re.findall(r"(?=[\w.])[^\S\n]|(?=[\w.])\(", _all_chars())
+    assert not re.findall(r"(?=[^\S\n])\(", _all_chars())
