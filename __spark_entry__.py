@@ -8,9 +8,9 @@
   (SURVEY.md §2 + training-data ops); each takes (spark, sf_dir).
 - ``oracle_sql()``: DuckDB-runnable SQL equivalents for EVERY query (r2):
   the KG pipeline checks against spec-side golden parquet
-  (tools/make_goldens.py), minhash-LSH against the exact SQL its verify
-  stage guarantees (full recall verified deterministically at every sf),
-  simhash via a bit-exact SQL re-statement.
+  (tools/make_goldens.py), the other queries against SQL restatements
+  of their operators, or committed golden parquet where the operator is
+  not SQL-expressible (BPE).
 
 Column names and types are aligned pairwise (the driver hashes values
 after sorting columns by name).
@@ -25,10 +25,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from legal_knowledge_graph_spark.corpus import corpus_df
 from legal_knowledge_graph_spark.operators import doc_kg
-from legal_knowledge_graph_spark.operators.dedup import (
-    exact_duplicates, minhash_lsh_pairs, ngram_jaccard_pairs,
-    simhash_near_dup_pairs,
-)
 from legal_knowledge_graph_spark.operators.text_analysis import (
     BPE_ISH_TOKEN_RE, EN_STOPWORDS, fingerprints, language_id, quality_scores,
     token_counts, top_keywords,
@@ -157,60 +153,6 @@ def doc_top_keywords(spark, sf_dir):
     return top_keywords(_t(spark, sf_dir, "documents"), k=5)
 
 
-# --- dedup ------------------------------------------------------------------
-def doc_exact_dedup(spark, sf_dir):
-    return exact_duplicates(_t(spark, sf_dir, "documents"), min_count=1)
-
-
-def doc_ngram_jaccard(spark, sf_dir):
-    return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.5)
-
-
-def doc_minhash_dedup(spark, sf_dir):
-    return minhash_lsh_pairs(_t(spark, sf_dir, "documents"), threshold=0.5)
-
-
-def doc_simhash_dedup(spark, sf_dir):
-    return simhash_near_dup_pairs(_t(spark, sf_dir, "documents"), max_hamming=3)
-
-
-def doc_simhash_groups(spark, sf_dir):
-    """Group-mode simhash output (as_groups=True) under a hard oracle:
-    rep pairs computed over DISTINCT signatures (pigeonhole-exact
-    banding), members mapped to their signature group's min-doc rep at
-    hamming 0."""
-    return simhash_near_dup_pairs(_t(spark, sf_dir, "documents"),
-                                  max_hamming=3, as_groups=True)
-
-
-def doc_minhash_groups(spark, sf_dir):
-    """Group-mode minhash output (as_groups=True) under a hard oracle:
-    rep_pair rows = exact ngram-Jaccard pairs restricted to fingerprint-
-    group representatives; member rows = per-doc rep mapping whose score
-    is the df-capped within-group jaccard n_c/(2*n_sh - n_c) when the
-    group has >=2 docs and clears the threshold, else NULL — all
-    restated verbatim in SQL (df over per-doc-distinct shingles equals
-    the group-weighted rep df because identical docs share shingle
-    sets)."""
-    return minhash_lsh_pairs(_t(spark, sf_dir, "documents"), threshold=0.5,
-                             as_groups=True)
-
-
-def doc_dedup_keep(spark, sf_dir):
-    """Terminal keep-one dedup (dedup.deduplicate_corpus): identical docs
-    always merge, near-dups merge at 0.5 Jaccard, clusters collapse via
-    large-star/small-star connected components, min doc_id keeps. Oracle:
-    recursive-CTE closure over (exact ngram-Jaccard pairs >= 0.5 UNION
-    identical-fingerprint pairs) with min-reachable labeling — the
-    member-to-rep attach plus rep-graph closure is provably the same
-    partition."""
-    from legal_knowledge_graph_spark.operators.dedup import (
-        deduplicate_corpus,
-    )
-
-    return deduplicate_corpus(_t(spark, sf_dir, "documents"), threshold=0.5)
-
-
 def kg_term_components(spark, sf_dir):
     """The large-star/small-star connected-components operator (the
     canonicalization core, operators/components.py) surfaced directly:
@@ -320,21 +262,6 @@ def doc_repetition(spark, sf_dir):
     )
 
     return repetition_scores(_t(spark, sf_dir, "documents"))
-
-
-def doc_decontaminate(spark, sf_dir):
-    """Benchmark decontamination (dedup.benchmark_contamination): every
-    20th document plays the held-out benchmark; each doc reports what
-    fraction of its distinct shingles leak from that set. Benchmark
-    members score 1.0 by construction (self-overlap) — a built-in
-    correctness canary the oracle must reproduce."""
-    from legal_knowledge_graph_spark.operators.dedup import (
-        benchmark_contamination,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    benchmark = docs.where(F.col("doc_id") % 20 == 0)
-    return benchmark_contamination(docs, benchmark, threshold=0.5)
 
 
 def doc_stratified_sample(spark, sf_dir):
@@ -698,29 +625,6 @@ def doc_bm25(spark, sf_dir):
                        k1=1.2, b=0.75, topk=10)
 
 
-def doc_dup_clean(spark, sf_dir):
-    """Cleaned corpus after duplicate-span removal
-    (dedup.remove_duplicate_spans, remove-everywhere policy): covered
-    positions explode from the manifest, tokens LEFT ANTI on
-    (doc_id, pos), per-doc ordered reassembly. String-exact oracle."""
-    from legal_knowledge_graph_spark.operators.dedup import (
-        remove_duplicate_spans,
-    )
-
-    return remove_duplicate_spans(_t(spark, sf_dir, "documents"),
-                                  k=5, min_docs=2)
-
-
-def doc_dup_spans(spark, sf_dir):
-    """Duplicate-passage manifest (dedup.duplicate_spans, the Lee et al.
-    2022 substring-dedup shape): maximal token spans whose every 5-token
-    window appears in >= 2 distinct documents — positional zip-shift
-    windows, distinct-(doc,window) dup set, LEFT SEMI mark, per-doc
-    gaps-and-islands merge. Integer-exact oracle."""
-    from legal_knowledge_graph_spark.operators.dedup import duplicate_spans
-
-    return duplicate_spans(_t(spark, sf_dir, "documents"), k=5, min_docs=2)
-
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
@@ -736,17 +640,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_lang_id": doc_lang_id,
         "doc_fingerprint": doc_fingerprint,
         "doc_top_keywords": doc_top_keywords,
-        "doc_exact_dedup": doc_exact_dedup,
-        "doc_ngram_jaccard": doc_ngram_jaccard,
-        "doc_minhash_dedup": doc_minhash_dedup,
-        "doc_simhash_dedup": doc_simhash_dedup,
-        "doc_dedup_keep": doc_dedup_keep,
-        "doc_minhash_groups": doc_minhash_groups,
-        "doc_simhash_groups": doc_simhash_groups,
         "doc_pii": doc_pii,
         "doc_boilerplate": doc_boilerplate,
         "doc_repetition": doc_repetition,
-        "doc_decontaminate": doc_decontaminate,
         "doc_stratified_sample": doc_stratified_sample,
         "doc_filter_chain": doc_filter_chain,
         "doc_winnow": doc_winnow,
@@ -760,8 +656,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_collocations": doc_collocations,
         "doc_mixture_plan": doc_mixture_plan,
         "doc_mixture_sample": doc_mixture_sample,
-        "doc_dup_spans": doc_dup_spans,
-        "doc_dup_clean": doc_dup_clean,
         "doc_bm25": doc_bm25,
         "doc_length_stats": doc_length_stats,
         "doc_bpe_merges": doc_bpe_merges,
@@ -807,89 +701,6 @@ _DE = _stop_hits("text", ["der", "die", "das", "und", "ist", "nicht", "ein", "zu
 _FR = _stop_hits("text", ["le", "la", "les", "et", "est", "une", "pour", "dans"])
 
 _NORM = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
-
-_SHINGLES_CTE = r"""
-WITH toks AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM documents
-  WHERE len(string_split_regex(lower(trim(text)), '\s+')) >= 3
-), sh AS (
-  SELECT DISTINCT doc_id,
-         w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-  FROM toks, unnest(generate_series(1, len(w) - 2)) AS t(i)
-), sizes AS (
-  SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-), rare AS (
-  SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= 500
-), shb AS (
-  SELECT sh.doc_id, sh.shingle FROM sh JOIN rare USING (shingle)
-), inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-  FROM shb a JOIN shb b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)"""
-
-_NGRAM_JACCARD_SQL = _SHINGLES_CTE + """
-SELECT doc_a, doc_b,
-       round(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 6) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.5"""
-
-# Spec-side golden parquet (tools/make_goldens.py) — the driver's oracle runs
-# at sf0.01; tools/check_oracles.py rewrites the path for other sf dirs.
-# 64-bit SimHash in SQL: per-DISTINCT-token md5 -> first 8 bytes big-endian,
-# per-bit majority vote, reassembled as a signed BIGINT — byte-for-byte the
-# semantics of dedup._simhash_udf; pairs are all-pairs (test-scale oracle).
-_SIMHASH_SIGS_CTE = r"""
-WITH toks AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'),
-                            x -> x <> '')) AS tok
-  FROM documents
-), bits AS (
-  SELECT doc_id, b,
-     ((strpos('0123456789abcdef', substr(md5(tok), 16 - (b // 4), 1)) - 1)
-       >> (b % 4)) & 1 AS bit
-  FROM toks, unnest(generate_series(0, 63)) AS t(b)
-), acc AS (
-  SELECT doc_id, b, sum(2 * bit - 1) AS s FROM bits GROUP BY doc_id, b
-), rawsig AS (
-  SELECT doc_id,
-         sum(CASE WHEN s > 0 THEN (1::HUGEINT << b) ELSE 0::HUGEINT END) AS v
-  FROM acc GROUP BY doc_id
-), sigs AS (
-  SELECT d.doc_id,
-         CAST(CASE WHEN r.v IS NULL THEN 0
-                   WHEN r.v >= 9223372036854775808::HUGEINT
-                     THEN r.v - 18446744073709551616::HUGEINT
-                   ELSE r.v END AS BIGINT) AS v
-  FROM documents d LEFT JOIN rawsig r ON d.doc_id = r.doc_id
-)"""
-
-_SIMHASH_SQL = _SIMHASH_SIGS_CTE + """
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(bit_count(xor(a.v, b.v)) AS INT) AS hamming
-FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.v, b.v)) <= 3"""
-
-# group-mode contract: rep pairs over DISTINCT signatures (banding is
-# pigeonhole-exact for hamming <= 3), members map each doc to its
-# signature group's min-doc rep at score 0.0
-_SIMHASH_GROUPS_SQL = _SIMHASH_SIGS_CTE + """
-, grp AS (
-  SELECT v, min(doc_id) AS rep FROM sigs GROUP BY v
-), rp AS (
-  SELECT a.rep AS ra, b.rep AS rb, bit_count(xor(a.v, b.v)) AS h
-  FROM grp a JOIN grp b ON a.v < b.v
-  WHERE bit_count(xor(a.v, b.v)) <= 3
-)
-SELECT 'rep_pair' AS record_type, least(ra, rb) AS id_a,
-       greatest(ra, rb) AS id_b, CAST(h AS DOUBLE) AS score
-FROM rp
-UNION ALL
-SELECT 'member', grp.rep, sigs.doc_id, 0.0
-FROM sigs JOIN grp USING (v)"""
 
 # Winnowing re-stated in SQL: 5-gram md5 -> first 8 bytes as signed BIGINT
 # (hex-digit positional sum in HUGEINT), sliding-window-of-4 minima,
@@ -1036,68 +847,6 @@ SELECT query_id, rk, doc_id, bm25 FROM (
               ORDER BY round(score, 4) DESC, doc_id ASC) AS INT) AS rk
   FROM scored WHERE score > 0
 ) WHERE rk <= {topk}"""
-
-
-_DUP_SPANS_CORE = r"""
-WITH toks AS MATERIALIZED (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(coalesce(text,'')), '\s+'),
-                     x -> x <> '') AS w
-  FROM documents
-), pos AS (
-  SELECT doc_id, i, array_to_string(w[i:i+4], ' ') AS win
-  FROM toks, unnest(generate_series(1, len(w) - 4)) AS t(i)
-  WHERE len(w) >= 5
-), dup AS (
-  SELECT win FROM (SELECT DISTINCT doc_id, win FROM pos)
-  GROUP BY win HAVING count(*) >= 2
-), hits AS (
-  SELECT doc_id, i FROM pos WHERE win IN (SELECT win FROM dup)
-), lagged AS (
-  SELECT doc_id, i,
-         lag(i) OVER (PARTITION BY doc_id ORDER BY i) AS prev
-  FROM hits
-), isl AS MATERIALIZED (
-  SELECT doc_id, i,
-         sum(CASE WHEN prev IS NULL OR i > prev + 5 THEN 1 ELSE 0 END)
-           OVER (PARTITION BY doc_id ORDER BY i) AS g
-  FROM lagged
-)"""
-
-_DUP_SPANS_SQL = _DUP_SPANS_CORE + """
-SELECT doc_id, CAST(g AS INT) AS span_no,
-       CAST(min(i) AS INT) AS span_start,
-       CAST(max(i) + 4 AS INT) AS span_end,
-       CAST(max(i) + 4 - min(i) + 1 AS INT) AS span_tokens,
-       CAST(count(*) AS BIGINT) AS n_windows
-FROM isl GROUP BY doc_id, g"""
-
-_DUP_CLEAN_SQL = _DUP_SPANS_CORE + """,
-spans AS (
-  SELECT doc_id, min(i) AS s, max(i) + 4 AS e FROM isl GROUP BY doc_id, g
-), cov AS (
-  SELECT doc_id, unnest(generate_series(s, e)) AS p FROM spans
-), alltok AS MATERIALIZED (
-  SELECT doc_id, i, w[i] AS tok
-  FROM toks, unnest(generate_series(1, len(w))) AS t(i)
-), kept AS (
-  SELECT a.doc_id, a.i, a.tok FROM alltok a
-  WHERE NOT EXISTS (SELECT 1 FROM cov c
-                    WHERE c.doc_id = a.doc_id AND c.p = a.i)
-), orig AS (SELECT doc_id, count(*) AS n_tokens FROM alltok GROUP BY doc_id),
-reb AS (
-  SELECT doc_id, count(*) AS n_kept,
-         string_agg(tok, ' ' ORDER BY i) AS cleaned_text
-  FROM kept GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(coalesce(o.n_tokens, 0) AS BIGINT) AS n_tokens,
-       CAST(coalesce(o.n_tokens, 0) - coalesce(r.n_kept, 0) AS BIGINT)
-         AS n_removed,
-       coalesce(r.cleaned_text, '') AS cleaned_text
-FROM documents d
-LEFT JOIN orig o ON o.doc_id = d.doc_id
-LEFT JOIN reb r ON r.doc_id = d.doc_id"""
 
 
 def _rake_oracle(top_k: int = 3, max_phrase_len: int = 4) -> str:
@@ -1287,86 +1036,6 @@ WITH words AS (
   FROM counts
 )
 SELECT doc_id, word, n, rank FROM rk WHERE rank <= 5""",
-        "doc_exact_dedup": f"""
-SELECT md5({_NORM}) AS fingerprint, min(doc_id) AS rep_doc_id,
-       count(*) AS n_docs
-FROM documents GROUP BY 1""",
-        "doc_ngram_jaccard": _NGRAM_JACCARD_SQL,
-        # keep-one dedup: closure over (exact pairs >= 0.5 UNION identical
-        # fingerprints), min-reachable labeling (see doc_dedup_keep)
-        "doc_dedup_keep": _SHINGLES_CTE.replace(
-            "WITH toks", "WITH RECURSIVE toks", 1) + f"""
-, pairs AS (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sizes sa ON sa.doc_id = doc_a
-  JOIN sizes sb ON sb.doc_id = doc_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.5
-), fp AS (
-  SELECT doc_id, md5({_NORM}) AS f FROM documents
-), fpe AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM fp a JOIN fp b ON a.f = b.f AND a.doc_id < b.doc_id
-), bi AS (
-  SELECT doc_a AS s, doc_b AS d FROM pairs
-  UNION SELECT doc_b, doc_a FROM pairs
-  UNION SELECT doc_a, doc_b FROM fpe
-  UNION SELECT doc_b, doc_a FROM fpe
-), reach(t, r) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT bi.d, reach.r FROM reach JOIN bi ON bi.s = reach.t
-)
-SELECT t AS doc_id, min(r) AS group_rep, t = min(r) AS keep
-FROM reach GROUP BY t""",
-        # MinHash-LSH candidates + exact verify: a full-recall subset of the
-        # exact path on this corpus (verified at every sf), same values —
-        # so the SAME oracle is a hard rows+hash check, not a weaker bound.
-        "doc_minhash_dedup": _NGRAM_JACCARD_SQL,
-        "doc_simhash_dedup": _SIMHASH_SQL,
-        "doc_simhash_groups": _SIMHASH_GROUPS_SQL,
-        # group-mode contract restated: rep pairs = exact pairs between
-        # fingerprint-group reps; member score = capped within-group
-        # jaccard (NULL for singletons / sub-threshold / shingle-less)
-        "doc_minhash_groups": _SHINGLES_CTE + f"""
-, fp AS (
-  SELECT doc_id, md5({_NORM}) AS f FROM documents
-), grp AS (
-  SELECT f, min(doc_id) AS rep, count(*) AS nd FROM fp GROUP BY f
-), rsh AS (
-  SELECT sh.doc_id, sh.shingle FROM sh JOIN grp ON sh.doc_id = grp.rep
-), rsizes AS (
-  SELECT doc_id, count(*) AS n_sh FROM rsh GROUP BY doc_id
-), rcapped AS (
-  SELECT doc_id, count(*) AS n_c FROM rsh JOIN rare USING (shingle)
-  GROUP BY doc_id
-), rshb AS (
-  SELECT rsh.doc_id, rsh.shingle FROM rsh JOIN rare USING (shingle)
-), rinter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-  FROM rshb a JOIN rshb b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-), rep_pairs AS (
-  SELECT doc_a, doc_b,
-         round(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 6)
-           AS jaccard
-  FROM rinter
-  JOIN rsizes sa ON sa.doc_id = doc_a
-  JOIN rsizes sb ON sb.doc_id = doc_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.5
-), wg AS (
-  SELECT grp.rep,
-         round(CAST(n_c AS DOUBLE) / (2 * n_sh - n_c), 6) AS s
-  FROM grp
-  JOIN rsizes ON rsizes.doc_id = grp.rep
-  JOIN rcapped ON rcapped.doc_id = grp.rep
-  WHERE nd >= 2 AND CAST(n_c AS DOUBLE) / (2 * n_sh - n_c) >= 0.5
-)
-SELECT 'rep_pair' AS record_type, doc_a AS id_a, doc_b AS id_b,
-       jaccard AS score
-FROM rep_pairs
-UNION ALL
-SELECT 'member', grp.rep, fp.doc_id, wg.s
-FROM fp JOIN grp USING (f) LEFT JOIN wg ON wg.rep = grp.rep""",
         # regexes stay in the Java-regex ∩ RE2 common subset so this is a
         # verbatim restatement (operators/pii.py)
         "doc_pii": r"""
@@ -1427,8 +1096,8 @@ SELECT p.doc_id,
        CAST(COALESCE(r.n_kept, 0) AS BIGINT) AS n_kept,
        md5(COALESCE(r.cleaned, '')) AS cleaned_md5
 FROM planted p LEFT JOIN rebuilt r USING (doc_id)""",
-        # verbatim restatement of text_analysis.repetition_scores (same
-        # tokenization as the shingle CTE; short docs score 0.0)
+        # verbatim restatement of text_analysis.repetition_scores
+        # (lowercased whitespace tokens; short docs score 0.0)
         "doc_repetition": r"""
 WITH toks AS (
   SELECT doc_id,
@@ -1455,35 +1124,6 @@ SELECT b.doc_id,
                   THEN 1.0 - CAST(COALESCE(g.n_dg, 0) AS DOUBLE) / n_g
                   ELSE 0.0 END, 6) AS dup_3gram_frac
 FROM base b LEFT JOIN g USING (doc_id)""",
-        # verbatim restatement of dedup.benchmark_contamination: same
-        # shingle construction as _SHINGLES_CTE, benchmark = doc_id%20==0,
-        # unrounded-fraction flag
-        "doc_decontaminate": r"""
-WITH toks AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w
-  FROM documents
-  WHERE len(string_split_regex(lower(trim(text)), '\s+')) >= 3
-), sh AS (
-  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-  FROM toks, unnest(generate_series(1, len(w) - 2)) AS t(i)
-), bsh AS (
-  SELECT DISTINCT shingle FROM sh WHERE doc_id % 20 = 0
-), sizes AS (
-  SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-), hits AS (
-  SELECT doc_id, count(*) AS n_hit FROM sh JOIN bsh USING (shingle)
-  GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(COALESCE(s.n_sh, 0) AS BIGINT) AS n_sh,
-       CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit,
-       round(COALESCE(CAST(h.n_hit AS DOUBLE) / s.n_sh, 0.0), 6)
-         AS contamination,
-       COALESCE(CAST(h.n_hit AS DOUBLE) / s.n_sh, 0.0) >= 0.5
-         AS contaminated
-FROM documents d
-LEFT JOIN sizes s USING (doc_id)
-LEFT JOIN hits h USING (doc_id)""",
         # verbatim restatement of sampling.stratified_sample +
         # exact_k_per_stratum: the md5-prefix 32-bit hash is computed
         # identically (Spark conv(hex) == DuckDB ::BIGINT on '0x'||hex)
@@ -1595,6 +1235,9 @@ SELECT d AS entity_id, 'Term' AS entity_type, d AS canonical_name,
 UNION ALL
 SELECT d, 'Term', d, CAST(2 AS INT) FROM h2""",
         "kg_type_normalization": _type_norm_oracle(),
+        # spec-side golden parquet (tools/make_goldens.py): the driver's
+        # oracle runs at sf0.01; tools/check_oracles.py rewrites the path
+        # for other sf dirs
         "kg_pipeline_nodes": f"""
 SELECT entity_type, canonical_name
 FROM read_parquet('{_GOLDEN_DIR}/golden_nodes.parquet')""",
@@ -1882,8 +1525,6 @@ SELECT stratum, CAST(count(*) AS BIGINT) AS n_docs,
        round(CAST(quantile_cont(n_tok, 0.99) AS DOUBLE), 6) AS p99
 FROM toks GROUP BY stratum""",
         "doc_bm25": _bm25_oracle(BM25_QUERIES, k1=1.2, b=0.75, topk=10),
-        "doc_dup_spans": _DUP_SPANS_SQL,
-        "doc_dup_clean": _DUP_CLEAN_SQL,
         "doc_importance": r"""
 WITH words AS (
   SELECT doc_id, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS t,

@@ -71,19 +71,16 @@ def main() -> None:
     names = [
         "kg_doc_mentions", "kg_term_cooccurrence",
         "doc_token_count", "doc_quality", "doc_lang_id", "doc_pii",
-        "doc_boilerplate", "doc_exact_dedup",
-        "doc_minhash_dedup", "doc_simhash_dedup",
-        # round-4 additions: two-phase stratified mixing, decontamination
-        # semi-join
-        "doc_stratified_sample", "doc_decontaminate", "doc_filter_chain",
+        "doc_boilerplate",
+        # round-4 additions: two-phase stratified mixing
+        "doc_stratified_sample", "doc_filter_chain",
         # round-5 additions: corpus-trained unigram-LM quality scoring,
         # sequence packing, tokenizer vocab coverage, tf-idf keywording
         "doc_lm_score", "doc_pack_sequences", "doc_vocab",
         "doc_tfidf_keywords", "doc_collocations",
         "doc_mixture_plan", "doc_mixture_sample",
-        # round-5 third-session additions: duplicate-passage spans, BM25
-        # ranked retrieval
-        "doc_dup_spans", "doc_dup_clean", "doc_bm25", "doc_length_stats",
+        # round-5 third-session additions: BM25 ranked retrieval
+        "doc_bm25", "doc_length_stats",
         "doc_bpe_merges",
         # round-5 fourth-session addition: DSIR importance weighting
         "doc_importance",

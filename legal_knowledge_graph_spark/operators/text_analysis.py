@@ -965,7 +965,7 @@ def textrank_chunks(
         .localCheckpoint()
     # r6 OPTIMIZATION (VERDICT r5 #2 / guide §3): chunk pairs are
     # enumerated through the (doc_id, word) inverted index — the
-    # candidate_pairs_token_blocking / duplicate_spans discipline —
+    # candidate_pairs_token_blocking discipline —
     # instead of the intra-doc cross join a.join(b, "doc_id"), which
     # materialized n_chunks^2 rows per document BEFORE the common>0
     # filter (a 10^5-word doc -> 10^4 chunks -> 5x10^7 pairs in ONE

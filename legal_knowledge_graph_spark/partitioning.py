@@ -1,40 +1,15 @@
-"""Partition-width control for fan-out stages.
+"""Partition-width control for compute-heavy scans of small files.
 
-r6 finding (guide §2.2/§2.5): AQE's partition coalescing sizes
-post-shuffle partitions from the shuffle's COMPRESSED INPUT bytes —
-target = max(min(total/parallelism, advisory), minPartitionSize) — so a
-join whose input is a ~2 MB shuffle but whose OUTPUT explodes 50x-100x
-(shingle-posting self-joins, triangle wedges, positional-window
-blow-ups) gets coalesced onto a handful of tasks and runs an order of
-magnitude slow (measured at sf1.0: the dedup posting join 200 s
-coalesced vs 12 s at full width). Disabling coalescing globally is the
-wrong trade: iteration-heavy operators scanning small checkpoints are
-dominated by per-task fixed cost and LIKE byte-based coalescing
-(measured: the same 11M-row degree aggregate costs 2.6 s from a
-64-partition checkpoint vs 0.8 s from an 8-partition one).
-
-So coalescing stays ON globally and the known fan-out sites pin their
-width explicitly: ``repartition(n, cols)`` with an explicit ``n``
-plans a REPARTITION_BY_NUM exchange, which AQE never coalesces, and
-because it is keyed the same way as the downstream join/window it
-REPLACES that operator's exchange rather than adding one. The width is
-read from ``spark.sql.shuffle.partitions`` at call time — the same
-scale-adaptive knob production submits size to the cluster — never a
-constant tuned to the bench box.
+A few-MB parquet of short documents is one scan split, so the per-token
+expression work stacked on it runs on one or two cores until the first
+shuffle. ``repartition_compute`` widens such a scan to the session's
+default parallelism; it is a no-op on inputs that already scan as many
+splits.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def repartition_wide(df: DataFrame, *cols: str) -> DataFrame:
-    """Hash-repartition by ``cols`` at the full configured shuffle
-    width, pinned against AQE coalescing (see module docstring). Place
-    immediately upstream of a join/window keyed on ``cols`` whose
-    output fans out far beyond its input bytes."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return df.repartition(n, *cols)
 
 
 def repartition_compute(df: DataFrame) -> DataFrame:

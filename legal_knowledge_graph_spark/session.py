@@ -80,12 +80,6 @@ def build_session(
         # aggregate costs 2.6 s from a 64-partition checkpoint vs 0.8 s
         # from an 8-partition one; a full-suite A/B with coalescing off
         # regressed the whole iterative graph family ~+50 s at sf1.0).
-        # Coalescing's one pathology — fan-out joins behind small
-        # shuffles coalesced onto a handful of tasks (measured 200 s vs
-        # 12 s on the dedup posting self-join) — is fixed at the
-        # operator level with partitioning.repartition_wide (an explicit
-        # REPARTITION_BY_NUM exchange AQE never coalesces), not by
-        # flipping the global default.
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

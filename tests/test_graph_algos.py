@@ -1,7 +1,6 @@
-"""Text-analysis, packing and span-dedup operators: the unigram LM
-quality scorer, CCNet buckets, PMI collocations, sequence packing and
-duplicate-span removal — closed-form and reference-implementation checks
-on hand-built fixtures."""
+"""Text-analysis and packing operators: the unigram LM quality scorer,
+CCNet buckets, PMI collocations and sequence packing — closed-form and
+reference-implementation checks on hand-built fixtures."""
 
 import math
 
@@ -108,29 +107,6 @@ def test_pmi_collocations_empty_and_short_docs(spark):
     docs = spark.createDataFrame(
         [(1, ""), (2, "solo"), (3, "  ")], "doc_id long, text string")
     assert pmi_collocations(docs, k=5, min_count=1).count() == 0
-
-
-def test_remove_duplicate_spans_rebuilds_text(spark):
-    from legal_knowledge_graph_spark.operators.dedup import (
-        remove_duplicate_spans,
-    )
-
-    shared = "p1 p2 p3 p4 p5"
-    rows = [
-        (1, "u1 u2 " + shared + " u3 u4"),
-        (2, shared + " y1 y2"),
-        (3, "solo doc"),
-        (4, shared),           # entirely duplicated -> cleaned to ''
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: (r.n_tokens, r.n_removed, r.cleaned_text)
-           for r in remove_duplicate_spans(docs, k=5, min_docs=2).collect()}
-    assert got == {
-        1: (9, 5, "u1 u2 u3 u4"),
-        2: (7, 5, "y1 y2"),
-        3: (2, 0, "solo doc"),
-        4: (5, 5, ""),
-    }
 
 
 def test_ccnet_buckets_vs_reference(spark):

@@ -1,17 +1,13 @@
-"""Training-data operators: dedup families, text analysis, sampling —
-small planted cases with known answers."""
+"""Training-data operators: text analysis, scrubbing, sampling and
+mixing, tokenizer and retrieval scoring — small planted cases with known
+answers."""
 
 import hashlib
 import math
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from legal_knowledge_graph_spark.operators.dedup import (
-    exact_duplicates, minhash_lsh_pairs, ngram_jaccard_pairs,
-    simhash_near_dup_pairs, simhash_signatures,
-)
 from legal_knowledge_graph_spark.operators.sampling import importance_weights
 from legal_knowledge_graph_spark.operators.text_analysis import (
     language_id, quality_scores, token_counts, winnow_fingerprints,
@@ -31,36 +27,6 @@ def docs(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string")
 
 
-def test_exact_dedup(spark, docs):
-    groups = exact_duplicates(docs).collect()
-    assert len(groups) == 1
-    assert groups[0].rep_doc_id == 0 and groups[0].n_docs == 2
-
-
-def test_ngram_jaccard(spark, docs):
-    pairs = {(r.doc_a, r.doc_b): r.jaccard
-             for r in ngram_jaccard_pairs(docs, threshold=0.5).collect()}
-    assert (0, 3) in pairs and pairs[(0, 3)] == 1.0
-    assert (0, 1) in pairs and 0.5 <= pairs[(0, 1)] < 1.0
-    assert (0, 2) not in pairs
-
-
-def test_minhash_lsh_finds_planted_dups(spark, docs):
-    pairs = {(r.doc_a, r.doc_b) for r in
-             minhash_lsh_pairs(docs, threshold=0.5).collect()}
-    assert (0, 3) in pairs and (0, 1) in pairs
-    assert (0, 2) not in pairs
-
-
-def test_simhash(spark, docs):
-    sigs = {r.doc_id: r.simhash for r in simhash_signatures(docs).collect()}
-    assert sigs[0] == sigs[3]  # identical token sets -> identical simhash
-    pairs = {(r.doc_a, r.doc_b): r.hamming
-             for r in simhash_near_dup_pairs(docs, max_hamming=10).collect()}
-    assert pairs[(0, 3)] == 0
-    assert (0, 1) in pairs  # one word differs -> small hamming
-
-
 def test_text_analysis(spark, docs):
     tc = {r.doc_id: (r.n_ws_tokens, r.n_bpe_tokens)
           for r in token_counts(docs).collect()}
@@ -73,172 +39,6 @@ def test_text_analysis(spark, docs):
     wf = {r.doc_id: r.winnow for r in winnow_fingerprints(docs).collect()}
     assert wf[0] == wf[3] and wf[0] != wf[2]
     assert set(wf[0]) & set(wf[1])  # near-dups share fingerprints
-
-
-def test_minhash_equals_exact_at_test_scale(spark, docs):
-    """MinHash candidates + exact verify == the exact inverted-index path
-    on the fixture (full recall + identical values -> shared SQL oracle)."""
-    mh = sorted(map(tuple, minhash_lsh_pairs(docs, threshold=0.5).collect()))
-    ng = sorted(map(tuple, ngram_jaccard_pairs(docs, threshold=0.5).collect()))
-    assert mh == ng and mh
-
-
-def test_simhash_identical_doc_skew_collapses(spark):
-    """VERDICT r1 #3 (skew): many near-identical docs share ONE simhash —
-    candidate generation must run over distinct signatures (the band join
-    sees 1 row, not n), while doc-level output still contains every genuine
-    hamming-0 pair."""
-    n_dup = 80
-    rows = [(i, "hello world again") for i in range(n_dup)]
-    rows += [(1000, "completely different content about query engines"),
-             (1001, "completely different content about query planners")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {(r.doc_a, r.doc_b): r.hamming
-           for r in simhash_near_dup_pairs(docs, max_hamming=3).collect()}
-    dup_pairs = {(a, b) for (a, b) in out if a < n_dup and b < n_dup}
-    assert len(dup_pairs) == n_dup * (n_dup - 1) // 2
-    assert all(out[p] == 0 for p in dup_pairs)
-    # the two "different" docs pair with each other iff hamming <= 3,
-    # never with the dup group
-    assert not any((a < n_dup) != (b < n_dup) for a, b in out)
-
-
-def test_simhash_hot_band_subsplit_is_exact(spark, docs):
-    """band_cap=0 forces EVERY bucket through the 12-bit sub-band
-    refinement; the output must be identical to the direct band join
-    (pigeonhole exactness of the sub-split)."""
-    normal = sorted(map(tuple, simhash_near_dup_pairs(
-        docs, max_hamming=10).collect()))
-    forced = sorted(map(tuple, simhash_near_dup_pairs(
-        docs, max_hamming=10, band_cap=0).collect()))
-    assert normal == forced and normal
-
-
-def test_minhash_identical_doc_skew_collapses(spark):
-    """VERDICT r2 #1 (skew): N byte-identical docs share every band value,
-    so banding raw doc_ids would make the verify stage pay ~N^2 candidate
-    shingle-joins. The rep-based path must band DISTINCT contents only —
-    candidate rows stay O(reps^2) — while the doc-level output still
-    contains every genuine pair of the clone group at jaccard 1.0."""
-    from legal_knowledge_graph_spark.operators.dedup import (
-        _minhash_candidates, _shingles)
-    from legal_knowledge_graph_spark.operators.text_analysis import fingerprints
-
-    # n_dup must stay under SHINGLE_DF_CAP=500: a clone group larger than
-    # the df cap makes ALL its shingles "hot", so the capped-jaccard formula
-    # (and the SQL oracle) legitimately scores the group 0 — such groups are
-    # exact-dedup's job. 400 keeps every clone shingle rare.
-    n_dup = 400
-    base = "the quick brown fox jumps over the lazy dog near the river bank"
-    rows = [(i, base) for i in range(n_dup)]
-    rows += [(10_000, base + " tonight"),  # near-dup of the clone group
-             (10_001, "completely different text about distributed engines")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    # candidate stage runs over reps: 3 distinct contents -> <= C(3,2) rows
-    reps = exact_duplicates(docs, min_count=1)
-    rep_docs = docs.join(
-        reps.select(F.col("rep_doc_id").alias("doc_id")), "doc_id", "left_semi")
-    n_cand = _minhash_candidates(_shingles(rep_docs, "text"), 12).count()
-    assert n_cand <= 3  # C(3,2); banding never saw the 1000 clones
-
-    out = {(r.doc_a, r.doc_b): r.jaccard
-           for r in minhash_lsh_pairs(docs, threshold=0.5).collect()}
-    clone_pairs = {(a, b) for (a, b) in out if a < n_dup and b < n_dup}
-    assert len(clone_pairs) == n_dup * (n_dup - 1) // 2
-    assert all(out[p] == 1.0 for p in clone_pairs)
-    # the near-dup expands across the whole clone group, at ONE jaccard
-    near = {(a, b): j for (a, b), j in out.items() if b == 10_000}
-    assert len(near) == n_dup and len(set(near.values())) == 1
-    assert 0.5 <= next(iter(near.values())) < 1.0
-    assert not any(b == 10_001 or a == 10_001 for a, b in out)
-
-
-def _reconstruct_pairs(group_rows):
-    """Rebuild the all-pairs set from a group-mode result: cross pairs =
-    rep_pair x member expansion, within pairs = member pairs of groups
-    whose member score is non-null."""
-    members, wscore, rep_pairs = {}, {}, []
-    for r in group_rows:
-        if r.record_type == "member":
-            members.setdefault(r.id_a, []).append(r.id_b)
-            if r.score is not None:
-                wscore[r.id_a] = r.score
-        else:
-            rep_pairs.append((r.id_a, r.id_b, r.score))
-    pairs = {}
-    for ra, rb, s in rep_pairs:
-        for x in members[ra]:
-            for y in members[rb]:
-                pairs[(min(x, y), max(x, y))] = s
-    for rep, sc in wscore.items():
-        ms = sorted(members[rep])
-        for i in range(len(ms)):
-            for j in range(i + 1, len(ms)):
-                pairs[(ms[i], ms[j])] = sc
-    return pairs
-
-
-def test_dedup_group_mode_linear_and_reconstructs(spark):
-    """VERDICT r3 #4: as_groups=True emits O(reps + docs) rows on a
-    clone-heavy corpus (not O(clone^2) pairs) and the full pair set —
-    values included — reconstructs exactly from the group form."""
-    from legal_knowledge_graph_spark.operators.dedup import (
-        minhash_lsh_pairs, simhash_near_dup_pairs,
-    )
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    near = base + " lambda"
-    rows = ([(i, base) for i in range(40)]
-            + [(100 + i, near) for i in range(25)]
-            + [(200, "totally different words entirely here now"),
-               (201, "unrelated content of another flavor altogether")])
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    pairs = {(r.doc_a, r.doc_b): r.jaccard
-             for r in minhash_lsh_pairs(docs, threshold=0.5).collect()}
-    # 780 within-base + 300 within-near + 1000 cross
-    assert len(pairs) == 2080
-    grp = minhash_lsh_pairs(docs, threshold=0.5, as_groups=True).collect()
-    assert len(grp) <= len(rows) + 5  # linear: members + rep pairs
-    assert _reconstruct_pairs(grp) == pairs
-
-    spairs = {(r.doc_a, r.doc_b): float(r.hamming)
-              for r in simhash_near_dup_pairs(docs, max_hamming=12).collect()}
-    sgrp = simhash_near_dup_pairs(docs, max_hamming=12,
-                                  as_groups=True).collect()
-    assert len(sgrp) <= len(rows) + 5
-    assert _reconstruct_pairs(sgrp) == spairs
-    assert len(spairs) >= 780 + 300  # clone groups all pair at hamming 0
-
-
-def test_deduplicate_corpus_keep_one(spark):
-    """Terminal keep-one dedup: the base+near clone cluster (40 + 25 docs,
-    jaccard 8/9) collapses to ONE keeper (min doc_id), uniques keep
-    themselves, and the kept corpus is exactly the cluster reps."""
-    from legal_knowledge_graph_spark.operators.dedup import (
-        deduplicate_corpus,
-    )
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    near = base + " lambda"
-    rows = ([(i, base) for i in range(40)]
-            + [(100 + i, near) for i in range(25)]
-            + [(200, "totally different words entirely here now"),
-               (201, "unrelated content of another flavor altogether")])
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           deduplicate_corpus(docs, threshold=0.5).collect()}
-    assert len(out) == len(rows)
-    keepers = {d for d, r in out.items() if r.keep}
-    assert keepers == {0, 200, 201}
-    # every member of the merged cluster points at doc 0
-    assert all(out[i].group_rep == 0 for i in list(range(40))
-               + [100 + i for i in range(25)])
-    kept_corpus = docs.join(
-        deduplicate_corpus(docs, threshold=0.5).where("keep"),
-        "doc_id", "left_semi")
-    assert sorted(r.doc_id for r in kept_corpus.collect()) == [0, 200, 201]
 
 
 def test_pii_scan_counts_and_redaction(spark):
@@ -295,59 +95,6 @@ def test_boilerplate_removal(spark):
         docs, min_docs=2, min_doc_frac=0.9).collect()} == set()
     assert {r.line for r in boilerplate_lines(
         docs, min_docs=2, min_doc_frac=0.5).collect()} == {footer}
-
-
-def test_shingle_zip_shift_equals_slice_spec(spark):
-    """_shingles' zip-shift construction (element_at pulls, 10x faster
-    than per-index slice inside transform) must emit exactly the distinct
-    K-word shingles of the per-index-slice specification."""
-    from legal_knowledge_graph_spark.operators.dedup import (
-        SHINGLE_K, _shingles,
-    )
-
-    rows = [(0, "a b c"), (1, "a b"), (2, ""), (3, None),
-            (4, "x  y   z w"), (5, "a a a a"), (6, " lead trail  "),
-            (7, "one two three four five six")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    def spec(text):
-        toks = (text or "").lower().split()
-        return {" ".join(toks[i:i + SHINGLE_K])
-                for i in range(max(0, len(toks) - SHINGLE_K + 1))} \
-            if len(toks) >= SHINGLE_K else set()
-
-    got = {}
-    for r in _shingles(docs, "text").collect():
-        got.setdefault(r.doc_id, set()).add(r.shingle)
-    for doc_id, text in rows:
-        assert got.get(doc_id, set()) == spec(text), doc_id
-
-
-def test_benchmark_contamination(spark):
-    from legal_knowledge_graph_spark.operators.dedup import (
-        benchmark_contamination,
-    )
-
-    bench_text = "alpha beta gamma delta epsilon zeta"
-    rows = [
-        (0, bench_text),                                   # benchmark member
-        (1, "alpha beta gamma delta unrelated tail here"), # partial overlap
-        (2, "totally different words in this one doc"),    # clean
-        (3, "xy"),                                         # too short: 0 shingles
-        (4, bench_text + " extra"),                        # heavy overlap
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    benchmark = docs.where("doc_id = 0")
-    out = {r.doc_id: r for r in
-           benchmark_contamination(docs, benchmark, threshold=0.5).collect()}
-    assert out[0].contamination == 1.0 and out[0].contaminated
-    # doc1: shingles = 5, overlapping = {alpha beta gamma, beta gamma delta}
-    assert (out[1].n_sh, out[1].n_hit) == (5, 2)
-    assert out[1].contamination == 0.4 and not out[1].contaminated
-    assert out[2].n_hit == 0 and not out[2].contaminated
-    assert (out[3].n_sh, out[3].contamination) == (0, 0.0)
-    # doc4: 5 shingles, 4 of them inside the benchmark text
-    assert out[4].contaminated and out[4].n_hit == 4
 
 
 def test_stratified_sampling_deterministic(spark):
@@ -603,58 +350,6 @@ def test_resample_to_mixture_replays_hash_and_hits_target(spark):
     # the scarce stratum (b, 25% observed vs 50% target) is kept whole
     kept_langs = Counter(l for i, l in rows if i in set(kept))
     assert kept_langs["b"] == cnt["b"]
-
-
-def test_duplicate_spans_manifest(spark):
-    from legal_knowledge_graph_spark.operators.dedup import duplicate_spans
-
-    # t1..t20 vocab; the shared passage is tokens p1..p8 (eight tokens =
-    # four 5-token windows when embedded verbatim)
-    shared = "p1 p2 p3 p4 p5 p6 p7 p8"
-    rows = [
-        # doc 1: shared passage at positions 3..10, then unique tail,
-        # then the shared passage AGAIN at 21..28 (second island)
-        (1, "u1 u2 " + shared + " " + " ".join(f"x{i}" for i in range(10))
-            + " " + shared),
-        # doc 2: shared passage at the very start (positions 1..8)
-        (2, shared + " y1 y2 y3 y4 y5"),
-        # doc 3: a WITHIN-DOC repeated 5-gram that appears nowhere else —
-        # must NOT be flagged (dup set counts distinct docs)
-        (3, "q1 q2 q3 q4 q5 z1 z2 q1 q2 q3 q4 q5"),
-        # doc 4: no overlap at all
-        (4, " ".join(f"w{i}" for i in range(12))),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = duplicate_spans(docs, k=5, min_docs=2)
-    got = {(r.doc_id, r.span_no): (r.span_start, r.span_end,
-                                   r.span_tokens, r.n_windows)
-           for r in out.collect()}
-    assert got == {
-        (1, 1): (3, 10, 8, 4),     # windows at 3,4,5,6 -> span 3..10
-        (1, 2): (21, 28, 8, 4),    # gap splits the islands
-        (2, 1): (1, 8, 8, 4),
-    }
-    # determinism across runs
-    again = {(r.doc_id, r.span_no): (r.span_start, r.span_end,
-                                     r.span_tokens, r.n_windows)
-             for r in duplicate_spans(docs, k=5, min_docs=2).collect()}
-    assert again == got
-
-
-def test_duplicate_spans_merges_touching_islands(spark):
-    from legal_knowledge_graph_spark.operators.dedup import duplicate_spans
-
-    # two docs share two DISJOINT 5-grams placed back-to-back in doc 1
-    # (windows at pos 1 and pos 6: spans 1..5 and 6..10 touch -> one span)
-    a, b = "a1 a2 a3 a4 a5", "b1 b2 b3 b4 b5"
-    docs = spark.createDataFrame(
-        [(1, a + " " + b), (2, a + " z1 z2 z3 z4 z5 " + b)],
-        "doc_id long, text string")
-    got = {(r.doc_id, r.span_no): (r.span_start, r.span_end, r.n_windows)
-           for r in duplicate_spans(docs, k=5, min_docs=2).collect()}
-    assert got[(1, 1)] == (1, 10, 2)          # merged into one maximal span
-    assert got[(2, 1)] == (1, 5, 1)           # doc 2 keeps them separate
-    assert got[(2, 2)] == (11, 15, 1)
 
 
 def test_bm25_closed_form(spark):
