@@ -9,8 +9,7 @@
 - ``oracle_sql()``: DuckDB-runnable SQL equivalents for EVERY query (r2):
   the KG pipeline checks against spec-side golden parquet
   (tools/make_goldens.py), the other queries against SQL restatements
-  of their operators, or committed golden parquet where the operator is
-  not SQL-expressible (BPE).
+  of their operators.
 
 Column names and types are aligned pairwise (the driver hashes values
 after sorting columns by name).
@@ -202,33 +201,6 @@ def kg_term_neighbors(spark, sf_dir):
                       F.col("hop").cast("int").alias("hop"))
 
 
-def doc_pii(spark, sf_dir):
-    """PII detection/redaction (operators/pii.py). The synthetic documents
-    carry no PII, so the query plants one email/IPv4/phone per row with a
-    deterministic doc_id-derived expression replicated verbatim in the SQL
-    oracle — the detector and redactor then have real work whose counts
-    and redacted strings must match byte-for-byte."""
-    from legal_knowledge_graph_spark.operators.pii import pii_scan
-
-    docs = _t(spark, sf_dir, "documents")
-    planted = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"), F.col("doc_id").cast("string"),
-            F.lit("@example.com from 10.0."),
-            (F.col("doc_id") % 256).cast("string"),
-            F.lit(".7 tel 555-123-4567"),
-        ).alias("text"))
-    out = pii_scan(planted)
-    return out.select(
-        "doc_id",
-        F.col("n_emails").cast("long").alias("n_emails"),
-        F.col("n_ipv4").cast("long").alias("n_ipv4"),
-        F.col("n_phones").cast("long").alias("n_phones"),
-        "redacted")
-
-
 def doc_boilerplate(spark, sf_dir):
     """CCNet-style boilerplate-line removal (text_analysis.py). A corpus
     header/footer is planted into every document plus one unique per-doc
@@ -264,23 +236,6 @@ def doc_repetition(spark, sf_dir):
     return repetition_scores(_t(spark, sf_dir, "documents"))
 
 
-def doc_stratified_sample(spark, sf_dir):
-    """Deterministic data mixing (sampling.py): per-language Bernoulli
-    rates + exact-k per source, both driven by the engine-portable
-    md5-prefix hash so DuckDB replays the selection verbatim."""
-    from legal_knowledge_graph_spark.operators.sampling import (
-        exact_k_per_stratum, stratified_sample,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    bern = stratified_sample(
-        docs, "lang", {"en": 0.5, "de": 0.25}, default_fraction=0.1,
-        seed=7).select("doc_id", F.lit("bernoulli").alias("method"))
-    topk = exact_k_per_stratum(docs, "source", k=25, seed=7).select(
-        "doc_id", F.lit("exact_k").alias("method"))
-    return bern.unionByName(topk)
-
-
 def doc_filter_chain(spark, sf_dir):
     """C4/RefinedWeb-style composite pretraining filter
     (text_analysis.pretraining_filter): language + quality + repetition +
@@ -296,17 +251,6 @@ def doc_filter_chain(spark, sf_dir):
         _t(spark, sf_dir, "documents"), allowed_langs=("en", "de"),
         min_quality=0.5, max_dup_3gram_frac=0.3, min_chars=100,
         blocked_sources=("src13", "src7"))
-
-
-def doc_winnow(spark, sf_dir):
-    """Winnowing fingerprints (Schleimer et al.) exploded to (doc_id, pick)
-    rows — exploded so the oracle compares scalar rows, not array renderings."""
-    from legal_knowledge_graph_spark.operators.text_analysis import (
-        winnow_fingerprints,
-    )
-
-    out = winnow_fingerprints(_t(spark, sf_dir, "documents"))
-    return out.select("doc_id", F.explode("winnow").alias("pick"))
 
 
 def kg_type_normalization(spark, sf_dir):
@@ -344,46 +288,6 @@ def _type_norm_inputs(block_aliases, block_types, entity_aliases, entity_types):
     return rows
 
 
-def doc_lm_score(spark, sf_dir):
-    """Unigram-LM quality score (text_analysis.unigram_lm_scores): corpus-
-    trained token frequencies, per-doc mean log10 probability — the
-    CCNet/Gopher perplexity-filter shape without external LM weights."""
-    from legal_knowledge_graph_spark.operators.text_analysis import (
-        unigram_lm_scores,
-    )
-
-    out = unigram_lm_scores(_t(spark, sf_dir, "documents"))
-    return out.select(
-        "doc_id", F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.round("avg_logprob", 4).alias("avg_logprob"))
-
-
-def doc_ccnet_buckets(spark, sf_dir):
-    """CCNet head/middle/tail partitioning (text_analysis.ccnet_buckets):
-    per-language terciles of the rounded unigram-LM score; head is the
-    best-scoring third. Cutoffs are a strata-sized broadcast, bucketing
-    a pure filter — no per-stratum window over the corpus."""
-    from legal_knowledge_graph_spark.operators.text_analysis import (
-        ccnet_buckets,
-    )
-
-    out = ccnet_buckets(_t(spark, sf_dir, "documents"), by="lang")
-    return out.select(
-        "doc_id", "stratum", F.col("n_tokens").cast("long").alias("n_tokens"),
-        "score", "bucket")
-
-
-def doc_pack_sequences(spark, sf_dir):
-    """Sequence-packing placement manifest (packing.pack_sequences):
-    deterministic shard + running token offset + first/last 512-token
-    training sequence per document. Integer-exact, so the oracle is a
-    verbatim SQL window restatement."""
-    from legal_knowledge_graph_spark.operators.packing import pack_sequences
-
-    return pack_sequences(_t(spark, sf_dir, "documents"),
-                          budget=512, n_shards=8)
-
-
 def doc_vocab(spark, sf_dir):
     """Tokenizer-prep corpus vocabulary (text_analysis.corpus_vocab):
     top-200 tokens by global frequency with cumulative coverage of the
@@ -405,61 +309,6 @@ def doc_tfidf_keywords(spark, sf_dir):
     )
 
     return tfidf_keywords(_t(spark, sf_dir, "documents"), k=5)
-
-
-def doc_collocations(spark, sf_dir):
-    """PMI collocation mining (text_analysis.pmi_collocations): top-100
-    adjacent-token bigrams by pointwise mutual information, min_count=5
-    — zip-shift bigrams, one agg per count table, scalars as one-row
-    broadcasts."""
-    from legal_knowledge_graph_spark.operators.text_analysis import (
-        pmi_collocations,
-    )
-
-    return pmi_collocations(_t(spark, sf_dir, "documents"),
-                            k=100, min_count=5)
-
-
-MIX_TARGET = {"en": 0.4, "de": 0.2, "fr": 0.2, "es": 0.1, "zh": 0.1}
-
-
-def doc_mixture_plan(spark, sf_dir):
-    """Data-mixing plan (sampling.mixture_weights): per-language observed
-    share vs target mixture, reweighting factor and the downsample-only
-    acceptance rate realizing the target. Scalars attach as one-row
-    broadcast aggregates over the stratum-sized count table."""
-    from legal_knowledge_graph_spark.operators.sampling import (
-        mixture_weights,
-    )
-
-    return mixture_weights(_t(spark, sf_dir, "documents"), "lang",
-                           MIX_TARGET)
-
-
-def doc_mixture_sample(spark, sf_dir):
-    """Deterministic mixture resampling (sampling.resample_to_mixture):
-    broadcast stratum->acceptance-rate join + the engine-portable
-    md5-prefix hash filter, so DuckDB replays the selection verbatim."""
-    from legal_knowledge_graph_spark.operators.sampling import (
-        resample_to_mixture,
-    )
-
-    return resample_to_mixture(
-        _t(spark, sf_dir, "documents"), "lang", MIX_TARGET, seed=7,
-    ).select("doc_id", "lang", "source")
-
-
-def doc_inverted_index(spark, sf_dir):
-    """Capped-posting inverted index (text_analysis.inverted_index):
-    distinct (word, doc_id) pairs, salted two-phase smallest-20
-    selection (no full-group sort on stopwords), df >= 2, CSV posting
-    serialization."""
-    from legal_knowledge_graph_spark.operators.text_analysis import (
-        inverted_index,
-    )
-
-    return inverted_index(_t(spark, sf_dir, "documents"),
-                          max_postings=20, min_df=2)
 
 
 def doc_textrank(spark, sf_dir):
@@ -487,20 +336,6 @@ def doc_rake(spark, sf_dir):
                            top_k=3, max_phrase_len=4)
 
 
-def doc_length_bins(spark, sf_dir):
-    """Equi-depth length histogram (profiling.equidepth_bins): exact
-    ntile over (n_chars, doc_id) — a total order, so deterministic —
-    with per-bin count/lo/hi/mean."""
-    from legal_knowledge_graph_spark.operators.profiling import (
-        equidepth_bins,
-    )
-
-    out = equidepth_bins(_t(spark, sf_dir, "documents"),
-                         "n_chars", n_bins=10, id_col="doc_id")
-    return out.select(F.col("bin").cast("int").alias("bin"),
-                      "n", "lo", "hi", "mean")
-
-
 def doc_ngram_diversity(spark, sf_dir):
     """Per-language n-gram diversity profile (text_analysis.
     ngram_diversity): corpus-level type-token ratio and its 2/3-gram
@@ -525,71 +360,6 @@ def doc_chunks(spark, sf_dir):
 
     return chunk_documents(_t(spark, sf_dir, "documents"),
                            chunk_tokens=64, overlap_tokens=16)
-
-
-def doc_bpe_tokens(spark, sf_dir):
-    """Distributed BPE application (bpe.apply_bpe): tokenize the corpus
-    with the committed learned-merge artifact (golden_bpe.parquet — the
-    model, exactly how production tokenization consumes a trained
-    tokenizer) and report per-doc word/token counts. Folds run in rank
-    order over the DISTINCT word table (pure Catalyst, no UDF); the
-    oracle is the committed golden from the independent dict applier
-    (tools/make_bpe_golden.py)."""
-    from legal_knowledge_graph_spark.operators.bpe import apply_bpe
-
-    sf = os.path.basename(sf_dir.rstrip("/"))
-    merges_path = os.path.join(os.path.dirname(_GOLDEN_DIR), sf,
-                               "golden_bpe.parquet")
-    merges = [(r.left, r.right)
-              for r in spark.read.parquet(merges_path)
-              .orderBy("rank").collect()]
-    toks = apply_bpe(_t(spark, sf_dir, "documents"), merges)
-    return toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum(F.size("tokens")).alias("n_tokens"))
-
-
-def doc_weighted_sample(spark, sf_dir):
-    """Weighted sampling without replacement (sampling.weighted_sample_k,
-    Efraimidis-Spirakis): 50 docs per language drawn proportional to
-    document length (weight = length(text)+1) via the two-phase salted
-    top-k on ln(u)/w priorities; verbatim SQL restatement incl. the
-    md5-prefix hash."""
-    from legal_knowledge_graph_spark.operators.sampling import (
-        weighted_sample_k,
-    )
-
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "_w", F.length("text") + 1)
-    out = weighted_sample_k(docs, k=50, weight_col="_w",
-                            strata_col="lang", seed=42)
-    return out.select("doc_id", "lang",
-                      F.col("_w").cast("long").alias("n_chars"))
-
-
-def doc_importance(spark, sf_dir):
-    """DSIR-style importance weights (sampling.importance_weights):
-    hashed-unigram log-likelihood ratio of the English slice vs the raw
-    corpus, one corpus scan for the bounded 4096-bucket feature table
-    (totals ride observe()), one broadcast-join scoring scan."""
-    from legal_knowledge_graph_spark.operators.sampling import (
-        importance_weights,
-    )
-
-    return importance_weights(
-        _t(spark, sf_dir, "documents"), F.col("lang") == "en")
-
-
-def doc_bpe_merges(spark, sf_dir):
-    """Distributed BPE merge learning (bpe.learn_bpe, Sennrich-style over
-    the word-frequency table): 30 merges, min_count=2. The merge loop is
-    not SQL-expressible, so the oracle is the committed golden parquet
-    (tools/make_bpe_golden.py — an independent dict-based python
-    implementation) reproduced bit-identically at local[2]/local[32]."""
-    from legal_knowledge_graph_spark.operators.bpe import learn_bpe
-
-    return learn_bpe(_t(spark, sf_dir, "documents"),
-                     n_merges=30, min_count=2)
 
 
 def doc_length_stats(spark, sf_dir):
@@ -640,34 +410,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_lang_id": doc_lang_id,
         "doc_fingerprint": doc_fingerprint,
         "doc_top_keywords": doc_top_keywords,
-        "doc_pii": doc_pii,
         "doc_boilerplate": doc_boilerplate,
         "doc_repetition": doc_repetition,
-        "doc_stratified_sample": doc_stratified_sample,
         "doc_filter_chain": doc_filter_chain,
-        "doc_winnow": doc_winnow,
         "kg_type_normalization": kg_type_normalization,
         "kg_term_neighbors": kg_term_neighbors,
         "kg_term_components": kg_term_components,
-        "doc_lm_score": doc_lm_score,
-        "doc_pack_sequences": doc_pack_sequences,
         "doc_vocab": doc_vocab,
         "doc_tfidf_keywords": doc_tfidf_keywords,
-        "doc_collocations": doc_collocations,
-        "doc_mixture_plan": doc_mixture_plan,
-        "doc_mixture_sample": doc_mixture_sample,
         "doc_bm25": doc_bm25,
         "doc_length_stats": doc_length_stats,
-        "doc_bpe_merges": doc_bpe_merges,
-        "doc_length_bins": doc_length_bins,
         "doc_textrank": doc_textrank,
         "doc_rake": doc_rake,
-        "doc_inverted_index": doc_inverted_index,
-        "doc_importance": doc_importance,
-        "doc_ccnet_buckets": doc_ccnet_buckets,
         "doc_ngram_diversity": doc_ngram_diversity,
-        "doc_weighted_sample": doc_weighted_sample,
-        "doc_bpe_tokens": doc_bpe_tokens,
         "doc_chunks": doc_chunks,
     }
 
@@ -701,39 +456,6 @@ _DE = _stop_hits("text", ["der", "die", "das", "und", "ist", "nicht", "ein", "zu
 _FR = _stop_hits("text", ["le", "la", "les", "et", "est", "une", "pour", "dans"])
 
 _NORM = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
-
-# Winnowing re-stated in SQL: 5-gram md5 -> first 8 bytes as signed BIGINT
-# (hex-digit positional sum in HUGEINT), sliding-window-of-4 minima,
-# distinct picks — byte-for-byte text_analysis._winnow_udf.
-_WINNOW_SQL = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(coalesce(text,'')), '\s+'),
-                     x -> x <> '') AS w
-  FROM documents
-), grams AS (
-  SELECT doc_id, i, md5(array_to_string(w[i:i+4], ' ')) AS h
-  FROM toks, unnest(generate_series(1, len(w) - 4)) AS t(i)
-  WHERE len(w) >= 5
-), hx AS (
-  SELECT doc_id, i,
-         sum((strpos('0123456789abcdef', substr(h, j + 1, 1)) - 1)::HUGEINT
-             * (1::HUGEINT << (4 * (15 - j)))) AS v
-  FROM grams, unnest(generate_series(0, 15)) AS d(j)
-  GROUP BY doc_id, i
-), h64 AS (
-  SELECT doc_id, i,
-         CAST(CASE WHEN v >= 9223372036854775808::HUGEINT
-                   THEN v - 18446744073709551616::HUGEINT ELSE v END AS BIGINT) AS h
-  FROM hx
-), wm AS (
-  SELECT doc_id, i, count(*) OVER (PARTITION BY doc_id) AS n,
-         min(h) OVER (PARTITION BY doc_id ORDER BY i
-                      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS pick
-  FROM h64
-)
-SELECT DISTINCT doc_id, pick FROM wm WHERE i <= greatest(1, n - 3)"""
-
 
 def _type_norm_oracle() -> str:
     """Relational re-statement of the F4/F7 projections: the alias tables
@@ -769,29 +491,6 @@ SELECT kind, raw_type,
        ELSE cand END AS normalized,
   CASE WHEN kind = 'block' THEN TRUE ELSE cand IN ({et}) END AS kept
 FROM j"""
-
-
-def _mixture_cte(target: dict[str, float]) -> str:
-    """Shared CTE chain restating sampling.mixture_weights on
-    documents.lang: normalized target fractions are computed in PYTHON
-    and inlined via repr() (shortest round-trip — DuckDB parses back the
-    IDENTICAL double, sidestepping cross-engine float-literal-sum
-    ordering), and every arithmetic step mirrors the Spark op order."""
-    tgt_total = sum(float(v) for v in target.values()) or 1.0
-    case = " ".join(
-        f"WHEN '{k}' THEN CAST({float(target[k]) / tgt_total!r} AS DOUBLE)"
-        for k in sorted(target))
-    return f"""
-WITH counts AS (
-  SELECT lang AS stratum, count(*) AS n_docs FROM documents GROUP BY lang
-), tot AS (SELECT CAST(sum(n_docs) AS DOUBLE) AS t FROM counts),
-w AS (
-  SELECT stratum, n_docs, n_docs / t AS actual_frac,
-         CASE stratum {case} ELSE CAST(0.0 AS DOUBLE) END AS target_frac
-  FROM counts, tot
-), w2 AS (
-  SELECT *, target_frac / actual_frac AS weight FROM w
-), m AS (SELECT max(weight) AS wmax FROM w2)"""
 
 
 def _bm25_oracle(queries: dict, k1: float, b: float, topk: int) -> str:
@@ -1036,30 +735,6 @@ WITH words AS (
   FROM counts
 )
 SELECT doc_id, word, n, rank FROM rk WHERE rank <= 5""",
-        # regexes stay in the Java-regex ∩ RE2 common subset so this is a
-        # verbatim restatement (operators/pii.py)
-        "doc_pii": r"""
-WITH planted AS (
-  SELECT doc_id,
-         text || ' contact user' || CAST(doc_id AS VARCHAR)
-              || '@example.com from 10.0.' || CAST(doc_id % 256 AS VARCHAR)
-              || '.7 tel 555-123-4567' AS text
-  FROM documents
-)
-SELECT doc_id,
-  len(regexp_extract_all(text,
-      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
-  len(regexp_extract_all(text,
-      '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS n_ipv4,
-  len(regexp_extract_all(text,
-      '\b[0-9]{3}[-. ][0-9]{3}[-. ][0-9]{4}\b')) AS n_phones,
-  regexp_replace(
-    regexp_replace(
-      regexp_replace(text,
-        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-      '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g'),
-    '\b[0-9]{3}[-. ][0-9]{3}[-. ][0-9]{4}\b', '<PHONE>', 'g') AS redacted
-FROM planted""",
         # verbatim restatement of text_analysis.remove_boilerplate: same
         # plant, same >=2-distinct-docs threshold on trimmed lines of
         # length >= 4, same order-preserving rebuild
@@ -1124,27 +799,6 @@ SELECT b.doc_id,
                   THEN 1.0 - CAST(COALESCE(g.n_dg, 0) AS DOUBLE) / n_g
                   ELSE 0.0 END, 6) AS dup_3gram_frac
 FROM base b LEFT JOIN g USING (doc_id)""",
-        # verbatim restatement of sampling.stratified_sample +
-        # exact_k_per_stratum: the md5-prefix 32-bit hash is computed
-        # identically (Spark conv(hex) == DuckDB ::BIGINT on '0x'||hex)
-        "doc_stratified_sample": r"""
-WITH h AS (
-  SELECT doc_id, lang, source,
-         ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':7'), 1, 8))::BIGINT
-           AS h32
-  FROM documents
-), bern AS (
-  SELECT doc_id, 'bernoulli' AS method FROM h
-  WHERE h32 < (CASE lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 0.25
-               ELSE 0.1 END) * 4294967296
-), rk AS (
-  SELECT doc_id,
-         row_number() OVER (PARTITION BY source ORDER BY h32, doc_id) AS rk
-  FROM h
-)
-SELECT * FROM bern
-UNION ALL
-SELECT doc_id, 'exact_k' AS method FROM rk WHERE rk <= 25""",
         # verbatim restatement of text_analysis.pretraining_filter: the
         # shared doc_quality / doc_lang_id / doc_repetition formulas feed
         # fixed-order CASE checks joined with concat_ws (NULLs skipped on
@@ -1194,7 +848,6 @@ WITH toks AS (
 SELECT doc_id, reasons = '' AS kept, reasons, quality_score,
        predicted_lang, dup_3gram_frac
 FROM r""",
-        "doc_winnow": _WINNOW_SQL,
         # connected components re-stated as a recursive-CTE transitive
         # closure: component label = min reachable term (undirected closure)
         "kg_term_components": _DOC_MENTIONS_CTE.replace(
@@ -1252,84 +905,6 @@ FROM read_parquet('{_GOLDEN_DIR}/golden_triples.parquet')""",
         "doc_textrank": _textrank_oracle(chunk_size=10, n_iter=10,
                                          damping=0.85, top_k=2),
         "doc_rake": _rake_oracle(top_k=3, max_phrase_len=4),
-        "doc_length_bins": """
-WITH b AS (
-  SELECT n_chars AS v,
-         CAST(ntile(10) OVER (ORDER BY n_chars ASC, doc_id ASC) AS INT)
-           AS bin
-  FROM documents
-)
-SELECT bin, count(*) AS n, min(v) AS lo, max(v) AS hi,
-       round(avg(v), 6) AS mean
-FROM b GROUP BY bin""",
-        "doc_lm_score": r"""
-WITH words AS (
-  SELECT doc_id,
-         unnest(list_filter(
-             string_split_regex(lower(trim(coalesce(text, ''))), '\s+'),
-             x -> x <> '')) AS word
-  FROM documents
-), vocab AS (
-  SELECT word, count(*) AS n FROM words GROUP BY word
-), tot AS (
-  SELECT CAST(sum(n) AS DOUBLE) AS t, CAST(count(*) AS DOUBLE) AS v
-  FROM vocab
-)
-SELECT w.doc_id, count(*) AS n_tokens,
-       round(avg(log10((vocab.n + 0.5) / (tot.t + 0.5 * tot.v))), 4)
-         AS avg_logprob
-FROM words w JOIN vocab USING (word) CROSS JOIN tot
-GROUP BY w.doc_id""",
-        # same LM as doc_lm_score; score rounded to 4 BEFORE the
-        # per-language tercile cutoffs (quantile_cont = Spark exact
-        # percentile, type-7) so cutoffs and comparisons are engine-exact
-        "doc_ccnet_buckets": r"""
-WITH words AS (
-  SELECT doc_id,
-         unnest(list_filter(
-             string_split_regex(lower(trim(coalesce(text, ''))), '\s+'),
-             x -> x <> '')) AS word
-  FROM documents
-), vocab AS (
-  SELECT word, count(*) AS n FROM words GROUP BY word
-), tot AS (
-  SELECT CAST(sum(n) AS DOUBLE) AS t, CAST(count(*) AS DOUBLE) AS v
-  FROM vocab
-), scored AS (
-  SELECT w.doc_id, count(*) AS n_tokens,
-         round(avg(log10((vocab.n + 0.5) / (tot.t + 0.5 * tot.v))), 4)
-           AS score
-  FROM words w JOIN vocab USING (word) CROSS JOIN tot
-  GROUP BY w.doc_id
-), j AS (
-  SELECT s.doc_id, d.lang AS stratum, s.n_tokens, s.score
-  FROM scored s JOIN documents d USING (doc_id)
-), cutoffs AS (
-  SELECT stratum,
-         quantile_cont(score, 1.0 / 3.0) AS c_lo,
-         quantile_cont(score, 2.0 / 3.0) AS c_hi
-  FROM j GROUP BY stratum
-)
-SELECT j.doc_id, j.stratum, j.n_tokens, j.score,
-       CASE WHEN j.score >= c.c_hi THEN 'head'
-            WHEN j.score < c.c_lo THEN 'tail'
-            ELSE 'middle' END AS bucket
-FROM j JOIN cutoffs c USING (stratum)""",
-        "doc_pack_sequences": f"""
-WITH t AS (
-  SELECT doc_id, CAST(doc_id % 8 AS INT) AS shard,
-         CAST(len(regexp_extract_all(text, '{BPE_ISH_TOKEN_RE}')) AS BIGINT)
-           AS n_tokens
-  FROM documents
-), c AS (
-  SELECT doc_id, shard, n_tokens,
-         sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS token_end
-  FROM t WHERE n_tokens > 0
-)
-SELECT doc_id, shard, n_tokens, token_end - n_tokens AS token_start,
-       (token_end - n_tokens) // 512 AS seq_first,
-       (token_end - 1) // 512 AS seq_last
-FROM c""",
         "doc_vocab": r"""
 WITH words AS (
   SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS word
@@ -1368,71 +943,6 @@ WITH words AS (
   FROM scored
 )
 SELECT doc_id, word, tfidf, rank FROM rk WHERE rank <= 5""",
-        "doc_collocations": r"""
-WITH w AS (
-  SELECT string_split_regex(lower(trim(text)), '\s+') AS wl FROM documents
-), uni AS (
-  SELECT word, count(*) AS n FROM (
-    SELECT unnest(wl) AS word FROM w
-  ) WHERE word <> '' GROUP BY word
-), tot AS (SELECT CAST(sum(n) AS DOUBLE) AS t FROM uni),
-bg AS (
-  SELECT wl[i] AS x, wl[i + 1] AS y
-  FROM w, unnest(range(1, len(wl))) AS r(i)
-  WHERE wl[i] <> '' AND wl[i + 1] <> ''
-), btot AS (SELECT CAST(count(*) AS DOUBLE) AS b FROM bg),
-bgc AS (
-  SELECT x, y, count(*) AS n_xy FROM bg
-  GROUP BY x, y HAVING count(*) >= 5
-), scored AS (
-  SELECT bgc.x, bgc.y, bgc.n_xy,
-         round(ln((bgc.n_xy / b) / ((ux.n / t) * (uy.n / t))), 6) AS pmi
-  FROM bgc
-  JOIN uni ux ON ux.word = bgc.x
-  JOIN uni uy ON uy.word = bgc.y, tot, btot
-), top AS (
-  SELECT * FROM scored ORDER BY pmi DESC, x ASC, y ASC LIMIT 100
-)
-SELECT CAST(row_number() OVER (ORDER BY pmi DESC, x ASC, y ASC) AS INT)
-         AS rank,
-       x, y, n_xy, pmi
-FROM top""",
-        "doc_mixture_plan": _mixture_cte(MIX_TARGET) + """
-SELECT stratum, n_docs,
-       round(actual_frac, 6) AS actual_frac,
-       round(target_frac, 6) AS target_frac,
-       round(weight, 6) AS weight,
-       round(weight / wmax, 6) AS accept_frac
-FROM w2, m""",
-        "doc_mixture_sample": _mixture_cte(MIX_TARGET) + """,
-rates AS (SELECT stratum, weight / wmax AS accept_frac FROM w2, m)
-SELECT d.doc_id, d.lang, d.source
-FROM documents d JOIN rates r ON d.lang = r.stratum
-WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR) || ':7'), 1, 8))::BIGINT
-      < r.accept_frac * 4294967296""",
-        "doc_inverted_index": r"""
-WITH toks AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS wl
-  FROM documents
-), pairs AS (
-  SELECT DISTINCT doc_id, word FROM (
-    SELECT doc_id, unnest(wl) AS word FROM toks
-  ) WHERE word <> ''
-), dfreq AS (
-  SELECT word, count(*) AS df FROM pairs GROUP BY word
-), ranked AS (
-  SELECT doc_id, word,
-         row_number() OVER (PARTITION BY word ORDER BY doc_id ASC) AS rk
-  FROM pairs
-), posts AS (
-  SELECT word,
-         string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id ASC)
-           AS postings
-  FROM ranked WHERE rk <= 20 GROUP BY word
-)
-SELECT f.word, f.df, p.postings
-FROM dfreq f JOIN posts p USING (word)
-WHERE f.df >= 2""",
         # same integer DIV chunk-count arithmetic, same slice bounds
         "doc_chunks": r"""
 WITH base AS (
@@ -1458,23 +968,6 @@ SELECT doc_id, chunk_id, chunk_id * 48 AS start_tok,
                        chunk_id * 48 + least(64, n - chunk_id * 48)),
            ' ') AS chunk_text
 FROM c""",
-        # E-S weighted draw restated verbatim: same md5-prefix hash, same
-        # ln(u)/w priority, same (priority DESC, id ASC) total order
-        "doc_weighted_sample": """
-WITH slim AS (
-  SELECT doc_id, lang, length(text) + 1 AS w,
-         ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 8))::BIGINT
-           AS h
-  FROM documents
-  WHERE length(text) + 1 > 0
-), rk AS (
-  SELECT doc_id, lang, w,
-         row_number() OVER (
-             PARTITION BY lang
-             ORDER BY ln((h + 1) / 4294967296.0) / w DESC, doc_id ASC) AS r
-  FROM slim
-)
-SELECT doc_id, lang, CAST(w AS BIGINT) AS n_chars FROM rk WHERE r <= 50""",
         "doc_ngram_diversity": r"""
 WITH words AS MATERIALIZED (
   SELECT lang AS stratum,
@@ -1499,17 +992,6 @@ SELECT stratum, n, count(*) AS total_ngrams,
        count(DISTINCT gram) AS distinct_ngrams,
        round(count(DISTINCT gram) / count(*), 6) AS diversity
 FROM grams GROUP BY stratum, n""",
-        # the BPE merge loop is not SQL-expressible: golden parquet from
-        # the independent dict-based implementation
-        # (tools/make_bpe_golden.py), reproduced at local[2]/local[32]
-        "doc_bpe_merges": f'''
-SELECT rank, "left", "right", pair_count
-FROM read_parquet(\'{_GOLDEN_DIR}/golden_bpe.parquet\')''',
-        # application counts from the independent dict applier
-        # (tools/make_bpe_golden.py) — shares no code with apply_bpe
-        "doc_bpe_tokens": f'''
-SELECT doc_id, n_words, n_tokens
-FROM read_parquet(\'{_GOLDEN_DIR}/golden_bpe_tokens.parquet\')''',
         "doc_length_stats": r"""
 WITH toks AS (
   SELECT lang AS stratum,
@@ -1525,26 +1007,4 @@ SELECT stratum, CAST(count(*) AS BIGINT) AS n_docs,
        round(CAST(quantile_cont(n_tok, 0.99) AS DOUBLE), 6) AS p99
 FROM toks GROUP BY stratum""",
         "doc_bm25": _bm25_oracle(BM25_QUERIES, k1=1.2, b=0.75, topk=10),
-        "doc_importance": r"""
-WITH words AS (
-  SELECT doc_id, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS t,
-         unnest(list_filter(
-             string_split_regex(lower(trim(coalesce(text, ''))), '\s+'),
-             x -> x <> '')) AS word
-  FROM documents
-), f AS (
-  SELECT doc_id, t,
-         ('0x' || substr(md5(word || ':9'), 1, 8))::BIGINT % 4096 AS bucket
-  FROM words
-), stats AS (
-  SELECT bucket, sum(t) AS n_t, count(*) AS n_r FROM f GROUP BY bucket
-), tot AS (SELECT CAST(sum(n_t) AS DOUBLE) AS tt,
-                  CAST(sum(n_r) AS DOUBLE) AS tr FROM stats),
-lr AS (
-  SELECT bucket,
-         ln((n_t + 1.0) / (tt + 4096)) - ln((n_r + 1.0) / (tr + 4096)) AS lr
-  FROM stats CROSS JOIN tot)
-SELECT f.doc_id, count(*) AS n_tokens, round(avg(lr.lr), 6) AS importance
-FROM f JOIN lr USING (bucket)
-GROUP BY f.doc_id""",
     }

@@ -70,27 +70,13 @@ def main() -> None:
 
     names = [
         "kg_doc_mentions", "kg_term_cooccurrence",
-        "doc_token_count", "doc_quality", "doc_lang_id", "doc_pii",
-        "doc_boilerplate",
-        # round-4 additions: two-phase stratified mixing
-        "doc_stratified_sample", "doc_filter_chain",
-        # round-5 additions: corpus-trained unigram-LM quality scoring,
-        # sequence packing, tokenizer vocab coverage, tf-idf keywording
-        "doc_lm_score", "doc_pack_sequences", "doc_vocab",
-        "doc_tfidf_keywords", "doc_collocations",
-        "doc_mixture_plan", "doc_mixture_sample",
+        "doc_token_count", "doc_quality", "doc_lang_id",
+        "doc_boilerplate", "doc_filter_chain",
+        # round-5 additions: tokenizer vocab coverage, tf-idf keywording
+        "doc_vocab", "doc_tfidf_keywords",
         # round-5 third-session additions: BM25 ranked retrieval
         "doc_bm25", "doc_length_stats",
-        "doc_bpe_merges",
-        # round-5 fourth-session addition: DSIR importance weighting
-        "doc_importance",
-        # round-5 fifth-session addition: CCNet head/middle/tail
-        # perplexity terciles
-        "doc_ccnet_buckets",
-        "doc_ngram_diversity", "doc_weighted_sample",
-        "doc_chunks",
-        "doc_inverted_index", "doc_length_bins", "doc_textrank",
-        "doc_rake",
+        "doc_ngram_diversity", "doc_chunks", "doc_textrank", "doc_rake",
     ]
     qfns = E.queries()
     timings: dict[str, float] = {}

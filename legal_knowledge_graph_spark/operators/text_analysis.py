@@ -2,13 +2,13 @@
 
 First-class components alongside the KG stages: language-ID (stopword
 heuristic), quality scoring (length/punct/stopword ratios), token counting
-(whitespace + BPE-ish regex), and document fingerprinting (normalized-hash
-and rolling-hash winnowing).
+(whitespace + BPE-ish regex), and document fingerprinting (normalized
+hash).
 
-All but winnowing are pure Catalyst column expressions (whole-stage
-codegen; no Python on the hot path) and each has an exact ANSI-SQL oracle
-(see __spark_entry__.oracle_sql). Winnowing needs per-row state -> Arrow
-pandas UDF.
+All but TextRank's per-document PageRank (a `mapInPandas` over the
+gathered chunk graphs) are pure Catalyst column expressions (whole-stage
+codegen; no Python on the hot path), and each has an exact ANSI-SQL
+oracle (see __spark_entry__.oracle_sql).
 
 These operate on the driver testdata `documents(doc_id, text, lang,
 source, n_chars)` table but accept any (id, text) frame.
@@ -16,10 +16,7 @@ source, n_chars)` table but accept any (id, text) frame.
 
 from __future__ import annotations
 
-import hashlib
-
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
 from ..partitioning import repartition_compute
 
@@ -323,84 +320,6 @@ def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select("doc_id", F.md5(norm).alias("fingerprint"))
 
 
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def _winnow_udf(texts: pd.Series) -> pd.Series:
-    """Winnowing fingerprint (Schleimer et al., SIGMOD'03): k-gram rolling
-    hashes, sliding-window minima. Deterministic; per-executor vectorized."""
-    K, W = 5, 4
-
-    def winnow(text: str) -> list[int]:
-        toks = (text or "").lower().split()
-        if len(toks) < K:
-            return []
-        hashes = [
-            int.from_bytes(
-                hashlib.md5(" ".join(toks[i:i + K]).encode()).digest()[:8],
-                "big", signed=True)
-            for i in range(len(toks) - K + 1)
-        ]
-        picks = {min(hashes[i:i + W]) for i in range(max(1, len(hashes) - W + 1))}
-        return sorted(picks)
-
-    return texts.map(winnow)
-
-
-def winnow_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    return docs.select("doc_id", _winnow_udf(F.col(text_col)).alias("winnow"))
-
-
-def unigram_lm_scores(
-    docs: DataFrame, smoothing: float = 0.5, text_col: str = "text",
-) -> DataFrame:
-    """Language-model quality scoring (the CCNet/Gopher perplexity-filter
-    shape, with an honest in-engine unigram LM instead of external KenLM
-    weights): train token frequencies over the corpus itself, then score
-    each document by its mean token log10-probability under the
-    additive-smoothed unigram model
-
-        p(w) = (count(w) + a) / (T + a * V)
-
-    Output: (doc_id, n_tokens, avg_logprob) — higher (less negative) =
-    more typical text; rank/threshold downstream like any quality score.
-
-    Scale shape (100 TB): pass 1 is ONE map-side-combined aggregation on
-    the token (zipfian hot keys like 'the' are absorbed by the partial
-    count — no skew amplification); T and V ride the vocab checkpoint via
-    observe(). Pass 2 joins the exploded tokens to the vocab — broadcast
-    only while the OBSERVED vocab size stays under the threshold (web-
-    scale vocabs fall back to a shuffle join) — then one map-side-
-    combined avg per doc. No Python anywhere; an exact SQL oracle
-    restates both passes."""
-    from pyspark.sql import Observation
-
-    words = repartition_compute(docs).select(
-        "doc_id",
-        F.explode(F.filter(_split_words(text_col), lambda x: x != ""))
-        .alias("word"))
-    obs = Observation()
-    vocab = (
-        words.groupBy("word").agg(F.count(F.lit(1)).alias("n"))
-        .observe(obs, F.sum("n").alias("t"), F.count(F.lit(1)).alias("v"))
-        .localCheckpoint()
-    )
-    t_total, v_size = obs.get["t"], obs.get["v"]
-    if not t_total:
-        return docs.select("doc_id").limit(0).select(
-            "doc_id", F.lit(0).cast("long").alias("n_tokens"),
-            F.lit(0.0).alias("avg_logprob"))
-    denom = float(t_total) + smoothing * float(v_size)
-    vocab_side = F.broadcast(vocab) if v_size <= 2_000_000 else vocab
-    return (
-        words.join(vocab_side, "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.avg(F.log10((F.col("n") + F.lit(smoothing)) / F.lit(denom)))
-            .alias("avg_logprob"),
-        )
-    )
-
-
 def corpus_vocab(
     docs: DataFrame, top_v: int = 500, min_len: int = 2,
     text_col: str = "text",
@@ -492,99 +411,6 @@ def tfidf_keywords(
         .where(F.col("rank") <= k)
         .select("doc_id", "word", "tfidf", F.col("rank").cast("int").alias("rank"))
     )
-
-
-def pmi_collocations(
-    docs: DataFrame, k: int = 100, min_count: int = 5,
-    text_col: str = "text",
-) -> DataFrame:
-    """Collocation / phrase mining: top-k adjacent-token bigrams by
-    pointwise mutual information — the standard phrase-vocab step before
-    tokenizer training (word2vec-style phrase joining, BPE merge
-    seeding).
-
-        pmi(x, y) = ln( (n_xy / B) / ((n_x / T) * (n_y / T)) )
-
-    with T = total tokens, B = total bigrams, and bigrams below
-    `min_count` dropped (PMI is noise at low counts). Output:
-    (rank, x, y, n_xy, pmi), pmi rounded to 6, ranked by
-    (pmi desc, x asc, y asc).
-
-    Scale shape (100 TB): bigrams come from a per-row zip-shift
-    (element_at pulls over the words array — no self-join, no UDF); both
-    count tables are ONE map-side-combined agg each (zipfian heads
-    collapse in the partials), and the corpus is scanned exactly twice
-    (once per count table): T rides the unigram checkpoint and B the
-    PRE-threshold bigram checkpoint via observe() — no third pass, no
-    scalar jobs; the two unigram attachments broadcast only while the
-    OBSERVED vocab size stays under the threshold; top-k via
-    TakeOrderedAndProject. Pure Catalyst end to end."""
-    from pyspark.sql import Observation
-    from pyspark.sql.window import Window
-
-    w_docs = repartition_compute(docs).select(_split_words(text_col).alias("_w"))
-    words = w_docs.select(F.explode("_w").alias("word")) \
-        .where(F.col("word") != "")
-    # adjacent pairs via zip-shift; sequence() descends when stop < start,
-    # so guard docs with fewer than two tokens
-    bigrams = w_docs.where(F.size("_w") >= 2).select(
-        F.explode(F.expr(
-            "transform(sequence(1, size(_w) - 1), "
-            "i -> struct(element_at(_w, i) as x, "
-            "element_at(_w, i + 1) as y))")).alias("bg")
-    ).select("bg.x", "bg.y").where((F.col("x") != "") & (F.col("y") != ""))
-
-    obs_u = Observation()
-    uni = (
-        words.groupBy("word").agg(F.count(F.lit(1)).alias("n"))
-        .observe(obs_u, F.sum("n").alias("t"), F.count(F.lit(1)).alias("v"))
-        .localCheckpoint()  # joined twice (x side and y side)
-    )
-    t_total = obs_u.get["t"] or 0
-    if not t_total:
-        return docs.select(
-            F.lit(0).cast("int").alias("rank"),
-            F.lit("").alias("x"), F.lit("").alias("y"),
-            F.lit(0).cast("long").alias("n_xy"),
-            F.lit(0.0).alias("pmi")).limit(0)
-    uni_side = F.broadcast(uni) if obs_u.get["v"] <= 2_000_000 else uni
-    # B is the TOTAL bigram mass (including below-threshold pairs) so the
-    # probabilities stay well-defined under any min_count — it rides the
-    # pre-threshold agg's checkpoint, which the filtered table then reads
-    obs_b = Observation()
-    big_all = (
-        bigrams.groupBy("x", "y").agg(F.count(F.lit(1)).alias("n_xy"))
-        .observe(obs_b, F.sum("n_xy").alias("b"))
-        .localCheckpoint()
-    )
-    b_total = float(obs_b.get["b"] or 0)
-    if not b_total:
-        return docs.select(
-            F.lit(0).cast("int").alias("rank"),
-            F.lit("").alias("x"), F.lit("").alias("y"),
-            F.lit(0).cast("long").alias("n_xy"),
-            F.lit(0.0).alias("pmi")).limit(0)
-    big = big_all.where(F.col("n_xy") >= min_count)
-    scored = (
-        big
-        .join(uni_side.select(F.col("word").alias("x"),
-                              F.col("n").alias("n_x")), "x")
-        .join(uni_side.select(F.col("word").alias("y"),
-                              F.col("n").alias("n_y")), "y")
-        .select(
-            "x", "y", "n_xy",
-            F.round(F.log(
-                (F.col("n_xy") / F.lit(b_total))
-                / ((F.col("n_x") / F.lit(float(t_total)))
-                   * (F.col("n_y") / F.lit(float(t_total))))), 6).alias("pmi"),
-        )
-    )
-    top = scored.orderBy(F.col("pmi").desc(), F.col("x").asc(),
-                         F.col("y").asc()).limit(k)
-    w = Window.orderBy(F.col("pmi").desc(), F.col("x").asc(), F.col("y").asc())
-    return top.select(
-        F.row_number().over(w).cast("int").alias("rank"),
-        "x", "y", "n_xy", "pmi")
 
 
 def bm25_scores(
@@ -727,57 +553,6 @@ def corpus_length_stats(
     )
 
 
-def ccnet_buckets(
-    docs: DataFrame, by: str = "lang", smoothing: float = 0.5,
-    text_col: str = "text", exact: bool = True,
-) -> DataFrame:
-    """CCNet-style per-language perplexity partitioning: score every
-    document with the corpus-trained unigram LM (`unigram_lm_scores`),
-    then split each `by`-stratum into head / middle / tail terciles of
-    the (rounded) score — head = the best-scoring third, the slice CCNet
-    keeps for pretraining (Wenzek et al. 2020).
-
-    A document is `head` when score >= the stratum's 2/3 quantile,
-    `tail` when score < the 1/3 quantile, else `middle`. Scores are
-    rounded to 4 places BEFORE the quantile/comparison so both the
-    cutoffs and the bucket decisions are engine-exact (the raw mean's
-    summation order is not portable; the rounded score is).
-
-    Scale shape (100 TB): scoring is the unigram-LM pair of map-side
-    aggs; the stratum attach is one doc-sized equi-join; cutoffs are ONE
-    groupBy agg producing a strata-sized table that broadcasts into a
-    pure filter projection — no global sort, no per-stratum window over
-    the corpus (a rank-based tercile would sort a 30 TB stratum in one
-    task). exact=True uses Spark's exact `percentile` (type-7, the same
-    interpolation as DuckDB quantile_cont — oracle-matchable) which
-    buffers each stratum's scores; at 100 TB pass exact=False for
-    approx_percentile (t-digest, bounded memory), deliberately not
-    oracle-matched — the corpus_length_stats switch."""
-    scores = unigram_lm_scores(docs, smoothing=smoothing,
-                               text_col=text_col)
-    s = scores.select(
-        "doc_id", "n_tokens", F.round("avg_logprob", 4).alias("score"))
-    joined = s.join(docs.select("doc_id", F.col(by).alias("stratum")),
-                    "doc_id")
-    lo, hi = 1.0 / 3.0, 2.0 / 3.0
-    if exact:
-        cuts = [F.percentile("score", lo), F.percentile("score", hi)]
-    else:
-        cuts = [F.approx_percentile("score", lo, 10000),
-                F.approx_percentile("score", hi, 10000)]
-    cutoffs = joined.groupBy("stratum").agg(
-        cuts[0].alias("_c_lo"), cuts[1].alias("_c_hi"))
-    return (
-        joined.join(F.broadcast(cutoffs), "stratum")
-        .select(
-            "doc_id", "stratum", "n_tokens", "score",
-            F.when(F.col("score") >= F.col("_c_hi"), F.lit("head"))
-            .when(F.col("score") < F.col("_c_lo"), F.lit("tail"))
-            .otherwise(F.lit("middle")).alias("bucket"),
-        )
-    )
-
-
 def ngram_diversity(
     docs: DataFrame, by: str = "lang", ns: tuple = (1, 2, 3),
     text_col: str = "text",
@@ -881,47 +656,6 @@ def chunk_documents(
         "doc_id", "chunk_id", "start_tok",
         F.size("_toks").alias("n_tok"),
         F.concat_ws(" ", "_toks").alias("chunk_text"))
-
-
-def inverted_index(
-    docs: DataFrame, text_col: str = "text", max_postings: int = 20,
-    min_df: int = 1, max_df: int | None = None,
-) -> DataFrame:
-    """Inverted index with capped posting lists: for every distinct
-    lowercase whitespace word, (word, df = docs containing it, postings
-    = the `max_postings` SMALLEST doc_ids holding it, comma-joined in
-    ascending order). df counts ALL containing docs even when the list
-    is capped; `min_df`/`max_df` drop hapax/stopword rows the way a real
-    index build does. Postings serialize as a CSV string so the output
-    is engine-portable (array columns round-trip differently).
-
-    The reference retrieves entities only through its graph store
-    (/root/reference/src/neo4j/models.py:100-159); a term->documents
-    index is the retrieval primitive its QA layer lacks.
-
-    Scale shape (100 TB corpus): tokens collapse to DISTINCT (word,
-    doc_id) pairs map-side before any shuffle. The smallest-k selection
-    is the salted two-phase top-k (the exact_k_per_stratum discipline,
-    VERDICT r3 #2): a per-(word, salt) local rank bounds every window
-    group at ~1/64 of even a stopword's postings, then the global rank
-    sees <= 64 x cap survivors per word — no full-group sort ever runs
-    in one task. df comes from a map-side-combining count aggregate,
-    never a second token scan."""
-    from .sampling import salted_smallest_k
-
-    pairs = repartition_compute(docs).select(
-        "doc_id", F.explode(_split_words(text_col)).alias("word")) \
-        .where(F.col("word") != "") \
-        .dropDuplicates(["word", "doc_id"])
-    dfreq = pairs.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    kept = salted_smallest_k(pairs, ["word"], "doc_id", max_postings)
-    postings = kept.groupBy("word").agg(
-        F.concat_ws(",", F.sort_array(F.collect_list("doc_id")))
-        .alias("postings"))
-    out = dfreq.join(postings, "word").where(F.col("df") >= min_df)
-    if max_df is not None:
-        out = out.where(F.col("df") <= max_df)
-    return out.select("word", "df", "postings")
 
 
 def textrank_chunks(

@@ -74,12 +74,6 @@ def build_session(
         builder
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
-        # r6: coalescing stays ON — iteration-heavy operators scanning
-        # small checkpoints are dominated by per-task fixed cost and
-        # need byte-based coalescing (measured: the same 11M-row degree
-        # aggregate costs 2.6 s from a 64-partition checkpoint vs 0.8 s
-        # from an 8-partition one; a full-suite A/B with coalescing off
-        # regressed the whole iterative graph family ~+50 s at sf1.0).
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -1,16 +1,11 @@
-"""Training-data operators: text analysis, scrubbing, sampling and
-mixing, tokenizer and retrieval scoring — small planted cases with known
-answers."""
-
-import hashlib
-import math
+"""Training-data operators: text analysis and retrieval scoring — small
+planted cases with known answers."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from legal_knowledge_graph_spark.operators.sampling import importance_weights
 from legal_knowledge_graph_spark.operators.text_analysis import (
-    language_id, quality_scores, token_counts, winnow_fingerprints,
+    language_id, quality_scores, token_counts,
 )
 
 DOCS = [
@@ -36,32 +31,6 @@ def test_text_analysis(spark, docs):
     assert q[0].stopword_ratio > q[4].stopword_ratio  # en text hits en stopwords
     langs = {r.doc_id: r.predicted_lang for r in language_id(docs).collect()}
     assert langs[0] == "en" and langs[4] == "de"
-    wf = {r.doc_id: r.winnow for r in winnow_fingerprints(docs).collect()}
-    assert wf[0] == wf[3] and wf[0] != wf[2]
-    assert set(wf[0]) & set(wf[1])  # near-dups share fingerprints
-
-
-def test_pii_scan_counts_and_redaction(spark):
-    from legal_knowledge_graph_spark.operators.pii import pii_scan
-
-    rows = [
-        (0, "reach me at alice.smith+spam@corp-mail.co.uk or bob@x.io"),
-        (1, "server 192.168.001.7 and 10.0.0.1 up; version 1.2 is not an ip"),
-        (2, "call 555-123-4567 or 555 987 6543; 12-34-56 is not a phone"),
-        (3, "clean text with no pii at all"),
-        (4, None),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in pii_scan(docs).collect()}
-    assert (out[0].n_emails, out[0].n_ipv4, out[0].n_phones) == (2, 0, 0)
-    assert out[0].redacted == "reach me at <EMAIL> or <EMAIL>"
-    assert (out[1].n_emails, out[1].n_ipv4, out[1].n_phones) == (0, 2, 0)
-    assert "<IP> and <IP>" in out[1].redacted and "1.2" in out[1].redacted
-    assert (out[2].n_emails, out[2].n_ipv4, out[2].n_phones) == (0, 0, 2)
-    assert out[2].redacted.count("<PHONE>") == 2 and "12-34-56" in out[2].redacted
-    assert (out[3].n_emails, out[3].n_ipv4, out[3].n_phones) == (0, 0, 0)
-    assert out[3].redacted == rows[3][1]
-    assert out[4].redacted is None
 
 
 def test_boilerplate_removal(spark):
@@ -95,84 +64,6 @@ def test_boilerplate_removal(spark):
         docs, min_docs=2, min_doc_frac=0.9).collect()} == set()
     assert {r.line for r in boilerplate_lines(
         docs, min_docs=2, min_doc_frac=0.5).collect()} == {footer}
-
-
-def test_stratified_sampling_deterministic(spark):
-    import hashlib
-
-    from legal_knowledge_graph_spark.operators.sampling import (
-        exact_k_per_stratum, stratified_sample,
-    )
-
-    rows = [(i, "en" if i % 3 else "de", f"s{i % 4}") for i in range(400)]
-    docs = spark.createDataFrame(rows, "doc_id long, lang string, source string")
-
-    def h32(i, seed):
-        return int(hashlib.md5(f"{i}:{seed}".encode()).hexdigest()[:8], 16)
-
-    got = {r.doc_id for r in stratified_sample(
-        docs, "lang", {"en": 0.5, "de": 0.1}, seed=9).collect()}
-    want = {i for i, lang, _s in rows
-            if h32(i, 9) < {"en": 0.5, "de": 0.1}[lang] * (1 << 32)}
-    assert got == want and got  # exact python replay
-
-    # repartitioning must not change the sample
-    got2 = {r.doc_id for r in stratified_sample(
-        docs.repartition(13), "lang", {"en": 0.5, "de": 0.1}, seed=9).collect()}
-    assert got2 == got
-
-    topk = exact_k_per_stratum(docs, "source", k=5, seed=9).collect()
-    by_src = {}
-    for r in topk:
-        by_src.setdefault(r.source, []).append(r.doc_id)
-    assert all(len(v) == 5 for v in by_src.values())
-    for src, ids in by_src.items():
-        pool = [i for i, _l, s in rows if s == src]
-        want_ids = sorted(pool, key=lambda i: (h32(i, 9), i))[:5]
-        assert sorted(ids) == sorted(want_ids), src
-
-
-def test_exact_k_two_phase_caps_stratum_exchange(spark):
-    """VERDICT r3 #2: on a skewed-stratum fixture the stratum-keyed
-    Exchange (phase 2) is fed <= k x n_salts candidate rows per stratum —
-    never the whole stratum — and the two-phase output equals the
-    single-window form at any n_salts."""
-    import hashlib
-
-    from pyspark.sql import functions as F
-    from legal_knowledge_graph_spark.operators.sampling import (
-        _salted_topk_candidates, exact_k_per_stratum,
-    )
-
-    # one mega-stratum (10k rows) + two small ones
-    rows = [(i, "hot" if i < 10_000 else f"s{i % 2}") for i in range(10_400)]
-    docs = spark.createDataFrame(rows, "doc_id long, source string")
-    k, n_salts = 7, 16
-
-    cand = _salted_topk_candidates(docs, "source", k, 9, "doc_id", n_salts)
-    per_stratum = {r["source"]: r["n"] for r in
-                   cand.groupBy("source").agg(F.count("*").alias("n")).collect()}
-    assert all(n <= k * n_salts for n in per_stratum.values())
-    assert per_stratum["hot"] <= k * n_salts  # 112 rows, not 10k
-
-    got = sorted((r.source, r.doc_id)
-                 for r in exact_k_per_stratum(
-                     docs, "source", k=k, seed=9, n_salts=n_salts).collect())
-
-    def h32(i, seed):
-        return int(hashlib.md5(f"{i}:{seed}".encode()).hexdigest()[:8], 16)
-
-    want = []
-    for src in {"hot", "s0", "s1"}:
-        pool = [i for i, s in rows if s == src]
-        want += [(src, i)
-                 for i in sorted(pool, key=lambda i: (h32(i, 9), i))[:k]]
-    assert got == sorted(want)
-    # n_salts is a pure parallelism knob — output invariant
-    got2 = sorted((r.source, r.doc_id)
-                  for r in exact_k_per_stratum(
-                      docs, "source", k=k, seed=9, n_salts=3).collect())
-    assert got2 == got
 
 
 def test_pretraining_filter_chain(spark):
@@ -241,24 +132,6 @@ def test_repetition_scores(spark):
     assert out[4].n_words == 1  # null -> '' -> ['']
 
 
-def test_exact_k_per_stratum_with_ids_repeating_across_strata(spark):
-    """ADVICE r4: the candidate re-attach joins on (stratum, id), so an id
-    that appears in several strata cannot drag its twins in — the output
-    is exactly k rows per stratum."""
-    from legal_knowledge_graph_spark.operators.sampling import (
-        exact_k_per_stratum,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, s) for i in range(20) for s in ("a", "b")],
-        "doc_id long, source string")
-    out = exact_k_per_stratum(docs, "source", k=5, id_col="doc_id").collect()
-    per = {}
-    for r in out:
-        per.setdefault(r.source, set()).add(r.doc_id)
-    assert {s: len(v) for s, v in per.items()} == {"a": 5, "b": 5}
-
-
 def test_corpus_vocab_closed_form(spark):
     from legal_knowledge_graph_spark.operators.text_analysis import (
         corpus_vocab,
@@ -300,56 +173,6 @@ def test_tfidf_keywords_closed_form(spark):
     want[(2, "bb")] = (round(1 * idf["bb"], 6), 1)
     want[(2, "cc")] = (round(1 * idf["cc"], 6), 2)
     assert got == want
-
-
-def test_mixture_weights_closed_form(spark):
-    from legal_knowledge_graph_spark.operators.sampling import (
-        mixture_weights,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "a" if i < 2 else "b") for i in range(8)],
-        "doc_id long, lang string")
-    rows = {r.stratum: r for r in
-            mixture_weights(docs, "lang", {"a": 0.5, "b": 0.5}).collect()}
-    # a: 2/8 observed vs 0.5 target -> weight 2.0 (the scarce stratum
-    # anchors accept=1.0); b: 6/8 vs 0.5 -> weight 2/3, accept 1/3
-    assert rows["a"].actual_frac == 0.25 and rows["a"].weight == 2.0
-    assert rows["a"].accept_frac == 1.0
-    assert rows["b"].weight == round(0.5 / 0.75, 6)
-    assert rows["b"].accept_frac == round((0.5 / 0.75) / 2.0, 6)
-
-
-def test_resample_to_mixture_replays_hash_and_hits_target(spark):
-    import hashlib
-
-    from legal_knowledge_graph_spark.operators.sampling import (
-        resample_to_mixture,
-    )
-
-    rows = [(i, "a" if i % 4 else "b") for i in range(2000)]
-    docs = spark.createDataFrame(rows, "doc_id long, lang string")
-    target = {"a": 0.5, "b": 0.5}
-    got = resample_to_mixture(docs, "lang", target, seed=7)
-    kept = sorted(r.doc_id for r in got.collect())
-    # python replay: same counts -> same rates -> same md5-prefix filter
-    from collections import Counter
-    cnt = Counter(l for _, l in rows)
-    t = float(len(rows))
-    w = {s: (target[s] / (n / t)) for s, n in cnt.items()}
-    wmax = max(w.values())
-    rate = {s: v / wmax for s, v in w.items()}
-    def h32(i):
-        return int(hashlib.md5(f"{i}:7".encode()).hexdigest()[:8], 16)
-    want = sorted(i for i, l in rows if h32(i) < rate[l] * (1 << 32))
-    assert kept == want
-    # deterministic across runs
-    again = sorted(r.doc_id for r in
-                   resample_to_mixture(docs, "lang", target, seed=7).collect())
-    assert again == kept
-    # the scarce stratum (b, 25% observed vs 50% target) is kept whole
-    kept_langs = Counter(l for i, l in rows if i in set(kept))
-    assert kept_langs["b"] == cnt["b"]
 
 
 def test_bm25_closed_form(spark):
@@ -422,35 +245,6 @@ def test_corpus_length_stats_closed_form(spark):
     assert ap.columns == list(got["en"].keys()) and ap.count() == 2
 
 
-def test_bpe_learns_sennrich_merges(spark):
-    from legal_knowledge_graph_spark.operators.bpe import (
-        apply_bpe, learn_bpe,
-    )
-
-    # the classic corpus: low x5, lower x2, newest x6, widest x3
-    text = " ".join(["low"] * 5 + ["lower"] * 2 + ["newest"] * 6
-                    + ["widest"] * 3)
-    docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    got = [(r["rank"], r.left, r.right, r.pair_count)
-           for r in learn_bpe(docs, n_merges=5, min_count=2).collect()]
-    # replicate: es(9) -> est(9) -> est</w>(9) -> lo(7) -> low(7)
-    assert got == [(1, "e", "s", 9), (2, "es", "t", 9),
-                   (3, "est", "</w>", 9), (4, "l", "o", 7),
-                   (5, "lo", "w", 7)]
-    toks = {t.word: tuple(t.tokens)
-            for t in apply_bpe(docs, [(m[1], m[2]) for m in got]).collect()}
-    assert toks["newest"] == ("n", "e", "w", "est</w>")
-    assert toks["low"] == ("low", "</w>")
-    assert toks["lower"] == ("low", "e", "r", "</w>")
-    # greedy left-to-right on overlapping pairs: aaaa + (a,a) -> [aa, aa]
-    d2 = spark.createDataFrame([(1, "aaaa aaaa")], "doc_id long, text string")
-    t2 = apply_bpe(d2, [("a", "a")]).collect()[0]
-    assert tuple(t2.tokens) == ("aa", "aa", "</w>")
-    # min_count stops before memorizing hapax pairs
-    d3 = spark.createDataFrame([(1, "xy")], "doc_id long, text string")
-    assert learn_bpe(d3, n_merges=5, min_count=2).count() == 0
-
-
 def test_ngram_diversity_closed_form(spark):
     from legal_knowledge_graph_spark.operators.text_analysis import (
         ngram_diversity,
@@ -472,48 +266,6 @@ def test_ngram_diversity_closed_form(spark):
     assert got[("de", 3)] == (1, 1, 1.0)
     # the empty doc contributes no grams at any n
     assert ("de", 0) not in got and len(got) == 6
-
-
-def test_weighted_sample_k_matches_reference_and_salts_invariant(spark):
-    """E-S weighted draw: matches an independent hashlib/math replay,
-    identical at n_salts=1 vs 64, excludes non-positive weights, and is
-    exactly-k per stratum."""
-    import hashlib
-    import math
-
-    from legal_knowledge_graph_spark.operators.sampling import (
-        weighted_sample_k,
-    )
-
-    rows = [(i, "en" if i % 2 == 0 else "de",
-             0 if i == 7 else (i % 9) + 1) for i in range(60)]
-    docs = spark.createDataFrame(rows, "doc_id long, lang string, w int")
-
-    def h32(i, seed=42):
-        return int(hashlib.md5(f"{i}:{seed}".encode()).hexdigest()[:8], 16)
-
-    exp = {}
-    for lang in ("en", "de"):
-        pri = [(math.log((h32(i) + 1) / 2**32) / w, -i)
-               for i, l, w in rows if l == lang and w > 0]
-        keep = sorted(pri, reverse=True)[:5]
-        exp[lang] = sorted(-i for _, i in keep)
-
-    got = weighted_sample_k(docs, k=5, weight_col="w",
-                            strata_col="lang").collect()
-    by_lang = {}
-    for r in got:
-        by_lang.setdefault(r.lang, []).append(r.doc_id)
-    assert {l: sorted(v) for l, v in by_lang.items()} == exp
-    assert 7 not in by_lang["de"] + by_lang["en"]  # zero weight never drawn
-
-    got1 = weighted_sample_k(docs, k=5, weight_col="w", strata_col="lang",
-                             n_salts=1).collect()
-    assert sorted((r.lang, r.doc_id) for r in got1) == \
-        sorted((r.lang, r.doc_id) for r in got)
-    # global (stratum-less) mode: exactly k rows, schema preserved
-    g = weighted_sample_k(docs, k=8, weight_col="w").collect()
-    assert len(g) == 8 and set(g[0].asDict()) == {"doc_id", "lang", "w"}
 
 
 def test_chunk_documents_closed_form(spark):
@@ -548,62 +300,6 @@ def test_chunk_documents_closed_form(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         chunk_documents(docs, chunk_tokens=5, overlap_tokens=5)
-
-
-def test_inverted_index_closed_form(spark):
-    from legal_knowledge_graph_spark.operators.text_analysis import (
-        inverted_index,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "the cat sat"), (2, "the dog"), (3, "THE  cat"),
-         (4, ""), (5, None)],
-        "doc_id long, text string")
-    got = {r.word: (r.df, r.postings)
-           for r in inverted_index(docs, max_postings=2, min_df=1).collect()}
-    # case-folded, whitespace-split; empty/null docs contribute nothing
-    assert got["the"] == (3, "1,2")       # df counts ALL docs, cap keeps 2
-    assert got["cat"] == (2, "1,3")
-    assert got["dog"] == (1, "2")
-    assert got["sat"] == (1, "1")
-    # min_df prunes hapax rows; max_df prunes stopword rows
-    pruned = {r.word for r in
-              inverted_index(docs, max_postings=2, min_df=2).collect()}
-    assert pruned == {"the", "cat"}
-    capped = {r.word for r in
-              inverted_index(docs, max_postings=2, max_df=2).collect()}
-    assert "the" not in capped and "cat" in capped
-
-
-def test_inverted_index_cap_is_global_smallest_k(spark):
-    from legal_knowledge_graph_spark.operators.text_analysis import (
-        inverted_index,
-    )
-
-    # 300 docs all holding "w": the two-phase salted selection must
-    # return exactly the 5 smallest doc_ids regardless of salt layout
-    docs = spark.createDataFrame(
-        [(i, "w") for i in range(300)], "doc_id long, text string") \
-        .repartition(16)
-    [r] = inverted_index(docs, max_postings=5).collect()
-    assert (r.word, r.df, r.postings) == ("w", 300, "0,1,2,3,4")
-
-
-def test_equidepth_bins_closed_form(spark):
-    from legal_knowledge_graph_spark.operators.profiling import (
-        equidepth_bins,
-    )
-
-    # 25 rows into 10 bins: first 5 bins get 3 rows, last 5 get 2
-    df = spark.createDataFrame(
-        [(i, i * 10) for i in range(25)], "doc_id long, v long")
-    out = {r.bin: (r.n, r.lo, r.hi) for r in
-           equidepth_bins(df, "v", n_bins=10).collect()}
-    assert [out[b][0] for b in range(1, 11)] == [3] * 5 + [2] * 5
-    assert out[1] == (3, 0, 20) and out[10] == (2, 230, 240)
-    # bins partition the ordered domain: ranges don't overlap
-    for b in range(1, 10):
-        assert out[b][2] < out[b + 1][1] or out[b][2] <= out[b + 1][1]
 
 
 def test_textrank_chunks_matches_numpy_reference(spark):
@@ -720,42 +416,3 @@ def test_rake_keyphrases_closed_form(spark):
     got2 = {r.phrase for r in
             rake_keyphrases(longdoc, top_k=5, max_phrase_len=4).collect()}
     assert got2 == {"zeta"}
-
-
-def _h32(word: str, seed: int = 9) -> int:
-    return int(hashlib.md5(f"{word}:{seed}".encode()).hexdigest()[:8], 16)
-
-
-def test_importance_weights_tiny_fixture(spark):
-    """Hand-computed DSIR weights on a 3-doc corpus: target docs score
-    higher than the off-target doc, and the exact value matches the
-    Laplace-smoothed log-ratio computed independently in python."""
-    docs = spark.createDataFrame(
-        [(1, "alpha beta alpha", "en"),
-         (2, "alpha beta", "en"),
-         (3, "gamma gamma delta", "de")],
-        "doc_id long, text string, lang string")
-    B = 64
-    out = {r.doc_id: (r.n_tokens, r.importance)
-           for r in importance_weights(
-               docs, F.col("lang") == "en", n_buckets=B).collect()}
-    # independent python model
-    toks = {1: ["alpha", "beta", "alpha"], 2: ["alpha", "beta"],
-            3: ["gamma", "gamma", "delta"]}
-    target = {1, 2}
-    n_t, n_r = {}, {}
-    for d, ws in toks.items():
-        for w in ws:
-            b = _h32(w) % B
-            n_r[b] = n_r.get(b, 0) + 1
-            if d in target:
-                n_t[b] = n_t.get(b, 0) + 1
-    tt, tr = sum(n_t.values()), sum(n_r.values())
-    def lr(b):
-        return (math.log((n_t.get(b, 0) + 1.0) / (tt + B))
-                - math.log((n_r.get(b, 0) + 1.0) / (tr + B)))
-    for d, ws in toks.items():
-        exp = round(sum(lr(_h32(w) % B) for w in ws) / len(ws), 6)
-        assert out[d] == (len(ws), pytest.approx(exp, abs=1e-6)), d
-    # in-domain docs outrank the off-target doc
-    assert min(out[1][1], out[2][1]) > out[3][1]
