@@ -40,17 +40,13 @@ def main() -> None:
     from legal_knowledge_graph_spark.session import build_session
     import __spark_entry__ as E
 
-    # default 2x cores: with exactly cores==partitions every iterative
-    # stage runs as ONE all-cores wave and its stragglers set the stage
-    # wall (measured 3x slower on textrank-shaped jobs, see
-    # BENCH/scaling.json text_scale note); 2x lets early finishers
-    # steal the tail. SPARK_GRAFT_SHUFFLE overrides for A/B.
-    shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE",
-                                 max(2 * int(cpus), 16)))
+    # 2x cores: with exactly cores==partitions every stage runs as ONE
+    # all-cores wave and its stragglers set the stage wall; 2x lets early
+    # finishers steal the tail
     spark = build_session(
         app_name="lkg-bench",
         master=f"local[{cpus}]",
-        shuffle_partitions=shuffle,
+        shuffle_partitions=max(2 * int(cpus), 16),
     )
 
     # steady-state protocol, same as tools/bench_scaling.py ("python
@@ -68,16 +64,7 @@ def main() -> None:
     mentions_from_files(ingest(corpus_df_distributed(
         spark, 64, seed=1, partitions=int(cpus)))).count()
 
-    names = [
-        "kg_doc_mentions", "kg_term_cooccurrence",
-        "doc_token_count", "doc_quality", "doc_lang_id",
-        "doc_boilerplate", "doc_filter_chain",
-        # round-5 additions: tokenizer vocab coverage, tf-idf keywording
-        "doc_vocab", "doc_tfidf_keywords",
-        # round-5 third-session additions: BM25 ranked retrieval
-        "doc_bm25", "doc_length_stats",
-        "doc_ngram_diversity", "doc_chunks", "doc_textrank", "doc_rake",
-    ]
+    names = ["kg_doc_mentions", "kg_term_cooccurrence"]
     qfns = E.queries()
     timings: dict[str, float] = {}
     for name in names:

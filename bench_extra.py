@@ -32,11 +32,9 @@ def main() -> None:
     from legal_knowledge_graph_spark.session import build_session
     import __spark_entry__ as E
 
-    shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE",
-                                 max(2 * int(cpus), 16)))
     spark = build_session(app_name="lkg-bench-extra",
                           master=f"local[{cpus}]",
-                          shuffle_partitions=shuffle)
+                          shuffle_partitions=max(2 * int(cpus), 16))
     for t in E.TABLES:
         spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")) \
             .limit(256).collect()

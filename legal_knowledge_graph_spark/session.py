@@ -19,14 +19,18 @@ Settings rationale (100 TB mindset, tested at local[*]):
   daemon is up, so those runs keep Spark's stock daemon.
 - AQE on with skew-join handling: mega-repos (FIXTURES.md §1) skew the
   per-repo stages; AQE splits skewed partitions at runtime.
-- shuffle.partitions defaults to a small-cluster value; production
-  submits override via spark-submit --conf.
+- Submitted conf wins: under spark-submit every setting below is a
+  default, and a key given with ``--conf`` (or spark-defaults.conf) keeps
+  its submitted value; ``extra_conf`` overrides both. So the scale knob
+  is the standard ``--conf spark.sql.shuffle.partitions=N``, from which
+  the AQE initial partition number follows.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 # Arrow batch ceiling while `content` is still in-flight. After st2 the
@@ -53,7 +57,8 @@ def build_session(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (all cores when
     unset) so bench harnesses can pin parallelism. Under spark-submit the
-    ``--master`` it was given wins and this argument is left None.
+    ``--master`` it was given wins and this argument is left None, and
+    each key of the submitted conf wins over this function's setting.
     """
     builder = SparkSession.builder.appName(app_name)
     submitted = "PYSPARK_GATEWAY_PORT" in os.environ
@@ -68,21 +73,28 @@ def build_session(
             builder = builder.config("spark.python.daemon.module",
                                      _WORKER_DAEMON)
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+        shuffle_partitions = 32
+    submitted_conf = None
+    if submitted:
+        # spark-submit put its --conf into the launched JVM's system
+        # properties; SparkConf() reads them once the gateway is up
+        SparkContext._ensure_initialized()
+        submitted_conf = SparkConf()
+        shuffle_partitions = int(submitted_conf.get(
+            "spark.sql.shuffle.partitions", str(shuffle_partitions)))
 
-    builder = (
-        builder
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", _ARROW_BATCH)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": _ARROW_BATCH,
+        "spark.sql.session.timeZone": "UTC",
+        "spark.driver.memory":
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # compress localCheckpoint / cached RDD blocks (lz4). The pipeline
         # materializes wide string rows at every stage boundary (~1 GB at
         # the edges stage on the 24k bench corpus) and is memory-bandwidth
@@ -90,22 +102,26 @@ def build_session(
         # level-32 139.7 -> 117.6 s (-16%), level-8 261.1 -> 239.1 s
         # (-8%), same window, identical outputs. zstd was measured WORSE
         # (169 s: codec CPU exceeds the bandwidth saving); keep lz4.
-        .config("spark.rdd.compress", "true")
+        "spark.rdd.compress": "true",
         # keep post-shuffle partitions lean: wide string rows at the
         # default 64MB advisory size starve execution memory and spill
         # (measured: 9GB spills per aggregation stage at 32 threads).
         # Start wide and let AQE coalesce down to the advisory size.
-        .config("spark.sql.adaptive.advisoryPartitionSizeInMB", "16")
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-                str(max(shuffle_partitions * 4, 64)))
-    )
+        "spark.sql.adaptive.advisoryPartitionSizeInMB": "16",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum":
+            str(max(shuffle_partitions * 4, 64)),
+    }
     # forensics hook: SPARK_GRAFT_EVENTLOG=<dir> records the event log for
     # per-stage wall/CPU analysis (the BENCH/BASELINE.md recipe)
     ev_dir = os.environ.get("SPARK_GRAFT_EVENTLOG")
     if ev_dir:
         os.makedirs(ev_dir, exist_ok=True)
-        builder = (builder.config("spark.eventLog.enabled", "true")
-                   .config("spark.eventLog.dir", ev_dir))
-    for k, v in (extra_conf or {}).items():
+        conf.update({"spark.eventLog.enabled": "true",
+                     "spark.eventLog.dir": ev_dir})
+    if submitted_conf is not None:
+        conf = {k: v for k, v in conf.items()
+                if not submitted_conf.contains(k)}
+    conf.update(extra_conf or {})
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -1,14 +1,9 @@
-"""Physical-plan regression gates: boilerplate removal's anti-join and
-scalar-attach shapes (broadcast under the threshold, shuffled and
-byte-identical above it), the mention extractor's plan shape, and the
-st3-st6 graph build's plans holding no Python operator or Python-RDD
-scan."""
+"""Physical-plan regression gates: the mention extractor's plan shape,
+and the st3-st6 graph build's plans holding no Python operator or
+Python-RDD scan."""
 
 import io
-import re
 from contextlib import redirect_stdout
-
-import pytest
 
 
 def _plan(df) -> str:
@@ -16,75 +11,6 @@ def _plan(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-
-
-def test_boilerplate_plan(spark, docs):
-    """remove_boilerplate under the broadcast threshold: the anti-join on
-    the (observed-small) boilerplate set must broadcast — no line-keyed
-    repartition of the fat side beyond the counting agg — and never go
-    nested-loop. The boiler subtree is checkpointed (the size probe rides
-    it), so its scalar-attach shape is gated separately below."""
-    from legal_knowledge_graph_spark.operators.text_analysis import (
-        remove_boilerplate,
-    )
-
-    plan = _plan(remove_boilerplate(docs, min_docs=2))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin LeftAnti" in plan  # boiler anti-join map-side
-
-
-def test_boilerplate_lines_plan(spark, docs):
-    """boilerplate_lines: the ONLY nested-loop join allowed is the scalar
-    corpus-count attach — a broadcast cross join whose build side is the
-    1-row global aggregate."""
-    from legal_knowledge_graph_spark.operators.text_analysis import (
-        boilerplate_lines,
-    )
-
-    plan = _plan(boilerplate_lines(docs, min_docs=2))
-    assert "CartesianProduct" not in plan
-    bnlj = re.findall(r"\(\d+\) BroadcastNestedLoopJoin", plan)
-    assert len(bnlj) <= 1
-    if bnlj:
-        assert "greatest(" in plan and "_n_docs" in plan
-
-
-def test_boilerplate_over_threshold_shape_and_equality(spark, docs):
-    """Forcing the over-threshold path (broadcast_max=0): the anti-join
-    must NOT broadcast a corpus-growing boilerplate table (VERDICT r3 #1)
-    — and the output must be byte-identical to the broadcast path."""
-    from legal_knowledge_graph_spark.operators.text_analysis import (
-        remove_boilerplate,
-    )
-
-    from pyspark.sql import functions as F
-
-    small = docs.where("doc_id < 60").select(
-        "doc_id",
-        F.concat(F.lit("=== SHARED HEADER ===\n"), "text",
-                 F.lit("\nshared footer line")).alias("text"))
-    # over threshold the hint is omitted — Catalyst is then free to pick
-    # by STATISTICS (it still auto-broadcasts the small test-scale table,
-    # which is right); pinning autoBroadcastJoinThreshold=-1 proves no
-    # forced broadcast survives, i.e. a huge boiler table shuffles
-    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        shuffled = remove_boilerplate(small, min_docs=2, broadcast_max=0)
-        assert "BroadcastHashJoin LeftAnti" not in _plan(shuffled)
-        a = sorted(map(tuple, shuffled.collect()))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-    broadcasted = remove_boilerplate(small, min_docs=2)
-    assert "BroadcastHashJoin LeftAnti" in _plan(broadcasted)
-    b = sorted(map(tuple, broadcasted.collect()))
-    assert a == b and len(a) == small.count()
 
 
 def test_mention_extraction_plan_tops_at_map_in_pandas(spark):

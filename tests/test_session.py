@@ -32,8 +32,9 @@ def test_extraction_workers_fork_from_preloaded_daemon(spark):
 
 def test_spark_submit_master_wins(tmp_path):
     """Under spark-submit, build_session() runs at the submitted master
-    and keeps Spark's stock daemon: the package reaches cluster workers
-    only per task, after the daemon has started."""
+    and with the submitted --conf values, and keeps Spark's stock daemon:
+    the package reaches cluster workers only per task, after the daemon
+    has started."""
     script = tmp_path / "m.py"
     script.write_text(
         "from legal_knowledge_graph_spark.session import build_session\n"
@@ -41,6 +42,7 @@ def test_spark_submit_master_wins(tmp_path):
         "conf = spark.sparkContext.getConf()\n"
         "print('MASTER', spark.sparkContext.master)\n"
         "print('DAEMON', conf.get('spark.python.daemon.module'))\n"
+        "print('SHUFFLE', spark.conf.get('spark.sql.shuffle.partitions'))\n"
         "spark.stop()\n")
     env = dict(os.environ)
     env.pop("SPARK_GRAFT_CPUS", None)
@@ -50,9 +52,9 @@ def test_spark_submit_master_wins(tmp_path):
     home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
     out = subprocess.run(
         [os.path.join(home, "bin", "spark-submit"), "--master", "local[2]",
-         str(script)],
+         "--conf", "spark.sql.shuffle.partitions=7", str(script)],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300)
     assert out.returncode == 0, out.stderr[-2000:]
     lines = dict(line.split(" ", 1) for line in out.stdout.splitlines()
-                 if line.startswith(("MASTER ", "DAEMON ")))
-    assert lines == {"MASTER": "local[2]", "DAEMON": "None"}
+                 if line.startswith(("MASTER ", "DAEMON ", "SHUFFLE ")))
+    assert lines == {"MASTER": "local[2]", "DAEMON": "None", "SHUFFLE": "7"}

@@ -148,38 +148,6 @@ def test_refresh_policy_final_drain_flushes_dirty_tail(spark, tmp_path):
     assert got_edges == want_edges
 
 
-def test_filter_chain_streaming_equals_batch(spark, tmp_path):
-    """The pretraining filter chain is a stateless single projection, so
-    it lifts to Structured Streaming unchanged — drained stream output
-    equals the batch run row-for-row."""
-    from legal_knowledge_graph_spark.operators.text_analysis import (
-        pretraining_filter,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    landing = str(tmp_path / "fc_landing")
-    docs.repartition(3).write.mode("overwrite").parquet(landing)
-    out = str(tmp_path / "fc_out")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-    )
-    q = (
-        pretraining_filter(stream, allowed_langs=("en", "de"),
-                           blocked_sources=("src13",))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "fc_ckpt"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = sorted(map(tuple, spark.read.parquet(out).collect()))
-    want = sorted(map(tuple, pretraining_filter(
-        docs, allowed_langs=("en", "de"),
-        blocked_sources=("src13",)).collect()))
-    assert got == want and got
-
-
 def test_stranded_ledger_rows_refresh_on_empty_resume(spark, tmp_path):
     """ADVICE r4: ledger rows that landed without a graph refresh (crash
     between the ledger upsert and the refresh) must be folded in on

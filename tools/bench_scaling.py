@@ -52,9 +52,8 @@ from legal_knowledge_graph_spark.operators.mentions import mentions_from_files
 
 cpus = int(sys.argv[1]); input_path = sys.argv[2]
 # 2x cores: exactly cores==partitions runs every post-shuffle stage as
-# ONE all-cores wave whose stragglers set the stage wall (measured 3x on
-# textrank-shaped jobs and 39->29s on the pipeline itself — scaling.json
-# `text_scale`); 2x lets early finishers steal the tail
+# ONE all-cores wave whose stragglers set the stage wall (measured
+# 39->29s on the pipeline); 2x lets early finishers steal the tail
 spark = build_session(app_name=f"lkg-scale-{cpus}", master=f"local[{cpus}]",
                       shuffle_partitions=max(2 * cpus, 16))
 files = spark.read.parquet(input_path)
